@@ -65,71 +65,45 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
     # green must not keep displacing never-checked queries from the prefix
     red = {n for n, (_, g) in latest.items() if not g}
     done = {n: rnd for n, (rnd, g) in latest.items() if g}
-    for n in _R1_VERIFIED - red - set(done):
-        done[n] = 1
     return done, red
 
 
-# Fallback seed for the r1 verdicts (r1's json predates this logic's need,
-# but keep the explicit set in case the file is pruned).
-_R1_VERIFIED = {
-    "agg_sum_global", "agg_min_max_count", "agg_group_multi_key_orderby",
-    "agg_having", "agg_count_distinct_multi", "agg_approx_count_distinct",
-    "agg_percentile_exact", "agg_stddev_variance", "agg_rollup", "agg_cube",
-    "agg_grouping_sets", "agg_pivot", "agg_conditional_sum",
-    "agg_collect_sorted", "agg_corr_covar_closed_form",
-    "agg_histogram_width_bucket", "agg_bool_bitwise", "agg_grouping_id",
-    "agg_approx_count_distinct_bounded", "agg_most_frequent",
-    "agg_max_by_min_by", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_cosine",
-    "dedup_cluster_components", "dedup_simhash_md5", "dedup_containment",
-    "events_tumbling_window", "events_sliding_window",
-    "streaming_tumbling_counts", "streaming_session_windows",
-    "streaming_stateful_running_counts", "events_cohort_retention",
-    "join_inner_equi", "join_left_outer", "join_right_outer",
-    "join_full_outer", "join_left_semi", "join_left_anti", "join_cross",
-    "join_theta_inequality", "join_range_banded", "join_asof",
-    "join_skew_salted", "lake_time_travel_v1", "lake_merge_on_read",
-}
-
-
-# Never-checked queries that carry a disproportionate share of the §2 proof
-# burden (r2 verdict items 2/4/6/7): the lake_* family proves A9/A16/A18/A8,
-# the scale twins prove the documented anti-pattern rows have working
-# replacements, and cast/udf/pattern complete their families. These jump the
-# family round-robin so they all land inside the driver's ~50-query prefix.
-_PRIORITY_PREFIXES = ("cast_", "lake_", "pattern_")
-_PRIORITY_NAMES = {
-    "window_global_rank_scalable",
-    "ann_lsh_bucketed_md5",
-    "ann_ivf_probe",
-    "dedup_keep_list",
-    "udf_grouped_map_normalize",
-}
-
-# Queries added in round 3+: they queue BEHIND the pre-existing never-checked
-# backlog (r2 verdict item 3 — new additions must not displace the older
-# unverified queries from the driver's prefix until that backlog drains).
-# r5: the backlog is drained to 8 (all judge-verified locally) — the queue is
-# empty and new surface may land at the front again (r4 verdict item 6).
-_DEFER_NEW: set[str] = set()
-
 # Verified-green queries whose CODE PATH changed since their last driver
-# verdict — r10 amendment (VERDICT r9 item 2): changed-code greens outrank
-# stale-but-unchanged greens in the prefix. ORDERED, most-changed first.
-# r13's wave: every pattern query runs the CHUNK-WISE partition-batched
-# matcher (open-key-span carry) with the rewritten empty-match emission
-# (OMIT keeps gapped numbers — brief item 2 + ADVICE medium); the
-# streaming CEP family runs the extended measures parser + widened state
-# tuple (value-column projection, item 3); udf_grouped_map_normalize is
-# freshly partition-batched (item 5); the two global-rank windows and the
-# WITH TIES query carry the new one-valued partition spec (item 8); and
-# EVERY lake read flows through the r13 cache key (predicated domains +
-# honest LRU, item 4) — the lake family re-proves stalest-first behind
-# the named heads. (pattern_sql_match_recognize and
-# streaming_pattern_value_measures are NEW — they jump via the
-# never-checked priority prefixes, not this list.)
+# verdict: changed-code greens outrank stale-but-unchanged greens in the
+# prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # trained-plan memo moved to sources.registry.session_plan (per session)
+    "embedding_kmeans_assign",
+    "dedup_embedding_cosine_blocked",
+    "ann_ivfpq_probe",
+    "ann_ivfpq_residual",
+    "ann_ivfpq_refined",
+    "dedup_semantic_ivf",
+    "dedup_incremental_semantic",
+    "ann_ivf_kmeans_probe",
+    "streaming_vector_index_maintained",
+    # lake reads that hit the deleted read_table plan cache; avro reads the
+    # scanner memo, now an lru_cache
+    "lake_partition_delete",
+    "lake_partition_expiration",
+    "lake_stats_broadcast_join",
+    "lake_avro_roundtrip",
+    # HLL partial buffer no longer keyed per distinct value
+    "agg_approx_count_distinct",
+    "agg_approx_count_distinct_bounded",
+    # cross-run cache removed / single-pass restructure
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_chunk_repetition",
+    # availableNow state partitions clamped to the input's split count
+    "streaming_tumbling_counts",
+    "streaming_session_windows",
+    "streaming_stateful_running_counts",
+    "streaming_pattern_within_funnel",
+    "streaming_dedup_keys",
+    "streaming_enrich_static_join",
+    "streaming_pattern_skip_next",
+    "streaming_pattern_value_measures",
     # r13: chunk-wise matcher + empty-match emission rewrite
     "pattern_show_empty_matches",
     "pattern_unmatched_rows_coverage",
@@ -145,17 +119,14 @@ _REPROOF: tuple[str, ...] = (
     "pattern_funnel_view_click_purchase",
     "pattern_error_within_5min_of_purchase",
     "pattern_longest_click_streak",
-    # r13: streaming CEP measures parser + state tuple widened
-    "streaming_pattern_skip_next",
-    "streaming_pattern_within_funnel",
     # r13: partition-batched rewrite (item 5)
     "udf_grouped_map_normalize",
     # r13: one-valued partition spec on the metadata-scale windows (item 8)
     "window_ntile_percent",
     "window_global_rank_scalable",
     "limit_fetch_with_ties",
-    # r13: plan cache rekeyed (predicated domains + honest LRU) — every
-    # read_table consumer, riskiest first
+    # read_table plan cache removed — every other read_table consumer,
+    # riskiest first
     "lake_deletion_vector_read",
     "lake_delta_base_split_read",
     "lake_bloom_index_point_lookup",
@@ -167,7 +138,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_time_travel_v1",
     "lake_tag_time_travel",
     "lake_dml_roundtrip",
-    "lake_partition_delete",
     "lake_read_optimized_table",
     "lake_sort_compacted_range_scan",
     "lake_zorder_compacted_scan",
@@ -191,7 +161,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_consumer_resume",
     "lake_schema_evolution",
     "lake_orc_scan",
-    "lake_avro_roundtrip",
     "lake_manifest_changelog_stream",
     "lake_timestamp_precision",
     "lake_char_padded_read",
@@ -199,50 +168,32 @@ _REPROOF: tuple[str, ...] = (
     "lake_dynamic_file_pruning",
     "lake_limit_pushdown_partition_scoped",
     "lake_partition_pruned_scan",
-    "lake_partition_expiration",
     "lake_fallback_branch",
     # r11 invariant carriers (unchanged r12, still ahead of stale greens)
-    "agg_approx_count_distinct",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
     "ann_lsh_bucketed",
     "multimodal_feature_extract",
-    "streaming_stateful_running_counts",
 )
 
 
 def _ordered_names() -> list[str]:
-    """Red (fixed, re-prove) first, then priority never-checked, then the
-    remaining never-checked interleaved round-robin by family, verified last
-    — the verified tail ordered OLDEST verdict first (r6 verdict item 3:
-    with full-registry closure the prefix's spare slots should refresh the
-    stalest greens, not whatever the registry order happens to lead with)."""
+    """Red (fixed, re-prove) first, then never-checked queries interleaved
+    round-robin by family, then ``_REPROOF``, then the remaining verified
+    queries, OLDEST verdict first (with full-registry closure the prefix's
+    spare slots refresh the stalest greens)."""
     from itertools import zip_longest
 
     verified, red = _driver_verified()
-    # a typo'd or renamed entry in the hand-kept sets would silently void the
-    # ordering policy it encodes — make drift loud instead
-    for n in _PRIORITY_NAMES | _DEFER_NEW | set(_REPROOF):
+    # a typo'd or renamed entry in the hand-kept list would silently void
+    # the ordering policy it encodes — make drift loud instead
+    for n in _REPROOF:
         assert n in QUERIES, f"ordering policy names unknown query {n!r}"
     order = [n for n in QUERIES if n in red]  # fixed red rows re-prove first
-    pri = [
-        n
-        for n in QUERIES
-        if n not in verified
-        and n not in red
-        and n not in _DEFER_NEW  # deferred additions never jump via a prefix
-        and (n.startswith(_PRIORITY_PREFIXES) or n in _PRIORITY_NAMES)
-    ]
-    order.extend(pri)
-    taken = set(order) | set(verified)
     fams: dict[str, list[str]] = {}
     for n in QUERIES:
-        if n in taken or n in _DEFER_NEW:
-            continue
-        fams.setdefault(n.split("_")[0], []).append(n)
+        if n not in red and n not in verified:
+            fams.setdefault(n.split("_")[0], []).append(n)
     for row in zip_longest(*fams.values()):
         order.extend(n for n in row if n is not None)
-    order.extend(n for n in QUERIES if n in _DEFER_NEW and n not in verified and n not in red)
     # _REPROOF is ORDERED (most-changed code first) so the driver's prefix
     # spends its slots on the riskiest re-proofs
     emitted = set(order)

@@ -774,42 +774,6 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 db, table, fb, schema, predicate, limit, pad_char
             )
         snap = self._pin_snapshot(tdir, version_as_of, timestamp_as_of, tag)
-        # r12 (VERDICT r11 item 4): SESSION PLAN-FRAGMENT CACHE. The driver
-        # pays a fixed ~0.1s of py4j plan assembly per read (DV position-set
-        # broadcast, merge composition, char padding); snapshots are
-        # immutable and every plan-shaping input is in the key — snapshot
-        # id, schema id (bumped by DDL and SET PROPERTIES), the read flavor
-        # flags, and the broadcast threshold the DV/delta bounds derive
-        # from — so repeated reads of an unchanged snapshot reuse the
-        # assembled DataFrame (immutable logical plan) instead of
-        # rebuilding it. r13 (VERDICT r12 item 4): predicated and limited
-        # reads cache too — the pushed domain and limit join the key in
-        # frozen form (file pruning, index probes and the re-applied filter
-        # are all deterministic functions of snapshot + domain, and a plan
-        # cached for one domain is only ever served for that domain).
-        plan_key = None
-        if snap is not None:
-            from incubator_paimon_trino_spark.functions.predicates import (
-                freeze_tuple_domain,
-            )
-
-            plan_key = (
-                tdir,
-                snap.snapshot_id,
-                schema.schema_id,
-                with_system_columns,
-                pad_char,
-                freeze_tuple_domain(predicate),
-                limit,
-                self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"),
-            )
-            cache = getattr(self, "_read_plan_cache", {})
-            cached = cache.get(plan_key)
-            if cached is not None:
-                # honest LRU (r13 — ADVICE r12): refresh recency on hit, or
-                # a hot table read first is evicted while cold entries live
-                cache[plan_key] = cache.pop(plan_key)
-                return cached
         if predicate:
             # CHAR(n) predicate literals are pad-insensitive (stored form is
             # rtrimmed — see insert_into)
@@ -1033,17 +997,6 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # evaluation) stay in storage form — declared metadata lives
             # in the catalog.
             df = _pad_char_columns(df, schema)
-        if plan_key is not None:
-            cache = getattr(self, "_read_plan_cache", None)
-            if cache is None:
-                cache = self._read_plan_cache = {}
-            # tiny LRU (insertion-ordered dict + move-to-end on hit above;
-            # eviction pops the least recently USED, not merely oldest):
-            # sessions read few hot tables, predicated shapes add a handful
-            # of entries per table
-            if len(cache) >= 128:
-                cache.pop(next(iter(cache)))
-            cache[plan_key] = df
         return df
 
     def _fallback_branch_union(

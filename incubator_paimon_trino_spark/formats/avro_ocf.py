@@ -31,6 +31,7 @@ per-row ordinals from the ordered OCF block decode (``avro_batch.py``
 
 from __future__ import annotations
 
+import functools
 import io
 import json
 import os
@@ -786,9 +787,6 @@ def _decoder(schema: object):
 
 
 # ------------------------------------------------------ vectorized decoding
-_SCANNER_CACHE: dict[str, tuple] = {}
-
-
 def _gen_scanner(plan):
     """One generated straight-line scan function per flat schema: walks a
     block payload record-by-record, inlining union/varint/length handling
@@ -905,14 +903,15 @@ def _read_uvarint(buf, p):
 
 
 def _flat_scanner(schema):
-    key = json.dumps(schema, sort_keys=True)
-    hit = _SCANNER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    plan = _flat_plan(schema)
-    fn = _gen_scanner(plan) if plan is not None else None
-    _SCANNER_CACHE[key] = (plan, fn)
-    return plan, fn
+    """(flat plan, generated scanner) for ``schema``; (None, None) when the
+    schema has no flat plan."""
+    return _flat_scanner_for(json.dumps(schema, sort_keys=True))
+
+
+@functools.lru_cache(maxsize=128)  # one entry per distinct file schema
+def _flat_scanner_for(schema_json: str):
+    plan = _flat_plan(json.loads(schema_json))
+    return plan, (_gen_scanner(plan) if plan is not None else None)
 
 
 def _new_acc(plan):

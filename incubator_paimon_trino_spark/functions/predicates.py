@@ -125,39 +125,6 @@ def tuple_domain_to_column(
     return out
 
 
-def freeze_tuple_domain(domains: "list[ColumnDomain] | None") -> tuple:
-    """A hashable, order-stable form of a tuple domain — the read-plan
-    cache key component (r13 — VERDICT r12 item 4: predicated reads cache
-    too). Values freeze by ``repr`` with their type name (repr alone can
-    collide across types: ``'1'`` vs ``1``); domains sort by column so two
-    differently-ordered but identical conjunctions share an entry. The
-    domain lists read_table receives are already canonicalized by the
-    converters here, so equal-by-construction predicates — the repeated
-    sweep shapes — hit."""
-
-    def fv(v):
-        return (type(v).__name__, repr(v))
-
-    frozen = [
-        (
-            d.column,
-            d.op,
-            fv(d.value),
-            None if d.in_values is None else tuple(fv(v) for v in d.in_values),
-            tuple(
-                (fv(r.low), fv(r.high), r.low_inclusive, r.high_inclusive)
-                for r in d.ranges
-            ),
-            d.is_null,
-            d.null_allowed,
-        )
-        for d in (domains or [])
-    ]
-    # sort key via repr: two domains on the SAME column would otherwise
-    # compare their op fields, where None vs str raises
-    return tuple(sorted(frozen, key=lambda t: (t[0], repr(t[1:]))))
-
-
 def normalize_char_domains(
     domains: list[ColumnDomain], char_columns: set[str]
 ) -> list[ColumnDomain]:

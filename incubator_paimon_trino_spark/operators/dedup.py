@@ -1010,37 +1010,20 @@ def dedup_chunk_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents; report per-document repetition counts/ratio.
 
     Scale shape: only 32-hex block hashes enter the shuffle, never document
-    text. Two hash aggregations (per-hash distinct-doc count, per-doc chunk
-    counts) plus one equi-join on the hash — all map-side-combinable. At
-    100 TB the hot-hash skew risk mirrors the shingle case; the same
-    stop-shingle-style document-frequency cap applies if a block (e.g. a
-    license header) appears in millions of docs — the groupBy(h) output is
-    already the DF table to cap on.
+    text. One (doc_id, h) pre-aggregation feeds two consumers: a per-hash
+    distinct-doc count (a plain COUNT — the pairs are already distinct) that
+    yields the boilerplate hash set, and a left-outer probe of that set that
+    flags each (doc_id, h, c) row. One groupBy(doc_id) then computes SUM(c)
+    and SUM(flag·c) together, and ``dup_chunks >= 1`` keeps only documents
+    with a repeated block. All aggregations are map-side-combinable. Catalyst
+    infers ``isnotnull(h)`` on the boilerplate branch only, so the two
+    consumers differ and the pre-aggregation is planned twice (no
+    ReusedExchange). At 100 TB the hot-hash skew risk mirrors the shingle
+    case; the same stop-shingle-style document-frequency cap applies if a
+    block (e.g. a license header) appears in millions of docs — the
+    groupBy(h) output is already the DF table to cap on.
 
     Reference parity: no equivalent in the reference (pipeline surface).
-
-    r13: measured a fan_out of the documents scan and REVERTED it (A/B
-    +0.10/+0.01 s across two sittings — noise), keeping the "only 32-hex
-    hashes enter the shuffle" claim exactly true at every scale.
-
-    r13 restructure (guide §2.3 "aggregate before you shuffle"): one
-    (doc_id, h) pre-aggregation now feeds all three consumers — per-doc
-    totals are SUM(c), per-hash distinct-doc counts collapse to a plain
-    COUNT (the pairs are already distinct), and the boilerplate join probes
-    pre-aggregated pairs instead of raw chunk rows. Strictly fewer rows
-    through the join and the second shuffle; result-identical (pinned at
-    sf0.01/sf0.1); 0.84→0.72 s noop at sf0.1.
-
-    r14 restructure (guide §1.2 "remove passes", §2.4 "remove shuffles
-    outright"): per-doc totals and dup counts are ONE aggregation pass.
-    The boilerplate flag rides each (doc_id, h, c) row via a left-outer
-    probe of the boiler hash set, and a single groupBy(doc_id) computes
-    SUM(c) and the conditional SUM(flag·c) together — the second
-    groupBy(doc_id) shuffle agg AND the final per⋈dup join disappear
-    (plan: 2 shuffle aggs + 2 joins → 1 shuffle agg + 1 join). The inner
-    per⋈dup join's docs-without-dups exclusion is preserved by
-    ``dup_chunks >= 1`` (an exact integer filter). Result-identical
-    (oracle hash ×3 SFs, unchanged oracle SQL).
     """
     d = table(spark, sf_dir, "documents").select("doc_id", F.split("text", " ").alias("w"))
     ch = (

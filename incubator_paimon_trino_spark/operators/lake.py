@@ -1823,8 +1823,8 @@ def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         q.awaitTermination()
     finally:
-        # release even on a failed stream (mirrors release_trained_corpus's
-        # lifecycle discipline) — sweep memory stays flat as the registry grows
+        # release even on a failed stream, so sweep memory stays flat as
+        # the registry grows
         corpus_sigs.unpersist()
         corpus_index.unpersist()
     return spark.read.parquet(outdir)

@@ -16,8 +16,12 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+_T = TypeVar("_T")
 
 TABLE_NAMES = (
     "region",
@@ -33,20 +37,31 @@ TABLE_NAMES = (
 )
 
 
-# r13 optimization: READ-PLAN CACHE for the flat driver tables — the
-# `table()` twin of the warehouse session plan-fragment cache
-# (catalog/warehouse.py, r12/r13, judge-verified). Every `spark.read.parquet`
-# call re-runs schema inference against the file footer through py4j
-# (~100–150ms measured on this box; `events` ~400ms with its encoding
-# detection), and the bench/sweep harnesses rebuild each query per run, so
-# repeated `table()` calls dominated driver-side plan construction (42% of
-# the r13 baseline bench was plan building — OPTIMIZATION_r13.md). A
-# DataFrame is an immutable logical plan, so reusing it is pure plan reuse:
-# NO data or results are cached — every action still scans the parquet file.
-# Keyed per live SparkSession (weak — entries die with the session; a
-# session's conf, e.g. nanosAsLong, shapes the plan so sessions never share)
-# and per file identity (path, mtime_ns, size — a regenerated file misses).
-_plan_cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+# Plan memo: unexecuted logical plans only, never data or results — every
+# action on a returned DataFrame scans the file again. Entries are held per
+# SparkSession (a weak key; a session's conf, e.g. nanosAsLong, shapes its
+# plans) under (kind, absolute path), and each stores the file's
+# (mtime_ns, size): a rewritten file replaces its entry on the next lookup.
+_plans: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def session_plan(
+    spark: SparkSession, kind: str, path: str, build: Callable[[], _T]
+) -> _T:
+    """``build()``'s plan for the file at ``path``, built once per session
+    and file identity. Repeated calls return the SAME object, so self-joins
+    must use .alias()/column-name join conditions, not attribute-style
+    ``a.col == b.col`` equality."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    ident = (st.st_mtime_ns, st.st_size)
+    memo = _plans.setdefault(spark, {})
+    hit = memo.get((kind, path))
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    plan = build()
+    memo[(kind, path)] = (ident, plan)
+    return plan
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -61,30 +76,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     truncate to micros) or plain TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ).
     Normalize both to session-TZ TimestampType so every downstream query and
     oracle sees one stable type.
+
+    The plan is memoized per session and file identity (``session_plan``):
+    schema inference against the footer costs ~0.1 s of py4j per read.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    cache = _plan_cache.setdefault(spark, {})
-    df = cache.get(key)
-    if df is not None:
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        if name == "events":
+            df = normalize_events_ts(df, events_ts_is_nanos(spark, sf_dir))
         return df
-    # a rewritten file misses on (mtime, size): evict the superseded
-    # entries for the same path so the dict never accretes stale plans
-    # (r13 ADVICE item 3). NOTE the shared-object contract: repeated calls
-    # return the SAME DataFrame — self-joins must use .alias()/column-name
-    # join conditions, not attribute-style a.col == b.col equality.
-    for k in [k for k in cache if k[0] == path]:
-        del cache[k]
-    if name == "events":
-        df = spark.read.parquet(path)
-        df = normalize_events_ts(df, events_ts_is_nanos(spark, sf_dir))
-    else:
-        df = spark.read.parquet(path)
-    cache[key] = df
-    return df
+
+    return session_plan(spark, "table", path, build)
 
 
 # r13 optimization: SCALE-ADAPTIVE SCAN FAN-OUT (guide §2.5 "input skew:
@@ -95,8 +101,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # workers) ran on 1 of 32 cores. `fan_out` repartitions the scan output
 # across `defaultParallelism` ONLY when the scan cannot reach that
 # parallelism by itself (split count derived from file size /
-# maxPartitionBytes, capped by the row-group count — both from cached
-# parquet footer metadata). At cluster scale a 100 TB table produces
+# maxPartitionBytes, capped by the row-group count from the parquet
+# footer). At cluster scale a 100 TB table produces
 # ~800k splits, the gate is false, and this is a no-op — the fan-out is
 # derived from input shape, not tuned to local mode.
 #
@@ -110,22 +116,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # windows, groupBy — never above a float SUM whose value depends on row
 # order (the registry's DECIMAL(9,2) determinism contract already bans
 # those).
-_SPLIT_CACHE: dict[tuple[str, int, int], int] = {}
-
-
 def _scan_splits(path: str, max_partition_bytes: int) -> int:
     """Max useful split count of one parquet file: size-based split count
     capped by the row-group count (a split with no row-group midpoint in
     range produces zero rows)."""
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    groups = _SPLIT_CACHE.get(key)
-    if groups is None:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        groups = pq.ParquetFile(path).metadata.num_row_groups
-        _SPLIT_CACHE[key] = groups
-    return min(max(1, st.st_size // max_partition_bytes + 1), groups)
+    groups = pq.ParquetFile(path).metadata.num_row_groups
+    return min(max(1, os.path.getsize(path) // max_partition_bytes + 1), groups)
 
 
 def _size_bytes(v: str) -> int:

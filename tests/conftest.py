@@ -30,6 +30,8 @@ def spark():
         shuffle_partitions=8,
         extra_conf={"spark.default.parallelism": "2"},
     )
+    # get_spark drops extra_conf when a session already exists
+    assert spark.sparkContext.defaultParallelism == 2, "test session conf not applied"
     yield spark
 
 

@@ -10,11 +10,12 @@ result. Pins:
 - executing a benched query leaves the session CacheManager empty, so a
   rebuilt plan can never hit it;
 - the trained-plan memo is keyed on the embeddings FILE IDENTITY, so an
-  in-place regeneration invalidates it (r13 ADVICE item 1).
+  in-place regeneration invalidates it.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 from pathlib import Path
@@ -60,6 +61,7 @@ def test_cache_manager_empty_after_benched_runs(spark):
     the CacheManager holds nothing: a rebuilt identical plan in a later
     timed run has nothing to be served from."""
     qs = _queries()
+    spark.catalog.clearCache()  # measure only what these two queries leave
     for name in ("dedup_minhash_lsh", "dedup_simhash"):
         qs[name](spark, SF_SMOKE).count()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
@@ -75,11 +77,15 @@ def test_trained_plan_memo_invalidates_on_file_change(spark, tmp_path):
 
     sf = tmp_path / "sf"
     sf.mkdir()
-    shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", sf / "embeddings.parquet")
+    dst = sf / "embeddings.parquet"
+    shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", dst)
     first = _trained_cells(spark, str(sf))
     assert _trained_cells(spark, str(sf)) is first  # unchanged file: reuse
-    # rewrite in place (content identical is fine — identity is mtime/size)
-    shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", sf / "embeddings.parquet")
+    # rewrite in place (content identical is fine — identity is mtime/size);
+    # force a distinct mtime, which a coarse-grained filesystem may not give
+    t = os.stat(dst).st_mtime_ns + 1_000_000_000
+    shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", dst)
+    os.utime(dst, ns=(t, t))
     assert _trained_cells(spark, str(sf)) is not first, (
         "trained-plan memo served a stale plan after the embeddings file "
         "was regenerated in place"

@@ -497,7 +497,7 @@ def test_refined_ivfpq_recall_and_broadcast_fetch(spark):
     from incubator_paimon_trino_spark.operators.clustering import (
         _IVF_NQ,
         _PQ_TOPK,
-        _corpus,
+        _quantized,
     )
 
     fin_df = _q("ann_ivfpq_refined")(spark, SF_SMOKE)
@@ -507,7 +507,7 @@ def test_refined_ivfpq_recall_and_broadcast_fetch(spark):
 
     res = {(r.query_id, r.neighbor_id) for r in _q("ann_ivfpq_residual")(spark, SF_SMOKE).collect()}
     fin = {(r.query_id, r.neighbor_id) for r in fin_df.collect()}
-    corp = _corpus(spark, SF_SMOKE)
+    corp = _quantized(spark, SF_SMOKE)
     qv = corp.filter(F.col("vec_id") < _IVF_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
     )

@@ -1,11 +1,13 @@
-"""Flat-table read-plan cache (r13 optimization round): `sources.table()`
-memoizes the assembled DataFrame per (session, file identity). Pure PLAN
-reuse — every action still scans parquet; pins: reuse, file-change
-invalidation, and that a reused plan still computes fresh results.
+"""The session plan memo (`sources.registry.session_plan`) behind
+`sources.table()` and `_trained_cells`: plans only, per session, by file
+identity. Pins: reuse, file-change invalidation with one entry per path,
+no collision between kinds on one file, no sharing across sessions, and
+that a reused plan still computes fresh results.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 from pathlib import Path
@@ -64,3 +66,56 @@ def test_events_encoding_normalization_survives_cache(spark):
     e2 = table(spark, SF_SMOKE, "events")
     assert e1 is e2
     assert isinstance(e1.schema["ts"].dataType, T.TimestampType)
+
+
+def _entries(spark, path):
+    from incubator_paimon_trino_spark.sources.registry import _plans
+
+    path = os.path.abspath(path)
+    return [k for k in _plans.get(spark, {}) if k[1] == path]
+
+
+def test_rewritten_file_leaves_one_entry_per_path(spark, tmp_path):
+    from incubator_paimon_trino_spark.sources import table
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    dst = sf / "region.parquet"
+    shutil.copy(Path(SF_SMOKE) / "region.parquet", dst)
+    first = table(spark, str(sf), "region")
+    st = os.stat(dst)
+    for i in range(1, 4):
+        shutil.copy(Path(SF_SMOKE) / "region.parquet", dst)
+        t = st.st_mtime_ns + i * 1_000_000_000  # a distinct mtime per rewrite
+        os.utime(dst, ns=(t, t))
+        assert table(spark, str(sf), "region") is not first
+    assert _entries(spark, dst) == [("table", str(dst))]
+
+
+def test_table_and_trained_cells_do_not_collide(spark, tmp_path):
+    from incubator_paimon_trino_spark.operators.clustering import _trained_cells
+    from incubator_paimon_trino_spark.sources import table
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", sf / "embeddings.parquet")
+    e = table(spark, str(sf), "embeddings")
+    cells = _trained_cells(spark, str(sf))
+    assert isinstance(cells, tuple) and len(cells) == 3
+    assert table(spark, str(sf), "embeddings") is e
+    assert _trained_cells(spark, str(sf)) is cells
+    path = str(sf / "embeddings.parquet")
+    assert sorted(_entries(spark, path)) == [("table", path), ("trained_cells", path)]
+
+
+def test_new_session_gets_its_own_plans(spark):
+    from incubator_paimon_trino_spark.operators.clustering import _trained_cells
+    from incubator_paimon_trino_spark.sources import table
+
+    other = spark.newSession()
+    assert table(other, SF_SMOKE, "region") is not table(spark, SF_SMOKE, "region")
+    mine = _trained_cells(spark, SF_SMOKE)
+    theirs = _trained_cells(other, SF_SMOKE)
+    assert theirs is not mine
+    assert _trained_cells(other, SF_SMOKE) is theirs
+    assert theirs[0].sparkSession is other

@@ -303,23 +303,3 @@ def test_like_prefix_domain_edges():
     # [abc, abd); 'abz' falls outside — so pruning can never drop a match
     assert r.low <= "abcz" < r.high
     assert not (r.low <= "abz" < r.high)
-
-
-def test_freeze_tuple_domain_stable_and_type_tagged():
-    """r13 plan-cache key: order-stable, type-tagged, hashable — and safe
-    for two domains on the SAME column (the sort key must never compare a
-    None op against a string op)."""
-    from incubator_paimon_trino_spark.functions.predicates import (
-        ColumnDomain,
-        Range,
-        freeze_tuple_domain,
-    )
-
-    a = ColumnDomain(column="k", op="<", value=5)
-    b = ColumnDomain(column="k", ranges=[Range(low=1, high=3)])
-    assert freeze_tuple_domain([a, b]) == freeze_tuple_domain([b, a])
-    assert hash(freeze_tuple_domain([a, b])) is not None
-    # type-tagged: int 5 and str '5' are different cache keys
-    s = ColumnDomain(column="k", op="<", value="5")
-    assert freeze_tuple_domain([a]) != freeze_tuple_domain([s])
-    assert freeze_tuple_domain(None) == () == freeze_tuple_domain([])

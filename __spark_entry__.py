@@ -72,6 +72,13 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # queries that commit to deletion-vector tables: the DV commit path
+    # (summary aggregate, bounded hits collect, positional DELETE)
+    "lake_deletion_vector_read",
+    "lake_dv_cdc_pipeline",
+    "lake_dv_changelog_stream",
+    "lake_manifest_changelog_stream",
+    "lake_metadata_count",
     # trained-plan memo moved to sources.registry.session_plan (per session)
     "embedding_kmeans_assign",
     "dedup_embedding_cosine_blocked",
@@ -127,12 +134,9 @@ _REPROOF: tuple[str, ...] = (
     "limit_fetch_with_ties",
     # read_table plan cache removed — every other read_table consumer,
     # riskiest first
-    "lake_deletion_vector_read",
     "lake_delta_base_split_read",
     "lake_bloom_index_point_lookup",
     "lake_bitmap_index_lookup",
-    "lake_dv_cdc_pipeline",
-    "lake_dv_changelog_stream",
     "lake_merge_on_read",
     "lake_compacted_merge_free_read",
     "lake_time_travel_v1",
@@ -161,7 +165,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_consumer_resume",
     "lake_schema_evolution",
     "lake_orc_scan",
-    "lake_manifest_changelog_stream",
     "lake_timestamp_precision",
     "lake_char_padded_read",
     "lake_like_prefix_pruned_scan",

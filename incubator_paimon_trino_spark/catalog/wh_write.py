@@ -485,6 +485,7 @@ class WriteMixin:
         df: DataFrame,
         overwrite: bool = False,
         row_kind: str | None = None,
+        positions: "tuple[int, DataFrame] | None" = None,
     ) -> int:
         """Commit ``df`` as a new snapshot; returns the snapshot id.
 
@@ -494,6 +495,11 @@ class WriteMixin:
         ``row_kind`` argument or per-row via an existing ``_row_kind`` column.
         Executors write the parquet in parallel; the driver then commits the
         manifest with an atomic rename.
+
+        ``positions`` = (snapshot id, DataFrame of ``__dv_file`` basename,
+        ``__dv_pos``): where a ``row_kind="D"`` batch's rows live in that
+        snapshot (``delete_where`` on a DV table). While that snapshot is the
+        latest they are the commit's marks; otherwise they are ignored.
         """
         tdir = self._table_dir(db, table)
         schema = self._latest_schema(tdir)
@@ -621,163 +627,165 @@ class WriteMixin:
         #: (index name, newly marked, cumulative marks, files written) —
         #: set for every DV-table commit; None on non-DV tables.
         dv_index: tuple[str, int, int, list[str]] | None = None
+        #: rows a DV-table commit writes; 0 = a metadata-only commit
+        dv_rows = 0
         dv_cached: DataFrame | None = None
-        if self._dv_enabled(schema):
-            pk = schema.primary_key
-            # the batch plan feeds four actions on this path (duplicate-key
-            # probe, mark-scan join, emptiness probe, physical write) and for
-            # UPDATE/DELETE it is itself a full merged read — persist so it
-            # materializes once (unpersisted after the write; a write-time
-            # exception leaves one LRU-evictable entry behind, never growth)
-            out = out.persist()
-            dv_cached = out
-            try:
-                # DV mode has no read-time merge to disambiguate two versions
-                # of one key inside a single commit — reject duplicates
-                # loudly instead of writing a file whose extra version can
-                # never be marked (Paimon's writer dedups in its LSM
-                # memtable; a batch DataFrame has no arrival order).
-                dup = (
-                    out.filter(F.col(KIND_COL) != "D")
-                    .groupBy(*pk)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .collect()
-                )
-                if dup:
-                    raise ValueError(
-                        "deletion-vectors table: batch carries multiple insert "
-                        f"rows for one primary key (e.g. {dict(zip(pk, dup[0][:len(pk)]))}); "
-                        "pre-merge the batch to one row per key"
-                    )
-                if not overwrite and prev is not None and prev.files:
-                    dv_index = self._dv_build(tdir, schema, prev, out, version)
+        try:
+            if self._dv_enabled(schema):
+                pk = schema.primary_key
+                has_prev = not overwrite and prev is not None and bool(prev.files)
+                if (
+                    has_prev
+                    and positions is not None
+                    and row_kind == "D"
+                    and positions[0] == prev.snapshot_id
+                ):
+                    # positional DELETE read at the still-latest snapshot:
+                    # its positions are the marks, nothing is written. Once
+                    # a commit lands after that read, the key join below
+                    # runs against the new tip instead.
+                    dv_index = self._dv_build(tdir, schema, prev, positions[1], version)
                 else:
-                    name = self._dv_write_inline(tdir, version, {})
-                    dv_index = (name, 0, 0, [name])
-            except BaseException:
+                    # the batch feeds three actions (the summary aggregate,
+                    # the mark scan's key join, the physical write) and for
+                    # UPDATE/DELETE it is itself a full merged read —
+                    # persist so it materializes once
+                    out = dv_cached = out.persist()
+                    dv_rows, has_d, n_keys, lo, hi = self._dv_batch_summary(out, pk)
+                    if has_prev:
+                        hits = (
+                            self._dv_key_hits(tdir, schema, prev, out.select(*pk), lo, hi)
+                            if n_keys
+                            else None
+                        )
+                        dv_index = self._dv_build(tdir, schema, prev, hits, version)
+                    else:
+                        name = self._dv_write_inline(tdir, version, {})
+                        dv_index = (name, 0, 0, [name])
+                    # F1 tie-break (+I and -D of one key in one commit →
+                    # deleted): the delete also cancels the batch's own
+                    # insert. -D rows are then dropped from the physical
+                    # write — a DV table records deletion ONLY as vectors,
+                    # never as -D data rows (which also means changelog
+                    # readers of a DV table see inserts only).
+                    d_keys = out.filter(F.col(KIND_COL) == "D").select(*pk).dropDuplicates()
+                    out = out.filter(F.col(KIND_COL) != "D")
+                    if has_d:
+                        out = out.join(d_keys, pk, "left_anti")
+            if dv_index is not None and not dv_rows:
+                # a DV commit with no row to write (a DELETE) is metadata
+                # only: an empty part file would add a zero-row data file
+                # per delete forever
+                final_paths, new_files, dyn_index_delta = [], [], None
+            else:
+                # bucketing (reference options bucket/bucket_key — A16): hash-
+                # repartition on the bucket key so each commit writes exactly
+                # `bucket` files per partition, co-locating equal keys. Joins between
+                # two tables bucketed the same way then shuffle far less data (and
+                # with storage-partitioned-join-aware readers, not at all).
+                n_buckets = int(schema.options.get("bucket", "0") or 0)
+                bucket_key = schema.options.get("bucket_key") or (
+                    schema.primary_key[0] if schema.primary_key else None
+                )
+                dyn_index_delta: str | None = None
+                if n_buckets > 0 and bucket_key:
+                    out = out.repartition(n_buckets, F.col(bucket_key))
+                elif n_buckets == -1:
+                    # dynamic bucket mode (bucket = -1): stable key→bucket from the
+                    # maintained index, new keys fill buckets up to target-row-num
+                    out, dyn_index_delta = self._dynamic_bucket_assign(tdir, schema, out, version)
+                    out = out.repartition(F.col("_bucket"))
+                elif schema.options.get("clustering_columns"):
+                    # clustering.columns (Paimon append-table clustering): range-
+                    # partition + sort the commit on the clustering key so each file
+                    # covers a NARROW key range — manifest min/max skipping then
+                    # prunes point/range predicates to a handful of files instead of
+                    # every file overlapping the whole domain. The range exchange is
+                    # per-commit and sampling-based (Spark's RangePartitioner), so
+                    # cost stays proportional to the commit, not the table.
+                    cluster_cols = _split_cols(schema.options["clustering_columns"])
+                    for c in cluster_cols:
+                        if c not in expected:
+                            raise ValueError(f"clustering column {c!r} not a table column")
+                    # clustering_partitions pins the range-bucket count (file count
+                    # per commit); default lets Spark/AQE size buckets by volume —
+                    # right at scale, but a tiny commit then collapses to one file
+                    # and min/max pruning has nothing to skip.
+                    n_ranges = int(schema.options.get("clustering_partitions", "0") or 0)
+                    w_strategy = schema.options.get("clustering_strategy", "").strip().lower()
+                    if w_strategy in ("zorder", "hilbert"):
+                        # curve-keyed write clustering: every commit's files become
+                        # tight boxes in ALL clustering dimensions (same key as the
+                        # matching compaction strategy; the commit-local min/max agg
+                        # costs one scalar job over the commit, not the table)
+                        key_of = (
+                            self._zorder_expr if w_strategy == "zorder" else self._hilbert_expr
+                        )
+                        zc = "_zorder_key"
+                        out = out.withColumn(zc, key_of(out, schema, cluster_cols))
+                        out = (
+                            out.repartitionByRange(n_ranges, F.col(zc))
+                            if n_ranges > 0
+                            else out.repartitionByRange(F.col(zc))
+                        )
+                        out = out.sortWithinPartitions(zc).drop(zc)
+                    else:
+                        range_cols = [F.col(c) for c in cluster_cols]
+                        out = (
+                            out.repartitionByRange(n_ranges, *range_cols)
+                            if n_ranges > 0
+                            else out.repartitionByRange(*range_cols)
+                        )
+                        out = out.sortWithinPartitions(*cluster_cols)
+
+                fmt = schema.options.get("file_format", "PARQUET").upper()
+                if fmt not in ("ORC", "PARQUET", "AVRO"):
+                    raise ValueError(f"unsupported file_format {fmt!r} (have PARQUET, ORC, AVRO)")
+                ext = {"ORC": "orc", "AVRO": "avro", "PARQUET": "parquet"}[fmt]
+                staging = self._staging_dir(tdir, version)
+                fb_counts: dict[str, int] | None = None
+                writer = out.write.mode("errorifexists")
+                part_cols = list(schema.partition_keys)
+                if "_bucket" in out.columns:
+                    # dynamic bucket: the bucket id rides as the INNERMOST hive
+                    # partitionBy layer; _finalize_commit renames `_bucket=N` to
+                    # Paimon's plain `bucket-N` so readers never see the column
+                    part_cols.append("_bucket")
+                if part_cols:
+                    writer = writer.partitionBy(*part_cols)
+                if fmt == "ORC":
+                    writer.orc(staging)
+                elif fmt == "PARQUET":
+                    writer.parquet(staging)
+                else:
+                    # Paimon's third file format (FileFormatType —
+                    # TrinoTableOptionUtils.java:96,111-112). Spark's avro data
+                    # source is an external module; when absent, fall back to
+                    # the pure-Python OCF writer (formats/avro_ocf.py): executors
+                    # encode standard Avro container files, one per (task,
+                    # partition dir).
+                    try:
+                        writer.format("avro").save(staging)
+                    except Exception as ex:  # AnalysisException: Failed to find data source
+                        if "Failed to find data source" not in str(ex):
+                            raise
+                        fb_counts = self._write_avro_fallback(out, staging, schema)
+                final_paths = self._finalize_commit(tdir, staging, version, ext)
+                new_files = self._commit_files(tdir, final_paths, ext, schema, fb_counts)
+                # file-index sidecars (bloom / bitmap) for the new files, BEFORE
+                # the publish below — a reader must never resolve a snapshot whose
+                # sidecars are still being written (missing sidecar = file kept,
+                # so it would only lose skipping, but build-then-publish keeps the
+                # invariant simple). A crash here leaves finalized-but-unpublished
+                # files + sidecars: remove_orphan_files debris, as before.
+                build_file_indexes(self.spark, final_paths, schema)
+                if n_buckets > 0 and bucket_key:
+                    _record_buckets(new_files, schema, bucket_key, n_buckets)
+                elif n_buckets == -1:
+                    _record_dynamic_buckets(new_files)
+        finally:
+            if dv_cached is not None:
                 dv_cached.unpersist()
-                raise
-            # F1 tie-break (+I and -D of one key in one commit → deleted):
-            # the delete also cancels the batch's own insert. -D rows are
-            # then dropped from the physical write — a DV table records
-            # deletion ONLY as vectors, never as -D data rows (which also
-            # means changelog readers of a DV table see inserts only).
-            d_keys = out.filter(F.col(KIND_COL) == "D").select(*pk).dropDuplicates()
-            out = out.filter(F.col(KIND_COL) != "D").join(d_keys, pk, "left_anti")
-
-        # bucketing (reference options bucket/bucket_key — A16): hash-
-        # repartition on the bucket key so each commit writes exactly
-        # `bucket` files per partition, co-locating equal keys. Joins between
-        # two tables bucketed the same way then shuffle far less data (and
-        # with storage-partitioned-join-aware readers, not at all).
-        n_buckets = int(schema.options.get("bucket", "0") or 0)
-        bucket_key = schema.options.get("bucket_key") or (
-            schema.primary_key[0] if schema.primary_key else None
-        )
-        dyn_index_delta: str | None = None
-        if n_buckets > 0 and bucket_key:
-            out = out.repartition(n_buckets, F.col(bucket_key))
-        elif n_buckets == -1:
-            # dynamic bucket mode (bucket = -1): stable key→bucket from the
-            # maintained index, new keys fill buckets up to target-row-num
-            out, dyn_index_delta = self._dynamic_bucket_assign(tdir, schema, out, version)
-            out = out.repartition(F.col("_bucket"))
-        elif schema.options.get("clustering_columns"):
-            # clustering.columns (Paimon append-table clustering): range-
-            # partition + sort the commit on the clustering key so each file
-            # covers a NARROW key range — manifest min/max skipping then
-            # prunes point/range predicates to a handful of files instead of
-            # every file overlapping the whole domain. The range exchange is
-            # per-commit and sampling-based (Spark's RangePartitioner), so
-            # cost stays proportional to the commit, not the table.
-            cluster_cols = _split_cols(schema.options["clustering_columns"])
-            for c in cluster_cols:
-                if c not in expected:
-                    raise ValueError(f"clustering column {c!r} not a table column")
-            # clustering_partitions pins the range-bucket count (file count
-            # per commit); default lets Spark/AQE size buckets by volume —
-            # right at scale, but a tiny commit then collapses to one file
-            # and min/max pruning has nothing to skip.
-            n_ranges = int(schema.options.get("clustering_partitions", "0") or 0)
-            w_strategy = schema.options.get("clustering_strategy", "").strip().lower()
-            if w_strategy in ("zorder", "hilbert"):
-                # curve-keyed write clustering: every commit's files become
-                # tight boxes in ALL clustering dimensions (same key as the
-                # matching compaction strategy; the commit-local min/max agg
-                # costs one scalar job over the commit, not the table)
-                key_of = self._zorder_expr if w_strategy == "zorder" else self._hilbert_expr
-                zc = "_zorder_key"
-                out = out.withColumn(zc, key_of(out, schema, cluster_cols))
-                out = (
-                    out.repartitionByRange(n_ranges, F.col(zc))
-                    if n_ranges > 0
-                    else out.repartitionByRange(F.col(zc))
-                )
-                out = out.sortWithinPartitions(zc).drop(zc)
-            else:
-                range_cols = [F.col(c) for c in cluster_cols]
-                out = (
-                    out.repartitionByRange(n_ranges, *range_cols)
-                    if n_ranges > 0
-                    else out.repartitionByRange(*range_cols)
-                )
-                out = out.sortWithinPartitions(*cluster_cols)
-
-        fmt = schema.options.get("file_format", "PARQUET").upper()
-        if fmt not in ("ORC", "PARQUET", "AVRO"):
-            raise ValueError(f"unsupported file_format {fmt!r} (have PARQUET, ORC, AVRO)")
-        ext = {"ORC": "orc", "AVRO": "avro", "PARQUET": "parquet"}[fmt]
-        if dv_index is not None and out.isEmpty():
-            # pure-DV commit (a DELETE with nothing to insert): the snapshot
-            # is metadata only — writing an empty part file would add a
-            # zero-row data file per delete forever
-            final_paths, new_files = [], []
-        else:
-            staging = self._staging_dir(tdir, version)
-            fb_counts: dict[str, int] | None = None
-            writer = out.write.mode("errorifexists")
-            part_cols = list(schema.partition_keys)
-            if "_bucket" in out.columns:
-                # dynamic bucket: the bucket id rides as the INNERMOST hive
-                # partitionBy layer; _finalize_commit renames `_bucket=N` to
-                # Paimon's plain `bucket-N` so readers never see the column
-                part_cols.append("_bucket")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            if fmt == "ORC":
-                writer.orc(staging)
-            elif fmt == "PARQUET":
-                writer.parquet(staging)
-            else:
-                # Paimon's third file format (FileFormatType —
-                # TrinoTableOptionUtils.java:96,111-112). Spark's avro data
-                # source is an external module; when absent, fall back to
-                # the pure-Python OCF writer (formats/avro_ocf.py — r9,
-                # closing the last format gap) — executors encode standard
-                # Avro container files, one per (task, partition dir).
-                try:
-                    writer.format("avro").save(staging)
-                except Exception as ex:  # AnalysisException: Failed to find data source
-                    if "Failed to find data source" not in str(ex):
-                        raise
-                    fb_counts = self._write_avro_fallback(out, staging, schema)
-            final_paths = self._finalize_commit(tdir, staging, version, ext)
-            new_files = self._commit_files(tdir, final_paths, ext, schema, fb_counts)
-            # file-index sidecars (bloom / bitmap) for the new files, BEFORE
-            # the publish below — a reader must never resolve a snapshot whose
-            # sidecars are still being written (missing sidecar = file kept,
-            # so it would only lose skipping, but build-then-publish keeps the
-            # invariant simple). A crash here leaves finalized-but-unpublished
-            # files + sidecars: remove_orphan_files debris, as before.
-            build_file_indexes(self.spark, final_paths, schema)
-        if dv_cached is not None:
-            dv_cached.unpersist()
-        if n_buckets > 0 and bucket_key:
-            _record_buckets(new_files, schema, bucket_key, n_buckets)
-        elif n_buckets == -1:
-            _record_dynamic_buckets(new_files)
         n = sum(e["record_count"] for e in new_files)
         fresh = overwrite or prev is None
         files = new_files if fresh else prev.files + new_files
@@ -927,9 +935,11 @@ class WriteMixin:
                     raise
 
     def delete_where(self, db: str, table: str, condition) -> int:
-        """DELETE: -D changelog rows for matching keys on PK tables; on
-        append tables, a partition-scoped predicate drops whole partitions
-        as one metadata-only commit (``drop_partitions``).
+        """DELETE: -D changelog rows for matching keys on PK tables; on a
+        parquet deletion-vector table, the positions of the matching live
+        rows, read in one scan, become the commit's marks; on append tables,
+        a partition-scoped predicate drops whole partitions as one
+        metadata-only commit (``drop_partitions``).
 
         The reference has no DELETE (negative finding, SURVEY §2.A) — data
         changes arrive via external writers. We go further: a delete is just
@@ -996,6 +1006,24 @@ class WriteMixin:
                     "DELETE on a partial-update table requires 'ignore-delete', "
                     "'partial-update.remove-record-on-delete', or sequence groups "
                     "(the engine has no rule for what a bare delete outranks)"
+                )
+        if self._dv_enabled(schema):
+            # the live rows are the rows read_table returns for a DV table.
+            # Parquet only: ORC and Avro have no native row index, and their
+            # positional readers decode in Python, so a full positional scan
+            # there would cost more than the key join's pruned one
+            tdir = self._table_dir(db, table)
+            snap = self._pin_snapshot(tdir, None, None, None)
+            if snap is not None and snap.files and all(
+                e.get("format", "parquet") == "parquet" for e in snap.files
+            ):
+                doomed = self._dv_live_rows(tdir, schema, snap, snap).filter(condition)
+                return self.insert_into(
+                    db,
+                    table,
+                    doomed.select(*[f.name for f in schema.fields]),
+                    row_kind="D",
+                    positions=(snap.snapshot_id, doomed.select(_DV_FILE, _DV_POS)),
                 )
         # use_fallback=False on every internal physical/write read: fallback-
         # branch is a SCAN-TIME option (Paimon serves missing partitions from

@@ -314,11 +314,11 @@ def test_oversized_bucket_splits_into_sub_shards(cat, spark):
 
 
 def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):
-    """r9: the DV commit's superseded-row scan is bounded by the batch's
-    lead-PK min/max through manifest min/max pruning — a point DELETE on a
+    """A DV upsert's superseded-row scan is bounded by the batch's lead-PK
+    min/max through manifest min/max pruning: a point upsert on a
     many-file table opens only the files whose key range admits the key,
-    never the table. (Previously claimed in the docstring, now executed
-    and pinned.)"""
+    never the table. A DELETE takes no key join at all: its one positional
+    read of the live rows is also where its marks come from."""
     cat.create_database("d")
     cat.create_table(
         "d", "pr", [("k", "bigint"), ("v", "string")],
@@ -345,18 +345,25 @@ def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):
         return orig(self, tdir_, schema_, snap_, with_pos)
 
     monkeypatch.setattr(WarehouseCatalog, "_read_files", spy)
-    cat.sql("DELETE FROM d.pr WHERE k = 1005")  # middle file only
-    assert seen == [1], seen
+    cat.insert_into(
+        "d", "pr", spark.createDataFrame([(1005, "u")], "k bigint, v string")
+    )
+    assert seen == [1], seen  # the upsert's mark scan: middle file only
+    seen.clear()
+    live = len(cat._snapshots(tdir)[-1].files)
+    cat.sql("DELETE FROM d.pr WHERE k = 1006")
+    # one positional read of every live file, no second scan
+    assert seen == [live], seen
+    seen.clear()
     assert cat.read_table("d.pr").count() == 149
-    # r10 clean/dirty split: that read position-scans ONLY the marked file
-    # (the inline index names it driver-side, bounded); the two clean files
-    # scan plain — pinned by the spy seeing 1, not 3
-    assert seen == [1, 1], seen
-    # an empty batch (nothing matches): the MARK SCAN is skipped outright —
-    # delete_where's own merged read position-scans just the dirty file too
+    # clean/dirty split: that read position-scans ONLY the marked file
+    # (the inline index names it driver-side, bounded); the clean files
+    # and the upsert's new file scan plain
+    assert seen == [1], seen
+    # an empty match (nothing to delete): still one positional read
     seen.clear()
     cat.sql("DELETE FROM d.pr WHERE k = 999999")
-    assert seen == [1], seen
+    assert seen == [live], seen
     assert cat.read_table("d.pr").count() == 149
 
 

@@ -72,8 +72,9 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
-    # queries that commit to deletion-vector tables: the DV commit path
-    # (summary aggregate, bounded hits collect, positional DELETE)
+    # queries that commit to and read deletion-vector tables: the DV commit
+    # path (summary aggregate, bounded hits collect, positional DELETE) and
+    # the DV read path (marks dropped by the broadcast anti-join only)
     "lake_deletion_vector_read",
     "lake_dv_cdc_pipeline",
     "lake_dv_changelog_stream",

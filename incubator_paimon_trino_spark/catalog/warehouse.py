@@ -815,15 +815,14 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         if dirty is None:
             df = self._read_files(tdir, schema, snap, with_pos=has_dv)
         if has_dv and dirty is not None:
-            # CLEAN/DIRTY split (r10 — the dv_read residual in PROFILE_r10):
-            # an inline index names its mark-bearing files in one bounded
-            # driver parse (the same O(threshold) contract the commit-side
-            # fold uses), so files WITHOUT marks scan plain — no
-            # _metadata.row_index read, no anti-join — and only dirty files
-            # pay the position filter. A point DELETE then taxes one file,
-            # not the table. Sharded indexes (dirty is None) keep the
-            # all-files join: enumerating their file names is O(live
-            # deleted rows), the bound r9 removed from the driver.
+            # CLEAN/DIRTY split: an inline index names its mark-bearing
+            # files in one bounded driver parse (the same O(threshold)
+            # contract the commit-side fold uses), so files WITHOUT marks
+            # scan plain — no _metadata.row_index read, no anti-join — and
+            # only dirty files pay the anti-join. A point DELETE then taxes
+            # one file, not the table. Sharded indexes (dirty is None) keep
+            # the all-files anti-join: enumerating their file names is
+            # O(live deleted rows), a bound the driver must not carry.
             user_cols = [f.name for f in schema.fields]
             clean = [e for e in snap.files if os.path.basename(e["path"]) not in dirty]
             hot = [e for e in snap.files if os.path.basename(e["path"]) in dirty]
@@ -853,7 +852,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # -D rows are never stored), so the whole merge-on-read
             # groupBy/shuffle disappears — filters and projections push
             # straight into the file scan. The marks side is a Spark read
-            # of the committed index (r8: never a driver dict — see
+            # of the committed index, never a driver dict (see
             # _dv_apply_distributed). with_system_columns still exposes
             # the raw unfiltered changelog view, like non-DV tables.
             if has_dv:
@@ -1066,9 +1065,13 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         rename must not orphan data.
 
         ``with_pos`` appends the file provenance columns the deletion-vector
-        machinery joins on: ``__dv_file`` (``_metadata.file_path``) and
-        ``__dv_pos`` (``_metadata.row_index`` — the row's ordinal within its
-        file, Spark's native row-position metadata; no shuffle, no window).
+        machinery joins on: ``__dv_file``, the data file's basename (the key
+        the DV index stores marks under), and ``__dv_pos``
+        (``_metadata.row_index`` — the row's ordinal within its file,
+        Spark's native row-position metadata; no shuffle, no window). The
+        ORC and Avro positional readers synthesize both from their in-order
+        decode; every reader's path reduces to its basename once, over the
+        union.
         """
         # group ALSO by resolved data root: a branch snapshot mixes files it
         # inherited from the parent table ("../../data/...") with its own
@@ -1166,6 +1169,8 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
+        if with_pos:
+            out = out.withColumn(_DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1))
         return out
 
     # ------------------------------------------------ metadata aggregation

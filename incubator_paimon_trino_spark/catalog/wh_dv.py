@@ -18,9 +18,7 @@ import shutil
 import time
 import warnings
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from incubator_paimon_trino_spark.catalog.metadata import (
@@ -62,41 +60,6 @@ from incubator_paimon_trino_spark.functions.types import (
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
 
 
-def _dv_keep_udf(spark: SparkSession, by_hash: dict):
-    """Arrow-batched keep-row predicate for the DV position-set pushdown:
-    ``by_hash`` ({crc32(file basename) int64 → SORTED int64 numpy
-    positions}, bounded by the caller's broadcast-rows check) ships to
-    executors as a Spark broadcast. The caller hashes the basename JVM-side
-    (``F.crc32`` == ``zlib.crc32`` — the same pairing the sharded index's
-    bucketing relies on), so only two INT64 columns cross the Arrow bridge
-    — shipping the path strings themselves was 6x the bytes and the
-    dominant cost of the first cut. Each batch factorizes its (almost
-    always single-valued) file-hash column and binary-searches the file's
-    position array with ``np.searchsorted``."""
-    import numpy as np
-
-    bc = spark.sparkContext.broadcast(by_hash)
-
-    @F.pandas_udf("boolean")
-    def _keep(hash_col: pd.Series, pos_col: pd.Series) -> pd.Series:
-        h = hash_col.to_numpy(dtype=np.int64, copy=False)
-        pos = pos_col.to_numpy(dtype=np.int64, copy=False)
-        out = np.ones(len(h), dtype=bool)
-        vectors = bc.value
-        for u in np.unique(h):
-            ps = vectors.get(int(u))
-            if ps is None or not len(ps):
-                continue
-            m = h == u
-            p = pos[m]
-            idx = np.searchsorted(ps, p)
-            idx_c = np.minimum(idx, len(ps) - 1)
-            out[m] = ps[idx_c] != p
-        return pd.Series(out)
-
-    return _keep
-
-
 class DeletionVectorMixin:
     # ---------------------------------------------------- deletion vectors
     # Paimon's ``deletion-vectors.enabled`` (DV mode): instead of merging
@@ -105,7 +68,10 @@ class DeletionVectorMixin:
     # merge shuffle at all. The reference connector inherits this from
     # Paimon core at scan time; here it is executable end-to-end: writes
     # pay a key lookup against the live files (Paimon's lookup compaction
-    # cost), reads drop the whole merge-on-read exchange.
+    # cost), reads drop the whole merge-on-read exchange. Reads and
+    # commits drop marked rows the same way: ``_dv_anti_join``, a Spark
+    # read of the committed index anti-joined on (file basename,
+    # position), so marks never transit the driver.
 
     @staticmethod
     def _dv_enabled(schema: TableSchema) -> bool:
@@ -232,11 +198,12 @@ class DeletionVectorMixin:
             width, schema.options.get("merge_read_delta_broadcast_rows")
         )
 
-    def _dv_pushdown_rows(self, schema: TableSchema) -> int:
-        """DV position-filter bound: a mark row is a file basename (~45B)
-        plus a bigint position. Override: ``deletion-vectors.broadcast-rows``."""
+    def _dv_broadcast_rows(self, schema: TableSchema | None = None) -> int:
+        """Bound on the marks ``_dv_anti_join`` hints for broadcast: a mark
+        row is a file basename (~45B) plus a bigint position. Override:
+        ``deletion-vectors.broadcast-rows``."""
         return self._broadcast_rows_bound(
-            64, schema.options.get("deletion_vectors_broadcast_rows")
+            64, schema.options.get("deletion_vectors_broadcast_rows") if schema else None
         )
 
     def _delta_base_split(
@@ -261,100 +228,14 @@ class DeletionVectorMixin:
         delta = self._read_files(tdir, schema, dataclasses.replace(snap, files=delta_files))
         return base, delta
 
-    def _dv_position_sets(self, tdir: str, snap: Snapshot) -> "dict | None":
-        """{file basename → sorted int64 numpy positions} for the snapshot's
-        marks — a DIRECT driver parse of the index documents, BOUNDED by the
-        caller's ``dv_marks ≤ _dv_pushdown_rows`` check (the same
-        explicit-contract shape as the inline fold's threshold bound; the
-        unbounded case never reaches here — it keeps the distributed
-        anti-join). A Spark job here would put a blocking ~0.3s collect in
-        every plan build (measured: bench_lake dv_read 2.2x → 4.7x), for
-        marks a bounded json parse reads in milliseconds. Index files are
-        immutable and nonce-named, so results cache per (tdir, name).
-        None = no marks."""
-        import numpy as np
-
-        from incubator_paimon_trino_spark.catalog.dv_index import mark_file_names
-
-        if not snap.dv:
-            return None
-        key = (tdir, snap.dv)
-        cache = getattr(self, "_dv_posset_cache", None)
-        if cache is None:
-            cache = self._dv_posset_cache = {}
-        if key in cache:
-            return cache[key]
-        merged: dict[str, set] = {}
-        found = False
-        for name in mark_file_names(tdir, snap.dv):
-            try:
-                doc = read_json(os.path.join(tdir, "index", name))
-            except FileNotFoundError:
-                continue
-            found = True
-            for rel, ps in doc.get("vectors", {}).items():
-                base = os.path.basename(rel.replace("\\", "/"))
-                merged.setdefault(base, set()).update(ps)
-        out = (
-            {b: np.array(sorted(ps), dtype=np.int64) for b, ps in merged.items()}
-            if found
-            else None
-        )
-        if len(cache) >= 8:  # tiny LRU: reads cluster on few snapshots
-            cache.pop(next(iter(cache)))
-        cache[key] = out
-        return out
-
     def _dv_apply_distributed(
         self, df: DataFrame, tdir: str, snap: Snapshot, schema: TableSchema | None = None
     ) -> DataFrame:
-        """Drop DV-marked rows. Two strategies, chosen from snapshot
-        metadata alone (``snap.dv_marks`` — no job):
-
-        - **Position-set pushdown**: when the
-          cumulative mark count fits the config-derived broadcast bound,
-          the per-file sorted position arrays broadcast to the executors
-          and an Arrow-batched vectorized binary search
-          (``np.searchsorted``) filters ``_metadata.row_index`` directly —
-          NO join in the plan at all, and no per-row string basename
-          extraction (file paths factorize per Arrow batch, ~1 distinct
-          path each, since scan tasks read one file at a time).
-        - **Distributed anti-join** otherwise: the marks side
-          is read BY SPARK from the committed index (never the driver) and
-          the join strategy is left to AQE. A sharded index reads as many
-          small per-bucket parse tasks; an index reaped by expiry reads as
-          no-marks."""
-        bound = self._dv_pushdown_rows(schema) if schema is not None else 0
-        if snap.dv_marks is not None and 0 < snap.dv_marks <= bound:
-            per_file = self._dv_position_sets(tdir, snap)
-            if per_file is None:
-                return df.drop(_DV_FILE, _DV_POS)
-            import zlib
-
-            by_hash = {
-                zlib.crc32(b.encode("utf-8")): ps for b, ps in per_file.items()
-            }
-            # the filter keys on crc32(basename), so a collision
-            # between a MARKED file and ANY other data file in the snapshot
-            # (marked or not) would silently delete the colliding file's
-            # rows at the marked positions. Require crc32 to be injective
-            # over the union of marked + live basenames (O(live files) on
-            # metadata already in hand) — any collision falls back to the
-            # exact-basename anti-join below.
-            all_bases = set(per_file) | {
-                os.path.basename(e["path"].replace("\\", "/")) for e in snap.files
-            }
-            if len({zlib.crc32(b.encode("utf-8")) for b in all_bases}) == len(
-                all_bases
-            ):
-                keep = _dv_keep_udf(self.spark, by_hash)
-                fhash = F.crc32(
-                    F.encode(F.substring_index(F.col(_DV_FILE), "/", -1), "UTF-8")
-                ).cast("bigint")
-                return df.filter(keep(fhash, F.col(_DV_POS))).drop(
-                    _DV_FILE, _DV_POS
-                )
-        df = df.withColumn(_DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1))
+        """``df`` (read with ``with_pos=True``) less the rows ``snap``'s
+        index marks, provenance columns dropped. The marks side is read by
+        Spark from the committed index, never the driver: a sharded index
+        reads as many small per-bucket parse tasks, an index reaped by
+        expiry as no marks."""
         return self._dv_anti_join(df, tdir, snap, schema).drop(_DV_FILE, _DV_POS)
 
     def _dv_anti_join(
@@ -366,12 +247,8 @@ class DeletionVectorMixin:
         marks = self._dv_marks_df(tdir, snap.dv) if snap.dv and snap.dv_marks != 0 else None
         if marks is None:
             return df
-        hint = self._broadcast_rows_bound(
-            64, schema.options.get("deletion_vectors_broadcast_rows") if schema else None
-        )
-        if snap.dv_marks is not None and snap.dv_marks <= hint:
-            # schema-less callers skip pushdown but still deserve the
-            # hint: a JSON-parsed side has no stats, and without it AQE
+        if snap.dv_marks is not None and snap.dv_marks <= self._dv_broadcast_rows(schema):
+            # a JSON-parsed side has no stats: without the hint AQE
             # sort-merge-joined a 23k-mark index against the scan
             # (measured by bench_lake: 2/3 of the DV read's overhead).
             # Above the bound, AQE decides — never force a broadcast
@@ -422,15 +299,10 @@ class DeletionVectorMixin:
         """Rows of ``scan``'s files that ``prev``'s index does not mark, with
         their provenance: ``__dv_file`` (data-file basename) and ``__dv_pos``
         (bigint row position). Over all of ``prev``'s files these are the
-        rows ``read_table`` returns for a DV table. The marks drop through
-        the broadcast-hinted anti-join, not the reads' position-set
-        pushdown: its Arrow UDF doubled a commit's time on a 23k-row table
-        (measured on 4 vCPUs: a 10-key DELETE 1.9 s → 4.4 s)."""
-        live = self._read_files(tdir, schema, scan, with_pos=True).withColumns(
-            {
-                _DV_FILE: F.element_at(F.split(F.col(_DV_FILE), "/"), -1),
-                _DV_POS: F.col(_DV_POS).cast("bigint"),
-            }
+        rows ``read_table`` returns for a DV table: the marks drop through
+        the same ``_dv_anti_join`` the read uses."""
+        live = self._read_files(tdir, schema, scan, with_pos=True).withColumn(
+            _DV_POS, F.col(_DV_POS).cast("bigint")
         )
         return self._dv_anti_join(live, tdir, prev, schema)
 

@@ -74,8 +74,9 @@ _SYSTEM_SUFFIXES = (
     "ro",
 )
 
-#: Deletion-vector provenance columns (never user-visible: appended by
-#: ``_read_files(with_pos=True)`` and consumed/dropped by ``_dv_apply``).
+#: Deletion-vector provenance columns, file basename and row position (never
+#: user-visible: appended by ``_read_files(with_pos=True)`` and dropped by
+#: ``_dv_apply_distributed``).
 _DV_FILE = "__dv_file"
 _DV_POS = "__dv_pos"
 

@@ -429,9 +429,7 @@ def _dv_retraction_stream(
         )
     else:
         snap = dataclasses.replace(snaps[-1], files=sorted(entries.values(), key=lambda f: f["path"]))
-        old_df = cat._read_files(tdir, schema, snap, with_pos=True).withColumn(
-            _DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1)
-        )
+        old_df = cat._read_files(tdir, schema, snap, with_pos=True)
     return (
         marks.join(old_df, [_DV_FILE, _DV_POS])  # stream-static: recover images
         .dropDuplicates([_DV_FILE, _DV_POS])  # cumulative indexes repeat marks

@@ -1,14 +1,15 @@
-"""r11 DV read-path work (VERDICT r10 items 3/4/5):
+"""How a deletion-vector read drops marked rows, and the broadcast bounds:
 
-- position-set pushdown: when the cumulative mark count fits the
-  config-derived broadcast bound, the DV read filters
-  ``_metadata.row_index`` against broadcast per-file sorted position
-  arrays (vectorized binary search) — NO join in the plan;
+- the marks drop through one broadcast-hinted anti-join
+  (``_dv_anti_join``), which reads and commits share; with the hint off
+  (``deletion-vectors.broadcast-rows`` = 0) AQE picks the join and the
+  rows are the same;
+- no read parses a mark document on the driver, sharded index included;
 - broadcast bounds derived from ``spark.sql.autoBroadcastJoinThreshold``
   (÷ estimated row width) with per-table option overrides, and the
   over-threshold delta falling back to the full merge;
-- deletion vectors on AVRO tables: the OCF batch source synthesizes
-  per-row ordinals from its ordered block decode.
+- deletion vectors on AVRO and ORC tables: their positional readers
+  synthesize per-row ordinals from an in-order decode.
 """
 
 from __future__ import annotations
@@ -42,62 +43,105 @@ def _state(cat, name="t"):
     return sorted((r.k, r.v) for r in cat.read_table(f"d.{name}").collect())
 
 
-# ------------------------------------------------------ position pushdown
-def test_pushdown_plan_has_no_join(cat, spark):
-    """Under the bound, the DV read is scan + vectorized position filter —
-    the r10 anti-join is gone from the plan entirely."""
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+# ------------------------------------------------------ mark application
+def test_dv_read_plans_broadcast_anti_join(cat, spark):
+    """Under the bound, the DV read is scan + broadcast anti-join against
+    the index — no Python UDF in the plan — and returns the live rows."""
     mk = _mk(cat, spark)
     cat.insert_into("d", "t", mk([(i, f"v{i}") for i in range(1, 200)]))
     cat.delete_where("d", "t", F.col("k") % 7 == 0)
     df = cat.read_table("d.t")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
-    assert "ArrowEvalPython" in plan or "PythonUDF" in plan, plan
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan, plan
     assert sorted(r.k for r in df.collect()) == [
         i for i in range(1, 200) if i % 7 != 0
     ]
 
 
-def test_pushdown_crc_collision_falls_back(cat, spark, monkeypatch):
-    """ADVICE r11: the pushdown keys on crc32(basename), so it must verify
-    crc32 is injective over ALL live basenames in the snapshot — a marked
-    file colliding with an UNMARKED one would silently delete the unmarked
-    file's rows at the marked positions. Any collision abandons the
-    pushdown for the exact-basename anti-join (results identical)."""
-    import zlib
-
-    mk = _mk(cat, spark)
-    cat.insert_into("d", "t", mk([(i, f"v{i}") for i in range(1, 200)]))
-    cat.delete_where("d", "t", F.col("k") % 7 == 0)
-    monkeypatch.setattr(zlib, "crc32", lambda b: 42)  # everything collides
-    df = cat.read_table("d.t")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan, plan  # fell back to the anti-join
-    assert sorted(r.k for r in df.collect()) == [
-        i for i in range(1, 200) if i % 7 != 0
-    ]
-
-
-def test_pushdown_equals_anti_join(cat, spark):
-    """Result equality: the pushdown read and the forced anti-join read
-    (per-table bound override = 0) return identical rows."""
+def test_hinted_anti_join_equals_unhinted(cat, spark):
+    """Result equality: the broadcast-hinted read and the unhinted one
+    (per-table bound override = 0, join left to AQE) return the expected
+    rows."""
     mk = _mk(cat, spark, name="a")
     cat.insert_into("d", "a", mk([(i, f"v{i}") for i in range(1, 300)]))
     cat.insert_into("d", "a", mk([(i, f"V{i}") for i in range(1, 300, 3)]))
     cat.delete_where("d", "a", F.col("k") % 11 == 0)
-    got_pushdown = _state(cat, "a")
+    hinted = cat.read_table("d.a")
+    assert "strategy=broadcast" in _optimized(hinted)
+    got_hinted = sorted((r.k, r.v) for r in hinted.collect())
     cat.set_options("d", "a", {"deletion-vectors.broadcast-rows": "0"})
-    df = cat.read_table("d.a")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan, "bound=0 must force the anti-join path"
-    got_join = sorted((r.k, r.v) for r in df.collect())
-    assert got_pushdown == got_join
+    unhinted = cat.read_table("d.a")
+    plan = _optimized(unhinted)
+    assert "LeftAnti" in plan and "strategy=broadcast" not in plan, plan
+    got_unhinted = sorted((r.k, r.v) for r in unhinted.collect())
+    assert got_hinted == got_unhinted
     expect = []
     for i in range(1, 300):
         if i % 11 == 0:
             continue
         expect.append((i, f"V{i}" if i % 3 == 1 else f"v{i}"))
-    assert got_pushdown == sorted(expect)
+    assert got_hinted == sorted(expect)
+
+
+def test_marks_never_parse_on_driver_and_one_anti_join(cat, spark, monkeypatch):
+    """A read of a sharded-index table whose marks fit the broadcast bound
+    opens no shard document on the driver (the index manifest, which lists
+    shard names, is allowed). On an inline table a read and a DELETE each
+    drop marks through exactly one ``_dv_anti_join``."""
+    import re
+
+    from incubator_paimon_trino_spark.catalog import dv_index, metadata, wh_dv
+
+    mk = _mk(
+        cat, spark, name="sh",
+        **{
+            "dv-index.inline-threshold": "0",
+            "dv-index.buckets": "4",
+            "deletion-vectors.broadcast-rows": "1000",
+        },
+    )
+    cat.insert_into("d", "sh", mk([(i, f"v{i}") for i in range(1, 40)]))
+    cat.delete_where("d", "sh", F.col("k") % 5 == 0)
+    snap = cat._latest_snapshot(cat._table_dir("d", "sh"))
+    assert snap.dv.startswith("dvm-") and 0 < snap.dv_marks <= 1000
+
+    opened = []
+    for mod in (wh_dv, metadata, dv_index):
+        real = mod.read_json
+
+        def spy(path, _real=real):
+            opened.append(path)
+            return _real(path)
+
+        monkeypatch.setattr(mod, "read_json", spy)
+    got = sorted(r.k for r in cat.read_table("d.sh").collect())
+    assert got == [i for i in range(1, 40) if i % 5 != 0]
+    shard = re.compile(r"-b\d+-s\d+\.json$")
+    assert not [p for p in opened if shard.search(p)], opened
+    monkeypatch.undo()
+
+    calls = []
+    real_anti = WarehouseCatalog._dv_anti_join
+
+    def counting(self, *a, **k):
+        calls.append(1)
+        return real_anti(self, *a, **k)
+
+    monkeypatch.setattr(WarehouseCatalog, "_dv_anti_join", counting)
+    mk = _mk(cat, spark, name="inl")
+    cat.insert_into("d", "inl", mk([(i, f"v{i}") for i in range(1, 20)]))
+    cat.delete_where("d", "inl", F.col("k") == 3)
+    assert len(calls) == 1, "DELETE"
+    calls.clear()
+    assert sorted(r.k for r in cat.read_table("d.inl").collect()) == [
+        i for i in range(1, 20) if i != 3
+    ]
+    assert len(calls) == 1, "read"
 
 
 def test_bound_derivation_from_spark_conf(cat, spark):
@@ -190,7 +234,7 @@ def test_avro_dv_upsert_delete_read_and_time_travel(cat, spark):
 def test_avro_dv_positions_match_block_decode(cat, spark):
     """The synthesized ordinals are exact: deleting one specific key kills
     exactly that row, across multi-block files (3k rows >> the 2KiB block
-    target) and through the anti-join path too."""
+    target), with the broadcast hint on and off."""
     mk = _mk(cat, spark, name="av2", **{"file_format": "AVRO"})
     cat.insert_into("d", "av2", mk([(i, f"v{i}") for i in range(1, 3001)]))
     cat.delete_where("d", "av2", F.col("k") == 1777)
@@ -203,9 +247,8 @@ def test_avro_dv_positions_match_block_decode(cat, spark):
 
 # -------------------------------------------------------------- DV on orc
 def test_orc_dv_upsert_delete_read_and_time_travel(cat, spark):
-    """The DV roundtrip on an ORC table (r11 — the last format gap): marks
-    build from pyarrow.orc in-order ordinals; reads apply them per
-    snapshot; the pushdown and anti-join paths agree."""
+    """The DV roundtrip on an ORC table: marks build from pyarrow.orc
+    in-order ordinals; reads apply them per snapshot."""
     mk = _mk(cat, spark, name="oc", **{"file_format": "ORC"})
     cat.insert_into("d", "oc", mk([(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")]))
     cat.insert_into("d", "oc", mk([(2, "B"), (3, "C"), (6, "f")]))
@@ -229,9 +272,9 @@ def test_orc_dv_upsert_delete_read_and_time_travel(cat, spark):
 
 
 def test_orc_dv_positions_exact_and_join_parity(cat, spark):
-    """Point-delete exactness over a multi-row ORC file, pushdown vs
-    anti-join equality, and a timestamp payload column to exercise the
-    pyarrow→Spark type casts."""
+    """Point-delete exactness over a multi-row ORC file, hinted vs
+    unhinted anti-join equality, and a timestamp payload column to exercise
+    the pyarrow→Spark type casts."""
     cat.create_database("d", ignore_if_exists=True)
     cat.create_table(
         "d", "oc2",

@@ -261,17 +261,14 @@ def test_stats_broadcast_join_is_compile_time(spark):
 
 def test_deletion_vector_read_is_merge_free(spark):
     """DV-mode read = scan − vectors: no hash exchange, no merge aggregate
-    anywhere — the whole point of deletion vectors at 100 TB. r11: under
-    the broadcast bound the marks apply as a JOIN-FREE position-set filter
-    (Arrow-batched binary search on row_index); over it, a broadcast
-    anti-join. Either way: no shuffle, no merge."""
+    anywhere — the whole point of deletion vectors at 100 TB. The marks
+    drop through a broadcast anti-join against the index: no shuffle, no
+    merge."""
     df = _q("lake_deletion_vector_read")(spark, SF_SMOKE)
     plan = physical_plan(df)
     assert "hashpartitioning" not in plan
     assert "HashAggregate" not in plan and "SortAggregate" not in plan
-    pushdown = "pythonUDF" in plan or "ArrowEvalPython" in plan
-    anti_join = "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert pushdown or anti_join, plan
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 
 def test_files_partitions_system_tables_are_metadata_only(spark):

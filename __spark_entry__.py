@@ -72,6 +72,19 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # queries whose commits write through the one data-file writer shared
+    # by insert and compaction (bucket/clustering layout, staging write,
+    # sidecars, rollback of a failed attempt)
+    "lake_sort_compacted_range_scan",
+    "lake_zorder_compacted_scan",
+    "lake_clustered_scan",
+    "lake_dynamic_bucket",
+    "lake_bucket_point_lookup",
+    "lake_read_optimized_table",
+    "lake_compacted_merge_free_read",
+    "lake_bloom_index_point_lookup",
+    "lake_avro_roundtrip",
+    "lake_dml_roundtrip",
     # queries that commit to and read deletion-vector tables: the DV commit
     # path (summary aggregate, bounded hits collect, positional DELETE) and
     # the DV read path (marks dropped by the broadcast anti-join only)
@@ -95,7 +108,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_partition_delete",
     "lake_partition_expiration",
     "lake_stats_broadcast_join",
-    "lake_avro_roundtrip",
     # HLL partial buffer no longer keyed per distinct value
     "agg_approx_count_distinct",
     "agg_approx_count_distinct_bounded",
@@ -136,17 +148,10 @@ _REPROOF: tuple[str, ...] = (
     # read_table plan cache removed — every other read_table consumer,
     # riskiest first
     "lake_delta_base_split_read",
-    "lake_bloom_index_point_lookup",
     "lake_bitmap_index_lookup",
     "lake_merge_on_read",
-    "lake_compacted_merge_free_read",
     "lake_time_travel_v1",
     "lake_tag_time_travel",
-    "lake_dml_roundtrip",
-    "lake_read_optimized_table",
-    "lake_sort_compacted_range_scan",
-    "lake_zorder_compacted_scan",
-    "lake_clustered_scan",
     "lake_agg_collect_merge_map",
     "lake_agg_nested_update",
     "lake_agg_ignore_retract",
@@ -158,8 +163,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_sequence_field_merge",
     "lake_rowkind_field_cdc",
     "lake_ignore_delete",
-    "lake_dynamic_bucket",
-    "lake_bucket_point_lookup",
     "lake_incremental_read",
     "lake_incremental_by_timestamp",
     "lake_consumer_incremental_dedup",

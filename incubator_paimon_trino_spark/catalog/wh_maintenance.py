@@ -2,9 +2,13 @@
 and changelog reads, partition/snapshot expiration, orphan files,
 file-index rebuild, compaction (+ z-order/Hilbert keys), ANALYZE.
 
-Split out of ``warehouse.py`` in r10 — one mixin of
-``WarehouseCatalog``; no behavior change, the class surface is
-assembled in ``warehouse.py``.
+Compaction reads the merged live set and hands it to the same data-file
+writer ``insert_into`` uses (``WriteMixin._write_data_files``); a
+compaction that fails before its snapshot is published, or loses the
+publish race, removes what it wrote, like any commit.
+
+One mixin of ``WarehouseCatalog``; the class surface is assembled in
+``warehouse.py``.
 """
 
 from __future__ import annotations
@@ -59,6 +63,7 @@ from incubator_paimon_trino_spark.functions.types import (
 )
 
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
+from incubator_paimon_trino_spark.catalog.wh_write import _Attempt
 
 
 class MaintenanceMixin:
@@ -1421,105 +1426,48 @@ class MaintenanceMixin:
             bad = [c for c in order_by if c not in known]
             if bad:
                 raise ValueError(f"order_by columns not in table: {bad}")
-        n_buckets = int(schema.options.get("bucket", "0") or 0)
-        bucket_key = schema.options.get("bucket_key") or (
-            schema.primary_key[0] if schema.primary_key else None
-        )
         # size the rewrite by data volume, not input file count — the whole
         # point of compaction is collapsing many small files, so target
-        # ~128 MB outputs (Paimon's target-file-size default).
+        # ~128 MB outputs (Paimon's target-file-size default). Sorted
+        # rewrites honor the table's clustering_partitions pin if set (same
+        # knob as write clustering); bucketed tables keep their buckets and
+        # sort within them (a dynamic-bucket rewrite brings no new key, so
+        # every row keeps its indexed bucket and no index delta is written).
         target = 128 * 1024 * 1024
         total = sum(f.get("size_bytes", 0) for f in prev.files)
         n_parts = max(1, -(-total // target))
-        zcol = "_zorder_key"
-        curved = bool(order_by) and strategy in ("zorder", "hilbert")
-        if curved:
-            key_of = self._zorder_expr if strategy == "zorder" else self._hilbert_expr
-            out = out.withColumn(zcol, key_of(out, schema, order_by))
-            sort_keys = [F.col(zcol)]
-        else:
-            sort_keys = [F.col(c) for c in order_by or []]
-        if n_buckets > 0 and bucket_key:
-            out = out.repartition(n_buckets, F.col(bucket_key))
-            if sort_keys:
-                out = out.sortWithinPartitions(*sort_keys)
-        elif n_buckets == -1:
-            # dynamic bucket: re-attach each key's stable bucket from the
-            # index (compaction introduces no new keys — every key is
-            # already assigned) so the rewrite preserves the bucket layout
-            out, _ = self._dynamic_bucket_assign(tdir, schema, out, version)
-            out = out.repartition(F.col("_bucket"))
-            if sort_keys:
-                out = out.sortWithinPartitions(*sort_keys)
-        elif sort_keys:
-            # honor the table's clustering_partitions pin if set (same knob
-            # as write clustering); else size range buckets by volume
-            pinned = int(schema.options.get("clustering_partitions", "0") or 0)
-            out = out.repartitionByRange(pinned or n_parts, *sort_keys)
-            out = out.sortWithinPartitions(*sort_keys)
-        else:
-            out = out.repartition(n_parts)
-        if curved:
-            # the curve key ordered the shuffle + sort; it must not land in
-            # the files (narrow projection preserves the partition-local sort)
-            out = out.drop(zcol)
-        staging = self._staging_dir(tdir, version)
-        writer = out.write.mode("errorifexists")
-        part_cols = list(schema.partition_keys)
-        if "_bucket" in out.columns:
-            part_cols.append("_bucket")  # finalize renames to bucket-N dirs
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        fmt = schema.options.get("file_format", "PARQUET").upper()
-        if fmt not in ("PARQUET", "ORC", "AVRO"):
-            raise ValueError(f"unsupported file_format {fmt!r} (have PARQUET, ORC, AVRO)")
-        ext = {"ORC": "orc", "AVRO": "avro", "PARQUET": "parquet"}[fmt]
-        fb_counts: dict[str, int] | None = None
+        if order_by:
+            n_parts = int(schema.options.get("clustering_partitions", "0") or 0) or n_parts
+        attempt = _Attempt()
         try:
-            writer.format(ext).save(staging)
-        except Exception as ex:
-            if ext != "avro" or "Failed to find data source" not in str(ex):
-                raise
-            fb_counts = self._write_avro_fallback(out, staging, schema)  # module-less
-        final_paths = self._finalize_commit(tdir, staging, version, ext)
-        files = self._commit_files(tdir, final_paths, ext, schema, fb_counts)
-        for e in files:
-            # provenance marker: $ro serves exactly the files a compaction
-            # wrote. Entry metadata CARRIES FORWARD through later commits'
-            # accumulated file lists, so the read-optimized state survives
-            # expiry of the COMPACT snapshot JSON itself, and an OVERWRITE
-            # (which replaces the whole live set) clears it naturally.
-            e["source"] = "compact"
-        build_file_indexes(self.spark, final_paths, schema)
-        if n_buckets > 0 and bucket_key:
-            _record_buckets(files, schema, bucket_key, n_buckets)
-        elif n_buckets == -1:
-            _record_dynamic_buckets(files)
-        n = sum(e["record_count"] for e in files)
-        snap = Snapshot(
-            snapshot_id=version,
-            schema_id=schema.schema_id,
-            commit_user=self.commit_user,
-            commit_identifier=version,
-            commit_kind=COMMIT_COMPACT,
-            timestamp_ms=int(time.time() * 1000),
-            files=files,  # replaces the live set
-            record_count=n,
-        )
+            files = self._write_data_files(
+                tdir, schema, out, version, attempt,
+                sort_cols=order_by, strategy=strategy, n_ranges=n_parts,
+            )
+            for e in files:
+                # provenance marker: $ro serves exactly the files a compaction
+                # wrote. Entry metadata CARRIES FORWARD through later commits'
+                # accumulated file lists, so the read-optimized state survives
+                # expiry of the COMPACT snapshot JSON itself, and an OVERWRITE
+                # (which replaces the whole live set) clears it naturally.
+                e["source"] = "compact"
+            snap = Snapshot(
+                snapshot_id=version,
+                schema_id=schema.schema_id,
+                commit_user=self.commit_user,
+                commit_identifier=version,
+                commit_kind=COMMIT_COMPACT,
+                timestamp_ms=int(time.time() * 1000),
+                files=files,  # replaces the live set
+                record_count=sum(e["record_count"] for e in files),
+            )
+        except BaseException:
+            self._discard_attempt(tdir, attempt)
+            raise
         # compaction rewrites the live set → one fresh manifest, no bases:
         # this is also the METADATA compaction that keeps long histories'
-        # manifest chains short. Exclusive publish = the commit point
-        # (CommitConflictError on a concurrent racer, like insert_into);
-        # a losing compactor's rewritten files must not linger in data/.
-        try:
-            self._publish_snapshot(tdir, snap, files, [])
-        except CommitConflictError:
-            for p in final_paths:
-                if os.path.exists(p):
-                    os.remove(p)
-                _rm_sidecar(p)
-            self._prune_empty_dirs(os.path.join(tdir, "data"))
-            raise
+        # manifest chains short
+        self._publish_attempt(tdir, attempt, snap, files, [])
         return version
 
     def analyze(self, db: str, table: str) -> dict:

@@ -1,9 +1,16 @@
-"""Commit machinery and DML: snapshots, staging/finalize, the avro
+"""Commit machinery and DML: snapshots, the one data-file writer, the avro
 fallback writer, insert/delete/update/merge, conflict retries.
 
-Split out of ``warehouse.py`` in r10 — one mixin of
-``WarehouseCatalog``; no behavior change, the class surface is
-assembled in ``warehouse.py``.
+Every commit that writes rows (``insert_into`` and ``compact``) produces
+its files through ``_write_data_files``: bucket, dynamic-bucket or
+clustering layout, a staging write in the table's file format, the move
+into ``data/``, manifest stats, file-index sidecars and bucket stamps. A
+commit attempt that fails before its snapshot is published, or loses the
+publish race, removes what it wrote (``_discard_attempt``): data files,
+sidecars, deletion-vector index files and dynamic-bucket index deltas.
+
+One mixin of ``WarehouseCatalog``; the class surface is assembled in
+``warehouse.py``.
 """
 
 from __future__ import annotations
@@ -58,6 +65,31 @@ from incubator_paimon_trino_spark.functions.types import (
 )
 
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
+
+
+@dataclasses.dataclass
+class _Attempt:
+    """What one commit attempt has put on disk outside its snapshot, recorded
+    as it lands so ``_discard_attempt`` can remove it again."""
+
+    staging: str | None = None
+    #: finalized data files (their sidecars share the path plus a suffix)
+    paths: list[str] = dataclasses.field(default_factory=list)
+    #: deletion-vector index files under ``index/``
+    index_files: list[str] = dataclasses.field(default_factory=list)
+    #: dynamic-bucket key→bucket delta directory
+    dyn_delta: str | None = None
+
+
+def _bucket_layout(schema: TableSchema) -> tuple[int, str | None]:
+    """(bucket count, bucket key) of a table: n > 0 hash buckets on the key,
+    -1 dynamic buckets from the key→bucket index, 0 unbucketed (also a
+    positive count with no key to hash)."""
+    n = int(schema.options.get("bucket", "0") or 0)
+    key = schema.options.get("bucket_key") or (
+        schema.primary_key[0] if schema.primary_key else None
+    )
+    return (n if n == -1 or (n > 0 and key) else 0), key
 
 
 class WriteMixin:
@@ -143,17 +175,15 @@ class WriteMixin:
                 pass
         return os.path.join(tdir, f".staging-c{version}-{uuid.uuid4().hex[:8]}")
 
-    def _finalize_commit(self, tdir: str, staging: str, version: int, ext: str) -> list[str]:
-        """Move one commit's staged output into the table's data layout:
-        ``data/<partition dirs>/c<version>-<filename>``.
+    @staticmethod
+    def _staged_moves(tdir: str, staging: str, version: int, ext: str) -> dict[str, str]:
+        """Staged file → its final path: ``data/<partition dirs>/c<version>-<filename>``.
 
         Partition dirs stay LAST (standard hive layout) so Catalyst's
         directory inference — and with it listing-level partition pruning —
         works for any mix of commits in one scan; the commit id lives in the
-        FILE NAME, not a directory. The per-file rename is the commit's
-        driver-side finalization (the same move Spark's own file committer
-        performs); data bytes are written once, by executors, in parallel."""
-        final: list[str] = []
+        FILE NAME, not a directory."""
+        moves: dict[str, str] = {}
         for p in glob.glob(os.path.join(staging, "**", f"*.{ext}"), recursive=True):
             rel_dir = os.path.relpath(os.path.dirname(p), staging)
             if "_bucket=" in rel_dir:
@@ -169,8 +199,17 @@ class WriteMixin:
             dest_dir = os.path.join(tdir, "data") if rel_dir == "." else os.path.join(
                 tdir, "data", rel_dir
             )
-            os.makedirs(dest_dir, exist_ok=True)
-            dest = os.path.join(dest_dir, f"c{version}-{os.path.basename(p)}")
+            moves[p] = os.path.join(dest_dir, f"c{version}-{os.path.basename(p)}")
+        return moves
+
+    def _finalize_commit(self, tdir: str, staging: str, version: int, ext: str) -> list[str]:
+        """Move one commit's staged output into the table's data layout
+        (``_staged_moves``). The per-file rename is the commit's driver-side
+        finalization (the same move Spark's own file committer performs);
+        data bytes are written once, by executors, in parallel."""
+        final: list[str] = []
+        for p, dest in self._staged_moves(tdir, staging, version, ext).items():
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
             os.replace(p, dest)
             final.append(dest)
         shutil.rmtree(staging)
@@ -293,25 +332,40 @@ class WriteMixin:
         self, paths: list[str], old: TableSchema, is_pk: bool, with_pos: bool = False
     ) -> DataFrame:
         """Batch-read avro data files without the spark-avro module, via the
-        ``paimon_avro`` Python DataSource (``formats/avro_batch``): one
-        Arrow-decode task per file, hive partition values injected from the
-        path (what ``basePath`` directory inference does for native
-        readers). Output columns are the WRITING schema's names/storage
-        types — ``_read_files`` maps them by field id like any format.
-        ``with_pos`` makes the source synthesize the DV provenance columns
-        (file path + in-file row ordinal) from its ordered block decode —
-        the avro twin of parquet's ``_metadata.row_index`` (r11)."""
+        ``paimon_avro`` Python DataSource (``formats/avro_batch``). Output
+        columns are the WRITING schema's names/storage types —
+        ``_read_files`` maps them by field id like any format. ``with_pos``
+        makes the source synthesize the DV provenance columns (file path +
+        in-file row ordinal) from its ordered block decode — the avro twin
+        of parquet's ``_metadata.row_index``."""
+        from incubator_paimon_trino_spark.formats.avro_batch import PaimonAvroBatchSource
+
+        return self._read_python_source(PaimonAvroBatchSource, paths, old, is_pk, with_pos)
+
+    def _read_orc_positional(self, paths: list[str], old: TableSchema, is_pk: bool) -> DataFrame:
+        """Positional ORC read via the ``paimon_orc_pos`` Python DataSource
+        (``formats/orc_pos.py``): pyarrow.orc per file with ``__dv_file``/
+        ``__dv_pos`` synthesized from the in-order read (Spark's native ORC
+        reader has no row_index). Plain ORC scans keep the native reader."""
+        from incubator_paimon_trino_spark.formats.orc_pos import PaimonOrcPositionalSource
+
+        return self._read_python_source(PaimonOrcPositionalSource, paths, old, is_pk, True)
+
+    def _read_python_source(
+        self, source, paths: list[str], old: TableSchema, is_pk: bool, with_pos: bool
+    ) -> DataFrame:
+        """Read data files through one of the package's Python DataSources:
+        one decode task per ~64 MiB of files (one Python task per tiny file
+        would make startup dominate many-small-file tables), hive partition
+        values injected from the path (what ``basePath`` directory inference
+        does for native readers)."""
         import json as _json
 
-        from incubator_paimon_trino_spark.catalog.scan import partition_values
-        from incubator_paimon_trino_spark.formats.avro_batch import (
-            PaimonAvroBatchSource,
-        )
         from incubator_paimon_trino_spark.streaming.manifest_source import (
             _storage_ddl,
         )
 
-        self.spark.dataSource.register(PaimonAvroBatchSource)
+        self.spark.dataSource.register(source)
         part = set(old.partition_keys)
         data_fields = [
             (f.name, _storage_ddl(f.type)) for f in old.fields if f.name not in part
@@ -321,8 +375,6 @@ class WriteMixin:
         part_fields = [
             (f.name, _storage_ddl(f.type)) for f in old.fields if f.name in part
         ]
-        # bin-pack small files into read tasks (~64 MiB) — one Python task
-        # per tiny file would make startup dominate many-small-file tables
         target = 64 * 1024 * 1024
         tasks: list[list[dict]] = []
         size = 0
@@ -345,68 +397,12 @@ class WriteMixin:
             out_fields = out_fields + [("__dv_file", "string"), ("__dv_pos", "bigint")]
         ddl = ", ".join(f"`{n}` {t}" for n, t in out_fields)
         return (
-            self.spark.read.format("paimon_avro")
+            self.spark.read.format(source.name())
             .option("schema_ddl", ddl)
             .option("data_fields", _json.dumps(data_fields))
             .option("part_fields", _json.dumps(part_fields))
             .option("files", _json.dumps(tasks))
             .option("with_pos", "true" if with_pos else "false")
-            .load()
-        )
-
-    def _read_orc_positional(self, paths: list[str], old: TableSchema, is_pk: bool) -> DataFrame:
-        """Positional ORC read via the ``paimon_orc_pos`` Python DataSource
-        (``formats/orc_pos.py``): pyarrow.orc per file with ``__dv_file``/
-        ``__dv_pos`` synthesized from the in-order read — closes the last
-        DV format gap (Spark's native ORC reader has no row_index). Plain
-        ORC scans keep the native reader; this path serves with_pos only."""
-        import json as _json
-
-        from incubator_paimon_trino_spark.catalog.scan import partition_values
-        from incubator_paimon_trino_spark.formats.orc_pos import (
-            PaimonOrcPositionalSource,
-        )
-        from incubator_paimon_trino_spark.streaming.manifest_source import (
-            _storage_ddl,
-        )
-
-        self.spark.dataSource.register(PaimonOrcPositionalSource)
-        part = set(old.partition_keys)
-        data_fields = [
-            (f.name, _storage_ddl(f.type)) for f in old.fields if f.name not in part
-        ]
-        if is_pk:
-            data_fields += [(SEQ_COL, "bigint"), (KIND_COL, "string")]
-        part_fields = [
-            (f.name, _storage_ddl(f.type)) for f in old.fields if f.name in part
-        ]
-        target = 64 * 1024 * 1024
-        tasks: list[list[dict]] = []
-        size = 0
-        for p in sorted(paths):
-            spec = {
-                "path": p,
-                "parts": [
-                    (k, ddl, partition_values(p).get(k)) for k, ddl in part_fields
-                ],
-            }
-            sz = os.path.getsize(p) if os.path.exists(p) else target
-            if not tasks or size + sz > target:
-                tasks.append([spec])
-                size = sz
-            else:
-                tasks[-1].append(spec)
-                size += sz
-        out_fields = data_fields + part_fields + [
-            ("__dv_file", "string"), ("__dv_pos", "bigint"),
-        ]
-        ddl = ", ".join(f"`{n}` {t}" for n, t in out_fields)
-        return (
-            self.spark.read.format("paimon_orc_pos")
-            .option("schema_ddl", ddl)
-            .option("data_fields", _json.dumps(data_fields))
-            .option("part_fields", _json.dumps(part_fields))
-            .option("files", _json.dumps(tasks))
             .load()
         )
 
@@ -477,6 +473,144 @@ class WriteMixin:
             }
             for p in sorted(paths)
         ]
+
+    def _write_data_files(
+        self,
+        tdir: str,
+        schema: TableSchema,
+        out: DataFrame,
+        version: int,
+        attempt: _Attempt,
+        sort_cols: list[str] | None = None,
+        strategy: str = "order",
+        n_ranges: int = 0,
+    ) -> list[dict]:
+        """Write one commit's rows as data files; returns their manifest
+        entries. The one file producer behind ``insert_into`` and
+        ``compact``; it records in ``attempt`` everything it leaves on disk
+        (data files before they are moved into ``data/``), so the caller
+        can discard a failed attempt.
+
+        Layout, first match wins:
+
+        - hash buckets (``bucket`` > 0): ``bucket`` write tasks on the
+          bucket key, so each commit writes one file per bucket per
+          partition and equal keys co-locate;
+        - dynamic buckets (``bucket = -1``): each key's stable bucket from
+          the key→bucket index (new keys assigned here), written as a
+          ``bucket-N`` directory layer;
+        - ``sort_cols``: range-partitioned on them, ``n_ranges`` ranges (0
+          lets Spark size them by volume), so each file covers a narrow key
+          range and manifest min/max skipping prunes to a few files;
+        - otherwise ``n_ranges`` > 0 repartitions into that many files and
+          0 keeps the input's partitioning.
+
+        Buckets and ranges are then sorted by ``sort_cols``.
+        ``strategy="zorder"``/``"hilbert"`` orders by the space-filling-curve
+        key over ``sort_cols`` instead, so file boxes are tight in every
+        dimension; the key never lands in the files.
+        """
+        fmt = schema.options.get("file_format", "PARQUET").upper()
+        if fmt not in ("PARQUET", "ORC", "AVRO"):
+            raise ValueError(f"unsupported file_format {fmt!r} (have PARQUET, ORC, AVRO)")
+        ext = fmt.lower()
+        n_buckets, bucket_key = _bucket_layout(schema)
+        zcol = "_zorder_key"
+        curved = bool(sort_cols) and strategy in ("zorder", "hilbert")
+        if curved:
+            key_of = self._zorder_expr if strategy == "zorder" else self._hilbert_expr
+            out = out.withColumn(zcol, key_of(out, schema, sort_cols))
+            sort_keys = [F.col(zcol)]
+        else:
+            sort_keys = [F.col(c) for c in sort_cols or []]
+        if n_buckets > 0:
+            out = out.repartition(n_buckets, F.col(bucket_key))
+        elif n_buckets == -1:
+            out, attempt.dyn_delta = self._dynamic_bucket_assign(tdir, schema, out, version)
+            out = out.repartition(F.col("_bucket"))
+        elif sort_keys:
+            out = (
+                out.repartitionByRange(n_ranges, *sort_keys)
+                if n_ranges > 0
+                else out.repartitionByRange(*sort_keys)
+            )
+        elif n_ranges > 0:
+            out = out.repartition(n_ranges)
+        if sort_keys:
+            out = out.sortWithinPartitions(*sort_keys)
+        if curved:
+            # narrow projection: keeps the partition-local sort
+            out = out.drop(zcol)
+
+        staging = attempt.staging = self._staging_dir(tdir, version)
+        writer = out.write.mode("errorifexists")
+        # the dynamic bucket rides as the INNERMOST hive partitionBy layer;
+        # _staged_moves renames `_bucket=N` to Paimon's plain `bucket-N`
+        part_cols = [*schema.partition_keys, *(["_bucket"] if n_buckets == -1 else [])]
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
+        fb_counts: dict[str, int] | None = None
+        try:
+            writer.format(ext).save(staging)
+        except Exception as ex:
+            # Spark's avro data source is an external module; without it the
+            # pure-Python OCF writer (formats/avro_ocf.py) encodes standard
+            # Avro container files, one per (task, partition dir)
+            if ext != "avro" or "Failed to find data source" not in str(ex):
+                raise
+            fb_counts = self._write_avro_fallback(out, staging, schema)
+        attempt.paths = list(self._staged_moves(tdir, staging, version, ext).values())
+        final_paths = self._finalize_commit(tdir, staging, version, ext)
+        entries = self._commit_files(tdir, final_paths, ext, schema, fb_counts)
+        # file-index sidecars (bloom / bitmap) BEFORE the publish: a reader
+        # never resolves a snapshot whose sidecars are still being written
+        build_file_indexes(self.spark, final_paths, schema)
+        if n_buckets > 0:
+            _record_buckets(entries, schema, bucket_key, n_buckets)
+        elif n_buckets == -1:
+            _record_dynamic_buckets(entries)
+        return entries
+
+    def _discard_attempt(self, tdir: str, attempt: _Attempt) -> None:
+        """Remove what a commit attempt wrote: its staging dir, finalized
+        data files and their sidecars, deletion-vector index files and
+        dynamic-bucket delta. Unpublished files must not linger in
+        ``data/`` — no manifest references them, but the file-tail stream
+        globs the directory; a stale key→bucket delta would race the retry's
+        own assignment for the same key."""
+        if attempt.staging is not None:
+            shutil.rmtree(attempt.staging, ignore_errors=True)
+        for p in attempt.paths:
+            if os.path.exists(p):
+                os.remove(p)
+            _rm_sidecar(p)
+        for name in attempt.index_files:
+            # carried-forward shards are not listed: they belong to the tip
+            try:
+                os.remove(os.path.join(tdir, "index", name))
+            except FileNotFoundError:
+                pass
+        if attempt.dyn_delta is not None:
+            shutil.rmtree(attempt.dyn_delta, ignore_errors=True)
+        self._prune_empty_dirs(os.path.join(tdir, "data"))
+
+    def _publish_attempt(
+        self,
+        tdir: str,
+        attempt: _Attempt,
+        snap: Snapshot,
+        new_files: list[dict],
+        base_manifests: list[str],
+    ) -> None:
+        """Publish ``snap``; an attempt that loses the race to a concurrent
+        writer discards its files (the caller re-reads and retries, like
+        Paimon's optimistic commit loop). Any other failure inside the
+        publish keeps them: the snapshot JSON may already be durable."""
+        try:
+            self._publish_snapshot(tdir, snap, new_files, base_manifests)
+        except CommitConflictError:
+            self._discard_attempt(tdir, attempt)
+            raise
 
     def insert_into(
         self,
@@ -630,6 +764,7 @@ class WriteMixin:
         #: rows a DV-table commit writes; 0 = a metadata-only commit
         dv_rows = 0
         dv_cached: DataFrame | None = None
+        attempt = _Attempt()
         try:
             if self._dv_enabled(schema):
                 pk = schema.primary_key
@@ -672,173 +807,67 @@ class WriteMixin:
                     out = out.filter(F.col(KIND_COL) != "D")
                     if has_d:
                         out = out.join(d_keys, pk, "left_anti")
+                attempt.index_files = dv_index[3]
             if dv_index is not None and not dv_rows:
                 # a DV commit with no row to write (a DELETE) is metadata
                 # only: an empty part file would add a zero-row data file
                 # per delete forever
-                final_paths, new_files, dyn_index_delta = [], [], None
+                new_files = []
             else:
-                # bucketing (reference options bucket/bucket_key — A16): hash-
-                # repartition on the bucket key so each commit writes exactly
-                # `bucket` files per partition, co-locating equal keys. Joins between
-                # two tables bucketed the same way then shuffle far less data (and
-                # with storage-partitioned-join-aware readers, not at all).
-                n_buckets = int(schema.options.get("bucket", "0") or 0)
-                bucket_key = schema.options.get("bucket_key") or (
-                    schema.primary_key[0] if schema.primary_key else None
-                )
-                dyn_index_delta: str | None = None
-                if n_buckets > 0 and bucket_key:
-                    out = out.repartition(n_buckets, F.col(bucket_key))
-                elif n_buckets == -1:
-                    # dynamic bucket mode (bucket = -1): stable key→bucket from the
-                    # maintained index, new keys fill buckets up to target-row-num
-                    out, dyn_index_delta = self._dynamic_bucket_assign(tdir, schema, out, version)
-                    out = out.repartition(F.col("_bucket"))
-                elif schema.options.get("clustering_columns"):
-                    # clustering.columns (Paimon append-table clustering): range-
-                    # partition + sort the commit on the clustering key so each file
-                    # covers a NARROW key range — manifest min/max skipping then
-                    # prunes point/range predicates to a handful of files instead of
-                    # every file overlapping the whole domain. The range exchange is
-                    # per-commit and sampling-based (Spark's RangePartitioner), so
-                    # cost stays proportional to the commit, not the table.
+                # clustering.columns (Paimon append-table clustering) lays
+                # out unbucketed commits only; a bucketed table keeps its
+                # bucket layout and ignores it. clustering_partitions pins
+                # the range count (file count per commit); unset, a tiny
+                # commit collapses to one file and min/max pruning has
+                # nothing to skip
+                cluster_cols = None
+                if not _bucket_layout(schema)[0] and schema.options.get("clustering_columns"):
                     cluster_cols = _split_cols(schema.options["clustering_columns"])
                     for c in cluster_cols:
                         if c not in expected:
                             raise ValueError(f"clustering column {c!r} not a table column")
-                    # clustering_partitions pins the range-bucket count (file count
-                    # per commit); default lets Spark/AQE size buckets by volume —
-                    # right at scale, but a tiny commit then collapses to one file
-                    # and min/max pruning has nothing to skip.
-                    n_ranges = int(schema.options.get("clustering_partitions", "0") or 0)
-                    w_strategy = schema.options.get("clustering_strategy", "").strip().lower()
-                    if w_strategy in ("zorder", "hilbert"):
-                        # curve-keyed write clustering: every commit's files become
-                        # tight boxes in ALL clustering dimensions (same key as the
-                        # matching compaction strategy; the commit-local min/max agg
-                        # costs one scalar job over the commit, not the table)
-                        key_of = (
-                            self._zorder_expr if w_strategy == "zorder" else self._hilbert_expr
-                        )
-                        zc = "_zorder_key"
-                        out = out.withColumn(zc, key_of(out, schema, cluster_cols))
-                        out = (
-                            out.repartitionByRange(n_ranges, F.col(zc))
-                            if n_ranges > 0
-                            else out.repartitionByRange(F.col(zc))
-                        )
-                        out = out.sortWithinPartitions(zc).drop(zc)
-                    else:
-                        range_cols = [F.col(c) for c in cluster_cols]
-                        out = (
-                            out.repartitionByRange(n_ranges, *range_cols)
-                            if n_ranges > 0
-                            else out.repartitionByRange(*range_cols)
-                        )
-                        out = out.sortWithinPartitions(*cluster_cols)
-
-                fmt = schema.options.get("file_format", "PARQUET").upper()
-                if fmt not in ("ORC", "PARQUET", "AVRO"):
-                    raise ValueError(f"unsupported file_format {fmt!r} (have PARQUET, ORC, AVRO)")
-                ext = {"ORC": "orc", "AVRO": "avro", "PARQUET": "parquet"}[fmt]
-                staging = self._staging_dir(tdir, version)
-                fb_counts: dict[str, int] | None = None
-                writer = out.write.mode("errorifexists")
-                part_cols = list(schema.partition_keys)
-                if "_bucket" in out.columns:
-                    # dynamic bucket: the bucket id rides as the INNERMOST hive
-                    # partitionBy layer; _finalize_commit renames `_bucket=N` to
-                    # Paimon's plain `bucket-N` so readers never see the column
-                    part_cols.append("_bucket")
-                if part_cols:
-                    writer = writer.partitionBy(*part_cols)
-                if fmt == "ORC":
-                    writer.orc(staging)
-                elif fmt == "PARQUET":
-                    writer.parquet(staging)
-                else:
-                    # Paimon's third file format (FileFormatType —
-                    # TrinoTableOptionUtils.java:96,111-112). Spark's avro data
-                    # source is an external module; when absent, fall back to
-                    # the pure-Python OCF writer (formats/avro_ocf.py): executors
-                    # encode standard Avro container files, one per (task,
-                    # partition dir).
-                    try:
-                        writer.format("avro").save(staging)
-                    except Exception as ex:  # AnalysisException: Failed to find data source
-                        if "Failed to find data source" not in str(ex):
-                            raise
-                        fb_counts = self._write_avro_fallback(out, staging, schema)
-                final_paths = self._finalize_commit(tdir, staging, version, ext)
-                new_files = self._commit_files(tdir, final_paths, ext, schema, fb_counts)
-                # file-index sidecars (bloom / bitmap) for the new files, BEFORE
-                # the publish below — a reader must never resolve a snapshot whose
-                # sidecars are still being written (missing sidecar = file kept,
-                # so it would only lose skipping, but build-then-publish keeps the
-                # invariant simple). A crash here leaves finalized-but-unpublished
-                # files + sidecars: remove_orphan_files debris, as before.
-                build_file_indexes(self.spark, final_paths, schema)
-                if n_buckets > 0 and bucket_key:
-                    _record_buckets(new_files, schema, bucket_key, n_buckets)
-                elif n_buckets == -1:
-                    _record_dynamic_buckets(new_files)
+                new_files = self._write_data_files(
+                    tdir,
+                    schema,
+                    out,
+                    version,
+                    attempt,
+                    sort_cols=cluster_cols,
+                    strategy=schema.options.get("clustering_strategy", "").strip().lower(),
+                    n_ranges=int(schema.options.get("clustering_partitions", "0") or 0),
+                )
+            n = sum(e["record_count"] for e in new_files)
+            fresh = overwrite or prev is None
+            files = new_files if fresh else prev.files + new_files
+            base_manifests = [] if fresh else list(prev.manifests)
+            if not fresh and prev.files and not prev.manifests:
+                # legacy snapshot with inline files: fold them into this commit's
+                # manifest so the delta chain is complete from here on
+                new_files = prev.files + new_files
+            snap = Snapshot(
+                snapshot_id=version,
+                schema_id=schema.schema_id,
+                commit_user=self.commit_user,
+                commit_identifier=version,
+                commit_kind=COMMIT_OVERWRITE if overwrite else COMMIT_APPEND,
+                timestamp_ms=int(time.time() * 1000),
+                files=files,
+                record_count=(0 if overwrite else (prev.record_count if prev else 0))
+                + n
+                - (dv_index[1] if dv_index else 0),
+            )
+            if dv_index is not None:
+                # the index landed BEFORE this publish (inside _dv_build) — a
+                # reader must never resolve snapshot N without its deletions
+                snap.dv = dv_index[0]
+                snap.dv_marks = dv_index[2]
+        except BaseException:
+            self._discard_attempt(tdir, attempt)
+            raise
         finally:
             if dv_cached is not None:
                 dv_cached.unpersist()
-        n = sum(e["record_count"] for e in new_files)
-        fresh = overwrite or prev is None
-        files = new_files if fresh else prev.files + new_files
-        base_manifests = [] if fresh else list(prev.manifests)
-        if not fresh and prev.files and not prev.manifests:
-            # legacy snapshot with inline files: fold them into this commit's
-            # manifest so the delta chain is complete from here on
-            new_files = prev.files + new_files
-        snap = Snapshot(
-            snapshot_id=version,
-            schema_id=schema.schema_id,
-            commit_user=self.commit_user,
-            commit_identifier=version,
-            commit_kind=COMMIT_OVERWRITE if overwrite else COMMIT_APPEND,
-            timestamp_ms=int(time.time() * 1000),
-            files=files,
-            record_count=(0 if overwrite else (prev.record_count if prev else 0))
-            + n
-            - (dv_index[1] if dv_index else 0),
-        )
-        if dv_index is not None:
-            # the index landed BEFORE this publish (inside _dv_build) — a
-            # reader must never resolve snapshot N without its deletions
-            snap.dv = dv_index[0]
-            snap.dv_marks = dv_index[2]
-        # exclusive publish = the commit point: if a concurrent writer already
-        # produced this snapshot id, fail with CommitConflictError rather
-        # than clobbering their manifest (caller re-reads and retries, like
-        # Paimon's optimistic commit loop). The loser's data files must not
-        # linger in data/ — they're unreferenced by any manifest, but the
-        # streaming reader globs the directory and would see them.
-        try:
-            self._publish_snapshot(tdir, snap, new_files, base_manifests)
-        except CommitConflictError:
-            for p in final_paths:
-                if os.path.exists(p):
-                    os.remove(p)
-                _rm_sidecar(p)
-            if dv_index is not None:
-                # remove every index file THIS commit wrote (manifest +
-                # new shards); carried-forward shards belong to the winner
-                for idx_name in dv_index[3]:
-                    try:
-                        os.remove(os.path.join(tdir, "index", idx_name))
-                    except FileNotFoundError:
-                        pass
-            if dyn_index_delta is not None:
-                # the loser's key→bucket assignments must not linger: the
-                # winner (or the retry) re-assigns with ITS view of the
-                # index, and two deltas for one key would race the lookup
-                shutil.rmtree(dyn_index_delta, ignore_errors=True)
-            self._prune_empty_dirs(os.path.join(tdir, "data"))
-            raise
+        self._publish_attempt(tdir, attempt, snap, new_files, base_manifests)
 
         # Post-commit maintenance driven by CoreOptions the reference
         # surfaces as DDL properties (TrinoTableOptionUtils.java:51-135) —
@@ -1106,10 +1135,14 @@ class WriteMixin:
         ``TestTrinoDistributedQuery.java:69-77``); this is capability beyond
         the reference, matching Paimon's own Spark writer surface.
 
-        Scale: the matched/not-matched split is one left join of source
-        against the merged target keys — target keys project to the PK
-        columns only, so the join input is narrow; with a broadcast-sized
-        source the fact table never shuffles.
+        The default pair (update + insert) is an upsert: every source row
+        becomes +I whether or not its key matches — the semi and anti joins
+        would partition ``source`` exactly (null keys fall to the anti side,
+        duplicates stay) — so it commits ``source`` with no target read.
+        The other clause sets split ``source`` with a left-semi and a
+        left-anti join against the merged target keys, projected to the PK
+        columns only; with a broadcast-sized source the fact table never
+        shuffles.
         """
         schema = self.schema_of(db, table)
         if not schema.primary_key:
@@ -1121,6 +1154,8 @@ class WriteMixin:
         if when_not_matched not in ("insert", None):
             raise ValueError(f"when_not_matched must be 'insert' or None, got {when_not_matched!r}")
 
+        if when_matched == "update" and when_not_matched == "insert":
+            return self.insert_into(db, table, source.withColumn(KIND_COL, F.lit("I")))
         # use_fallback=False: scan-time option, see delete_where
         target = self.read_table(f"{db}.{table}", pad_char=False, use_fallback=False)
         target_keys = target.select(*on)

@@ -19,6 +19,7 @@ a 1000-executor cluster reading ~100 TB:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -64,4 +65,16 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # on an existing session only runtime SQL conf applies; say so rather
+    # than run with a setting the caller believes is in force. A core key
+    # is read from the SparkContext: the session's conf echoes any
+    # non-static key it was handed, in force or not
+    spark_conf = spark.sparkContext.getConf()
+    for k, v in (extra_conf or {}).items():
+        in_force = spark.conf.get(k, None) if k.startswith("spark.sql.") else spark_conf.get(k, None)
+        if in_force != str(v):
+            warnings.warn(
+                f"get_spark: {k}={v} did not take effect (a session already existed)",
+                stacklevel=2,
+            )
     return spark

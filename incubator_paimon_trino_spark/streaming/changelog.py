@@ -758,25 +758,26 @@ def write_stream_to_table(
             )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # the emptiness probe, the consumer-tip max, and the sink insert are
-        # three actions over the same micro-batch plan — persist so the
-        # batch materializes once, not once per action
+        # one summary aggregate (row count and consumer tip) and the sink
+        # insert are two actions over the same micro-batch plan — persist
+        # so the batch materializes once, not once per action
         batch_df.persist()
         try:
-            if batch_df.isEmpty():
-                return
-            tip = None
+            summary = [F.count(F.lit(1))]
             if consumer_id is not None:
                 # tip = max commit position: _seq for +rows, _dv_ver for DV
                 # retractions (whose _seq is the retracted OLD image's —
                 # possibly far below the consumer). greatest() ignores the
                 # null side when only one kind is present in the batch.
-                tip_col = (
+                summary.append(
                     F.greatest(F.max(SEQ_COL), F.max("_dv_ver"))
                     if "_dv_ver" in batch_df.columns
                     else F.max(SEQ_COL)
                 )
-                tip = batch_df.agg(tip_col).collect()[0][0]
+            row = batch_df.agg(*summary).collect()[0]
+            if not row[0]:
+                return
+            tip = row[1] if consumer_id is not None else None
             # a PK changelog SOURCE carries _seq (its own commit order); the
             # sink table assigns fresh sequence numbers per committed batch,
             # so the rider _seq/_dv_ver must not reach insert_into (they

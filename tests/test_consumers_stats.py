@@ -186,6 +186,48 @@ def test_sink_advances_source_consumer(cat, spark, tmp_path):
         )
 
 
+def test_sink_runs_one_action_per_batch_before_insert(cat, spark, tmp_path, monkeypatch):
+    """Each non-empty micro-batch runs one driver action (the row count and
+    the consumer tip in one aggregate) before the sink insert."""
+    from pyspark.sql.classic import dataframe as cdf
+
+    from incubator_paimon_trino_spark.streaming.changelog import (
+        read_changelog_stream,
+        write_stream_to_table,
+    )
+
+    _mk(cat, spark)  # d.t snapshots 1..4
+    cat.create_table("d", "sink", [("k", "int"), ("v", "string")], primary_key=["k"])
+    actions: list[str] = []
+    for name in ("collect", "count", "isEmpty", "first", "take", "toPandas"):
+        orig = getattr(cdf.DataFrame, name)
+
+        def spy(self, *a, _name=name, _orig=orig, **k):
+            actions.append(_name)
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(cdf.DataFrame, name, spy)
+    before_insert: list[list[str]] = []
+    orig_insert = cat.insert_with_retries
+
+    def insert(*a, **k):
+        before_insert.append(list(actions))
+        try:
+            return orig_insert(*a, **k)
+        finally:
+            actions.clear()
+
+    monkeypatch.setattr(cat, "insert_with_retries", insert)
+    write_stream_to_table(
+        read_changelog_stream(cat, "d.t", consumer_id="pipe"), cat, "d", "sink",
+        str(tmp_path / "ck"), source=("d", "t"), consumer_id="pipe",
+    )
+    monkeypatch.undo()
+    assert before_insert and all(b == ["collect"] for b in before_insert), before_insert
+    assert cat.consumer_progress("d", "t", "pipe") == 5
+    assert {r.k for r in cat.read_table("d.sink").collect()} == {1, 2, 3, 4}
+
+
 def test_analyze_complex_typed_columns(cat, spark):
     """ANALYZE on a table with map/array columns records null_count for the
     complex columns instead of crashing (maps are unorderable — min/NDV

@@ -5,6 +5,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tests.conftest import SF_ORACLE, SF_SMOKE
@@ -44,3 +46,25 @@ def test_q6_pushdown_reaches_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan
     assert "IsNotNull(l_shipdate)" in plan or "GreaterThanOrEqual(l_shipdate" in plan
+
+
+def test_get_spark_warns_when_extra_conf_is_ignored(spark):
+    """On an existing session only runtime SQL conf applies: a core setting
+    that did not take effect warns; one that did stays silent."""
+    import warnings
+
+    from incubator_paimon_trino_spark import get_spark
+
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.warns(UserWarning, match="spark.default.parallelism=3 did not take effect"):
+        same = get_spark(
+            shuffle_partitions=int(shuffle), extra_conf={"spark.default.parallelism": "3"}
+        )
+    assert same is spark and spark.sparkContext.defaultParallelism == 2
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        get_spark(
+            shuffle_partitions=int(shuffle),
+            extra_conf={"spark.default.parallelism": "2", "spark.sql.shuffle.partitions": shuffle},
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle

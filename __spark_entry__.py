@@ -72,6 +72,25 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # lake reads whose plans are built as SQL text: the merge-on-read
+    # scaffolding of every merge engine, the one-parse schema, the
+    # per-schema projections of the file read, the delta-vs-base split's
+    # key broadcast and the DV marks pipeline
+    "lake_merge_on_read",
+    "lake_delta_base_split_read",
+    "lake_compacted_merge_free_read",
+    "lake_deletion_vector_read",
+    "lake_dv_cdc_pipeline",
+    "lake_dv_changelog_stream",
+    "lake_first_row_merge",
+    "lake_partial_update_merge",
+    "lake_partial_update_remove_on_delete",
+    "lake_partial_update_sequence_group",
+    "lake_aggregation_merge_engine",
+    "lake_sequence_field_merge",
+    "lake_schema_evolution",
+    "lake_char_padded_read",
+    "lake_timestamp_precision",
     # queries whose commits write through the one data-file writer shared
     # by insert and compaction (bucket/clustering layout, staging write,
     # sidecars, rollback of a failed attempt)
@@ -81,16 +100,12 @@ _REPROOF: tuple[str, ...] = (
     "lake_dynamic_bucket",
     "lake_bucket_point_lookup",
     "lake_read_optimized_table",
-    "lake_compacted_merge_free_read",
     "lake_bloom_index_point_lookup",
     "lake_avro_roundtrip",
     "lake_dml_roundtrip",
     # queries that commit to and read deletion-vector tables: the DV commit
     # path (summary aggregate, bounded hits collect, positional DELETE) and
     # the DV read path (marks dropped by the broadcast anti-join only)
-    "lake_deletion_vector_read",
-    "lake_dv_cdc_pipeline",
-    "lake_dv_changelog_stream",
     "lake_manifest_changelog_stream",
     "lake_metadata_count",
     # trained-plan memo moved to sources.registry.session_plan (per session)
@@ -147,30 +162,19 @@ _REPROOF: tuple[str, ...] = (
     "limit_fetch_with_ties",
     # read_table plan cache removed — every other read_table consumer,
     # riskiest first
-    "lake_delta_base_split_read",
     "lake_bitmap_index_lookup",
-    "lake_merge_on_read",
     "lake_time_travel_v1",
     "lake_tag_time_travel",
     "lake_agg_collect_merge_map",
     "lake_agg_nested_update",
     "lake_agg_ignore_retract",
-    "lake_aggregation_merge_engine",
-    "lake_partial_update_sequence_group",
-    "lake_partial_update_merge",
-    "lake_partial_update_remove_on_delete",
-    "lake_first_row_merge",
-    "lake_sequence_field_merge",
     "lake_rowkind_field_cdc",
     "lake_ignore_delete",
     "lake_incremental_read",
     "lake_incremental_by_timestamp",
     "lake_consumer_incremental_dedup",
     "lake_consumer_resume",
-    "lake_schema_evolution",
     "lake_orc_scan",
-    "lake_timestamp_precision",
-    "lake_char_padded_read",
     "lake_like_prefix_pruned_scan",
     "lake_dynamic_file_pruning",
     "lake_limit_pushdown_partition_scoped",

@@ -74,6 +74,7 @@ def main() -> None:
         print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     print(
         json.dumps(
             {
@@ -82,6 +83,8 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
+                # the local[N] core count get_spark ran with
+                "cpus": int(cpus) if cpus.isdigit() else cpus,
             }
         )
     )

@@ -21,10 +21,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
+
+from incubator_paimon_trino_spark.functions.sql import quote_ident
 
 #: Commit kinds, matching Paimon's Snapshot.CommitKind surface.
 COMMIT_APPEND = "APPEND"
@@ -88,8 +91,18 @@ class TableSchema:
         )
 
     def spark_schema(self) -> T.StructType:
+        """The Spark schema, parsed in ONE ``fromDDL`` call whatever the
+        column count, under ``_parse_type``'s rules field by field."""
+        if not self.fields:
+            return T.StructType([])
+        parsed = T.StructType.fromDDL(
+            ", ".join(f"{quote_ident(f.name)} {_storage_ddl(f.type)}" for f in self.fields)
+        )
         return T.StructType(
-            [T.StructField(f.name, _parse_type(f.type), f.nullable) for f in self.fields]
+            [
+                T.StructField(f.name, _no_nested_char(f.type, p.dataType), f.nullable)
+                for f, p in zip(self.fields, parsed.fields)
+            ]
         )
 
     def field_by_name(self, name: str) -> Field:
@@ -177,11 +190,15 @@ def _parse_type(s: str) -> T.DataType:
     later read with UNSUPPORTED_CHAR_OR_VARCHAR_AS_STRING — reject it HERE
     so create_table/add_column fail at DDL time, not on an unreadable table.
     """
-    import re as _re
+    return _no_nested_char(s, T.StructType.fromDDL(f"c {_storage_ddl(s)}")[0].dataType)
 
-    if _re.fullmatch(r"\s*(?i:CHAR|VARCHAR)\s*(\(\s*\d+\s*\))?\s*", s):
-        return T.StringType()
-    m = _re.fullmatch(r"\s*(?i:TIMESTAMP(?:_NTZ)?)\s*\(\s*(\d)\s*\)\s*", s)
+
+def _storage_ddl(s: str) -> str:
+    """The DDL Spark parses for declared type ``s``: top-level CHAR/VARCHAR
+    store as string, TIMESTAMP(p) as timestamp_ntz; anything else as is."""
+    if re.fullmatch(r"\s*(?i:CHAR|VARCHAR)\s*(\(\s*\d+\s*\))?\s*", s):
+        return "string"
+    m = re.fullmatch(r"\s*(?i:TIMESTAMP(?:_NTZ)?)\s*\(\s*(\d)\s*\)\s*", s)
     if m:
         # declared-precision timestamp (reference ladder {0,3,6} —
         # TrinoTypeUtils.java:153-157): storage is micros TimestampNTZ,
@@ -192,8 +209,11 @@ def _parse_type(s: str) -> T.DataType:
                 f"unsupported timestamp precision in {s!r}: the ladder is "
                 "TIMESTAMP(0), TIMESTAMP(3), TIMESTAMP(6)"
             )
-        return T.TimestampNTZType()
-    dt = T.StructType.fromDDL(f"c {s}")[0].dataType
+        return "timestamp_ntz"
+    return s
+
+
+def _no_nested_char(s: str, dt: T.DataType) -> T.DataType:
     if _contains_char(dt):
         raise ValueError(
             f"type {s!r} contains a nested CHAR/VARCHAR — Spark cannot read "

@@ -85,7 +85,7 @@ from incubator_paimon_trino_spark.functions.types import (
     timestamp_precision,
 )
 
-# shared helpers/constants (split in r10) — re-exported so existing
+# shared helpers/constants — re-exported so existing
 # `from ...warehouse import X` call sites keep working
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
 from incubator_paimon_trino_spark.catalog.wh_dv import DeletionVectorMixin
@@ -719,7 +719,11 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         rtrimmed STORAGE form instead of the user-facing n-padded form:
         the write paths (compaction must not re-store padded bytes) and
         DML condition evaluation (an unpadded literal in an UPDATE/DELETE
-        condition must keep matching, as before r9) read through this.
+        condition must keep matching) read through this.
+
+        Every path builds its plan in a fixed number of JVM calls, whatever
+        the column count: the schema parses in one call, and projections
+        are SQL text (``functions/sql.py``).
 
         - ``version_as_of=n``    — pin snapshot n (``FOR VERSION AS OF`` /
           ``scan.snapshot-id`` — ``TrinoMetadata.java:102-108``)
@@ -812,6 +816,10 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         # legacy snapshot without the count: assume marks (old behavior).
         has_dv = bool(dv_mode and snap.dv and snap.dv_marks != 0)
         dirty = self._dv_dirty_files(tdir, snap) if has_dv else None
+        # Every branch below keeps the plan's build cost fixed in the column
+        # count: _read_files yields the declared column order (plus the PK
+        # system columns), so dropping columns or a by-name union is all the
+        # re-projection a branch needs; any reorder is one SQL projection.
         if dirty is None:
             df = self._read_files(tdir, schema, snap, with_pos=has_dv)
         if has_dv and dirty is not None:
@@ -823,29 +831,20 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # one file, not the table. Sharded indexes (dirty is None) keep
             # the all-files anti-join: enumerating their file names is
             # O(live deleted rows), a bound the driver must not carry.
-            user_cols = [f.name for f in schema.fields]
             clean = [e for e in snap.files if os.path.basename(e["path"]) not in dirty]
             hot = [e for e in snap.files if os.path.basename(e["path"]) in dirty]
             parts = []
             if clean:
-                parts.append(
-                    self._read_files(
-                        tdir, schema, dataclasses.replace(snap, files=clean)
-                    ).select(*user_cols)
-                )
+                parts.append(self._read_files(tdir, schema, dataclasses.replace(snap, files=clean)))
             if hot:
                 d = self._read_files(
                     tdir, schema, dataclasses.replace(snap, files=hot), with_pos=True
                 )
-                parts.append(
-                    self._dv_apply_distributed(d, tdir, snap, schema).select(*user_cols)
-                )
-            if not parts:
-                df = self.spark.createDataFrame([], schema.spark_schema())
-            else:
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
+                parts.append(self._dv_apply_distributed(d, tdir, snap, schema))
+            df = parts[0]
+            for p in parts[1:]:
+                df = df.unionByName(p)
+            df = df.drop(SEQ_COL, KIND_COL)
         elif dv_mode:
             # deletion-vector read: scan − DV IS the merged state (every
             # superseded row version is position-marked at write time and
@@ -857,23 +856,21 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # the raw unfiltered changelog view, like non-DV tables.
             if has_dv:
                 df = self._dv_apply_distributed(df, tdir, snap, schema)
-            df = df.select(*[f.name for f in schema.fields])
+            df = df.drop(SEQ_COL, KIND_COL)
         elif (
             schema.primary_key
             and not with_system_columns
             and snap.files
             and all(e.get("source") == "compact" for e in snap.files)
         ):
-            # FULLY-COMPACTED fast path (r10, found by bench_lake: the
-            # merge was 7.6x a raw scan): when every live file is
-            # compaction output and nothing was committed since, the
-            # stored rows ARE the merged state — unique keys, no -D rows —
-            # so the whole groupBy/shuffle disappears and filters and
-            # projections push straight into the file scan. Zero
-            # staleness, unlike $ro: this is the pinned snapshot's own
-            # live set. Later appends add non-compact files and the
-            # condition goes false.
-            df = df.select(*[f.name for f in schema.fields])
+            # FULLY-COMPACTED read: when every live file is compaction
+            # output and nothing was committed since, the stored rows ARE
+            # the merged state — unique keys, no -D rows — so the whole
+            # groupBy/shuffle disappears and filters and projections push
+            # straight into the file scan. Zero staleness, unlike $ro: this
+            # is the pinned snapshot's own live set. Later appends add
+            # non-compact files and the condition goes false.
+            df = df.drop(SEQ_COL, KIND_COL)
         elif schema.primary_key and not with_system_columns:
             from incubator_paimon_trino_spark.operators.merge_on_read import merge_on_read
 
@@ -925,58 +922,57 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             )
             split = self._delta_base_split(tdir, schema, snap)
             if split is not None:
-                # DELTA-vs-BASE merge (r10, found by bench_lake: the full
-                # merge was 7.6x a raw scan): compaction output has unique
-                # keys and no -D rows, so only keys TOUCHED since the last
-                # compaction need the merge at all. The base splits on a
-                # broadcast of the (small, manifest-counted) delta's keys:
-                # untouched base rows pass through scan-direct, touched
-                # ones join the delta in the merge — the groupBy shuffles
-                # the delta's key set, not the table.
+                # DELTA-vs-BASE merge: compaction output has unique keys and
+                # no -D rows, so only keys TOUCHED since the last compaction
+                # need the merge at all. The base splits on a broadcast of
+                # the (small, manifest-counted) delta's keys: untouched base
+                # rows pass through scan-direct, touched ones join the delta
+                # in the merge — the groupBy shuffles the delta's key set,
+                # not the table. The keys broadcast as the delta holds them:
+                # the bound counts delta rows, and anti/semi joins ignore
+                # duplicate build keys, so deduplicating would only add a
+                # job.
                 base, delta = split
-                user_cols = [f.name for f in schema.fields]
+                pk = schema.primary_key
                 dkeys = F.broadcast(
-                    delta.select(
-                        *[F.col(k).alias(f"_dk_{k}") for k in schema.primary_key]
-                    ).distinct()
+                    delta.selectExpr(
+                        *[f"{quote_ident(k)} AS {quote_ident('_dk_' + k)}" for k in pk]
+                    )
                 )
                 # null-safe equality: the split must group exactly like the
                 # full merge's groupBy (which puts null keys in one group)
-                cond = None
-                for k in schema.primary_key:
-                    c = base[k].eqNullSafe(dkeys[f"_dk_{k}"])
-                    cond = c if cond is None else cond & c
+                cond = F.expr(
+                    " AND ".join(f"{quote_ident(k)} <=> {quote_ident('_dk_' + k)}" for k in pk)
+                )
                 untouched = base.join(dkeys, cond, "left_anti")
                 if (
                     merge_kwargs["merge_engine"] == "deduplicate"
                     and not seq_field
                     and not merge_kwargs.get("sequence_groups")
                 ):
-                    # ONE-SCAN split (r12, sf1 soak: the semi branch made
-                    # the big compacted base scan TWICE — 4× super-linear
-                    # at 10× rows): under commit-sequence deduplicate, a
+                    # ONE-SCAN split: under commit-sequence deduplicate, a
                     # delta row STRICTLY supersedes its base row (later
                     # commit ⇒ higher seq; a delta -D removes the key and
-                    # the anti join already drops the base row), so
-                    # touched base rows can never reach the output — merge
-                    # the delta alone. A user sequence_field (or sequence
-                    # groups) can make the BASE row win, so those keep the
-                    # touched∪delta merge below.
+                    # the anti join already drops the base row), so touched
+                    # base rows can never reach the output — merge the delta
+                    # alone, and the compacted base is scanned once. A user
+                    # sequence_field (or sequence groups) can make the BASE
+                    # row win, so those keep the touched∪delta merge below.
                     merged = merge_on_read(delta, **merge_kwargs)
                 else:
                     touched = base.join(dkeys, cond, "left_semi")
                     merged = merge_on_read(touched.unionByName(delta), **merge_kwargs)
-                df = untouched.select(*user_cols).unionByName(
-                    merged.select(*user_cols)
-                )
+                # by-name union: the output keeps the base's declared order
+                df = untouched.drop(SEQ_COL, KIND_COL).unionByName(merged)
             else:
                 df = merge_on_read(df, **merge_kwargs)
-            # schema column order (merge_on_read returns PK-first) so reads
-            # before/after the first commit and across tables are positional-
-            # union safe
-            df = df.select(*[f.name for f in schema.fields])
-        elif not with_system_columns:
-            df = df.select(*[f.name for f in schema.fields])
+                # schema column order (merge_on_read returns PK-first) so
+                # reads before/after the first commit and across tables are
+                # positional-union safe
+                names = [f.name for f in schema.fields]
+                pk = schema.primary_key
+                if [*pk, *(n for n in names if n not in pk)] != names:
+                    df = project(df, [(n, quote_ident(n)) for n in names])
         if predicate:
             from incubator_paimon_trino_spark.functions.predicates import apply_tuple_domain
 
@@ -984,14 +980,13 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         if limit is not None:
             df = df.limit(limit)  # engine re-limits — pushdown is a hint (A8)
         if not with_system_columns and pad_char:
-            # CHAR(n) padded OUTPUT (r9 — retires the last §1.3 fidelity
-            # delta, TrinoTypeUtils.java:77-90): storage stays the rtrimmed
-            # canonical form (equality, file stats, groupBy keys, and the
-            # pad-insensitive predicate normalization above all work on
-            # it), and the declared length pads back on only at the very
-            # END of the read — after predicates, which were normalized to
-            # the storage form. A CHAR(3) 'ab' now reads as 'ab ', like
-            # the reference. System-column views (changelog/audit) and
+            # CHAR(n) padded OUTPUT (TrinoTypeUtils.java:77-90): storage
+            # stays the rtrimmed canonical form (equality, file stats,
+            # groupBy keys, and the pad-insensitive predicate normalization
+            # above all work on it), and the declared length pads back on
+            # only at the very END of the read — after predicates, which
+            # were normalized to the storage form. A CHAR(3) 'ab' reads as
+            # 'ab ', like the reference. System-column views (changelog/audit) and
             # internal pad_char=False reads (compaction, DML condition
             # evaluation) stay in storage form — declared metadata lives
             # in the catalog.
@@ -1062,7 +1057,10 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         read with that schema, columns renamed old→current by field id,
         dropped fields discarded, added fields filled with NULL — then
         unioned. This is exactly the reference's evolution contract (A18):
-        rename must not orphan data.
+        rename must not orphan data. The output holds the table's columns in
+        declared order, then the PK system columns; each group's projection
+        is one SQL expression, so the build cost does not grow with the
+        column count.
 
         ``with_pos`` appends the file provenance columns the deletion-vector
         machinery joins on: ``__dv_file``, the data file's basename (the key
@@ -1085,7 +1083,6 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             root = full.rsplit(f"{os.sep}data{os.sep}", 1)[0] + f"{os.sep}data"
             key = (f["schema_id"], f.get("format", "parquet"), root)
             groups.setdefault(key, []).append(full)
-        current = {f.id: f for f in schema.fields}
         parts: list[DataFrame] = []
         is_pk = bool(schema.primary_key)
         for (sid, fmt, root), paths in sorted(groups.items()):
@@ -1100,16 +1097,15 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # (its 2nd positional is mergeSchema), unlike .parquet().
             synth_pos = False
             if fmt == "avro" and with_pos:
-                # positional avro read (r11 — DV on avro): only the Python
-                # OCF source can synthesize per-row ordinals (its ordered
-                # block decode IS the running count); the JVM spark-avro
-                # reader, even when present, has no _metadata.row_index
+                # positional avro read: only the Python OCF source can
+                # synthesize per-row ordinals (its ordered block decode IS
+                # the running count); the JVM spark-avro reader, even when
+                # present, has no _metadata.row_index
                 df = self._read_avro_fallback(paths, old, is_pk, with_pos=True)
                 synth_pos = True
             elif fmt == "orc" and with_pos:
-                # positional ORC read (r11 — DV on orc): pyarrow.orc per
-                # file with synthesized ordinals; the native ORC reader has
-                # no _metadata.row_index
+                # positional ORC read: pyarrow.orc per file with synthesized
+                # ordinals; the native ORC reader has no _metadata.row_index
                 df = self._read_orc_positional(paths, old, is_pk)
                 synth_pos = True
             else:
@@ -1124,53 +1120,42 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                     if fmt != "avro" or "Failed to find data source" not in str(ex):
                         raise
                     df = self._read_avro_fallback(paths, old, is_pk)
+            # the provenance columns, unless the reader synthesized them
+            pos = (
+                [(_DV_FILE, "_metadata.file_path"), (_DV_POS, "_metadata.row_index")]
+                if with_pos and not synth_pos
+                else []
+            )
             if sid == schema.schema_id and not schema.partition_keys:
                 # no evolution between write and read (the common case):
-                # the physical schema IS the current schema — skip the
-                # per-column cast/alias projection, which was pure py4j
-                # chatter (bench_lake r10: plan BUILD was half the DV
-                # read's wall time, dominated by expression round trips).
-                # Partitioned tables keep the projection: directory
-                # inference appends partition columns at the END, so the
-                # select also restores declared column order there.
-                if with_pos and not synth_pos:
-                    df = df.withColumns(
-                        {
-                            _DV_FILE: F.col("_metadata.file_path"),
-                            _DV_POS: F.col("_metadata.row_index"),
-                        }
-                    )
-                parts.append(df)
+                # the physical schema IS the current schema, so no
+                # cast/rename projection. Partitioned tables keep the
+                # projection: directory inference appends partition columns
+                # at the END, so it also restores declared column order.
+                parts.append(df.selectExpr("*", *(f"{e} AS {n}" for n, e in pos)) if pos else df)
                 continue
-            cols = []
-            for fid, cur in sorted(current.items()):
-                old_field = next((of for of in old.fields if of.id == fid), None)
-                # castable_ddl: TIMESTAMP(p) declarations cast as their
-                # timestamp_ntz storage type (Spark's cast parser refuses
-                # precision suffixes)
-                if old_field is None:
-                    cols.append(F.lit(None).cast(castable_ddl(cur.type)).alias(cur.name))
-                else:
-                    cols.append(
-                        F.col(old_field.name).cast(castable_ddl(cur.type)).alias(cur.name)
-                    )
-            if is_pk:
-                cols += [F.col(SEQ_COL), F.col(KIND_COL)]
-            if with_pos:
-                cols += (
-                    [F.col(_DV_FILE), F.col(_DV_POS)]
-                    if synth_pos
-                    else [
-                        F.col("_metadata.file_path").alias(_DV_FILE),
-                        F.col("_metadata.row_index").alias(_DV_POS),
-                    ]
+            old_by_id = {of.id: of for of in old.fields}
+            # castable_ddl: TIMESTAMP(p) declarations cast as their
+            # timestamp_ntz storage type (Spark's cast parser refuses
+            # precision suffixes)
+            cols = [
+                (
+                    cur.name,
+                    f"CAST({quote_ident(old_by_id[cur.id].name) if cur.id in old_by_id else 'NULL'}"
+                    f" AS {castable_ddl(cur.type)})",
                 )
-            parts.append(df.select(*cols))
+                for cur in schema.fields
+            ]
+            if is_pk:
+                cols += [(SEQ_COL, SEQ_COL), (KIND_COL, KIND_COL)]
+            if synth_pos:
+                cols += [(_DV_FILE, _DV_FILE), (_DV_POS, _DV_POS)]
+            parts.append(project(df, cols + pos))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         if with_pos:
-            out = out.withColumn(_DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1))
+            out = out.withColumn(_DV_FILE, F.expr(f"element_at(split({_DV_FILE}, '/'), -1)"))
         return out
 
     # ------------------------------------------------ metadata aggregation

@@ -249,8 +249,8 @@ class DeletionVectorMixin:
             return df
         if snap.dv_marks is not None and snap.dv_marks <= self._dv_broadcast_rows(schema):
             # a JSON-parsed side has no stats: without the hint AQE
-            # sort-merge-joined a 23k-mark index against the scan
-            # (measured by bench_lake: 2/3 of the DV read's overhead).
+            # sort-merge-joined a 23k-mark index against the scan, which
+            # was 2/3 of the DV read's overhead.
             # Above the bound, AQE decides — never force a broadcast
             # larger than Spark's own threshold.
             marks = F.broadcast(marks)
@@ -302,7 +302,7 @@ class DeletionVectorMixin:
         rows ``read_table`` returns for a DV table: the marks drop through
         the same ``_dv_anti_join`` the read uses."""
         live = self._read_files(tdir, schema, scan, with_pos=True).withColumn(
-            _DV_POS, F.col(_DV_POS).cast("bigint")
+            _DV_POS, F.expr(f"CAST({_DV_POS} AS BIGINT)")
         )
         return self._dv_anti_join(live, tdir, prev, schema)
 
@@ -342,11 +342,14 @@ class DeletionVectorMixin:
         prev: Snapshot,
         hits: DataFrame | None,
         version: int,
-    ) -> tuple[str, int, int, list[str]]:
+        written: list[str],
+    ) -> tuple[str, int, int]:
         """Publish the commit's DV index from ``hits``, the (file basename,
         position) of each live row of ``prev`` this commit supersedes (None:
-        none). Returns (index name, newly marked, cumulative marks, files
-        this commit wrote — the conflict-cleanup set).
+        none). Returns (index name, newly marked, cumulative marks). Each
+        file or staging directory under ``index/`` is appended to
+        ``written`` before it is created, so a failed or losing attempt
+        removes all of them, however far the build got.
 
         The format follows the CUMULATIVE mark count, decided from
         ``prev.dv_marks`` and the hits themselves, never from a parse of a
@@ -390,13 +393,13 @@ class DeletionVectorMixin:
             # each returning up to room + 1 rows).
             rows = [] if hits is None else hits.limit(room + 1).coalesce(1).collect()
             if len(rows) <= room:
-                return self._dv_fold_inline(tdir, prev, prev_meta, rows, version)
+                return self._dv_fold_inline(tdir, prev, prev_meta, rows, version, written)
         if hits is None:
             hits = self.spark.createDataFrame([], f"{_DV_FILE} string, {_DV_POS} bigint")
         hits = hits.persist()
         try:
             return self._dv_write_shards(
-                tdir, schema, prev_meta, hits, hits.count(), prev_count, version
+                tdir, schema, prev_meta, hits, hits.count(), prev_count, version, written
             )
         finally:
             hits.unpersist()
@@ -408,7 +411,8 @@ class DeletionVectorMixin:
         prev_meta: dict | None,
         rows: list,
         version: int,
-    ) -> tuple[str, int, int, list[str]]:
+        written: list[str],
+    ) -> tuple[str, int, int]:
         """Inline-format commit: cumulative marks ≤ threshold by the
         caller's decision, so folding the collected hit ``rows`` into the
         prior parsed dict is bounded driver work (the dict survives only
@@ -428,16 +432,19 @@ class DeletionVectorMixin:
             merged.setdefault(base_to_rel[r[0]], set()).add(int(r[1]))
         vectors = {rel: sorted(ps) for rel, ps in sorted(merged.items())}
         total = sum(len(ps) for ps in vectors.values())
-        name = self._dv_write_inline(tdir, version, vectors)
-        return name, len(rows), total, [name]
+        name = self._dv_write_inline(tdir, version, vectors, written)
+        return name, len(rows), total
 
-    def _dv_write_inline(self, tdir: str, version: int, vectors: dict[str, list[int]]) -> str:
+    def _dv_write_inline(
+        self, tdir: str, version: int, vectors: dict[str, list[int]], written: list[str]
+    ) -> str:
         """Write an inline cumulative DV index for ``version`` BEFORE the
         snapshot publish (readers must never see the snapshot without its
-        vectors). Nonce-named so racing committers at one version can't
-        cross-wire: each snapshot references exactly the file its own
-        writer produced."""
+        vectors), recording its name in ``written`` first. Nonce-named so
+        racing committers at one version can't cross-wire: each snapshot
+        references exactly the file its own writer produced."""
         name = f"dv-{version}-{uuid.uuid4().hex[:8]}.json"
+        written.append(name)
         write_json_atomic(
             os.path.join(tdir, "index", name),
             {"vectors": vectors, "marks": sum(len(ps) for ps in vectors.values())},
@@ -453,7 +460,8 @@ class DeletionVectorMixin:
         n_hits: int,
         prev_count: int,
         version: int,
-    ) -> tuple[str, int, int, list[str]]:
+        written: list[str],
+    ) -> tuple[str, int, int]:
         """Sharded-format commit: EXECUTORS write one ``{"vectors": ...}``
         document per touched bucket (marks hashed by data-file basename);
         untouched buckets carry their prior shard files forward BY NAME, so
@@ -565,11 +573,12 @@ class DeletionVectorMixin:
                     ).alias("value")
                 )
             )
-            staging = os.path.join(tdir, "index", f".staging-dv-{version}-{nonce}")
+            staging_name = f".staging-dv-{version}-{nonce}"
+            written.append(staging_name)
+            staging = os.path.join(tdir, "index", staging_name)
             docs.write.partitionBy("_b", "_s").text(staging)
         finally:
             rewrite.unpersist()
-        written: list[str] = []
         shards: dict[int, list[str]] = dict(carried)
         for sdir in sorted(glob.glob(os.path.join(staging, "_b=*", "_s=*"))):
             b = int(os.path.basename(os.path.dirname(sdir)).split("=", 1)[1])
@@ -578,14 +587,15 @@ class DeletionVectorMixin:
             # one row per (bucket, sub) in `docs` → exactly one part file
             assert len(parts) == 1, f"expected one doc for bucket {b}/{s}: {parts}"
             name = f"dv-{version}-{nonce}-b{b}-s{s}.json"
-            os.replace(parts[0], os.path.join(tdir, "index", name))
             written.append(name)
+            os.replace(parts[0], os.path.join(tdir, "index", name))
             if b in carried:
                 raise AssertionError(f"bucket {b} both carried and rewritten")
             shards.setdefault(b, []).append(name)
         shutil.rmtree(staging, ignore_errors=True)
         total = prev_count + n_hits  # hits are strictly new (pre-filtered)
         manifest = f"dvm-{version}-{nonce}.json"
+        written.append(manifest)
         write_json_atomic(
             os.path.join(tdir, "index", manifest),
             {
@@ -595,6 +605,5 @@ class DeletionVectorMixin:
                 "shards": {str(b): names for b, names in sorted(shards.items())},
             },
         )
-        written.append(manifest)
-        return manifest, n_hits, total, written
+        return manifest, n_hits, total
 

@@ -1,8 +1,7 @@
 """Shared module-level helpers and constants of the warehouse catalog.
 
-Split out of ``warehouse.py`` in r10 (the file passed 6k lines): these are
-the pure functions and constants every ``WarehouseCatalog`` mixin module
-uses — option parsing/validation, sequence/partition-value coercion,
+These are the pure functions and constants every ``WarehouseCatalog`` mixin
+module uses — option parsing/validation, sequence/partition-value coercion,
 physical schemas, bucket recording, and the shared DV index explode.
 ``warehouse`` re-exports everything here, so existing
 ``from ...warehouse import X`` call sites keep working.
@@ -51,6 +50,7 @@ from incubator_paimon_trino_spark.catalog.scan import (
     partition_values,
     prune_files,
 )
+from incubator_paimon_trino_spark.functions.sql import project, quote_ident
 from incubator_paimon_trino_spark.functions.types import (
     castable_ddl,
     char_length,
@@ -81,32 +81,31 @@ _DV_FILE = "__dv_file"
 _DV_POS = "__dv_pos"
 
 
-def explode_dv_index_text(df: DataFrame, ver_col=None) -> DataFrame:
+def explode_dv_index_text(df: DataFrame, ver_col: Column | None = None) -> DataFrame:
     """(file basename, position) marks from wholetext DV index JSON rows —
     the ONE parse/explode pipeline shared by the batch DV read
     (``_dv_apply_distributed``), the retraction stream's marks side, and
     its resume baseline (``streaming/changelog.py``), so no two paths can
     disagree on path normalization. ``ver_col`` (optional expression) rides
     along as ``_dv_ver``. An index that does not parse fails LOUDLY —
-    silently exploding nothing would drop deletes."""
-    carry = ["_dv_ver"] if ver_col is not None else []
-    head = [ver_col.alias("_dv_ver")] if ver_col is not None else []
-    parsed = F.from_json("value", "vectors map<string, array<bigint>>")
+    silently exploding nothing would drop deletes. Each step is one SQL
+    expression, so the plan builds in a fixed number of JVM calls."""
+    parsed = "from_json(value, 'vectors map<string, array<bigint>>') AS _vecs"
+    if ver_col is None:
+        carry, vecs = [], df.selectExpr(parsed)
+    else:
+        carry, vecs = ["_dv_ver"], df.select(ver_col.alias("_dv_ver"), F.expr(parsed))
     return (
-        df.select(*head, parsed.alias("_vecs"))
-        .filter(
-            F.assert_true(
-                F.col("_vecs.vectors").isNotNull(),
-                F.concat(F.lit("unreadable DV index: "), F.input_file_name()),
-            ).isNull()
+        vecs.filter(
+            "assert_true(_vecs.vectors IS NOT NULL, "
+            "concat('unreadable DV index: ', input_file_name())) IS NULL"
         )
-        .select(*carry, F.explode("_vecs.vectors").alias("_rel", "_ps"))
-        .select(
+        .selectExpr(*carry, "explode(_vecs.vectors) AS (_rel, _ps)")
+        .selectExpr(
             *carry,
-            F.element_at(
-                F.split(F.regexp_replace("_rel", r"\\", "/"), "/"), -1
-            ).alias(_DV_FILE),
-            F.explode("_ps").alias(_DV_POS),
+            # index keys are relative paths, possibly written with '\\'
+            f"element_at(split(replace(_rel, '\\\\', '/'), '/'), -1) AS {_DV_FILE}",
+            f"explode(_ps) AS {_DV_POS}",
         )
     )
 
@@ -305,12 +304,19 @@ def _rm_sidecar(data_path: str) -> None:
 def _pad_char_columns(df: DataFrame, schema: TableSchema) -> DataFrame:
     """User-facing CHAR(n) output form: storage stays rtrimmed-canonical,
     the declared length pads on at the very end of the read (shared by
-    ``read_table`` and ``$ro`` so the padding contract has ONE home)."""
-    for f_ in schema.fields:
-        n_chars = char_length(f_.type)
-        if n_chars is not None:
-            df = df.withColumn(f_.name, F.rpad(F.col(f_.name), n_chars, " "))
-    return df
+    ``read_table`` and ``$ro`` so the padding contract has ONE home). ``df``
+    holds the table's columns in declared order; the padding is one SQL
+    projection, whatever the column count."""
+    widths = {f_.name: char_length(f_.type) for f_ in schema.fields}
+    if all(n is None for n in widths.values()):
+        return df
+    return project(
+        df,
+        [
+            (name, quote_ident(name) if n is None else f"rpad({quote_ident(name)}, {n}, ' ')")
+            for name, n in widths.items()
+        ],
+    )
 
 
 def _parse_duration_ms(v: str) -> int:
@@ -1090,7 +1096,9 @@ __all__ = [
     "partition_column_expr",
     "partition_values",
     "prune_files",
+    "project",
     "prune_files_by_index",
+    "quote_ident",
     "read_json",
     "spark_to_paimon",
     "timestamp_precision",

@@ -75,7 +75,8 @@ class _Attempt:
     staging: str | None = None
     #: finalized data files (their sidecars share the path plus a suffix)
     paths: list[str] = dataclasses.field(default_factory=list)
-    #: deletion-vector index files under ``index/``
+    #: deletion-vector index files and staging directories under ``index/``,
+    #: each recorded before it is created
     index_files: list[str] = dataclasses.field(default_factory=list)
     #: dynamic-bucket key→bucket delta directory
     dyn_delta: str | None = None
@@ -586,10 +587,11 @@ class WriteMixin:
             _rm_sidecar(p)
         for name in attempt.index_files:
             # carried-forward shards are not listed: they belong to the tip
-            try:
-                os.remove(os.path.join(tdir, "index", name))
-            except FileNotFoundError:
-                pass
+            path = os.path.join(tdir, "index", name)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            elif os.path.exists(path):
+                os.remove(path)
         if attempt.dyn_delta is not None:
             shutil.rmtree(attempt.dyn_delta, ignore_errors=True)
         self._prune_empty_dirs(os.path.join(tdir, "data"))
@@ -758,9 +760,9 @@ class WriteMixin:
         elif KIND_COL in out.columns or row_kind not in (None, "I"):
             raise ValueError("row kinds require a primary-key table")
 
-        #: (index name, newly marked, cumulative marks, files written) —
-        #: set for every DV-table commit; None on non-DV tables.
-        dv_index: tuple[str, int, int, list[str]] | None = None
+        #: (index name, newly marked, cumulative marks) — set for every
+        #: DV-table commit; None on non-DV tables.
+        dv_index: tuple[str, int, int] | None = None
         #: rows a DV-table commit writes; 0 = a metadata-only commit
         dv_rows = 0
         dv_cached: DataFrame | None = None
@@ -779,7 +781,9 @@ class WriteMixin:
                     # its positions are the marks, nothing is written. Once
                     # a commit lands after that read, the key join below
                     # runs against the new tip instead.
-                    dv_index = self._dv_build(tdir, schema, prev, positions[1], version)
+                    dv_index = self._dv_build(
+                        tdir, schema, prev, positions[1], version, attempt.index_files
+                    )
                 else:
                     # the batch feeds three actions (the summary aggregate,
                     # the mark scan's key join, the physical write) and for
@@ -793,10 +797,12 @@ class WriteMixin:
                             if n_keys
                             else None
                         )
-                        dv_index = self._dv_build(tdir, schema, prev, hits, version)
+                        dv_index = self._dv_build(
+                            tdir, schema, prev, hits, version, attempt.index_files
+                        )
                     else:
-                        name = self._dv_write_inline(tdir, version, {})
-                        dv_index = (name, 0, 0, [name])
+                        name = self._dv_write_inline(tdir, version, {}, attempt.index_files)
+                        dv_index = (name, 0, 0)
                     # F1 tie-break (+I and -D of one key in one commit →
                     # deleted): the delete also cancels the batch's own
                     # insert. -D rows are then dropped from the physical
@@ -807,7 +813,6 @@ class WriteMixin:
                     out = out.filter(F.col(KIND_COL) != "D")
                     if has_d:
                         out = out.join(d_keys, pk, "left_anti")
-                attempt.index_files = dv_index[3]
             if dv_index is not None and not dv_rows:
                 # a DV commit with no row to write (a DELETE) is metadata
                 # only: an empty part file would add a zero-row data file

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from incubator_paimon_trino_spark.catalog.metadata import KIND_COL, SEQ_COL
+from incubator_paimon_trino_spark.functions.sql import project, quote_ident
 
 MERGE_ENGINES = ("deduplicate", "first-row", "partial-update", "aggregation")
 
@@ -441,11 +442,27 @@ def _partial_update_sequence_groups(
     for c in value_cols:
         i = member_group.get(c)
         if i is None:
-            out.append(F.col(c))
-            continue
-        field = "_g" if c == groups[i][0] else c
-        out.append(F.col(f"_sg{i}")[field].alias(c))
-    return merged.filter(F.col("_has_i") == 1).select(*primary_key, *out)
+            out.append((c, quote_ident(c)))
+        else:
+            out.append((c, f"_sg{i}.{quote_ident('_g' if c == groups[i][0] else c)}"))
+    return _emit(merged.filter("_has_i = 1"), primary_key, out)
+
+
+def _merge_agg(df: DataFrame, primary_key: list[str], items: list[tuple[str, str]]) -> DataFrame:
+    """``df`` grouped by ``primary_key`` with one column per (name, SQL
+    aggregate) item after the key columns, built in a fixed number of JVM
+    calls: the aggregates travel as one struct, star-expanded."""
+    body = ", ".join(f"{e} AS {quote_ident(n)}" for n, e in items)
+    return (
+        df.groupBy(*primary_key)
+        .agg(F.expr(f"struct({body}) AS _row"))
+        .selectExpr(*map(quote_ident, primary_key), "_row.*")
+    )
+
+
+def _emit(merged: DataFrame, primary_key: list[str], items: list[tuple[str, str]]) -> DataFrame:
+    """The merge's output, key columns then (name, SQL expression) items."""
+    return project(merged, [(k, quote_ident(k)) for k in primary_key] + items)
 
 
 def merge_on_read(
@@ -506,24 +523,24 @@ def merge_on_read(
         # the same reservation at DDL time)
         raise ValueError(f"column name(s) {clash} are reserved by merge-on-read")
     value_cols = [c for c in df.columns if c not in (*primary_key, SEQ_COL, KIND_COL)]
+    # The scaffolding every engine shares (the order key, the winner struct,
+    # the output projection) is SQL text: one expression per plan step,
+    # whatever the column count (functions/sql.py).
+    quoted = [quote_ident(c) for c in value_cols]
+    winner = [(c, f"_row.{q}") for c, q in zip(value_cols, quoted)]
     # order key: sequence, then D after I within the same sequence. A (seq,
-    # kind) STRUCT compares lexicographically — unlike the previous
-    # ``_seq * 2 + kind`` arithmetic it cannot overflow when sequence_field
-    # carries epoch-micro/nano-sized values (>= 2^62).
-    order = F.struct(
-        F.col(SEQ_COL).alias("s"),
-        F.when(F.col(KIND_COL) == "D", F.lit(1)).otherwise(F.lit(0)).alias("k"),
-    ).alias("_ord")
-    df = df.withColumn("_ord", order)
+    # kind) STRUCT compares lexicographically, so it cannot overflow when
+    # sequence_field carries epoch-micro/nano-sized values (>= 2^62).
+    df = df.selectExpr(
+        "*",
+        f"named_struct('s', {SEQ_COL}, 'k', CASE WHEN {KIND_COL} = 'D' THEN 1 ELSE 0 END) AS _ord",
+    )
 
     if merge_engine == "deduplicate":
         picked = df.groupBy(*primary_key).agg(
-            F.max_by(F.struct(KIND_COL, *value_cols), F.col("_ord")).alias("_row")
+            F.expr(f"max_by(struct({', '.join([KIND_COL, *quoted])}), _ord) AS _row")
         )
-        return (
-            picked.filter(F.col(f"_row.{KIND_COL}") != "D")
-            .select(*primary_key, *[F.col(f"_row.{c}").alias(c) for c in value_cols])
-        )
+        return _emit(picked.filter(f"_row.{KIND_COL} != 'D'"), primary_key, winner)
 
     if merge_engine == "first-row":
         # Paimon THROWS on retraction for first-row (the earliest insert wins,
@@ -534,7 +551,7 @@ def merge_on_read(
         # is a FILTER, not a projection wrapper: a wrapped output column would
         # be eliminated by column pruning (SELECT other_col / COUNT(*) would
         # silently succeed), while a filter's predicate always evaluates.
-        has_d = F.max(F.when(F.col(KIND_COL) == "D", 1).otherwise(0)).alias("_has_d")
+        has_d = F.expr(f"max(CASE WHEN {KIND_COL} = 'D' THEN 1 ELSE 0 END) AS _has_d")
         guard = _retraction_guard(
             "merge-engine 'first-row' does not support retraction "
             "(delete rows present in the changelog)"
@@ -543,15 +560,13 @@ def merge_on_read(
             picked = df.groupBy(*primary_key).agg(has_d)
             return picked.filter(guard).select(*primary_key)
         picked = df.groupBy(*primary_key).agg(
-            F.min_by(F.struct(*value_cols), F.when(~(F.col(KIND_COL) == "D"), F.col("_ord"))).alias(
-                "_row"
+            F.expr(
+                f"min_by(struct({', '.join(quoted)}), "
+                f"CASE WHEN {KIND_COL} != 'D' THEN _ord END) AS _row"
             ),
             has_d,
         )
-        return picked.filter(guard).select(
-            *primary_key,
-            *[F.col(f"_row.{c}").alias(c) for c in value_cols],
-        )
+        return _emit(picked.filter(guard), primary_key, winner)
 
     if merge_engine == "partial-update":
         if sequence_groups:
@@ -572,7 +587,7 @@ def merge_on_read(
         # from after it (no pre-delete resurrection); sequence groups
         # (above) retract per group. ignore-delete filters at write time,
         # so those feeds never reach here.
-        is_insert = F.col(KIND_COL) != "D"
+        is_insert = f"{KIND_COL} != 'D'"
         if remove_record_on_delete:
             scaffold = [f"_pu{i}" for i in range(len(value_cols))] + ["_dmax", "_imax"]
             clash2 = sorted(set(df.columns) & set(scaffold))
@@ -580,45 +595,50 @@ def merge_on_read(
                 raise ValueError(
                     f"column name(s) {clash2} collide with partial-update merge scaffolding"
                 )
-            aggs = [
-                F.max_by(
-                    F.struct(F.col("_ord").alias("o"), F.col(c).alias("v")),
-                    F.when(is_insert & F.col(c).isNotNull(), F.col("_ord")),
-                ).alias(f"_pu{i}")
-                for i, c in enumerate(value_cols)
-            ]
-            merged = df.groupBy(*primary_key).agg(
-                F.max(F.when(~is_insert, F.col("_ord"))).alias("_dmax"),
-                F.max(F.when(is_insert, F.col("_ord"))).alias("_imax"),
-                *aggs,
+            merged = _merge_agg(
+                df,
+                primary_key,
+                [
+                    ("_dmax", f"max(CASE WHEN NOT ({is_insert}) THEN _ord END)"),
+                    ("_imax", f"max(CASE WHEN {is_insert} THEN _ord END)"),
+                ]
+                + [
+                    (
+                        f"_pu{i}",
+                        f"max_by(named_struct('o', _ord, 'v', {quote_ident(c)}), "
+                        f"CASE WHEN {is_insert} AND {quote_ident(c)} IS NOT NULL THEN _ord END)",
+                    )
+                    for i, c in enumerate(value_cols)
+                ],
             )
-            alive = F.col("_imax").isNotNull() & (
-                F.col("_dmax").isNull() | (F.col("_imax") > F.col("_dmax"))
+            alive = "_imax IS NOT NULL AND (_dmax IS NULL OR _imax > _dmax)"
+            return _emit(
+                merged.filter(alive),
+                primary_key,
+                [
+                    (c, f"CASE WHEN _dmax IS NULL OR _pu{i}.o > _dmax THEN _pu{i}.v END")
+                    for i, c in enumerate(value_cols)
+                ],
             )
-            after_reset = lambda i: F.when(  # noqa: E731
-                F.col("_dmax").isNull() | (F.col(f"_pu{i}.o") > F.col("_dmax")),
-                F.col(f"_pu{i}.v"),
-            )
-            return merged.filter(alive).select(
-                *primary_key,
-                *[after_reset(i).alias(c) for i, c in enumerate(value_cols)],
-            )
-        aggs = [
-            F.max_by(F.struct(F.col("_ord"), F.col(c)), F.when(F.col(c).isNotNull(), F.col("_ord")))[
-                c
-            ].alias(c)
-            for c in value_cols
-        ]
-        merged = df.groupBy(*primary_key).agg(
-            F.max(F.when(~is_insert, 1).otherwise(0)).alias("_has_d"),
-            *aggs,
+        merged = _merge_agg(
+            df,
+            primary_key,
+            [("_has_d", f"max(CASE WHEN NOT ({is_insert}) THEN 1 ELSE 0 END)")]
+            + [
+                (
+                    c,
+                    f"max_by(struct(_ord, {quote_ident(c)}), "
+                    f"CASE WHEN {quote_ident(c)} IS NOT NULL THEN _ord END).{quote_ident(c)}",
+                )
+                for c in value_cols
+            ],
         )
         guard = _retraction_guard(
             "merge-engine 'partial-update' does not support retraction (delete "
             "rows present); configure 'ignore-delete', "
             "'partial-update.remove-record-on-delete', or sequence groups"
         )
-        return merged.filter(guard).select(*primary_key, *value_cols)
+        return merged.filter(guard).drop("_has_d")
 
     # aggregation: per-field function when configured, else sum numeric
     # fields and last_value for the rest. Delete handling follows Paimon's
@@ -697,4 +717,4 @@ def merge_on_read(
         ).otherwise(F.col("_has_i") == 1)
     else:
         pred = F.col("_has_i") == 1
-    return merged.filter(pred).select(*primary_key, *value_cols)
+    return merged.filter(pred).drop("_has_d", "_has_i")

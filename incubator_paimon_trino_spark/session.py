@@ -30,6 +30,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's SparkSession. A new session gets every default below; on
+    a live one, only the settings the caller passed (``shuffle_partitions``,
+    ``extra_conf``) are applied, so a second call never resets conf the
+    session's owner changed."""
+    explicit = dict(extra_conf or {})
+    if shuffle_partitions is not None:
+        explicit["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if SparkSession.getActiveSession() is not None:
+        builder = SparkSession.builder
+        for k, v in explicit.items():
+            builder = builder.config(k, v)
+        return _warn_ignored(builder.getOrCreate(), extra_conf)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
@@ -65,16 +77,21 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # on an existing session only runtime SQL conf applies; say so rather
-    # than run with a setting the caller believes is in force. A core key
-    # is read from the SparkContext: the session's conf echoes any
-    # non-static key it was handed, in force or not
+    return _warn_ignored(spark, extra_conf)
+
+
+def _warn_ignored(spark: SparkSession, extra_conf: dict[str, str] | None) -> SparkSession:
+    """``spark``, after warning about each ``extra_conf`` key not in force.
+    On an existing session only runtime SQL conf applies; say so rather than
+    run with a setting the caller believes is in force. A core key is read
+    from the SparkContext: the session's conf echoes any non-static key it
+    was handed, in force or not."""
     spark_conf = spark.sparkContext.getConf()
     for k, v in (extra_conf or {}).items():
         in_force = spark.conf.get(k, None) if k.startswith("spark.sql.") else spark_conf.get(k, None)
         if in_force != str(v):
             warnings.warn(
                 f"get_spark: {k}={v} did not take effect (a session already existed)",
-                stacklevel=2,
+                stacklevel=3,
             )
     return spark

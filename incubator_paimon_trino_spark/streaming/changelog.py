@@ -395,7 +395,7 @@ def _dv_retraction_stream(
     )
     build_tip = snaps[-1].snapshot_id if snaps else 0
     idx_name = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    marks = _explode_dv_index(
+    marks = explode_dv_index_text(
         idx.filter((ver > F.lit(build_tip)) | idx_name.isin(committed)),
         ver_col=ver,
     )
@@ -444,10 +444,6 @@ def _dv_retraction_stream(
     )
 
 
-# moved to warehouse.explode_dv_index_text (r8: the batch DV read shares it)
-_explode_dv_index = explode_dv_index_text
-
-
 def _dv_referenced_entries(cat: WarehouseCatalog, tdir: str, snaps: list) -> dict[str, dict]:
     """Manifest entries (by file basename) for ONLY the data files any
     COMMITTED DV index references — the -D static side's read set. The
@@ -476,7 +472,7 @@ def _dv_referenced_entries(cat: WarehouseCatalog, tdir: str, snaps: list) -> dic
     paths = [p for p in paths if os.path.exists(p)]
     referenced: set[str] = set()
     if paths:
-        marks = _explode_dv_index(
+        marks = explode_dv_index_text(
             cat.spark.read.format("text").option("wholetext", "true").load(paths)
         )
         referenced = {r[0] for r in marks.select(_DV_FILE).distinct().collect()}

@@ -30,7 +30,8 @@ def spark():
         shuffle_partitions=8,
         extra_conf={"spark.default.parallelism": "2"},
     )
-    # get_spark drops extra_conf when a session already exists
+    # on a live session get_spark applies only the settings it is passed,
+    # and a core key like this one cannot change there (it warns instead)
     assert spark.sparkContext.defaultParallelism == 2, "test session conf not applied"
     yield spark
 

@@ -135,11 +135,11 @@ def test_overflowing_hits_reach_the_driver_bounded(cat, spark, monkeypatch, kind
             seen.append((len(rows), st.getStageInfo(stage).numTasks))
         return rows
 
-    def build(self, tdir_, schema_, prev_, hits, version_):
+    def build(self, tdir_, schema_, prev_, hits, version_, written):
         partitions.append(hits.rdd.getNumPartitions())
         in_build.append(True)
         try:
-            return orig_build(self, tdir_, schema_, prev_, hits, version_)
+            return orig_build(self, tdir_, schema_, prev_, hits, version_, written)
         finally:
             in_build.clear()
 
@@ -305,8 +305,7 @@ def test_dv_commit_crash_points(cat, spark, monkeypatch, index, kind, point):
     assert _rows(cat) == before
     for sid, rows in history.items():
         assert _rows(cat, version_as_of=sid) == rows, sid
-    if point != "index_written":
-        assert _files(tdir) == files_before
+    assert _files(tdir) == files_before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     commit()

@@ -1,5 +1,5 @@
-"""r10 merge-on-read fast paths, found by bench_lake (the full merge ran
-7.6x a raw parquet scan):
+"""Merge-on-read fast paths (the full merge costs a multiple of a raw
+parquet scan):
 
 - FULLY-COMPACTED read: every live file is compaction output → the stored
   rows ARE the merged state; the read is scan-direct, zero staleness.
@@ -30,6 +30,23 @@ def cat(spark, tmp_path):
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _subtree(plan: str, node: str) -> str:
+    """The lines of ``plan``'s first ``node`` and everything below it."""
+    lines = plan.splitlines()
+    depth = lambda line: len(line) - len(line.lstrip(" :|+-"))  # noqa: E731
+    i = next(i for i, line in enumerate(lines) if node in line)
+    out = [lines[i]]
+    for line in lines[i + 1 :]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
 def _mk(cat, spark, name="t", options=None):
@@ -64,8 +81,9 @@ def test_fully_compacted_read_is_merge_free(cat, spark):
 
 def test_delta_base_split_plan_and_equivalence(cat, spark):
     """After compact + small commits (updates, NEW keys, a delete), the read
-    must broadcast the delta keys (plan pin) and equal the forced full
-    merge value-for-value."""
+    must broadcast the delta keys as stored (plan pin: no aggregate on the
+    broadcast side) and equal the forced full merge value-for-value, also
+    when the delta repeats a key across commits and holds a null key."""
     cat.create_database("d")
     ddl = _mk(cat, spark)
     cat.compact("d", "t")
@@ -73,24 +91,34 @@ def test_delta_base_split_plan_and_equivalence(cat, spark):
         [(3, "v3c", 32), (99, "new", 990)], ddl))
     cat.delete_where("d", "t", F.col("k") == 7)
 
-    df = cat.read_table("d.t")
-    p = _plan(df)
-    assert "BroadcastHashJoin" in p  # the delta-key split
-    got = sorted((r.k, r.v, r.n) for r in df.collect())
+    def split_and_full():
+        df = cat.read_table("d.t")
+        p = _plan(df)
+        assert "BroadcastHashJoin" in p  # the delta-key split
+        assert "Aggregate" not in _subtree(p, "BroadcastExchange"), p
+        # the bound is config-derived per table (_delta_broadcast_rows);
+        # force the full merge via the per-table option override
+        cat.set_options("d", "t", {"merge-read.delta-broadcast-rows": "0"})
+        try:
+            full_df = cat.read_table("d.t")
+            assert "BroadcastHashJoin" not in _plan(full_df)
+            full = _rows(full_df)
+        finally:
+            cat.set_options("d", "t", {"merge-read.delta-broadcast-rows": "2000000"})
+        got = _rows(df)
+        assert got == full
+        return got
 
-    # force the full merge path and compare
-    # r11: the bound is config-derived per table (_delta_broadcast_rows);
-    # force the full merge via the per-table option override
-    cat.set_options("d", "t", {"merge-read.delta-broadcast-rows": "0"})
-    try:
-        full_df = cat.read_table("d.t")
-        assert "BroadcastHashJoin" not in _plan(full_df)
-        full = sorted((r.k, r.v, r.n) for r in full_df.collect())
-    finally:
-        cat.set_options("d", "t", {"merge-read.delta-broadcast-rows": "2000000"})
-    assert got == full
+    got = split_and_full()
     assert 7 not in {k for k, _, _ in got} and (99, "new", 990) in got
     assert next(v for k, v, _ in got if k == 3) == "v3c"
+
+    # key 3 again, and a null key twice, in two more commits
+    cat.insert_into("d", "t", spark.createDataFrame([(3, "v3d", 33), (None, "n1", 1)], ddl))
+    cat.insert_into("d", "t", spark.createDataFrame([(None, "n2", 2), (5, "v5b", 51)], ddl))
+    got = split_and_full()
+    assert {(3, "v3d", 33), (None, "n2", 2), (5, "v5b", 51)} <= set(got)
+    assert len(got) == 51  # keys 0..49 less 7, plus 99 and the null key
 
 
 def test_delta_base_split_with_aggregation_engine(cat, spark):
@@ -143,7 +171,7 @@ def test_split_respects_predicates_and_time_travel(cat, spark):
 
 
 def test_dedup_delta_split_scans_base_once(cat, spark):
-    """r12 (sf1 soak): under commit-sequence deduplicate, the split's semi
+    """Under commit-sequence deduplicate, the split's semi
     branch (touched base rows entering the merge) is provably dead — delta
     rows strictly supersede base rows — so the plan must scan the base
     ONCE (anti join only, no LeftSemi). A user sequence_field CAN make the

@@ -68,3 +68,24 @@ def test_get_spark_warns_when_extra_conf_is_ignored(spark):
             extra_conf={"spark.default.parallelism": "2", "spark.sql.shuffle.partitions": shuffle},
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle
+
+
+def test_get_spark_keeps_live_session_conf(spark):
+    """A second get_spark() returns the live session without resetting the
+    runtime conf its owner changed; settings passed explicitly still apply."""
+    from incubator_paimon_trino_spark import get_spark
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        assert get_spark() is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles"
+        assert get_spark(shuffle_partitions=5) is spark
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -72,6 +72,11 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # queries on file-indexed tables: sidecars built by one job of one
+    # stage, a task per new data file
+    "lake_bloom_index_point_lookup",
+    "lake_bitmap_index_lookup",
+    "lake_dynamic_file_pruning",
     # lake reads whose plans are built as SQL text: the merge-on-read
     # scaffolding of every merge engine, the one-parse schema, the
     # per-schema projections of the file read, the delta-vs-base split's
@@ -100,7 +105,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_dynamic_bucket",
     "lake_bucket_point_lookup",
     "lake_read_optimized_table",
-    "lake_bloom_index_point_lookup",
     "lake_avro_roundtrip",
     "lake_dml_roundtrip",
     # queries that commit to and read deletion-vector tables: the DV commit
@@ -162,7 +166,6 @@ _REPROOF: tuple[str, ...] = (
     "limit_fetch_with_ties",
     # read_table plan cache removed — every other read_table consumer,
     # riskiest first
-    "lake_bitmap_index_lookup",
     "lake_time_travel_v1",
     "lake_tag_time_travel",
     "lake_agg_collect_merge_map",
@@ -176,7 +179,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_consumer_resume",
     "lake_orc_scan",
     "lake_like_prefix_pruned_scan",
-    "lake_dynamic_file_pruning",
     "lake_limit_pushdown_partition_scoped",
     "lake_partition_pruned_scan",
     "lake_fallback_branch",

@@ -37,13 +37,12 @@ paths only).
 
 Scale shape (the 100 TB story):
 
-- BUILD is one distributed pass per commit over only the NEWLY written files,
-  reading only the indexed columns (column-pruned parquet scan). Partial
-  filters are built per arrow batch (distinct-first: hashing cost is per
-  unique value per batch, not per row), shuffled as fixed-size bitsets — not
-  raw column data — and OR-combined per file; each executor writes its files'
-  sidecars directly (atomic tmp+rename). The driver sees one tiny row per
-  file.
+- BUILD is one Spark job of one stage per commit, one task per NEWLY written
+  file. Each task reads only its file's indexed columns, batch by batch
+  (bounded memory), hashes each batch's distinct values (hashing cost is per
+  unique value per batch, not per row) and writes the sidecar itself
+  (atomic tmp+rename). No re-scan through Spark, no shuffle; the driver
+  receives one count per file.
 - PROBE is metadata-sized per candidate file. Small candidate sets (most
   queries, after partition/bucket/min-max pruning) probe on the driver with
   an mtime-keyed cache; large sets fan the probe out as one Spark job that
@@ -120,7 +119,7 @@ def bloom_params(items: int, fpp: float) -> tuple[int, int]:
     """(m_bits, k) for ``items`` expected distinct values at ``fpp``.
 
     Standard sizing: m = -n·ln(p)/ln(2)², k = (m/n)·ln(2). m is rounded up
-    to a byte multiple so partial bitsets OR together byte-exactly.
+    to a byte multiple so the bitset is stored as whole bytes.
     """
     if items < 1 or not (0.0 < fpp < 1.0):
         raise ValueError(f"bloom filter needs items >= 1 and 0 < fpp < 1, got {items}, {fpp}")
@@ -153,8 +152,8 @@ def index_specs(schema: TableSchema) -> list[IndexSpec]:
     for label, cols in (("bloom-filter", bloom_cols), ("bitmap", bitmap_cols)):
         dupes = sorted({c for c in cols if cols.count(c) > 1})
         if dupes:
-            # a duplicate would make the build select two same-named columns,
-            # fail pd.unique, and silently mark every sidecar field unusable
+            # a duplicate would give one field id two specs (and two
+            # entries' worth of work) — a typo to refuse, not to index
             raise ValueError(f"duplicate column(s) {dupes} in file-index.{label}.columns")
     out: list[IndexSpec] = []
     for kind, cols in (("bloom", bloom_cols), ("bitmap", bitmap_cols)):
@@ -200,8 +199,8 @@ def index_specs(schema: TableSchema) -> list[IndexSpec]:
 
 # ------------------------------------------------------------- canonical form
 def canon_bytes(v, ddl: str) -> bytes | None:
-    """Hash input for one value — IDENTICAL on the build side (pandas values
-    decoded from parquet) and the probe side (predicate literals).
+    """Hash input for one value — IDENTICAL on the build side (Python values
+    decoded from parquet by pyarrow) and the probe side (predicate literals).
 
     Returns None for "this value cannot exist in the column" (e.g. a
     fractional literal probing an integer column) — the probe then treats the
@@ -285,158 +284,85 @@ def build_file_indexes(
     spark,
     paths: list[str],
     schema: TableSchema,
-    read_names: dict[int, str] | None = None,
+    read_names: dict[str, dict[int, str]] | None = None,
 ) -> int:
-    """One distributed pass building every new file's sidecar; returns the
-    number of sidecars written. Parquet commits only (ORC/AVRO tables simply
-    never prune by index — same graceful degradation as min/max stats).
+    """Write the sidecar of every data file in ``paths``; returns the number
+    of sidecars written. Parquet tables only (ORC/AVRO tables simply never
+    prune by index — same graceful degradation as min/max stats).
 
-    ``read_names`` maps field id → the PHYSICAL column name inside these
-    files, for rebuilds over files written under an older schema (renames);
-    commit-time builds omit it (files were just written with the current
-    names). All ``paths`` must share one physical naming — the rebuild
-    caller groups by schema_id.
-
-    Stage 1 (mapInPandas, zero shuffle): accumulate ONE partial per
-    (file, column) across the whole partition — fixed-size bitset (bloom) or
-    hash set (bitmap), fed per arrow batch from the batch's DISTINCT values —
-    and emit the partials only when the partition's input is exhausted, so
-    the stage-2 shuffle moves one bitset per file-split, never one per batch.
-    Stage 2 (applyInPandas on file name): OR/union the few partials and write
-    the sidecar next to the data file from the executor.
-
-    Integer columns are read CAST TO STRING: pandas coerces a nullable int64
-    arrow column to float64, which silently rounds values above 2^53 before
-    hashing (a false NEGATIVE — the one failure bloom must never have);
-    ``canon_bytes`` parses integer strings exactly, so the string route is
-    value-identical and null-safe.
+    One Spark job of one stage, one task per file: the task reads its file's
+    indexed columns batch by batch and writes the sidecar itself, so nothing
+    is shuffled and the driver receives one count per file. ``read_names``
+    maps a data path to {field id: PHYSICAL column name} for files written
+    under an older schema (renames); paths it does not list were just
+    written under the current names.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     specs = index_specs(schema)
     if not specs or not paths:
         return 0
-    fmt = schema.options.get("file_format", "parquet").strip().lower()
-    if fmt != "parquet":
+    if schema.options.get("file_format", "parquet").strip().lower() != "parquet":
         return 0
+    names = read_names or {}
+    tasks = [(p, {s.fid: names.get(p, {}).get(s.fid, s.column) for s in specs}) for p in paths]
+    return spark.sparkContext.parallelize(tasks, len(tasks)).map(
+        lambda t: _write_sidecar(specs, *t)
+    ).sum()
 
-    partial_schema = "file string, fid int, payload binary, bad boolean"
 
-    def _partials(batches):
-        import numpy as np
+def _write_sidecar(specs: list[IndexSpec], path: str, names: dict[int, str]) -> int:
+    """Index one data file (``names``: field id → physical column); returns
+    1 once its sidecar is written, 0 for a file with no rows (no sidecar)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-        blooms: dict[tuple, "np.ndarray"] = {}
-        dicts: dict[tuple, set] = {}
-        bad: set[tuple] = set()
-        seen: set[tuple] = set()
-        for pdf in batches:
-            for spec in specs:
-                for fname, col in pdf.groupby("_fidx_file", sort=False)[spec.column]:
-                    key = (fname, spec.fid)
-                    seen.add(key)
-                    if key in bad:
-                        continue
-                    try:
-                        vals = pd.unique(col.dropna())
-                        if spec.kind == "bloom":
-                            bits = blooms.get(key)
-                            if bits is None:
-                                bits = blooms[key] = np.zeros(spec.m_bits // 8, dtype=np.uint8)
-                            for v in vals:
-                                c = canon_bytes(v, spec.ddl)
-                                if c is None:
-                                    raise ValueError(f"uncanonical value {v!r}")
-                                for pos in _bit_positions(c, spec.m_bits, spec.k):
-                                    bits[pos >> 3] |= 1 << (pos & 7)
-                        else:  # bitmap
-                            hs = dicts.setdefault(key, set())
-                            for v in vals:
-                                c = canon_bytes(v, spec.ddl)
-                                if c is None:
-                                    raise ValueError(f"uncanonical value {v!r}")
-                                hs.add(_value_hash(c))
-                                if len(hs) > spec.max_distinct:
-                                    raise ValueError("distinct overflow")
-                    except (ValueError, TypeError, ArithmeticError):
-                        # unusable field for this file: recorded, probe keeps
-                        bad.add(key)
-                        blooms.pop(key, None)
-                        dicts.pop(key, None)
-        for fname, fid in sorted(seen):
-            key = (fname, fid)
-            if key in bad:
-                payload = b""
-            elif key in blooms:
-                payload = blooms[key].tobytes()
-            else:
-                payload = ",".join(sorted(dicts[key])).encode()
-            yield pd.DataFrame(
-                {"file": [fname], "fid": [fid], "payload": [payload], "bad": [key in bad]}
-            )
-
-    by_spec = {s.fid: s for s in specs}
-
-    def _combine(key, pdf):
-        import urllib.parse
-
-        import numpy as np
-
-        fname = key[0]
-        local = urllib.parse.unquote(fname).removeprefix("file:")
-        fields: dict[str, dict] = {}
-        for fid, rows in pdf.groupby("fid", sort=False):
-            spec = by_spec[int(fid)]
-            if bool(rows["bad"].any()):
-                fields[str(fid)] = {"kind": spec.kind, "bad": True}
-                continue
-            if spec.kind == "bloom":
-                acc = np.zeros(spec.m_bits // 8, dtype=np.uint8)
-                for p in rows["payload"]:
-                    acc |= np.frombuffer(p, dtype=np.uint8)
-                # the bitset is m fixed bits regardless of the file's actual
-                # cardinality; a small file's mostly-zero set deflates to a
-                # few KB, so sidecars never dwarf their data files
-                fields[str(fid)] = {
-                    "kind": "bloom",
-                    "m": spec.m_bits,
-                    "k": spec.k,
-                    "enc": "zlib",
-                    "bits": base64.b64encode(zlib.compress(acc.tobytes(), 6)).decode("ascii"),
-                }
-            else:
-                hs: set[str] = set()
-                for p in rows["payload"]:
-                    if p:
-                        hs.update(p.decode().split(","))
-                if len(hs) > spec.max_distinct:
-                    fields[str(fid)] = {"kind": "bitmap", "bad": True}
-                else:
-                    fields[str(fid)] = {"kind": "bitmap", "hashes": sorted(hs)}
-        doc = {"version": 1, "fields": fields}
-        tmp = sidecar_path(local) + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, sidecar_path(local))
-        return pd.DataFrame({"file": [fname], "n_fields": [len(fields)]})
-
-    sel = [F.input_file_name().alias("_fidx_file")]
-    for s in sorted(specs, key=lambda x: x.column):
-        phys = (read_names or {}).get(s.fid, s.column)
-        col = F.col(phys)
-        if s.ddl.lower() in _INT_DDL:
-            col = col.cast("string")  # exactness guard — see docstring
-        sel.append(col.alias(s.column))
-    df = (
-        spark.read.parquet(*paths)
-        .select(*sel)
-        .mapInPandas(_partials, schema=partial_schema)
-        .groupBy("file")
-        .applyInPandas(_combine, schema="file string, n_fields int")
-    )
-    # count() drives the same distributed build without shipping the
-    # per-file rows to the driver (r9 judge nit)
-    return df.count()
+    blooms = {s.fid: bytearray(s.m_bits // 8) for s in specs if s.kind == "bloom"}
+    hashes: dict[int, set[str]] = {s.fid: set() for s in specs if s.kind == "bitmap"}
+    bad: set[int] = set()
+    with pq.ParquetFile(path) as pf:
+        if pf.metadata.num_rows == 0:
+            return 0
+        for batch in pf.iter_batches(columns=sorted(set(names.values()))):
+            for s in specs:
+                if s.fid in bad:
+                    continue
+                try:
+                    # distinct-first: hashing costs per unique value per batch
+                    for v in pc.unique(batch.column(names[s.fid]).drop_null()).to_pylist():
+                        c = canon_bytes(v, s.ddl)
+                        if c is None:
+                            raise ValueError(f"uncanonical value {v!r}")
+                        if s.kind == "bloom":
+                            bits = blooms[s.fid]
+                            for pos in _bit_positions(c, s.m_bits, s.k):
+                                bits[pos >> 3] |= 1 << (pos & 7)
+                        else:
+                            hashes[s.fid].add(_value_hash(c))
+                            if len(hashes[s.fid]) > s.max_distinct:
+                                raise ValueError("distinct overflow")
+                except (ValueError, TypeError, ArithmeticError):
+                    bad.add(s.fid)  # unusable field for this file: probes keep it
+    fields: dict[str, dict] = {}
+    for s in specs:
+        if s.fid in bad:
+            fields[str(s.fid)] = {"kind": s.kind, "bad": True}
+        elif s.kind == "bloom":
+            # the bitset is m fixed bits regardless of the file's actual
+            # cardinality; a small file's mostly-zero set deflates to a few
+            # KB, so sidecars never dwarf their data files
+            fields[str(s.fid)] = {
+                "kind": "bloom",
+                "m": s.m_bits,
+                "k": s.k,
+                "enc": "zlib",
+                "bits": base64.b64encode(zlib.compress(bytes(blooms[s.fid]), 6)).decode("ascii"),
+            }
+        else:
+            fields[str(s.fid)] = {"kind": "bitmap", "hashes": sorted(hashes[s.fid])}
+    tmp = sidecar_path(path) + f".tmp-{os.getpid()}"
+    with open(tmp, "w") as fh:
+        json.dump({"version": 1, "fields": fields}, fh)
+    os.replace(tmp, sidecar_path(path))
+    return 1
 
 
 # -------------------------------------------------------------------- probe

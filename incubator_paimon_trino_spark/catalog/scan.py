@@ -36,6 +36,7 @@ row — every unknown keeps the file):
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import os
 import urllib.parse
 from decimal import Decimal
@@ -132,6 +133,16 @@ def _key(v, ddl: str):
 
 
 # ------------------------------------------------------------ stats collect
+def _stat_bounds(st, ddl: str) -> tuple:
+    """Normalized (min, max) of one column chunk's footer statistics."""
+    if ddl.lower().startswith("decimal") and st.physical_type in ("INT32", "INT64"):
+        # pyarrow cannot decode an integer-backed decimal's min/max (Spark
+        # writes precision <= 18 so); the raw unscaled ints carry the scale
+        scale = json.loads(st.logical_type.to_json())["scale"]
+        return tuple(_norm(Decimal(v).scaleb(-scale), ddl) for v in (st.min_raw, st.max_raw))
+    return _norm(st.min, ddl), _norm(st.max, ddl)
+
+
 def collect_file_stats(
     path: str, fmt: str, schema: TableSchema, record_count: int | None = None
 ) -> dict:
@@ -150,6 +161,7 @@ def collect_file_stats(
 
         return {"record_count": orc.ORCFile(path).nrows, "size_bytes": size, "stats": {}}
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     meta = pq.ParquetFile(path).metadata
@@ -190,8 +202,8 @@ def collect_file_stats(
             nulls = st.null_count if st.has_null_count else None
             if st.has_min_max:
                 try:
-                    lo, hi = _norm(st.min, f.type), _norm(st.max, f.type)
-                except (TypeError, ValueError, ArithmeticError):
+                    lo, hi = _stat_bounds(st, f.type)
+                except (TypeError, ValueError, ArithmeticError, pa.ArrowException):
                     lo = hi = None
                 if lo is None or hi is None:  # values exist but stat unusable
                     broken.add(f.id)

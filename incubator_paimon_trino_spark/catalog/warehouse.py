@@ -820,8 +820,10 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         # count: _read_files yields the declared column order (plus the PK
         # system columns), so dropping columns or a by-name union is all the
         # re-projection a branch needs; any reorder is one SQL projection.
-        if dirty is None:
-            df = self._read_files(tdir, schema, snap, with_pos=has_dv)
+        # The whole-snapshot read is built only by the branches that use it.
+        def whole() -> DataFrame:
+            return self._read_files(tdir, schema, snap, with_pos=has_dv)
+
         if has_dv and dirty is not None:
             # CLEAN/DIRTY split: an inline index names its mark-bearing
             # files in one bounded driver parse (the same O(threshold)
@@ -854,6 +856,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # of the committed index, never a driver dict (see
             # _dv_apply_distributed). with_system_columns still exposes
             # the raw unfiltered changelog view, like non-DV tables.
+            df = whole()
             if has_dv:
                 df = self._dv_apply_distributed(df, tdir, snap, schema)
             df = df.drop(SEQ_COL, KIND_COL)
@@ -870,7 +873,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # straight into the file scan. Zero staleness, unlike $ro: this
             # is the pinned snapshot's own live set. Later appends add
             # non-compact files and the condition goes false.
-            df = df.drop(SEQ_COL, KIND_COL)
+            df = whole().drop(SEQ_COL, KIND_COL)
         elif schema.primary_key and not with_system_columns:
             from incubator_paimon_trino_spark.operators.merge_on_read import merge_on_read
 
@@ -965,7 +968,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 # by-name union: the output keeps the base's declared order
                 df = untouched.drop(SEQ_COL, KIND_COL).unionByName(merged)
             else:
-                df = merge_on_read(df, **merge_kwargs)
+                df = merge_on_read(whole(), **merge_kwargs)
                 # schema column order (merge_on_read returns PK-first) so
                 # reads before/after the first commit and across tables are
                 # positional-union safe
@@ -973,6 +976,8 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 pk = schema.primary_key
                 if [*pk, *(n for n in names if n not in pk)] != names:
                     df = project(df, [(n, quote_ident(n)) for n in names])
+        else:
+            df = whole()
         if predicate:
             from incubator_paimon_trino_spark.functions.predicates import apply_tuple_domain
 

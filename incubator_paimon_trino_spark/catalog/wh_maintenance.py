@@ -1221,8 +1221,9 @@ class MaintenanceMixin:
         them or this maintenance op backfills in place. ``force=True``
         rebuilds every live sidecar (e.g. after changing items/fpp sizing).
 
-        One distributed pass over only the missing files (same build job a
-        commit runs); idempotent; metadata untouched, so no new snapshot.
+        One build job over only the missing files of every writing schema
+        (the job a commit runs); idempotent; metadata untouched, so no new
+        snapshot.
         Shared entries (a branch's inherited ``../../data`` files) are
         skipped — their sidecars belong to the parent table's lifecycle.
         """
@@ -1248,18 +1249,19 @@ class MaintenanceMixin:
             p = os.path.join(tdir, e["path"])
             if force or not os.path.exists(p + _FIDX_SUFFIX):
                 todo.setdefault(e["schema_id"], []).append(p)
-        built = 0
         spec_fids = {s.fid for s in _file_index_specs(schema)}
-        for sid, paths in sorted(todo.items()):
+        read_names: dict[str, dict[int, str]] = {}
+        for sid, group in sorted(todo.items()):
             ws = self._schema(tdir, sid) if sid != schema.schema_id else schema
-            read_names = {f.id: f.name for f in ws.fields if f.id in spec_fids}
-            if len(read_names) < len(spec_fids):
+            names = {f.id: f.name for f in ws.fields if f.id in spec_fids}
+            if len(names) < len(spec_fids):
                 # an indexed column added AFTER these files were written: the
                 # files can't contain it, and a probe on it never matches
                 # their rows anyway — skip rather than half-index
-                skipped += len(paths)
+                skipped += len(group)
                 continue
-            built += build_file_indexes(self.spark, paths, schema, read_names=read_names)
+            read_names.update(dict.fromkeys(group, names))
+        built = build_file_indexes(self.spark, list(read_names), schema, read_names=read_names)
         return {"built": built, "skipped": skipped}
 
     def _grid_cells(self, df: DataFrame, schema: TableSchema, order_by: list[str]):

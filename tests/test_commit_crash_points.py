@@ -1,9 +1,12 @@
 """Crash-point net for commits that write data files without deletion
-vectors: an append insert, a primary-key insert, a dynamic-bucket insert
-and ``compact``, each failing at every step that leaves something on disk:
+vectors: an append insert, a primary-key insert, a two-bucket
+primary-key insert, a dynamic-bucket insert and ``compact``, each failing
+at every step that leaves something on disk:
 
 - an executor-side error in the middle of the data-file write;
 - right after the staged files are moved into ``data/``;
+- a task of the file-index build failing after others wrote their
+  sidecars (the second new data file is deleted underneath it);
 - right after the file-index sidecars are built;
 - a lost race at the snapshot publish.
 
@@ -31,6 +34,7 @@ INDEXED = {"file-index.bloom-filter.columns": "k"}
 TABLES = {
     "append": ([], INDEXED),
     "pk": (["k"], INDEXED),
+    "two_bucket": (["k"], {**INDEXED, "bucket": "2"}),
     "dynamic_bucket": (["k"], {**INDEXED, "bucket": "-1", "dynamic_bucket_target_row_num": "4"}),
     "compact": (["k"], INDEXED),
 }
@@ -48,7 +52,9 @@ def _rows(cat, **pin):
     return sorted(tuple(r) for r in cat.read_table("d.t", **pin).collect())
 
 
-@pytest.mark.parametrize("point", ["write_error", "finalized", "indexed", "publish_conflict"])
+@pytest.mark.parametrize(
+    "point", ["write_error", "finalized", "build_error", "indexed", "publish_conflict"]
+)
 @pytest.mark.parametrize("kind", list(TABLES))
 def test_failed_commit_leaves_table_as_before(spark, tmp_path, monkeypatch, kind, point):
     spark.catalog.clearCache()
@@ -107,6 +113,18 @@ def test_failed_commit_leaves_table_as_before(spark, tmp_path, monkeypatch, kind
     elif point == "finalized":
         fail_after(WarehouseCatalog, "_finalize_commit")
         expect = RuntimeError
+    elif point == "build_error":
+        orig_finalize = WarehouseCatalog._finalize_commit
+        finalized = []
+
+        def finalize_then_lose_one(self, *a, **k):
+            paths = orig_finalize(self, *a, **k)
+            finalized.append(sorted(paths))
+            os.remove(finalized[-1][min(1, len(paths) - 1)])
+            return paths
+
+        monkeypatch.setattr(WarehouseCatalog, "_finalize_commit", finalize_then_lose_one)
+        expect = Exception
     elif point == "indexed":
         for module in (wh_write, wh_maintenance):
             fail_after(module, "build_file_indexes")
@@ -120,6 +138,8 @@ def test_failed_commit_leaves_table_as_before(spark, tmp_path, monkeypatch, kind
     with pytest.raises(expect):
         commit(bad=point == "write_error")
     monkeypatch.undo()
+    if point == "build_error" and kind == "two_bucket":
+        assert len(finalized[0]) == 2
 
     assert _rows(cat) == before
     for sid, rows in history.items():

@@ -355,9 +355,9 @@ def test_rebuild_after_rename_reads_old_physical_name(cat, spark):
 
 
 def test_bigint_beyond_2_53_with_nulls_stays_exact(cat, spark):
-    """Arrow→pandas coerces nullable int64 to float64; hashing the rounded
-    float would record the WRONG value (a false negative — the one failure
-    bloom must never have). The build reads integers cast to string."""
+    """Hashing a value rounded through float64 would record the WRONG value
+    (a false negative — the one failure bloom must never have); the build
+    hashes the exact ints pyarrow decodes, nulls skipped."""
     cat.create_database("d")
     cat.create_table(
         "d",

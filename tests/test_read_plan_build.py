@@ -101,6 +101,27 @@ def test_read_plan_round_trips_do_not_grow_with_columns(cat, spark, monkeypatch,
     assert counts[40] <= counts[4] + 8, counts
 
 
+def test_split_read_loads_base_and_delta_only(cat, spark, monkeypatch):
+    """A base+delta split read opens two file scans, the compacted base and
+    the delta, and builds no whole-snapshot read it would not use."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    _table(cat, spark, "s", 4, "split")
+    loads = []
+    orig = DataFrameReader.load
+
+    def counting(self, *a, **k):
+        loads.append(a)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(DataFrameReader, "load", counting)
+    df = cat.read_table("d.s")
+    monkeypatch.undo()
+    assert "LeftAnti" in _plan(df)
+    assert len(loads) == 2, loads
+    assert sorted(r.k for r in df.collect()) == list(range(210))
+
+
 SCHEMA_TYPES = [
     "char(5)",
     "CHAR(3)",

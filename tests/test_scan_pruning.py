@@ -322,3 +322,30 @@ def test_split_weights_reference_formula(spark, tmp_path):
     assert ws2 == [0.5, 0.5, 1.0]
     with pytest.raises(ValueError, match="min_weight"):
         cat.split_weights("d.t", min_weight=0.0)
+
+
+@pytest.mark.parametrize("ddl", ["decimal(10,2)", "decimal(18,4)", "decimal(20,2)"])
+def test_decimal_stats_prune(cat, spark, ddl):
+    """Spark stores a decimal of precision ≤ 18 as INT32/INT64 parquet,
+    whose footer min/max pyarrow exposes only raw: the commit applies the
+    scale itself, so such tables commit and prune by range like wider ones."""
+    from decimal import Decimal
+
+    cat.create_database("d", ignore_if_exists=True)
+    cat.create_table("d", "dec", [("k", "bigint"), ("p", ddl)])
+    for vals in (["-3.25", "1.50", "-0.01"], ["100.00", "250.75"]):
+        rows = [(i, Decimal(v)) for i, v in enumerate(vals)]
+        cat.insert_into("d", "dec", spark.createDataFrame(rows, f"k bigint, p {ddl}").coalesce(1))
+    bounds = sorted(
+        (Decimal(e["stats"]["1"]["min"]), Decimal(e["stats"]["1"]["max"]))
+        for e in cat.scan_plan("d.dec")
+    )
+    assert bounds == [(Decimal("-3.25"), Decimal("1.50")), (Decimal("100.00"), Decimal("250.75"))]
+    neg = [ColumnDomain("p", ranges=[Range(low=Decimal("-5"), high=Decimal("-1"))])]
+    assert len(cat.scan_plan("d.dec", predicate=neg)) == 1
+    assert [r.p for r in cat.read_table("d.dec", predicate=neg).collect()] == [Decimal("-3.25")]
+    hit = [ColumnDomain("p", op="=", value=Decimal("250.75"))]
+    assert len(cat.scan_plan("d.dec", predicate=hit)) == 1
+    assert cat.read_table("d.dec", predicate=hit).count() == 1
+    assert cat.scan_plan("d.dec", predicate=[ColumnDomain("p", op="<", value=Decimal("-4"))]) == []
+    assert cat.read_table("d.dec").count() == 5

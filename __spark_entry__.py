@@ -72,6 +72,13 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # lake reads whose aggregation-engine and sequence-group merges are
+    # SQL text, every aggregate from one template per function
+    "lake_aggregation_merge_engine",
+    "lake_agg_collect_merge_map",
+    "lake_agg_nested_update",
+    "lake_agg_ignore_retract",
+    "lake_partial_update_sequence_group",
     # queries on file-indexed tables: sidecars built by one job of one
     # stage, a task per new data file
     "lake_bloom_index_point_lookup",
@@ -90,8 +97,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_first_row_merge",
     "lake_partial_update_merge",
     "lake_partial_update_remove_on_delete",
-    "lake_partial_update_sequence_group",
-    "lake_aggregation_merge_engine",
     "lake_sequence_field_merge",
     "lake_schema_evolution",
     "lake_char_padded_read",
@@ -168,9 +173,6 @@ _REPROOF: tuple[str, ...] = (
     # riskiest first
     "lake_time_travel_v1",
     "lake_tag_time_travel",
-    "lake_agg_collect_merge_map",
-    "lake_agg_nested_update",
-    "lake_agg_ignore_retract",
     "lake_rowkind_field_cdc",
     "lake_ignore_delete",
     "lake_incremental_read",

@@ -644,24 +644,33 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
     def _pruned_files(
         self, tdir: str, schema: TableSchema, snap: Snapshot, predicate: list | None
     ) -> list[dict]:
-        """The predicate-pruned manifest entries — the shared prune behind
-        ``scan_plan`` and ``metadata_row_count`` (already-loaded metadata in,
-        so the metadata fast paths don't re-read snapshot/schema JSON)."""
+        """The predicate-pruned manifest entries — the one prune behind
+        ``read_table``, ``scan_plan`` and ``metadata_row_count``
+        (already-loaded metadata in, so the metadata fast paths don't re-read
+        snapshot/schema JSON): min/max stats, bucket, then file index."""
         files = snap.files
         if predicate:
-            # same CHAR(n) pad-insensitive normalization as read_table — a
-            # padded literal must not prune files holding the rtrimmed form
-            char_cols = {f.name for f in schema.fields if char_length(f.type) is not None}
-            if char_cols:
-                from incubator_paimon_trino_spark.functions.predicates import (
-                    normalize_char_domains,
-                )
-
-                predicate = normalize_char_domains(predicate, char_cols)
+            predicate = self._char_normalized(schema, predicate)
             files = prune_files(files, predicate, schema, lambda sid: self._schema(tdir, sid))
             files = self._bucket_prune(schema, predicate, files)
+            # file-index probe (bloom/bitmap sidecars) — the rung after
+            # min/max and bucket pruning: equality/IN on indexed columns
+            # drops files whose sidecar proves the value(s) absent
             files = prune_files_by_index(self.spark, tdir, files, predicate, schema)
         return files
+
+    @staticmethod
+    def _char_normalized(schema: TableSchema, predicate: list | None) -> list | None:
+        """``predicate`` with its CHAR(n) literals rtrimmed: CHAR comparison
+        ignores trailing blanks and the stored form is rtrimmed (see
+        insert_into), so a padded literal must neither prune the files
+        holding the rtrimmed form nor miss their rows when re-applied."""
+        char_cols = {f.name for f in schema.fields if char_length(f.type) is not None}
+        if not predicate or not char_cols:
+            return predicate
+        from incubator_paimon_trino_spark.functions.predicates import normalize_char_domains
+
+        return normalize_char_domains(predicate, char_cols)
 
     def scan_pruned_by_keys(
         self,
@@ -778,26 +787,10 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 db, table, fb, schema, predicate, limit, pad_char
             )
         snap = self._pin_snapshot(tdir, version_as_of, timestamp_as_of, tag)
-        if predicate:
-            # CHAR(n) predicate literals are pad-insensitive (stored form is
-            # rtrimmed — see insert_into)
-            char_cols = {f.name for f in schema.fields if char_length(f.type) is not None}
-            if char_cols:
-                from incubator_paimon_trino_spark.functions.predicates import (
-                    normalize_char_domains,
-                )
-
-                predicate = normalize_char_domains(predicate, char_cols)
+        # the re-applied filter below takes the normalized predicate too
+        predicate = self._char_normalized(schema, predicate)
         if snap is not None and predicate:
-            pruned = prune_files(
-                snap.files, predicate, schema, lambda sid: self._schema(tdir, sid)
-            )
-            pruned = self._bucket_prune(schema, predicate, pruned)
-            # file-index probe (bloom/bitmap sidecars) — the rung after
-            # min/max and bucket pruning: equality/IN on indexed columns
-            # drops files whose sidecar proves the value(s) absent
-            pruned = prune_files_by_index(self.spark, tdir, pruned, predicate, schema)
-            snap = dataclasses.replace(snap, files=pruned)
+            snap = dataclasses.replace(snap, files=self._pruned_files(tdir, schema, snap, predicate))
         if snap is not None and limit is not None and _limit_pushable(schema, predicate, snap.files):
             snap = dataclasses.replace(snap, files=_limit_file_prefix(snap.files, limit))
 

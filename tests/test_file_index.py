@@ -279,7 +279,7 @@ def test_malformed_sidecar_keeps_file(cat, spark):
 
 def test_reserved_internal_names_rejected(cat, spark):
     cat.create_database("d")
-    for bad in ("_zorder_key", "_fidx_file", "_bucket"):
+    for bad in ("_zorder_key", "_bucket"):
         with pytest.raises(ValueError, match="reserved"):
             cat.create_table("d", "t_" + bad.strip("_"), [("a", "bigint"), (bad, "string")])
 

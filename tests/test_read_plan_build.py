@@ -11,6 +11,7 @@ a wide table, and pin the one-parse schema to the per-field parser.
 from __future__ import annotations
 
 import sys
+import threading
 from pathlib import Path
 
 import py4j.clientserver
@@ -40,33 +41,51 @@ def cat(spark, tmp_path):
 
 
 class _RoundTrips:
+    """Counts the py4j round trips sent from the thread that created it, so
+    calls other Python threads make meanwhile do not count."""
+
     def __init__(self, monkeypatch):
         self.n = 0
+        me = threading.get_ident()
         orig = py4j.clientserver.ClientServerConnection.send_command
 
         def counting(conn, command):
-            self.n += 1
+            if threading.get_ident() == me:
+                self.n += 1
             return orig(conn, command)
 
         monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
 
 
 def _table(cat, spark, name, width, kind):
-    types = [TYPES[i % len(TYPES)] for i in range(width - 1)]
-    cat.create_table(
-        "d",
-        name,
-        [("k", "bigint")] + [(f"c{i}", t) for i, t in enumerate(types)],
-        primary_key=["k"],
-        options={"deletion-vectors.enabled": "true"} if kind == "dv" else {},
-    )
-    sel = ["id AS k"] + [
+    """A ``width``-column PK table read through ``kind``'s merge: ``full``
+    (deduplicate), ``split`` (compacted base plus delta), ``dv`` (deletion
+    vectors), ``aggregation`` (sum and last_value by type) or
+    ``sequence_groups`` (partial-update, one group holding every other value
+    column, replayed because one commit holds -D rows)."""
+    cols = [("k", "bigint")]
+    options = {
+        "dv": {"deletion-vectors.enabled": "true"},
+        "aggregation": {"merge_engine": "aggregation"},
+    }.get(kind, {})
+    if kind == "sequence_groups":
+        cols.append(("g", "bigint"))
+        options = {
+            "merge_engine": "partial-update",
+            "fields.g.sequence-group": ",".join(f"c{i}" for i in range(1, width - 2, 2)),
+        }
+    types = [TYPES[i % len(TYPES)] for i in range(width - len(cols))]
+    cols += [(f"c{i}", t) for i, t in enumerate(types)]
+    cat.create_table("d", name, cols, primary_key=["k"], options=options)
+    sel = ["id AS k"] + (["id % 7 AS g"] if kind == "sequence_groups" else []) + [
         f"{EXPR.get(t, f'cast(id as {t})')} AS c{i}" for i, t in enumerate(types)
     ]
     batch = lambda lo, hi: spark.range(lo, hi).selectExpr(*sel)  # noqa: E731
     cat.insert_into("d", name, batch(0, 200))
     if kind == "split":
         cat.compact("d", name)
+    if kind == "sequence_groups":
+        cat.insert_into("d", name, batch(100, 110), row_kind="D")
     cat.insert_into("d", name, batch(150, 210))
 
 
@@ -74,11 +93,11 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize("kind", ["full", "split", "dv"])
+@pytest.mark.parametrize("kind", ["full", "split", "dv", "aggregation", "sequence_groups"])
 def test_read_plan_round_trips_do_not_grow_with_columns(cat, spark, monkeypatch, kind):
-    """Full-merge PK, base+delta PK and deletion-vector reads with marks:
-    the 40-column read's plan costs what the 4-column read's does, within a
-    small constant."""
+    """Full-merge PK, base+delta PK, deletion-vector reads with marks, and
+    the aggregation and sequence-group merges: the 40-column read's plan
+    costs what the 4-column read's does, within a small constant."""
     counts = {}
     for width in (4, 40):
         name = f"{kind}{width}"
@@ -89,7 +108,7 @@ def test_read_plan_round_trips_do_not_grow_with_columns(cat, spark, monkeypatch,
         counts[width] = rt.n
         monkeypatch.undo()
         plan = _plan(df)
-        if kind == "full":
+        if kind in ("full", "aggregation", "sequence_groups"):
             assert "Aggregate" in plan and "Join" not in plan, plan
         elif kind == "split":
             assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
@@ -99,6 +118,36 @@ def test_read_plan_round_trips_do_not_grow_with_columns(cat, spark, monkeypatch,
         assert sorted(r.k for r in rows) == list(range(210))
         assert all(len(r.c0) == 4 for r in rows)  # CHAR(4) reads padded
     assert counts[40] <= counts[4] + 8, counts
+
+
+def test_aggregation_read_plans_partial_aggregate(cat, spark):
+    """An aggregation-engine read of a sum/max/last_value table pre-merges
+    map-side: a partial aggregate of every function below the one
+    exchange."""
+    cat.create_table(
+        "d",
+        "agg",
+        [("k", "bigint"), ("s", "bigint"), ("m", "bigint"), ("l", "string")],
+        primary_key=["k"],
+        options={
+            "merge_engine": "aggregation",
+            "fields.m.aggregate-function": "max",
+            "fields.l.aggregate-function": "last_value",
+        },
+    )
+    batch = lambda lo, hi: spark.range(lo, hi).selectExpr(  # noqa: E731
+        "id % 50 AS k", "id AS s", "id AS m", "cast(id AS string) AS l"
+    )
+    cat.insert_into("d", "agg", batch(0, 100))
+    cat.insert_into("d", "agg", batch(100, 150))
+    df = cat.read_table("d.agg")
+    plan = _plan(df)
+    assert plan.count("Exchange") == 1, plan
+    below = plan[plan.index("Exchange"):]
+    for fn in ("partial_sum(", "partial_max(", "partial_max_by("):
+        assert fn in below, plan
+    got = {r.k: (r.s, r.m, r.l) for r in df.collect()}
+    assert got[7] == (7 + 57 + 107, 107, "107") and len(got) == 50
 
 
 def test_split_read_loads_base_and_delta_only(cat, spark, monkeypatch):

@@ -229,7 +229,7 @@ def test_rename_add_refuse_reserved_names(cat, spark):
     write-clustering scaffolding."""
     cat.create_database("d")
     cat.create_table("d", "t", [("k", "bigint"), ("v", "string")])
-    for bad in ("_zorder_key", "_fidx_file", "_seq", "_row_kind", "_bucket"):
+    for bad in ("_zorder_key", "_seq", "_row_kind", "_bucket"):
         with pytest.raises(ValueError, match="reserved"):
             cat.rename_column("d", "t", "v", bad)
         with pytest.raises(ValueError, match="reserved"):

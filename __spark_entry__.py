@@ -72,6 +72,11 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # lake reads through the one Python data-file reader: positional ORC,
+    # the Avro fallback and the manifest changelog stream
+    "lake_orc_scan",
+    "lake_avro_roundtrip",
+    "lake_manifest_changelog_stream",
     # lake reads whose aggregation-engine and sequence-group merges are
     # SQL text, every aggregate from one template per function
     "lake_aggregation_merge_engine",
@@ -110,12 +115,10 @@ _REPROOF: tuple[str, ...] = (
     "lake_dynamic_bucket",
     "lake_bucket_point_lookup",
     "lake_read_optimized_table",
-    "lake_avro_roundtrip",
     "lake_dml_roundtrip",
     # queries that commit to and read deletion-vector tables: the DV commit
     # path (summary aggregate, bounded hits collect, positional DELETE) and
     # the DV read path (marks dropped by the broadcast anti-join only)
-    "lake_manifest_changelog_stream",
     "lake_metadata_count",
     # trained-plan memo moved to sources.registry.session_plan (per session)
     "embedding_kmeans_assign",
@@ -179,7 +182,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_incremental_by_timestamp",
     "lake_consumer_incremental_dedup",
     "lake_consumer_resume",
-    "lake_orc_scan",
     "lake_like_prefix_pruned_scan",
     "lake_limit_pushdown_partition_scoped",
     "lake_partition_pruned_scan",

@@ -1064,8 +1064,8 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         machinery joins on: ``__dv_file``, the data file's basename (the key
         the DV index stores marks under), and ``__dv_pos``
         (``_metadata.row_index`` — the row's ordinal within its file,
-        Spark's native row-position metadata; no shuffle, no window). The
-        ORC and Avro positional readers synthesize both from their in-order
+        Spark's native row-position metadata; no shuffle, no window). For ORC
+        and Avro, the Python file reader synthesizes both from its in-order
         decode; every reader's path reduces to its basename once, over the
         union.
         """
@@ -1075,16 +1075,17 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         # needs basePath to be each file's OWN data root (partition dir
         # values are URL-quoted at write time, so "/data/" cannot appear
         # inside a partition segment — rsplit is unambiguous)
-        groups: dict[tuple[int, str, str], list[str]] = {}
+        groups: dict[tuple[int, str, str], list[dict]] = {}
         for f in snap.files:
             full = os.path.normpath(os.path.join(tdir, f["path"]))
             root = full.rsplit(f"{os.sep}data{os.sep}", 1)[0] + f"{os.sep}data"
             key = (f["schema_id"], f.get("format", "parquet"), root)
-            groups.setdefault(key, []).append(full)
+            groups.setdefault(key, []).append({**f, "path": full})
         parts: list[DataFrame] = []
         is_pk = bool(schema.primary_key)
-        for (sid, fmt, root), paths in sorted(groups.items()):
+        for (sid, fmt, root), entries in sorted(groups.items()):
             old = self._schema(tdir, sid)
+            paths = [e["path"] for e in entries]
             # Partition columns come from Catalyst's directory inference: the
             # data/<k=v>/c<commit>-<file> layout keeps k=v dirs LAST for every
             # commit, so a plan mixing commits is still one consistent scan
@@ -1093,19 +1094,13 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # domain behavior (TrinoMetadataBase.java:363-376) for free.
             # .format().load(list) — DataFrameReader.orc() has no varargs
             # (its 2nd positional is mergeSchema), unlike .parquet().
-            synth_pos = False
-            if fmt == "avro" and with_pos:
-                # positional avro read: only the Python OCF source can
-                # synthesize per-row ordinals (its ordered block decode IS
-                # the running count); the JVM spark-avro reader, even when
-                # present, has no _metadata.row_index
-                df = self._read_avro_fallback(paths, old, is_pk, with_pos=True)
-                synth_pos = True
-            elif fmt == "orc" and with_pos:
-                # positional ORC read: pyarrow.orc per file with synthesized
-                # ordinals; the native ORC reader has no _metadata.row_index
-                df = self._read_orc_positional(paths, old, is_pk)
-                synth_pos = True
+            synth_pos = fmt in ("avro", "orc") and with_pos
+            if synth_pos:
+                # positional ORC/Avro read: only the Python file reader can
+                # synthesize per-row ordinals (its in-order decode IS the
+                # running count); the JVM ORC and spark-avro readers have
+                # no _metadata.row_index
+                df = self._read_python_files(entries, old, is_pk, with_pos=True)
             else:
                 try:
                     df = (
@@ -1117,7 +1112,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 except Exception as ex:
                     if fmt != "avro" or "Failed to find data source" not in str(ex):
                         raise
-                    df = self._read_avro_fallback(paths, old, is_pk)
+                    df = self._read_python_files(entries, old, is_pk, with_pos=False)
             # the provenance columns, unless the reader synthesized them
             pos = (
                 [(_DV_FILE, "_metadata.file_path"), (_DV_POS, "_metadata.row_index")]

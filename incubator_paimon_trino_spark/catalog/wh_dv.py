@@ -519,38 +519,31 @@ class DeletionVectorMixin:
                 )
         rewrite = hits if base is None else hits.unionByName(base)
         # Bound each shard DOCUMENT (it aggregates into one JSON string, so
-        # one buffer): buckets whose rewrite exceeds max-marks-per-shard
-        # split into sub-shards by data-file hash — the manifest lists a
-        # LIST of files per bucket and every reader unions marks across
-        # them, so sub-splitting is invisible downstream. Per-file
-        # granularity floor: one data file's marks stay in one document,
-        # bounded by that file's row count. The per-bucket sizing pass is
-        # K rows on the driver.
+        # one buffer): a bucket whose rewrite exceeds max-marks-per-shard
+        # splits into sub-shards — the manifest lists a LIST of files per
+        # bucket and every reader unions marks across them, so
+        # sub-splitting is invisible downstream. One collect of marks per
+        # (bucket, data file), at most one row per marked file, sizes them
+        # on the driver (``_sub_shards``).
         from incubator_paimon_trino_spark.catalog.dv_index import max_marks_per_shard
 
         max_marks = max_marks_per_shard(schema.options)
         rewrite = rewrite.withColumn("_b", bucket).persist()
         try:
-            sizes = {
-                r["_b"]: r["n"]
-                for r in rewrite.groupBy("_b").agg(F.count("*").alias("n")).collect()
-            }
-            subs_of = {b: -(-n // max_marks) for b, n in sizes.items()}
-            over = {b: s for b, s in subs_of.items() if s > 1}
-            if over:
-                # flat map lookup, not a nested WHEN per oversized bucket
-                # (a wide bulk delete could otherwise build a K-deep CASE)
-                sub_count = F.coalesce(
+            sub_of = _sub_shards(
+                rewrite.groupBy("_b", _DV_FILE).agg(F.count("*").alias("n")).collect(),
+                max_marks,
+            )
+            if sub_of:
+                # flat map lookup, not a nested WHEN per file
+                sub_expr = F.coalesce(
                     F.element_at(
                         F.create_map(
-                            *[x for b, s in sorted(over.items()) for x in (F.lit(b), F.lit(s))]
+                            *[x for f, s in sorted(sub_of.items()) for x in (F.lit(f), F.lit(s))]
                         ),
-                        F.col("_b"),
+                        F.col(_DV_FILE),
                     ),
-                    F.lit(1),
-                )
-                sub_expr = F.pmod(
-                    F.crc32(F.encode(F.col(_DV_FILE), "UTF-8")), sub_count
+                    F.lit(0),
                 )
             else:
                 sub_expr = F.lit(0)
@@ -607,3 +600,25 @@ class DeletionVectorMixin:
         )
         return manifest, n_hits, total
 
+
+def _sub_shards(counts: list, max_marks: int) -> dict[str, int]:
+    """{data file: sub-shard} for the files of every bucket holding more
+    than ``max_marks`` marks, from rows of (bucket, data file, marks).
+    Each such bucket's files fill sub-shards next-fit in file-name order:
+    a new sub-shard starts when the next file would pass the cap. One
+    file's marks stay in one document, so a file over the cap gets a
+    sub-shard alone. Files of other buckets stay in sub-shard 0."""
+    by_bucket: dict[int, list[tuple[str, int]]] = {}
+    for b, f, n in counts:
+        by_bucket.setdefault(b, []).append((f, n))
+    sub_of: dict[str, int] = {}
+    for files in by_bucket.values():
+        if sum(n for _, n in files) <= max_marks:
+            continue
+        sub, size = 0, 0
+        for f, n in sorted(files):
+            if size and size + n > max_marks:
+                sub, size = sub + 1, 0
+            sub_of[f] = sub
+            size += n
+    return sub_of

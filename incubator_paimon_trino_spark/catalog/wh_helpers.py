@@ -50,6 +50,7 @@ from incubator_paimon_trino_spark.catalog.scan import (
     partition_values,
     prune_files,
 )
+from incubator_paimon_trino_spark.formats.file_reader import POS_COL, POS_FILE_COL
 from incubator_paimon_trino_spark.functions.sql import project, quote_ident
 from incubator_paimon_trino_spark.functions.types import (
     castable_ddl,
@@ -76,9 +77,9 @@ _SYSTEM_SUFFIXES = (
 
 #: Deletion-vector provenance columns, file basename and row position (never
 #: user-visible: appended by ``_read_files(with_pos=True)`` and dropped by
-#: ``_dv_apply_distributed``).
-_DV_FILE = "__dv_file"
-_DV_POS = "__dv_pos"
+#: ``_dv_apply_distributed``). The Python file reader fills the same two.
+_DV_FILE = POS_FILE_COL
+_DV_POS = POS_COL
 
 
 def explode_dv_index_text(df: DataFrame, ver_col: Column | None = None) -> DataFrame:
@@ -677,11 +678,10 @@ def _validate_table_options(
         if options.get("file_format", "parquet").strip().lower() not in (
             "parquet", "avro", "orc",
         ):
-            # positional reads, per format (r11 — DV works on all three):
-            # parquet rides Spark's native _metadata.row_index; avro
-            # synthesizes exact ordinals from the OCF block decode
-            # (formats/avro_batch.py with_pos); orc reads in order through
-            # pyarrow.orc (formats/orc_pos.py)
+            # positional reads, per format: parquet rides Spark's native
+            # _metadata.row_index; the Python file reader
+            # (formats/file_reader.py) counts ordinals over its in-order
+            # decode of ORC (pyarrow.orc) and Avro (the OCF codec)
             raise ValueError(
                 "deletion-vectors.enabled requires file_format PARQUET, "
                 "AVRO or ORC (positional reads exist for exactly those)"

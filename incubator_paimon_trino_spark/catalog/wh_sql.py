@@ -53,7 +53,6 @@ from incubator_paimon_trino_spark.catalog.scan import (
 from incubator_paimon_trino_spark.functions.types import (
     castable_ddl,
     char_length,
-    paimon_to_spark,
     spark_to_paimon,
     timestamp_precision,
 )
@@ -620,7 +619,7 @@ class SqlMixin:
             df = self.sql(m.group("rest"))
             db, tbl = m.group("db"), m.group("tbl")
             schema = self._latest_schema(self._table_dir(db, tbl))
-            expected = [(f.name, f.type) for f in schema.fields]
+            expected = [(f.name, f.dataType) for f in schema.spark_schema()]
             names = [n for n, _ in expected]
             listed = [c.strip() for c in (m.group("cols") or "").split(",") if c.strip()]
             # the arity/rebind logic below sees only data columns: a rider
@@ -645,7 +644,7 @@ class SqlMixin:
                 df = df.toDF(*listed, *([KIND_COL] if KIND_COL in df.columns else []))
                 for n, tp in expected:
                     if n not in listed:
-                        df = df.withColumn(n, F.lit(None).cast(paimon_to_spark(tp)))
+                        df = df.withColumn(n, F.lit(None).cast(tp))
             elif set(data_cols) != set(names):
                 # no column list and names don't line up (e.g. a VALUES tuple
                 # with synthetic col1/col2 names): SQL INSERT is positional
@@ -659,7 +658,7 @@ class SqlMixin:
             # integer literal lands in a BIGINT column, etc.); an explicit
             # _row_kind changelog column rides along untouched
             df = df.select(
-                *[F.col(n).cast(paimon_to_spark(t)).alias(n) for n, t in expected],
+                *[F.col(n).cast(t).alias(n) for n, t in expected],
                 *([KIND_COL] if KIND_COL in df.columns else []),
             )
             return self.insert_into(
@@ -678,15 +677,8 @@ class SqlMixin:
             # PK and append-only tables (DELETE is PK-only), and history
             # stays time-travelable — the pre-truncate snapshots keep their
             # file lists until expiration.
-            from pyspark.sql import types as _T
-
             schema = self._latest_schema(self._table_dir(m.group("db"), m.group("tbl")))
-            empty = self.spark.createDataFrame(
-                [],
-                _T.StructType(
-                    [_T.StructField(f.name, paimon_to_spark(f.type)) for f in schema.fields]
-                ),
-            )
+            empty = self.spark.createDataFrame([], schema.spark_schema())
             return self.insert_into(m.group("db"), m.group("tbl"), empty, overwrite=True)
         m = self._UPDATE_RE.match(query)
         if m:

@@ -39,6 +39,7 @@ from incubator_paimon_trino_spark.catalog.metadata import (
     Snapshot,
     TableSchema,
     _parse_type as _meta_parse_type,
+    _storage_ddl,
     load_snapshots,
     read_json,
     write_json_atomic,
@@ -329,79 +330,54 @@ class WriteMixin:
             shutil.rmtree(d, ignore_errors=True)
         return counts
 
-    def _read_avro_fallback(
-        self, paths: list[str], old: TableSchema, is_pk: bool, with_pos: bool = False
+    def _read_python_files(
+        self, entries: list[dict], old: TableSchema, is_pk: bool, with_pos: bool
     ) -> DataFrame:
-        """Batch-read avro data files without the spark-avro module, via the
-        ``paimon_avro`` Python DataSource (``formats/avro_batch``). Output
-        columns are the WRITING schema's names/storage types —
-        ``_read_files`` maps them by field id like any format. ``with_pos``
-        makes the source synthesize the DV provenance columns (file path +
-        in-file row ordinal) from its ordered block decode — the avro twin
-        of parquet's ``_metadata.row_index``."""
-        from incubator_paimon_trino_spark.formats.avro_batch import PaimonAvroBatchSource
-
-        return self._read_python_source(PaimonAvroBatchSource, paths, old, is_pk, with_pos)
-
-    def _read_orc_positional(self, paths: list[str], old: TableSchema, is_pk: bool) -> DataFrame:
-        """Positional ORC read via the ``paimon_orc_pos`` Python DataSource
-        (``formats/orc_pos.py``): pyarrow.orc per file with ``__dv_file``/
-        ``__dv_pos`` synthesized from the in-order read (Spark's native ORC
-        reader has no row_index). Plain ORC scans keep the native reader."""
-        from incubator_paimon_trino_spark.formats.orc_pos import PaimonOrcPositionalSource
-
-        return self._read_python_source(PaimonOrcPositionalSource, paths, old, is_pk, True)
-
-    def _read_python_source(
-        self, source, paths: list[str], old: TableSchema, is_pk: bool, with_pos: bool
-    ) -> DataFrame:
-        """Read data files through one of the package's Python DataSources:
-        one decode task per ~64 MiB of files (one Python task per tiny file
-        would make startup dominate many-small-file tables), hive partition
-        values injected from the path (what ``basePath`` directory inference
-        does for native readers)."""
+        """Read data files of one schema and format through the Python
+        file reader (``formats/file_reader``, the ``paimon_files``
+        source). ``entries`` are manifest entries whose ``path`` is the
+        full file path. Output columns are the WRITING schema's names and
+        storage types, then the partition columns (hive path values, what
+        ``basePath`` directory inference does for native readers), then,
+        with ``with_pos``, the file path and in-file row ordinal;
+        ``_read_files`` maps them by field id like any format. Files pack
+        into one read task per ~64 MiB of ``size_bytes`` (``_pack_splits``):
+        one Python task per tiny file would make startup dominate
+        many-small-file tables."""
         import json as _json
 
-        from incubator_paimon_trino_spark.streaming.manifest_source import (
-            _storage_ddl,
+        from incubator_paimon_trino_spark.formats.file_reader import (
+            PaimonFileSource,
+            _pack_splits,
         )
 
-        self.spark.dataSource.register(source)
+        self.spark.dataSource.register(PaimonFileSource)
         part = set(old.partition_keys)
-        data_fields = [
-            (f.name, _storage_ddl(f.type)) for f in old.fields if f.name not in part
-        ]
+        fields = [(f.name, _storage_ddl(f.type)) for f in old.fields if f.name not in part]
         if is_pk:
-            data_fields += [(SEQ_COL, "bigint"), (KIND_COL, "string")]
-        part_fields = [
-            (f.name, _storage_ddl(f.type)) for f in old.fields if f.name in part
+            fields += [(SEQ_COL, "bigint"), (KIND_COL, "string")]
+        part_fields = [(f.name, _storage_ddl(f.type)) for f in old.fields if f.name in part]
+        fmt = entries[0].get("format", "parquet")
+        tasks = [
+            [
+                {
+                    "path": e["path"],
+                    "parts": [
+                        (k, ddl, partition_values(e["path"]).get(k)) for k, ddl in part_fields
+                    ],
+                }
+                for e in pack
+            ]
+            for _key, pack in _pack_splits(entries, 64 * 1024 * 1024)
         ]
-        target = 64 * 1024 * 1024
-        tasks: list[list[dict]] = []
-        size = 0
-        for p in sorted(paths):
-            spec = {
-                "path": p,
-                "parts": [
-                    (k, ddl, partition_values(p).get(k)) for k, ddl in part_fields
-                ],
-            }
-            sz = os.path.getsize(p) if os.path.exists(p) else target
-            if not tasks or size + sz > target:
-                tasks.append([spec])
-                size = sz
-            else:
-                tasks[-1].append(spec)
-                size += sz
-        out_fields = data_fields + part_fields
+        out_fields = fields + part_fields
         if with_pos:
-            out_fields = out_fields + [("__dv_file", "string"), ("__dv_pos", "bigint")]
-        ddl = ", ".join(f"`{n}` {t}" for n, t in out_fields)
+            out_fields = out_fields + [(_DV_FILE, "string"), (_DV_POS, "bigint")]
         return (
-            self.spark.read.format(source.name())
-            .option("schema_ddl", ddl)
-            .option("data_fields", _json.dumps(data_fields))
-            .option("part_fields", _json.dumps(part_fields))
+            self.spark.read.format(PaimonFileSource.name())
+            .option("schema_ddl", ", ".join(f"`{n}` {t}" for n, t in out_fields))
+            .option("format", fmt)
+            .option("fields", _json.dumps(fields))
             .option("files", _json.dumps(tasks))
             .option("with_pos", "true" if with_pos else "false")
             .load()

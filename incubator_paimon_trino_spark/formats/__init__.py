@@ -1,1 +1,1 @@
-"""File-format fallbacks for environments missing optional Spark modules."""
+"""File formats read and written in Python workers: the Avro codec and the one Python data-file reader."""

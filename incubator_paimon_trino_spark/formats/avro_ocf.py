@@ -9,11 +9,9 @@ container format (https://avro.apache.org/docs/current/specification/) for
 exactly the type surface the catalog's DDL layer admits, so:
 
 - ``insert_into`` can still WRITE avro tables (executor-side, one OCF per
-  task — ``warehouse._write_avro_fallback``),
-- the batch read path can still READ them (``sources of warehouse`` via the
-  ``paimon_avro`` Python DataSource below),
-- the manifest streaming source can stream them (``manifest_source``'s
-  executor read — the r8 'What's missing #2' closure).
+  task — ``wh_write._write_avro_fallback``),
+- the Python file reader (``formats/file_reader``) can still READ them, for
+  batch reads and for the manifest changelog stream.
 
 Files written here are standard Avro: any stock reader (spark-avro,
 fastavro, avro-tools) consumes them, and this reader consumes spark-avro's
@@ -24,9 +22,9 @@ keys as arrays of key/value records). Production note: when the JVM module
 IS present it is preferred automatically — this path exists for
 correctness, not speed (per-row Python encode/decode).
 
-Deletion vectors work on avro too (r11): the batch source synthesizes
-per-row ordinals from the ordered OCF block decode (``avro_batch.py``
-``with_pos``) — the fallback twin of parquet's ``_metadata.row_index``.
+Deletion vectors work on avro too: the file reader counts per-row
+ordinals over the ordered OCF block decode, the fallback twin of parquet's
+``_metadata.row_index``.
 """
 
 from __future__ import annotations
@@ -38,6 +36,8 @@ import os
 import struct
 import zlib
 from typing import Iterator
+
+from incubator_paimon_trino_spark.functions.types import split_top_commas
 
 MAGIC = b"Obj\x01"
 # Flush encoded blocks at ~2 KiB. Small blocks cost ~1.8% size overhead
@@ -51,7 +51,7 @@ _BLOCK_TARGET = 1 << 11
 # ------------------------------------------------------- vectorized (numpy)
 # FLAT schemas (top-level record, every field ["null", primitive/logical])
 # encode and decode through numpy batch operations instead of the per-value
-# closures below — r10, the "avro codec is row-at-a-time Python" watch item.
+# closures below.
 # Shapes:
 #   encode: Arrow columns → per-field byte SEGMENTS (union prefix, varint,
 #           payload), each a (flat uint8 array, per-row lengths) pair,
@@ -69,10 +69,9 @@ def _flat_plan(schema) -> list[tuple] | None:
     """[(name, kind, extra)] for a vectorizable flat record, else None.
 
     kind ∈ varint (int/long + date/time/timestamp logicals), bool, f4, f8,
-    str, bin, dec(precision ≤ 18), arr (ARRAY of nullable int/long items —
-    r11, VERDICT r10 item 6: the item stream is just more varints, so block
-    counts, item union bytes and item values all ride the same bulk
-    machinery). Anything else → None (per-row fallback).
+    str, bin, dec(precision ≤ 18), arr (ARRAY of nullable int/long items:
+    the item stream is just more varints, so block counts, item union bytes
+    and item values all ride the same bulk machinery). Anything else → None (per-row fallback).
     """
     if not isinstance(schema, dict) or schema.get("type") != "record":
         return None
@@ -465,15 +464,6 @@ class _Reader:
 
 
 # ------------------------------------------------------------ DDL → schema
-def _split_commas(s: str) -> list[str]:
-    # the one shared depth-tracking DDL splitter (functions/types.py — a
-    # neutral home: this format module must not depend on the streaming
-    # DataSource module)
-    from incubator_paimon_trino_spark.functions.types import split_top_commas
-
-    return split_top_commas(s)
-
-
 def _avro_type(ddl: str, name_hint: str) -> object:
     """Spark simpleString DDL → Avro schema (spark-avro's mapping)."""
     s = ddl.strip().lower()
@@ -514,7 +504,7 @@ def _avro_type(ddl: str, name_hint: str) -> object:
             "items": ["null", _avro_type(ddl.strip()[6:-1], name_hint + "_item")],
         }
     if s.startswith("map<") and s.endswith(">"):
-        k, v = _split_commas(ddl.strip()[4:-1])
+        k, v = split_top_commas(ddl.strip()[4:-1])
         vt = ["null", _avro_type(v, name_hint + "_value")]
         if k.strip().lower() in ("string",) or k.strip().lower().startswith(
             ("char", "varchar")
@@ -534,7 +524,7 @@ def _avro_type(ddl: str, name_hint: str) -> object:
         }
     if s.startswith("struct<") and s.endswith(">"):
         fields = []
-        for part in _split_commas(ddl.strip()[7:-1]):
+        for part in split_top_commas(ddl.strip()[7:-1]):
             fname, _, ft = part.partition(":")
             fname = fname.strip().strip("`")
             fields.append(
@@ -1416,7 +1406,7 @@ def read_ocf_arrow(path: str, out_fields: list[tuple[str, str]]):
     keep the per-row closure decode."""
     import pyarrow as pa
 
-    from incubator_paimon_trino_spark.streaming.manifest_source import _arrow_type
+    from incubator_paimon_trino_spark.formats.file_reader import _arrow_type
 
     with open(path, "rb") as fh:
         buf = fh.read()

@@ -50,7 +50,8 @@ from pyspark.sql import types as T
 def split_top_commas(s: str) -> list[str]:
     """Split a DDL fragment on TOP-LEVEL commas only (depth-tracked through
     ``<>``/``()``), e.g. ``"a:int, b:map<string,int>"`` → two parts. The one
-    shared splitter behind the arrow-type and avro-schema DDL parsers."""
+    splitter behind every nested-type parser: Paimon type names here, the
+    Arrow and Avro mappings in ``formats/``."""
     out, depth, cur = [], 0, []
     for ch in s:
         if ch in "<(":
@@ -121,12 +122,12 @@ def paimon_to_spark(type_str: str) -> T.DataType:
         return T.MapType(paimon_to_spark(m.group(1)), T.IntegerType(), False)
     m = re.fullmatch(r"MAP\s*<(.*)>", s, re.IGNORECASE | re.DOTALL)
     if m:
-        k, v = _split_top(m.group(1))
+        k, v = split_top_commas(m.group(1))
         return T.MapType(paimon_to_spark(k), paimon_to_spark(v))
     m = re.fullmatch(r"ROW\s*[<(](.*)[>)]", s, re.IGNORECASE | re.DOTALL)
     if m:
         fields = []
-        for part in _split_top(m.group(1), many=True):
+        for part in filter(str.strip, split_top_commas(m.group(1))):
             name, _, ftype = part.strip().partition(" ")
             fields.append(T.StructField(name, paimon_to_spark(ftype)))
         return T.StructType(fields)
@@ -210,23 +211,3 @@ def spark_to_paimon(dt: T.DataType) -> str:
         return f"ROW<{inner}>"
     raise ValueError(f"unsupported Spark type: {dt}")
 
-
-def _split_top(s: str, many: bool = False) -> list[str]:
-    """Split on top-level commas (not inside <> or ())."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    if many:
-        return [p for p in parts if p.strip()]
-    if len(parts) != 2:
-        raise ValueError(f"expected two type args in {s!r}")
-    return parts

@@ -1283,7 +1283,7 @@ def lake_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged read aggregates back to the oracle's replay. In this runtime
     the whole path runs on the pure-Python OCF codec
     (``formats/avro_ocf``) — executor-written container files, the
-    ``paimon_avro`` batch source, hive partition injection from the path,
+    ``paimon_files`` batch source, hive partition injection from the path,
     merge-on-read on top; with spark-avro present the same query runs on
     the JVM module. Decimal-cast sum for a deterministic double hash.
 

@@ -208,7 +208,7 @@ def test_vectorized_encode_decode_match_per_row_paths():
             import pyarrow as pa
 
             from incubator_paimon_trino_spark.formats.avro_ocf import read_ocf
-            from incubator_paimon_trino_spark.streaming.manifest_source import _arrow_type
+            from incubator_paimon_trino_spark.formats.file_reader import _arrow_type
 
             _, it = read_ocf(p_one)
             data = list(it)
@@ -237,7 +237,7 @@ def test_vectorized_codec_timing_pins():
     import pyarrow as pa
 
     from incubator_paimon_trino_spark.formats.avro_ocf import OcfWriter, encode_batch, read_ocf
-    from incubator_paimon_trino_spark.streaming.manifest_source import _arrow_type
+    from incubator_paimon_trino_spark.formats.file_reader import _arrow_type
 
     rng = random.Random(31)
     # representative column shapes (short strings / small binaries, like the
@@ -344,7 +344,7 @@ def test_array_vectorized_codec_matches_per_row_paths():
         _flat_plan,
         encode_batch,
     )
-    from incubator_paimon_trino_spark.streaming.manifest_source import _arrow_type
+    from incubator_paimon_trino_spark.formats.file_reader import _arrow_type
 
     plan = _flat_plan(record_schema(ARR_FIELDS))
     assert plan is not None and [k for _, k, _x in plan] == ["varint", "arr", "arr"]
@@ -406,7 +406,7 @@ def test_array_vectorized_codec_timing_pins():
         OcfWriter,
         encode_batch,
     )
-    from incubator_paimon_trino_spark.streaming.manifest_source import _arrow_type
+    from incubator_paimon_trino_spark.formats.file_reader import _arrow_type
 
     rng = random.Random(31)
     rows = [

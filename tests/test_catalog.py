@@ -440,6 +440,44 @@ def test_truncate_and_full_table_delete(cat, spark):
     assert cat.sql("SELECT * FROM trunc.pk").count() == 0
 
 
+def test_sql_insert_and_truncate_nested_and_timestamp_columns(cat, spark):
+    """SQL INSERT (positional, and with a column list whose unlisted
+    columns fill with typed NULLs) and TRUNCATE take their column types
+    from the catalog's own parser: struct, array<struct>, timestamp_ntz and
+    timestamp (local time zone) columns all commit, and the timestamp
+    column keeps its local-time-zone type."""
+    import datetime
+
+    cat.create_database("ty")
+    cat.create_table(
+        "ty", "t",
+        [
+            ("k", "int"),
+            ("s", "struct<a:int,b:string>"),
+            ("arr", "array<struct<x:int,y:string>>"),
+            ("tn", "timestamp_ntz"),
+            ("tz", "timestamp"),
+        ],
+    )
+    cat.sql(
+        "INSERT INTO ty.t VALUES (1, named_struct('a', 1, 'b', 'x'), "
+        "array(named_struct('x', 2, 'y', 'z')), "
+        "TIMESTAMP_NTZ '2024-01-02 03:04:05', TIMESTAMP '2024-01-02 03:04:05')"
+    )
+    cat.sql("INSERT INTO ty.t (k, tn) VALUES (2, TIMESTAMP_NTZ '2024-05-06 07:08:09')")
+    df = cat.read_table("ty.t")
+    assert dict(df.dtypes)["tz"] == "timestamp"
+    rows = {r.k: r for r in df.collect()}
+    assert (rows[1].s.a, rows[1].s.b) == (1, "x")
+    assert [(e.x, e.y) for e in rows[1].arr] == [(2, "z")]
+    assert rows[1].tn == datetime.datetime(2024, 1, 2, 3, 4, 5)
+    assert rows[1].tz is not None
+    assert (rows[2].s, rows[2].arr, rows[2].tz) == (None, None, None)
+    assert rows[2].tn == datetime.datetime(2024, 5, 6, 7, 8, 9)
+    cat.sql("TRUNCATE TABLE ty.t")
+    assert cat.read_table("ty.t").count() == 0
+
+
 def test_create_table_as_select(cat, spark):
     """CTAS: schema derived from the SELECT via the A20 type mapping; WITH
     properties (primary_key included) apply to the created table."""

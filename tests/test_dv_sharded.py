@@ -37,6 +37,7 @@ from incubator_paimon_trino_spark.catalog.dv_index import (
     load_index_meta,
     mark_file_names,
 )
+from incubator_paimon_trino_spark.catalog.metadata import read_json
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
 from incubator_paimon_trino_spark.streaming.changelog import (
     read_changelog_stream,
@@ -278,10 +279,11 @@ def test_mark_free_snapshot_skips_dv_antijoin(cat, spark, monkeypatch):
 
 
 def test_oversized_bucket_splits_into_sub_shards(cat, spark):
-    """r9 review: one shard document aggregates into ONE JSON string, so a
-    bucket whose rewrite exceeds dv-index.max-marks-per-shard splits into
-    sub-shard files (by data-file hash) — readers union marks across a
-    bucket's file LIST, so results are unchanged."""
+    """One shard document aggregates into ONE JSON string, so a bucket
+    whose rewrite exceeds dv-index.max-marks-per-shard splits into
+    sub-shard files, packed next-fit by data file in name order: every
+    document holds at most the cap or exactly one file. Readers union marks
+    across a bucket's file LIST, so results are unchanged."""
     cat.create_database("d")
     cat.create_table(
         "d", "big", [("k", "bigint"), ("v", "string")],
@@ -302,7 +304,23 @@ def test_oversized_bucket_splits_into_sub_shards(cat, spark):
     tdir = cat._table_dir("d", "big")
     m = load_index_meta(tdir, cat._snapshots(tdir)[-1].dv)
     assert m["marks"] == 30 and list(m["shards"]) == [0]
-    assert len(m["shards"][0]) >= 2, m["shards"]  # split happened
+    docs = [
+        read_json(os.path.join(tdir, "index", n))["vectors"] for n in m["shards"][0]
+    ]
+    for vectors in docs:
+        marks = sum(len(ps) for ps in vectors.values())
+        assert marks <= 10 or len(vectors) == 1, docs
+    # the documents are the next-fit packing of the files in name order
+    packed: list[list[str]] = []
+    size = 0
+    for f, ps in sorted((f, ps) for v in docs for f, ps in v.items()):
+        if not packed or size + len(ps) > 10:
+            packed.append([])
+            size = 0
+        packed[-1].append(f)
+        size += len(ps)
+    assert sorted(sorted(v) for v in docs) == packed
+    assert len(docs) >= 3
     assert sorted(r.k for r in cat.read_table("d.big").collect()) == [
         i for i in range(60) if i % 2 == 1
     ]
@@ -311,6 +329,20 @@ def test_oversized_bucket_splits_into_sub_shards(cat, spark):
     assert [g for g in got if g[0] == "D"] == [
         ("D", i, f"v{i}") for i in range(60) if i % 2 == 0
     ]
+
+
+def test_sub_shards_pack_next_fit_by_file_name():
+    """Only buckets over the cap split; their files fill sub-shards in name
+    order, a new one when the next file would pass the cap; a file over
+    the cap alone is a sub-shard of its own."""
+    from incubator_paimon_trino_spark.catalog.wh_dv import _sub_shards
+
+    counts = [
+        (0, "f3", 4), (0, "f1", 6), (0, "f2", 5), (0, "f4", 12), (0, "f5", 1),
+        (1, "g1", 9),  # under the cap: no entry, sub-shard 0
+    ]
+    assert _sub_shards(counts, 10) == {"f1": 0, "f2": 1, "f3": 1, "f4": 2, "f5": 3}
+    assert _sub_shards(counts, 100) == {}
 
 
 def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):

@@ -360,7 +360,7 @@ def test_avro_pk_table_streams_renamed_history_via_manifest(cat, spark):
     )
     got = _rows(cat, "d.avpk", qname="m_avro_pk", cols=("_row_kind", "k", "val", "pt"))
     assert got == [("I", 1, "a", 7), ("I", 2, "b", 8), ("I", 3, "c", 7)]
-    # batch read agrees (the paimon_avro fallback source + field-id map)
+    # batch read agrees (the paimon_files fallback source + field-id map)
     batch = sorted((r.k, r.val, r.pt) for r in cat.read_table("d.avpk").collect())
     assert batch == [(1, "a", 7), (2, "b", 8), (3, "c", 7)]
 
@@ -388,7 +388,7 @@ def test_arrow_type_agrees_with_pyspark_conversion(spark):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    from incubator_paimon_trino_spark.streaming.manifest_source import _arrow_type
+    from incubator_paimon_trino_spark.formats.file_reader import _arrow_type
 
     ddls = [
         "boolean", "tinyint", "smallint", "int", "bigint", "float", "double",
@@ -409,7 +409,7 @@ def test_pack_splits_groups_and_sizes():
     """Split packing: same-(schema_id, format) files pack first-fit by
     size up to the target; unknown sizes isolate; groups never mix (a
     split shares one column-mapping spec)."""
-    from incubator_paimon_trino_spark.streaming.manifest_source import _pack_splits
+    from incubator_paimon_trino_spark.formats.file_reader import _pack_splits
 
     def e(path, sid=0, fmt="parquet", size=10):
         d = {"path": path, "schema_id": sid, "format": fmt}
@@ -562,8 +562,8 @@ def test_partition_value_time_and_binary_guard():
     import datetime
 
     from incubator_paimon_trino_spark.catalog.metadata import Field, TableSchema
+    from incubator_paimon_trino_spark.formats.file_reader import _typed_partition_value
     from incubator_paimon_trino_spark.streaming.manifest_source import (
-        _typed_partition_value,
         validate_partition_types,
     )
 

@@ -72,10 +72,29 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # queries on the one automaton matcher of MATCH_RECOGNIZE, batch and
+    # streaming
+    "pattern_alternation_funnel",
+    "pattern_bounded_quantifier_funnel",
+    "pattern_match_recognize_funnel",
+    "pattern_measures_one_row",
+    "pattern_skip_to_last_overlap",
+    "pattern_prev_navigation_runs",
+    "pattern_running_measures_all_rows",
+    "pattern_exclusion_funnel_edges",
+    "pattern_unmatched_rows_coverage",
+    "pattern_end_anchor_trailing_run",
+    "pattern_show_empty_matches",
+    "pattern_sql_match_recognize",
+    "streaming_pattern_within_funnel",
+    "streaming_pattern_skip_next",
+    "streaming_pattern_value_measures",
+    # lake reads of TIME columns through the Python reader, and commits
+    # that drop empty data files
+    "lake_avro_roundtrip",
+    "lake_orc_scan",
     # lake reads through the one Python data-file reader: positional ORC,
     # the Avro fallback and the manifest changelog stream
-    "lake_orc_scan",
-    "lake_avro_roundtrip",
     "lake_manifest_changelog_stream",
     # lake reads whose aggregation-engine and sequence-group merges are
     # SQL text, every aggregate from one template per function
@@ -146,23 +165,9 @@ _REPROOF: tuple[str, ...] = (
     "streaming_tumbling_counts",
     "streaming_session_windows",
     "streaming_stateful_running_counts",
-    "streaming_pattern_within_funnel",
     "streaming_dedup_keys",
     "streaming_enrich_static_join",
-    "streaming_pattern_skip_next",
-    "streaming_pattern_value_measures",
     # r13: chunk-wise matcher + empty-match emission rewrite
-    "pattern_show_empty_matches",
-    "pattern_unmatched_rows_coverage",
-    "pattern_match_recognize_funnel",
-    "pattern_measures_one_row",
-    "pattern_running_measures_all_rows",
-    "pattern_exclusion_funnel_edges",
-    "pattern_end_anchor_trailing_run",
-    "pattern_alternation_funnel",
-    "pattern_bounded_quantifier_funnel",
-    "pattern_prev_navigation_runs",
-    "pattern_skip_to_last_overlap",
     "pattern_funnel_view_click_purchase",
     "pattern_error_within_5min_of_purchase",
     "pattern_longest_click_streak",

@@ -52,7 +52,6 @@ from incubator_paimon_trino_spark.catalog.scan import (
 from incubator_paimon_trino_spark.functions.types import (
     castable_ddl,
     char_length,
-    paimon_to_spark,
     spark_to_paimon,
     timestamp_precision,
 )

@@ -55,7 +55,6 @@ from incubator_paimon_trino_spark.functions.sql import project, quote_ident
 from incubator_paimon_trino_spark.functions.types import (
     castable_ddl,
     char_length,
-    paimon_to_spark,
     spark_to_paimon,
     timestamp_precision,
 )
@@ -1092,7 +1091,6 @@ __all__ = [
     "collect_file_stats",
     "explode_dv_index_text",
     "load_snapshots",
-    "paimon_to_spark",
     "partition_column_expr",
     "partition_values",
     "prune_files",

@@ -60,7 +60,6 @@ from incubator_paimon_trino_spark.catalog.scan import (
 from incubator_paimon_trino_spark.functions.types import (
     castable_ddl,
     char_length,
-    paimon_to_spark,
     spark_to_paimon,
     timestamp_precision,
 )
@@ -349,6 +348,8 @@ class WriteMixin:
         from incubator_paimon_trino_spark.formats.file_reader import (
             PaimonFileSource,
             _pack_splits,
+            restore_transported,
+            transport_schema,
         )
 
         self.spark.dataSource.register(PaimonFileSource)
@@ -373,15 +374,16 @@ class WriteMixin:
         out_fields = fields + part_fields
         if with_pos:
             out_fields = out_fields + [(_DV_FILE, "string"), (_DV_POS, "bigint")]
-        return (
+        df = (
             self.spark.read.format(PaimonFileSource.name())
-            .option("schema_ddl", ", ".join(f"`{n}` {t}" for n, t in out_fields))
+            .option("schema_ddl", transport_schema(out_fields))
             .option("format", fmt)
             .option("fields", _json.dumps(fields))
             .option("files", _json.dumps(tasks))
             .option("with_pos", "true" if with_pos else "false")
             .load()
         )
+        return restore_transported(df, out_fields)
 
     def _commit_files(
         self,
@@ -539,6 +541,14 @@ class WriteMixin:
         attempt.paths = list(self._staged_moves(tdir, staging, version, ext).values())
         final_paths = self._finalize_commit(tdir, staging, version, ext)
         entries = self._commit_files(tdir, final_paths, ext, schema, fb_counts)
+        # a write task with no rows still leaves a file (ORC writes one per
+        # empty task, parquet one for an empty commit): drop those before
+        # the publish, so no read, positional task or compaction opens them
+        for e in entries:
+            if e["record_count"] == 0:
+                os.remove(os.path.join(tdir, e["path"]))
+        entries = [e for e in entries if e["record_count"]]
+        final_paths = [p for p in final_paths if os.path.exists(p)]
         # file-index sidecars (bloom / bitmap) BEFORE the publish: a reader
         # never resolves a snapshot whose sidecars are still being written
         build_file_indexes(self.spark, final_paths, schema)

@@ -332,6 +332,9 @@ def encode_batch(batch, schema) -> "tuple[bytes, int] | None":
                 or pa.types.is_time(t)
             ):
                 return None
+            if pa.types.is_time(t) and t.unit != "us":
+                # Spark hands TIME over as time64[ns]; the file stores micros
+                col = col.cast(pa.time64("us"), safe=False)
             segments.append(_varint_segment(_primitive_values(col), valid))
         elif kind == "bool":
             if not pa.types.is_boolean(t):

@@ -145,6 +145,40 @@ def _typed_partition_value(raw: str | None, ddl: str):
     return None if raw is None else parse(raw)
 
 
+# ------------------------------------------------------------- transport
+def transport_ddl(ddl: str) -> str:
+    """The type a column crosses the Python DataSource Arrow bridge as.
+    TIME travels as bigint MICROS, since the bridge rejects Arrow time64
+    (UNSUPPORTED_ARROWTYPE); ``restore_transported`` casts it back
+    Spark-side. Every other type crosses as-is."""
+    s = ddl.strip().lower()
+    return "bigint" if s == "time" or s.startswith("time(") else ddl
+
+
+def transport_schema(cols: list) -> str:
+    """The DDL a Python source declares for output columns ``cols``
+    [(name, storage ddl)]."""
+    return ", ".join(f"`{n}` {transport_ddl(t)}" for n, t in cols)
+
+
+def restore_transported(df, cols: list):
+    """``df``, read through a source declared by ``transport_schema(cols)``,
+    with every transported column cast back to its type in ``cols``."""
+    from pyspark.sql import functions as F
+
+    for n, t in cols:
+        if transport_ddl(t) != t:
+            df = df.withColumn(
+                n,
+                F.expr(
+                    f"make_time(cast(`{n}` div 3600000000 as int), "
+                    f"cast((`{n}` % 3600000000) div 60000000 as int), "
+                    f"cast((`{n}` % 60000000) as decimal(16,6)) / 1000000)"
+                ).cast(t),
+            )
+    return df
+
+
 # ----------------------------------------------------------------- reads
 def _read_file(path: str, fmt: str, fields: list):
     """Arrow table of one data file's physical columns. ``fields`` is
@@ -176,8 +210,8 @@ def _read_file(path: str, fmt: str, fields: list):
 
 def _output_batches(table, out_cols, fields, parts, path=None, consts=None) -> Iterator:
     """Arrow batches in the output schema ``out_cols`` [(name, storage
-    ddl)], from one file's ``table``. Each output column takes, first match
-    wins:
+    ddl)], from one file's ``table``, each column in its ``transport_ddl``
+    type. Each output column takes, first match wins:
 
     - its value in ``consts``, on every row (the stream's DV retractions
       set ``_row_kind`` to 'D' and ``_dv_ver`` to the retracting commit);
@@ -196,15 +230,14 @@ def _output_batches(table, out_cols, fields, parts, path=None, consts=None) -> I
     part_vals = {k: (ddl, raw) for k, ddl, raw in parts}
     arrays = {}
     for name, ddl in out_cols:
-        at = _arrow_type(ddl)
+        at = _arrow_type(transport_ddl(ddl))
         if name in consts:
             arr = pa.array([consts[name]] * n, type=at)
         elif name in part_vals:
             pddl, raw = part_vals[name]
             v = _typed_partition_value(raw, pddl)
             if at == pa.int64() and v is not None and not isinstance(v, int):
-                # TIME transported as bigint micros (the Arrow bridge of
-                # the Python DataSource API rejects time64)
+                # TIME transported as bigint micros
                 v = ((v.hour * 60 + v.minute) * 60 + v.second) * 1_000_000 + v.microsecond
             arr = pa.array([v] * n, type=at)
         elif name == POS_FILE_COL:

@@ -1,4 +1,4 @@
-"""General MATCH_RECOGNIZE: regex-over-rows with NFA backtracking.
+"""General MATCH_RECOGNIZE: regex-over-rows pattern matching.
 
 The reference's inherited Trino suite names row-pattern matching
 (``testAggregationInPatternMatching``, ``testJoinedPatternMatch`` —
@@ -8,8 +8,9 @@ pure window plans; this module is the general engine those plans special-case:
 
 - **pattern**: a regex over symbol names — concatenation (space), ``|``
   alternation, ``+ * ?`` greedy quantifiers plus bounded ``{n} {n,} {n,m}``
-  and reluctant ``+? *? ?? {n,m}?`` variants (r11 — Trino's full
-  quantifier surface), ``( )`` grouping. Example: ``"V C+ (P | E)"``.
+  and reluctant ``+? *? ?? {n,m}?`` variants, ``( )`` grouping,
+  ``PERMUTE``, exclusions ``{- -}`` and the partition anchors ``^``/``$``.
+  Example: ``"V C+ (P | E)"``.
 - **define**: per-symbol boolean SQL over the current row's columns
   (Trino's DEFINE clause). Conditions are evaluated ONCE, JVM-side inside
   whole-stage codegen, into boolean flag columns — the Python matcher only
@@ -18,18 +19,26 @@ pure window plans; this module is the general engine those plans special-case:
   wins, greedy quantifiers prefer longer (SQL-standard preference order);
   ``after_match`` = ``skip_past_last`` (default), ``skip_to_next_row``, or
   Trino's ``skip_to_first <symbol>`` / ``skip_to_last <symbol>`` (resume AT
-  that row — overlapping matches; r11).
+  that row — overlapping matches).
+
+Two matchers share that semantics. LINEAR patterns (a chain of
+single-symbol atoms with greedy ``+ * ?``, what real funnels are) run the
+numpy recurrences of ``find_matches_linear``. Every other pattern compiles
+to a prioritized automaton (``compile_nfa``) and runs ``_scan``, one
+memoized backtracker over candidate start rows whose work is linear in
+automaton states × rows; the streaming twin ``match_recognize_stream`` runs
+the same scan per WITHIN span. ``find_matches`` (the backtracking NFA over
+the pattern AST) is the reference both are pinned against in tests.
 
 Output is Trino's ALL ROWS PER MATCH shape: every matched row with
 ``match_no`` (1-based per partition), ``classifier`` (the symbol that
 claimed the row) and ``match_row`` (1-based position inside the match).
-MEASURES then compose as ordinary ``groupBy(partition, match_no)``
-aggregations — idiomatic Spark instead of a measure sub-language.
+MEASURES compose as window or ``groupBy(partition, match_no)``
+aggregations over that shape.
 
 Scale shape: one hash shuffle on the partition key (the same shuffle any
-window over the key needs), then Arrow-batched per-group matching. State is
-O(partition rows); the NFA walk is linear except where nested quantifiers
-genuinely require backtracking.
+window over the key needs), then Arrow-batched matching of each key's
+contiguous row span.
 """
 
 from __future__ import annotations
@@ -67,7 +76,7 @@ class _Rep:
 
 @dataclass
 class _Excl:
-    """Trino's pattern exclusion ``{- ... -}`` (r12): the enclosed rows
+    """Trino's pattern exclusion ``{- ... -}``: the enclosed rows
     participate in matching (and in MEASURES) but are omitted from the
     ALL ROWS PER MATCH output."""
 
@@ -98,13 +107,13 @@ def parse_pattern(pattern: str) -> object:
     ``match_recognize`` uses :func:`parse_pattern_anchored`, which also
     accepts a leading ``^`` / trailing ``$``).
 
-    Bounded quantifiers (Trino's ``{n}`` / ``{n,}`` / ``{n,m}`` — r11)
+    Bounded quantifiers (Trino's ``{n}`` / ``{n,}`` / ``{n,m}``)
     DESUGAR at parse time into the three core forms, preserving greedy
     preference: ``X{n,m}`` = n copies then (m−n) right-nested optionals
     ``(X (X …)?)?`` (greedy tries the longest first, exactly the flat
     quantifier's order); ``X{n,}`` = n copies then ``X*``. Both matchers
-    (linear + compiled product) inherit them for free. Pattern exclusions
-    ``{- ... -}`` (r12) parse to :class:`_Excl` nodes."""
+    (linear + automaton) inherit them for free. Pattern exclusions
+    ``{- ... -}`` parse to :class:`_Excl` nodes."""
     ast, a_start, a_end = parse_pattern_anchored(pattern)
     if a_start or a_end:
         raise ValueError(
@@ -277,7 +286,7 @@ def pattern_symbols(node) -> list[str]:
     return out
 
 
-# --------------------------------------------- exclusion aliasing (r12)
+# --------------------------------------------------- exclusion aliasing
 def _orig(classifier: str) -> str:
     """Original symbol name of a (possibly exclusion-aliased) classifier."""
     return classifier.partition("~")[0]
@@ -395,7 +404,7 @@ def find_matches(
     """Leftmost-greedy scan over one sorted partition.
 
     Returns [(start_row, classifiers)] — one entry per match, classifiers
-    aligned to consecutive rows from start_row. Anchors (r12): ``^``
+    aligned to consecutive rows from start_row. Anchors: ``^``
     restricts starts to row 0; ``$`` accepts only completions at row n —
     the preference order then ranges over anchored-valid completions only
     (an earlier-preferred yield that stops short of the end is not a
@@ -432,8 +441,8 @@ def _linear_atoms(node) -> list[tuple[str, int, int | None]] | None:
         if isinstance(p, _Sym):
             out.append((p.name, 1, 1))
         elif isinstance(p, _Rep) and isinstance(p.node, _Sym) and p.greedy:
-            # reluctant quantifiers (r11) take the compiled product path —
-            # the linear recurrences assume greedy preference
+            # reluctant quantifiers take the automaton path — the linear
+            # recurrences assume greedy preference
             out.append((p.node.name, p.min_count, p.max_count))
         else:
             return None
@@ -448,8 +457,7 @@ def find_matches_linear(
     start_anchor: bool = False,
     end_anchor: bool = False,
 ) -> list[tuple[int, list[str]]]:
-    """``find_matches`` for linear patterns with the row loop VECTORIZED
-    (r8 verdict item 7: the per-group hot loop moved to numpy).
+    """``find_matches`` for linear patterns with the row loop VECTORIZED.
 
     Result-identical to the NFA by construction of the same preference
     order (property-pinned in tests/test_match_recognize.py): suffix
@@ -532,27 +540,18 @@ def find_matches_linear(
     return out
 
 
-# ----------------------------------------- product-construction vectorizer
+# ------------------------------------------------------- automaton matcher
 #
-# Non-linear patterns (alternation / grouped quantifiers, e.g. ``(A | B) C+``)
-# vectorize through an explicit NFA product: compile the AST into an ε-free
-# PRIORITIZED automaton (Thompson construction + priority-ordered ε-closure —
-# the standard leftmost-greedy encoding), then compute the full
-# state-set × position feasibility table F[i, q] = "an accepting path exists
-# from state q consuming rows i.." with numpy boolean-matrix suffix products
-# (Hillis–Steele doubling scan over per-row transition matrices, blocked so
-# memory stays O(block·|Q|²)). Match starts read off one vectorized OR over
-# the start state's consume moves; reconstruction walks first-feasible moves
-# — one tiny Python step per MATCHED row only, same order of work as
-# materializing the output. Equivalence to the backtracking NFA is pinned
-# exhaustively + randomized in tests/test_match_recognize.py.
-#
-# The one shape the product path refuses is a quantifier over a NULLABLE
-# body (``(A?)+``, ``(A*)*``): the backtracker skips empty body iterations
-# (the ``mid == j`` guard), which standard automaton compilation cannot
-# mirror without a non-empty-language transform. Those degenerate patterns
-# (the quantifier adds nothing a simpler pattern wouldn't) keep the
-# allow_python_nfa fence.
+# Non-linear patterns (alternation, grouped or reluctant quantifiers, e.g.
+# ``(A | B) C+``) compile to an ε-free PRIORITIZED automaton (Thompson
+# construction + priority-ordered ε-closure, the standard leftmost-greedy
+# encoding) and run one memoized backtracker over candidate start rows
+# (``_scan``), batch and streaming alike. The automaton mirrors the
+# backtracking NFA only when every quantifier body is non-nullable, since
+# ``_match_from`` skips empty body iterations (its ``mid == j`` guard);
+# ``_rewrite_nullable_bodies`` brings every pattern into that class at
+# parse time. Equivalence to ``find_matches`` is pinned exhaustively and
+# randomized in tests/test_match_recognize.py.
 
 
 def _nullable(node) -> bool:
@@ -568,23 +567,20 @@ def _nullable(node) -> bool:
     return node.min_count == 0 or _nullable(node.node)
 
 
-# --------------------------------------- nullable-body rewrite (r12)
+# ------------------------------------------------- nullable-body rewrite
 #
-# The r11 fence: a quantifier over a NULLABLE body ((A?)+, (A* B?)+) had no
-# automaton mirror of the backtracker's skip-empty-iteration rule, so those
-# patterns kept the per-row Python NFA behind allow_python_nfa=True. r12
-# (VERDICT r11 item 2) CLOSES the fence by a parse-time rewrite: every
-# quantifier body normalizes to the ε-free regex of its NON-EMPTY yield
-# stream — which is exactly what the backtracker iterates over (the
-# ``mid == j`` guard skips empty body yields and moves to the NEXT yield,
-# and the iteration count only increments on non-empty bodies, so min/max
-# bounds carry over unchanged: ``(A?)+`` ≡ ``A+``, ``(A* B?)+`` ≡
-# ``(A+ B? | B)+``). The construction below preserves the backtracker's
-# yield ORDER up to removal of duplicate yields — sound because every
-# consumer either takes the stream's first yield or iterates it in order,
-# and a duplicate (end, classifiers) yield contributes nothing new —
-# pinned exhaustively + randomized against the Python NFA in
-# tests/test_match_recognize.py.
+# A quantifier over a NULLABLE body (``(A?)+``, ``(A* B?)+``) has no direct
+# automaton mirror of the backtracker's skip-empty-iteration rule, so every
+# quantifier body normalizes at parse time to the ε-free regex of its
+# NON-EMPTY yield stream, which is exactly what the backtracker iterates
+# over: the ``mid == j`` guard skips empty body yields and moves to the
+# NEXT yield, and the iteration count only increments on non-empty bodies,
+# so min/max bounds carry over unchanged (``(A?)+`` ≡ ``A+``,
+# ``(A* B?)+`` ≡ ``(A+ B? | B)+``). The construction preserves the
+# backtracker's yield ORDER up to removal of duplicate yields, which is
+# sound because every consumer either takes the stream's first yield or
+# iterates it in order, and a duplicate (end, classifiers) yield
+# contributes nothing new.
 
 _NO_YIELDS = object()  # sentinel: a stream position with no yields at all
 
@@ -661,7 +657,7 @@ def _nonull(n) -> object:
 def _rewrite_nullable_bodies(node) -> object:
     """Bottom-up: every quantifier body becomes non-nullable, preserving
     the backtracker's preference order (see block comment). After this,
-    every pattern is product-eligible — the r11 fence is gone."""
+    every pattern is product-eligible."""
     if isinstance(node, _Sym):
         return node
     if isinstance(node, _Seq):
@@ -802,92 +798,96 @@ def compile_nfa(node, truncate: bool = True) -> tuple[list[list[tuple]], int]:
     return moves, idx[start_entry]
 
 
-def _backtrack_first(
+def _scan(
     moves: list[list[tuple]],
-    fa: dict,
-    n: int,
     start: int,
-    j: int,
-    budget: list,
-    end_anchor: bool = False,
-) -> tuple[int, list[str]] | None:
-    """First yield (preference order) of the compiled automaton from row j,
-    by iterative DFS — the compiled twin of ``_match_from``'s ``next()``.
-    Decrements ``budget[0]`` per step; returns None early when exhausted
-    (caller falls back to the feasibility-table path). With ``end_anchor``
-    accept moves are feasible only at position n (caller compiled with
-    ``truncate=False`` so post-accept consumes are present)."""
-    stack: list[list] = [[start, j, 0]]
-    cls: list[str] = []
-    while stack:
-        frame = stack[-1]
-        q, p, mi = frame
-        mv = moves[q]
-        if mi >= len(mv):
-            stack.pop()
-            if stack:
-                cls.pop()
-            continue
-        frame[2] = mi + 1
-        budget[0] -= 1
-        if budget[0] < 0:
-            return None
-        m = mv[mi]
-        if m[0] == "a":
-            if not end_anchor or p == n:
-                return p, cls.copy()
-            continue  # anchored: accept short of the end is not a match
-        if p < n and fa[m[1]][p]:
-            cls.append(m[1])
-            stack.append([m[2], p + 1, 0])
-    return None
-
-
-def _scan_backtrack(
-    moves: list[list[tuple]],
     fa: dict,
-    n: int,
-    start: int,
-    after_match,
     cand_idx,
-    budget: list,
+    ends,
+    after_match,
     end_anchor: bool = False,
-) -> list[tuple[int, list[str]]] | None:
-    """Leftmost scan over candidate start rows with the compiled
-    backtracker; None when the step budget trips (caller falls back to the
-    feasibility-table path). ``cand_idx``: ascending row indices where one
-    of the start state's consume symbols fires — the only rows a match can
-    start at, so non-candidates are skipped without any Python stepping."""
+) -> tuple[list[tuple[int, list[str]]], int]:
+    """Leftmost scan of the compiled automaton over candidate start rows.
+
+    ``cand_idx`` holds the ascending rows where a consume move of the start
+    state fires (the only rows a non-empty match can start at);
+    ``ends[k]`` bounds the match from ``cand_idx[k]`` to rows before it
+    (the key span's length in batch, the WITHIN span in streaming). Each
+    start runs a depth-first walk of the moves in preference order and
+    takes its first accept, which is ``_match_from``'s first yield. With
+    ``end_anchor`` an accept counts only at the end row (compile with
+    ``truncate=False`` so post-accept consumes are present).
+
+    The walk keeps a DEAD-STATE memo: a (state, row) pair whose subtree
+    held no accept is recorded and never expanded again. Dead-ness depends
+    only on (state, row) for one end row, so the memo is shared across
+    starts and rebuilt only when the end row changes (ends never decrease):
+    under one end row the failed work of all starts together is linear in
+    states × rows, whatever the pattern. It is one byte per (state, row)
+    from the first start to the end row: at most (n+1)·Q bytes for a span
+    of n rows and Q states.
+
+    Returns the matches as (start_row, classifiers) and the next row the
+    scan would visit."""
+    nq = len(moves)
+    # per state: consume moves as (flags, symbol, target), accept as None
+    trans = [
+        [None if m[0] == "a" else (fa[m[1]], m[1], m[2]) for m in mv] for mv in moves
+    ]
     out: list[tuple[int, list[str]]] = []
     i = 0
-    for j in cand_idx:
-        j = int(j)
+    dead = b""
+    base = end = -1
+    for j, e in zip(cand_idx.tolist(), ends):
         if j < i:
             continue
-        hit = _backtrack_first(moves, fa, n, start, j, budget, end_anchor)
-        if budget[0] < 0:
-            return None
-        if hit is not None and hit[0] > j:
-            out.append((j, hit[1]))
-            i = _advance(j, hit[1], after_match)
+        if e != end:
+            end, base = e, j
+            dead = bytearray((end - base + 1) * nq)
+        # frame d sits at row j + d: every move consumes exactly one row
+        qs, mis, cls = [start], [0], []
+        hit = None
+        while qs:
+            d = len(qs) - 1
+            q, mi = qs[d], mis[d]
+            mv = trans[q]
+            if mi == len(mv):
+                dead[(j + d - base) * nq + q] = 1
+                qs.pop()
+                mis.pop()
+                if cls:
+                    cls.pop()
+                continue
+            mis[d] = mi + 1
+            m = mv[mi]
+            p = j + d
+            if m is None:
+                if not end_anchor or p == end:
+                    hit = cls
+                    break
+                continue  # anchored: accepting short of the end is no match
+            f, sym, t = m
+            if p < end and f[p] and not dead[(p + 1 - base) * nq + t]:
+                qs.append(t)
+                mis.append(0)
+                cls.append(sym)
+        if hit:  # an empty first yield is no match
+            out.append((j, hit))
+            i = _advance(j, hit, after_match)
         else:
             i = j + 1
-    return out
+    return out, i
 
 
-#: feasibility-table ceiling on automaton size: above this, the blocked
-#: (b, Q+1, Q+1) matrices and Q³-per-row matmuls stop paying (ADVICE r11:
-#: a PERMUTE(5-6) or X{2,100} desugaring compiles to hundreds-to-thousands
-#: of states — the fixed 65536-row block then allocates gigabytes). Large
-#: automata run the compiled backtracker instead: exact preference-order
-#: DFS, O(pattern) memory; the state-heavy shapes (PERMUTE, wide bounded
-#: quantifiers) are alternation-like, where the DFS is near-linear per
-#: candidate start.
-_MATRIX_STATE_CAP = 64
+def _candidates(moves: list[list[tuple]], start: int, fa: dict, n: int):
+    """Ascending rows below ``n`` where a consume move of ``start`` fires."""
+    import numpy as np
 
-#: memory budget for ONE feasibility block (P plus its matmul scratch):
-#: the block length scales down as the state count grows
-_MATRIX_BUDGET_BYTES = 128 << 20
+    cand = np.zeros(n, dtype=bool)
+    for m in moves[start]:
+        if m[0] == "c":
+            cand |= fa[m[1]][:n]
+    return np.flatnonzero(cand)
 
 
 def find_matches_product(
@@ -895,130 +895,24 @@ def find_matches_product(
     start: int,
     flags: dict[str, "object"],
     n: int,
-    after_match: str,
-    _block: int = 65536,
-    _sparse_frac: float = 0.05,
+    after_match,
     start_anchor: bool = False,
     end_anchor: bool = False,
 ) -> list[tuple[int, list[str]]]:
-    """``find_matches`` for compiled non-linear patterns, row loop vectorized.
-
-    Feasibility F[i, q] satisfies F[i] = acc | M_i · F[i+1] where M_i is the
-    per-row boolean transition matrix; folding the accept vector into an
-    augmented (|Q|+1)² matrix turns the whole table into suffix MATRIX
-    PRODUCTS, computed blockwise with a Hillis–Steele doubling scan (log b
-    batched matmuls per block — no per-row Python). Scanning for match
-    starts is one vectorized OR + a next-start jump table; the only Python
-    iteration left is per MATCHED row (reconstruction), which is the same
-    order of work as emitting the output rows.
-
-    ``end_anchor`` requires ``moves`` compiled with ``truncate=False``
-    (accept is then only feasible at row n — the accept column drops out of
-    the augmented matrices and F[i, q] means "consume rows i..n-1 ENTIRELY
-    and accept"); ``start_anchor`` restricts candidate starts to row 0."""
+    """``find_matches`` for a compiled pattern (``compile_nfa``): the
+    candidate starts of one key span, then ``_scan`` up to row ``n``.
+    ``end_anchor`` requires ``moves`` compiled with ``truncate=False``;
+    ``start_anchor`` restricts the starts to row 0."""
     import numpy as np
 
-    Q = len(moves)
-    acc = np.array([any(m[0] == "a" for m in mv) for mv in moves], dtype=np.uint8)
-    trans = [(q, m[1], m[2]) for q, mv in enumerate(moves) for m in mv if m[0] == "c"]
-    fa = {s: np.asarray(flags[s], dtype=bool) for s in {t[1] for t in trans}}
-
-    # Sparse dispatch: a match can only START where one of the start state's
-    # consume symbols fires. When those rows are rare (real funnels: the
-    # anchor event is <<5% of traffic) the feasibility table is wasted work —
-    # backtrack from each candidate instead, under a step budget that falls
-    # back to the table path if a pathological pattern ever blows up.
-    cand = np.zeros(n, dtype=bool)
-    for m in moves[start]:
-        if m[0] == "c":
-            cand |= fa[m[1]][:n]
-    cand_idx = np.flatnonzero(cand)
+    fa = {s: np.asarray(v, dtype=bool) for s, v in flags.items()}
+    cand_idx = _candidates(moves, start, fa, n)
     if start_anchor:
-        cand_idx = cand_idx[:1] if (len(cand_idx) and cand_idx[0] == 0) else cand_idx[:0]
-    Qp = Q + 1
-    if n and Qp > _MATRIX_STATE_CAP:
-        # ADVICE r11: no feasibility table above the state cap — DFS only,
-        # unbudgeted (exact, memory-O(pattern); see _MATRIX_STATE_CAP)
-        return _scan_backtrack(
-            moves, fa, n, start, after_match, cand_idx, [float("inf")], end_anchor
-        )
-    if n and len(cand_idx) <= _sparse_frac * n:
-        budget = [50 * len(cand_idx) + 10_000]
-        out = _scan_backtrack(
-            moves, fa, n, start, after_match, cand_idx, budget, end_anchor
-        )
-        if out is not None:
-            return out
-
-    # uint8 matmul sums ≤ Qp one-bit products per cell — exact while Qp ≤ 255
-    dt = np.uint8 if Qp <= 255 else np.int32
-    # ADVICE r11: size the block to a fixed memory budget (P + matmul
-    # scratch = 2 · b · Qp² · itemsize); explicit small _block (tests) wins
-    block = min(_block, max(64, _MATRIX_BUDGET_BYTES // (2 * Qp * Qp * np.dtype(dt).itemsize)))
-    F = np.zeros((n + 1, Q), dtype=bool)
-    F[n] = acc.astype(bool)
-    g_next = np.append(acc.astype(dt), dt(1))  # augmented G at block end
-    lo = ((n - 1) // block) * block if n else 0
-    while n and lo >= 0:
-        hi = min(lo + block, n)
-        b = hi - lo
-        P = np.zeros((b, Qp, Qp), dtype=dt)
-        P[:, Q, Q] = 1
-        if not end_anchor:  # anchored: accepting short of row n is no match
-            P[:, :Q, Q] = acc[None, :]
-        for q, s, t in trans:
-            P[:, q, t] |= fa[s][lo:hi].astype(dt)
-        d = 1
-        tmp = np.empty_like(P)
-        while d < b:
-            np.matmul(P[: b - d], P[d:], out=tmp[: b - d])
-            np.minimum(tmp[: b - d], 1, out=P[: b - d])
-            d *= 2
-        g = np.minimum(P @ g_next, 1).astype(dt)
-        F[lo:hi] = g[:, :Q].astype(bool)
-        g_next = g[0]
-        lo -= block
-    # a match starts at i iff the first FEASIBLE start move is a consume
-    # (post-truncation lists are consumes-then-accept, so: any consume
-    # feasible). Mirrors find_matches' "first yield non-empty" semantics —
-    # e.g. (A* | B) at an A-false B-true row prefers the empty A* yield and
-    # does NOT match, in both engines. (Under an end anchor an ε yield ends
-    # short of row n and is skipped rather than blocking, so "any consume
-    # feasible" is exact there too — F already encodes the anchor.)
-    ma = np.zeros(n, dtype=bool)
-    for m in moves[start]:
-        if m[0] == "c":
-            ma |= fa[m[1]][:n] & F[1:, m[2]]
-    starts_arr = np.where(ma, np.arange(n), n)
-    nxt_start = np.minimum.accumulate(starts_arr[::-1])[::-1] if n else starts_arr
-    out = []
-    i = 0
-    while i < n:
-        j = int(nxt_start[i])
-        if j >= n or (start_anchor and j > 0):
-            break
-        q, p, cls = start, j, []
-        while True:
-            step = None
-            for m in moves[q]:
-                if m[0] == "a":
-                    if not end_anchor or p == n:
-                        break  # accept is the first feasible move: end here
-                    continue  # anchored accept short of the end: dead move
-                if p < n and fa[m[1]][p] and F[p + 1, m[2]]:
-                    step = m
-                    break
-            if step is None:
-                break
-            cls.append(step[1])
-            p += 1
-            q = step[2]
-        out.append((j, cls))  # p > j: ma[j] proved a feasible start consume
-        i = _advance(j, cls, after_match)
-    return out
+        cand_idx = cand_idx[:1] if len(cand_idx) and cand_idx[0] == 0 else cand_idx[:0]
+    return _scan(moves, start, fa, cand_idx, [n] * len(cand_idx), after_match, end_anchor)[0]
 
 
-# -------------------------------------------------- DEFINE navigation (r11)
+# ---------------------------------------------------- DEFINE navigation
 def _rewrite_navigation(cond: str, navs: list) -> str:
     """Rewrite Trino's physical navigation calls ``PREV(expr[, k])`` /
     ``NEXT(expr[, k])`` inside a DEFINE condition string into generated
@@ -1103,7 +997,6 @@ def match_recognize(
     pattern: str,
     define: dict[str, Column | str],
     after_match: str = "skip_past_last",
-    allow_python_nfa: bool = False,
     measures: "dict[str, str] | None" = None,
     rows_per_match: str = "all",
     subsets: "dict[str, list[str]] | None" = None,
@@ -1114,7 +1007,7 @@ def match_recognize(
     ``define`` maps each pattern symbol to a boolean ``Column`` or SQL
     string over the input columns. Default output is Trino's ALL ROWS PER
     MATCH shape: the matched rows plus ``match_no``, ``classifier``,
-    ``match_row``. ``rows_per_match`` (r12 — the full Trino surface):
+    ``match_row``. ``rows_per_match``:
 
     - ``"all"`` — every matched row; with ``measures``, each measure is
       appended as a per-row column with Trino's RUNNING semantics by
@@ -1124,21 +1017,20 @@ def match_recognize(
     - ``"all_with_unmatched"`` — Trino's ``ALL ROWS PER MATCH WITH
       UNMATCHED ROWS``: rows claimed by no match are emitted too, with
       NULL ``match_no``/``classifier``/``match_row`` and NULL measures.
-
-    ``empty_matches`` (r12 — Trino's SHOW/OMIT EMPTY MATCHES, default
-    SHOW like Trino): a NULLABLE pattern (``A*``, ``B??``) matches empty
-    at every scanned row where no non-empty match starts; with ``"show"``
-    each such EMPTY MATCH takes a match number and emits one row — the
-    row where it occurred, with NULL classifier/match_row and measures
-    evaluated over zero rows (COUNT 0, aggregates NULL). ``"omit"``
-    drops those rows but every empty match still CONSUMES its
-    MATCH_NUMBER() — the surviving matches keep gapped numbers
-    (SQL:2016/Trino OMIT semantics; r13). Non-nullable patterns have no
-    empty matches — the modes coincide.
     - ``"one"`` — Trino's ONE ROW PER MATCH (requires ``measures``): one
       row per match with the partition columns plus the measures, FINAL
       semantics (RUNNING at the last row ≡ FINAL, so prefixes are
       accepted and ignored).
+
+    ``empty_matches`` (Trino's SHOW/OMIT EMPTY MATCHES, default SHOW like
+    Trino): a NULLABLE pattern (``A*``, ``B??``) matches empty at every
+    scanned row where no non-empty match starts; with ``"show"`` each such
+    EMPTY MATCH takes a match number and emits one row — the row where it
+    occurred, with NULL classifier/match_row and measures evaluated over
+    zero rows (COUNT 0, aggregates NULL). ``"omit"`` drops those rows but
+    every empty match still CONSUMES its MATCH_NUMBER() — the surviving
+    matches keep gapped numbers (SQL:2016/Trino OMIT semantics).
+    Non-nullable patterns have no empty matches — the modes coincide.
 
     Measure grammar: ``MATCH_NUMBER()``, ``CLASSIFIER()``,
     ``FIRST/LAST(x[, k])``, ``SUM/AVG/MIN/MAX/COUNT`` over ``col`` /
@@ -1148,20 +1040,15 @@ def match_recognize(
     declares Trino's SUBSET union variables (``{"U": ["A", "B"]}``) for
     use as measure scopes.
 
-    Pattern exclusions ``{- ... -}`` (r12) omit the enclosed rows from the
+    Pattern exclusions ``{- ... -}`` omit the enclosed rows from the
     all-rows output (they still match, still advance SKIP positions, and
     still feed MEASURES — SQL-standard exclusion semantics). Anchors
-    ``^``/``$`` (r12) pin matches to the partition's first/last row.
+    ``^``/``$`` pin matches to the partition's first/last row.
 
-    LINEAR patterns (a chain of single-symbol atoms with ``+ * ?`` — what
-    real funnels are) run the numpy-vectorized linear matcher. Everything
-    else runs the PRODUCT-CONSTRUCTION vectorized matcher (r11): compiled
-    ε-free prioritized NFA + numpy matrix-scan feasibility, NFA-equivalent
-    by the exhaustive pin in tests. Quantified nullable groups (``(A?)+``)
-    normalize at parse time to their non-nullable equivalent (r12 — the
-    r11 ``allow_python_nfa`` fence is gone; the parameter is accepted and
-    ignored for back-compat)."""
-    del allow_python_nfa  # r12: every pattern vectorizes (see docstring)
+    LINEAR patterns run ``find_matches_linear``; every other pattern runs
+    the compiled automaton through ``find_matches_product`` (see the
+    module docstring). Quantified nullable groups (``(A?)+``) normalize at
+    parse time to their non-nullable equivalent."""
     if not order_by:
         raise ValueError(
             "match_recognize needs a non-empty order_by: pattern semantics "
@@ -1190,7 +1077,7 @@ def match_recognize(
         bad = [m for m in members if m not in user_symbols]
         if bad:
             raise ValueError(f"SUBSET {sub} references unknown symbols {bad}")
-    # exclusion aliasing + nullable-body normalization (r12): after these,
+    # exclusion aliasing + nullable-body normalization: after these,
     # every quantifier body is non-nullable — the pattern ALWAYS compiles
     excl_alias: dict[str, str] = {}
     ast = _strip_exclusions(ast, excl_alias)
@@ -1198,7 +1085,7 @@ def match_recognize(
     assert _product_eligible(ast), pattern  # guaranteed by the rewrite
     symbols = pattern_symbols(ast)  # may include exclusion aliases
 
-    # DEFINE navigation (r11): PREV/NEXT in string conditions rewrite to
+    # DEFINE navigation: PREV/NEXT in string conditions rewrite to
     # lag/lead columns over (partition_by, order_by) — Trino's physical-row
     # navigation. Requires order_by to be a TOTAL order within partitions
     # (ties could sort differently between the window and the matcher's
@@ -1246,8 +1133,8 @@ def match_recognize(
     # an ε yield ends short of the partition end); everything else keeps
     # the plain matched-rows emission untouched. Per SQL:2016 (and Trino/
     # Oracle) an omitted empty match still CONSUMES its MATCH_NUMBER() —
-    # OMIT drops the carrier rows but the numbering keeps the gaps (r13 —
-    # ADVICE r12; both modes therefore replay the scan to number events).
+    # OMIT drops the carrier rows but the numbering keeps the gaps (both
+    # modes therefore replay the scan to number events).
     number_empty = _nullable(ast) and not a_end
     show_empty = empty_matches == "show" and number_empty
 
@@ -1306,16 +1193,15 @@ def match_recognize(
                     m_row.append(None)
 
     def run(pdf_iter):
-        # r12: ONE call per shuffle PARTITION, not per key (the grouped-map
-        # per-key Arrow round-trip was 3.8s of an 8.8s sf0.1 read — ~6ms ×
-        # 1.5k keys). Rows arrive hash-partitioned by key and sorted by
-        # (key, order), so key spans are contiguous: boundaries are one
-        # vectorized null-safe key-change scan per Arrow chunk, flag
-        # columns convert to numpy once per processed block, and each
-        # key's matcher sees zero-copy slices.
+        # ONE call per shuffle PARTITION, not per key (a per-key Arrow
+        # round-trip costs milliseconds per key). Rows arrive
+        # hash-partitioned by key and sorted by (key, order), so key spans
+        # are contiguous: boundaries are one vectorized null-safe
+        # key-change scan per Arrow chunk, flag columns convert to numpy
+        # once per processed block, and each key's matcher sees zero-copy
+        # slices.
         #
-        # r13 (VERDICT r12 item 2 / ADVICE r12): Arrow chunks stream
-        # INCREMENTALLY — each chunk is processed as soon as its complete
+        # Arrow chunks stream INCREMENTALLY — each chunk is processed as soon as its complete
         # key spans are known, and only the trailing OPEN span (a key that
         # may continue into the next chunk) is carried forward. MEMORY
         # CONTRACT: peak held rows = one Arrow chunk (bounded by
@@ -1415,9 +1301,8 @@ def match_recognize(
             *partition_by, *order_by
         )
     else:
-        # ADVICE r12: partition_by=[] is ONE logical partition — the
-        # grouped-map path ran it as a single global group; repartition()
-        # with zero columns both raises and would split it. One task by
+        # partition_by=[] is ONE logical partition; repartition() with
+        # zero columns both raises and would split it. One task by
         # necessity (Trino's unpartitioned MATCH_RECOGNIZE is equally
         # serial) — fine for dims, not for facts.
         shuffled = flagged.coalesce(1).sortWithinPartitions(*order_by)
@@ -1449,7 +1334,7 @@ def match_recognize(
             return (
                 out.groupBy(*partition_by, "match_no").agg(*aggs).drop("match_no")
             )
-        # ALL ROWS PER MATCH + MEASURES (r12): per-row window expressions
+        # ALL ROWS PER MATCH + MEASURES: per-row window expressions
         # over (partition, match_no) ordered by match_row — RUNNING = frame
         # up to the current row (Trino's all-rows default), FINAL = the
         # whole match. Same shuffle key the matcher already grouped by.
@@ -1468,9 +1353,9 @@ def match_recognize(
     return out
 
 
-# --------------------------------------------------- MEASURES (r11/r12)
+# ------------------------------------------------------------- MEASURES
 def _balanced(s: str) -> bool:
-    """ADVICE r11: the measure sugar regexes capture greedily, so a
+    """The measure sugar regexes capture greedily, so a
     compound like ``SUM(a) + COUNT(b)`` would parse as SUM of ``a) +
     COUNT(b``. Only take a sugar path when the captured inner expression
     has balanced parentheses; otherwise fall through to the raw-SQL
@@ -1499,7 +1384,7 @@ def _measure_column(
     match's ALL-ROWS group — FINAL semantics (RUNNING at the last row ≡
     FINAL, so a RUNNING/FINAL prefix is accepted and ignored).
 
-    ``mode="all"`` (r12 — ALL ROWS PER MATCH + MEASURES): a per-row Column
+    ``mode="all"`` (ALL ROWS PER MATCH + MEASURES): a per-row Column
     over the provided match windows — ``w_run`` (rows up to and including
     the current row: Trino's all-rows DEFAULT, RUNNING semantics) or
     ``w_fin`` (the whole match) when the measure carries a ``FINAL``
@@ -1529,7 +1414,7 @@ def _measure_column(
             return c
         return c.over(w_fin if sem == "final" else w_run)
 
-    #: an EMPTY match (r12, SHOW EMPTY MATCHES) emits one carrier row with
+    #: an EMPTY match (SHOW EMPTY MATCHES) emits one carrier row with
     #: NULL match_row; measures must evaluate over ZERO rows there —
     #: unscoped values gate on this (scoped ones gate on classifier,
     #: which is NULL on the carrier row already)
@@ -1613,43 +1498,21 @@ def _stream_scan(
     frontier: int,
     after_match,
 ) -> tuple[list[tuple[int, list[str]]], int]:
-    """One trigger's scan over a key's time-sorted buffer (r12 — VERDICT
-    r11 item 3, the vectorized replacement for the per-row ``_match_from``
-    retry loop): candidate starts are pre-filtered to rows where one of the
-    compiled start state's consume symbols fires (one vectorized OR over
-    the flag arrays — non-candidate rows cost zero Python steps), and each
-    candidate runs the iterative compiled backtracker bounded to its
-    WITHIN-span. Only starts whose whole span is strictly past the
-    watermark are scanned (``ts + within < frontier`` — determinism under
-    any micro-batch chopping).
+    """One trigger's scan over a key's time-sorted buffer: ``_scan`` over
+    the candidate starts whose whole WITHIN span is strictly past the
+    watermark (``ts + within < frontier``, which makes the result
+    independent of micro-batch chopping), each bounded to its own span.
 
     Returns ``(matches, keep_from)``: matches as (start_idx, classifiers),
-    and the eviction point — every row before it is either consumed, or a
+    and the eviction point. Every row before it is either consumed, or a
     non-candidate whose event time is too old (< frontier − within) to
     serve any future admitted start."""
     import numpy as np
 
-    n = len(ts)
     fin_end = int(np.searchsorted(ts, frontier - within_us, side="left"))
-    cand = np.zeros(n, dtype=bool)
-    for m in moves[start]:
-        if m[0] == "c":
-            cand |= fa[m[1]][:n]
-    cand_idx = np.flatnonzero(cand[:fin_end])
-    budget = [float("inf")]
-    out: list[tuple[int, list[str]]] = []
-    i = 0
-    for j in cand_idx:
-        j = int(j)
-        if j < i:
-            continue
-        end = int(np.searchsorted(ts, ts[j] + within_us, side="right"))
-        hit = _backtrack_first(moves, fa, end, start, j, budget)
-        if hit is not None and hit[0] > j:
-            out.append((j, hit[1]))
-            i = _advance(j, hit[1], after_match)
-        else:
-            i = j + 1
+    cand_idx = _candidates(moves, start, fa, fin_end)
+    ends = np.searchsorted(ts, ts[cand_idx] + within_us, side="right").tolist()
+    out, i = _scan(moves, start, fa, cand_idx, ends, after_match)
     return out, max(i, fin_end)
 
 
@@ -1694,12 +1557,12 @@ def _parse_stream_measure(expr: str, symbols: list[str], id_col: str, ts_col: st
         f"unsupported streaming measure {expr!r}: use COUNT(*)/COUNT(S.*)/"
         f"CLASSIFIER()/FIRST|LAST({id_col}|{ts_col}[, k]), or a value-column "
         "aggregate SUM/AVG/MIN/MAX/COUNT/FIRST/LAST([S.]<numeric col>[, k]) "
-        "(r13 — the referenced column is projected into state as double)"
+        "(the referenced column is projected into state as double)"
     )
 
 
 def _parse_stream_value_measure(expr: str, symbols: list[str], value_cols):
-    """One VALUE-COLUMN streaming measure (r13 — VERDICT r12 item 3) →
+    """One VALUE-COLUMN streaming measure →
     ``(evaluator, ddl_type, column)``. The evaluator runs per finalized
     match over ``(ids, tss, classifiers, vals)`` where ``vals`` maps each
     referenced column to its float64 span — the column is PROJECTED into
@@ -1777,7 +1640,7 @@ def match_recognize_stream(
     after_match: str = "skip_past_last",
     measures: "dict[str, str] | None" = None,
 ) -> DataFrame:
-    """Streaming MATCH_RECOGNIZE (r11) — CEP over a Structured Stream via
+    """Streaming MATCH_RECOGNIZE — CEP over a Structured Stream via
     ``applyInPandasWithState``, with Flink-CEP-style ``WITHIN`` semantics:
     a match must complete inside ``within`` of its first row's event time
     (the bound that makes per-key state FINITE — O(events in one within-
@@ -1797,11 +1660,11 @@ def match_recognize_stream(
     Output (append mode): one row per MATCHED row — (key, start_id, id,
     ts, classifier, match_row); ``start_id`` (the match's first row id) is
     the stable per-match grouping key for measures, numbering-free across
-    triggers. With ``measures`` (r12 — VERDICT r11 item 5) the stream
+    triggers. With ``measures`` the stream
     emits ONE row per match instead: (key, start_id, <measures...>),
     aggregated in-state before emission. Grammar: COUNT(*) / COUNT(S.*) /
     CLASSIFIER() / FIRST|LAST(id|ts[, k]) over the columns state always
-    carries, plus (r13 — VERDICT r12 item 3) VALUE-COLUMN aggregates —
+    carries, plus VALUE-COLUMN aggregates —
     ``SUM/AVG/MIN/MAX/COUNT([S.]col)``, ``FIRST/LAST([S.]col[, k])`` over
     any numeric source column: each referenced column (and ONLY those) is
     projected into state as double, +8 bytes/row/column within the same
@@ -1812,7 +1675,7 @@ def match_recognize_stream(
     Spark's multi-stateful correctness check refuses the downstream
     join/agg — projected state keeps one operator, one watermark,
     deterministic results.
-    ``after_match`` (r12): all four batch SKIP modes stream too —
+    ``after_match``: all four batch SKIP modes stream too —
     ``skip_to_next_row`` / ``skip_to_first|last <symbol>`` produce
     overlapping matches exactly like batch, still watermark-finalized.
     DEFINE conditions are SQL strings over the row's columns (evaluated
@@ -1822,11 +1685,9 @@ def match_recognize_stream(
     must be bigint; ``ts_col`` must be TIMESTAMP (watermarks reject NTZ)
     — micros round-trip through state as int64.
 
-    The per-trigger matcher is the COMPILED backtracker over candidate
-    starts (r12 — see ``_stream_scan``): DEFINE bits arrive packed in one
-    int64 word, candidates are one vectorized mask, and dense buffers no
-    longer pay O(span²) generator steps per trigger (≥3× pinned in
-    tests/test_streaming_cep.py)."""
+    The per-trigger matcher is the batch automaton matcher's ``_scan``
+    over candidate starts, each bounded to its WITHIN span (see
+    ``_stream_scan``); DEFINE bits arrive packed in one int64 word."""
     import pandas as _pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -1852,7 +1713,7 @@ def match_recognize_stream(
     within_us = int(_pd.Timedelta(within).total_seconds() * 1_000_000)
     if within_us <= 0:
         raise ValueError(f"within must be a positive duration, got {within!r}")
-    # measures (r12 lean grammar; r13 adds value-column aggregates whose
+    # measures: the lean grammar plus value-column aggregates whose
     # referenced columns are projected into state as double — never the
     # whole row, and never a downstream join-back, which Spark's
     # multi-stateful correctness check rightly refuses)
@@ -1915,7 +1776,7 @@ def match_recognize_stream(
         F.col(ts_col),
         F.col(id_col),
         flag_word.cast("bigint").alias("_mr_flags"),
-        # r13: only the columns value measures reference ride into state
+        # only the columns value measures reference ride into state
         *[F.col(c).cast("double").alias(f"_mr_v_{c}") for c in needed],
     )
 
@@ -2147,7 +2008,7 @@ def pattern_match_recognize_funnel(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def pattern_measures_one_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trino's MEASURES clause + ONE ROW PER MATCH + SUBSET (r11): the
+    """Trino's MEASURES clause + ONE ROW PER MATCH + SUBSET: the
     funnel emitting one row per match straight from ``measures=`` —
     MATCH_NUMBER(), FIRST/LAST with offsets, symbol- and SUBSET-scoped
     COUNT, CLASSIFIER(), and the raw-SQL escape hatch (a decimal-cast SUM
@@ -2205,7 +2066,7 @@ def pattern_measures_one_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pattern_skip_to_last_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AFTER MATCH SKIP TO LAST C (r11): PATTERN (C C) over clicks with the
+    """AFTER MATCH SKIP TO LAST C: PATTERN (C C) over clicks with the
     scan resuming AT each match's last row — a run of k clicks yields k−1
     OVERLAPPING adjacent pairs (skip_past_last would give ⌊k/2⌋). The
     DuckDB oracle is the closed form: every click whose next event (in the
@@ -2256,7 +2117,7 @@ def pattern_skip_to_last_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pattern_prev_navigation_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PATTERN (A D+) with DEFINE D AS value < PREV(value) — Trino's
-    physical-row navigation in DEFINE (r11): maximal strictly-decreasing
+    physical-row navigation in DEFINE: maximal strictly-decreasing
     value runs per user, the classic falling-price MATCH_RECOGNIZE. PREV
     rewrites to a lag window over (user, event-time) before flag
     evaluation, so the matcher still sees only a bit-matrix.
@@ -2306,10 +2167,10 @@ def pattern_prev_navigation_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pattern_bounded_quantifier_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PATTERN (V C{2,4} P) — Trino's bounded quantifier (r11): a view,
+    """PATTERN (V C{2,4} P) — Trino's bounded quantifier: a view,
     then two-to-four contiguous clicks, then a purchase. The parser
-    desugars ``{n,m}`` into right-nested greedy optionals, so the compiled
-    product matcher runs it (the desugared form is non-linear).
+    desugars ``{n,m}`` into right-nested greedy optionals, so the
+    automaton matcher runs it (the desugared form is non-linear).
 
     Closed-form oracle: the pattern consumes contiguous rows, so a match
     exists iff the last non-click row before a purchase is a view at
@@ -2367,8 +2228,7 @@ def pattern_bounded_quantifier_funnel(spark: SparkSession, sf_dir: str) -> DataF
 )
 def pattern_alternation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PATTERN (V (C | E)+ P) — a NON-LINEAR pattern (alternation inside a
-    quantified group) through the r11 product-construction vectorized
-    matcher: a view, then one-or-more clicks-OR-errors, then a purchase, per
+    quantified group) through the automaton matcher: a view, then one-or-more clicks-OR-errors, then a purchase, per
     user in event-time order. The reference's inherited engine suite names
     these shapes (``common-test/TestTrinoDistributedQuery.java:91,486``).
 
@@ -2435,7 +2295,7 @@ def pattern_alternation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pattern_running_measures_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trino's ALL ROWS PER MATCH + MEASURES with RUNNING vs FINAL
-    semantics (r12 — VERDICT r11 item 1a/1b): every matched funnel row
+    semantics: every matched funnel row
     carries running aggregates over the match prefix (COUNT(*) ordinal,
     click count, a decimal-exact running value sum) alongside FINAL
     whole-match values (click total, last event id) and the per-row
@@ -2505,7 +2365,7 @@ def pattern_running_measures_all_rows(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def pattern_exclusion_funnel_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pattern exclusion ``V {- C+ -} P`` (r12 — VERDICT r11 item 1d): the
+    """Pattern exclusion ``V {- C+ -} P``: the
     clicks MATCH (the funnel still requires them, SKIP still advances past
     them) but are omitted from the all-rows output — only the V and P edge
     rows emit, with match_row keeping its true in-match position (the P
@@ -2556,7 +2416,7 @@ def pattern_exclusion_funnel_edges(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def pattern_unmatched_rows_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ALL ROWS PER MATCH WITH UNMATCHED ROWS (r12 — VERDICT r11 item 1c):
+    """ALL ROWS PER MATCH WITH UNMATCHED ROWS:
     every event row emits — matched rows with their classifier, unmatched
     rows with NULL match columns — so matched/unmatched row counts per
     user reconcile exactly against the closed-form match lengths (the
@@ -2604,7 +2464,7 @@ def pattern_unmatched_rows_coverage(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def pattern_end_anchor_trailing_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition end anchor ``C+ $`` (r12 — VERDICT r11 item 1d): the
+    """Partition end anchor ``C+ $``: the
     match must END at the user's last event, so the leftmost-greedy scan
     finds exactly the MAXIMAL trailing click run (earlier click runs never
     match — their greedy completion stops short of the partition end).
@@ -2663,7 +2523,7 @@ def pattern_end_anchor_trailing_run(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def pattern_show_empty_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trino's SHOW EMPTY MATCHES — the ALL ROWS PER MATCH default (r12):
+    """Trino's SHOW EMPTY MATCHES — the ALL ROWS PER MATCH default:
     PATTERN (E*) per user matches every maximal error run, and EVERY other
     scanned row hosts an EMPTY match — numbered like any match, emitted as
     one carrier row with NULL classifier/match_row and zero-row measures
@@ -2717,8 +2577,7 @@ def pattern_show_empty_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pattern_sql_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATCH_RECOGNIZE as a SQL CLAUSE through ``cat.sql`` (r13 — VERDICT
-    r12 item 1, the last spelled-surface delta vs Trino): the full Trino
+    """MATCH_RECOGNIZE as a SQL CLAUSE through ``cat.sql``: the full Trino
     grammar — PARTITION BY / ORDER BY / MEASURES / ONE ROW PER MATCH /
     AFTER MATCH SKIP / PATTERN / DEFINE — parses in
     ``catalog/wh_sql.py`` and lowers to the keyword-API operator; a user

@@ -208,10 +208,13 @@ def _manifest_stream(
     are the offsets, per-trigger re-planned — no build-time listing
     anywhere. Output columns match the files mode exactly (shared
     ``stream_output_columns``)."""
+    from incubator_paimon_trino_spark.formats.file_reader import (
+        restore_transported,
+        transport_schema,
+    )
     from incubator_paimon_trino_spark.streaming.manifest_source import (
         PaimonManifestSource,
         stream_output_columns,
-        transport_ddl,
         validate_partition_types,
     )
 
@@ -219,36 +222,18 @@ def _manifest_stream(
     cat.spark.dataSource.register(PaimonManifestSource)
     dv = cat._dv_enabled(schema)
     out_cols = stream_output_columns(schema, dv)
-    # TIME transport (r10): the Python DataSource Arrow bridge rejects
-    # arrow time64 (UNSUPPORTED_ARROWTYPE), so TIME columns cross the
-    # bridge as bigint MICROS and a make_time projection restores the
-    # declared type Spark-side — schema-identical to files mode.
-    time_cols = [(n, t) for n, t in out_cols if transport_ddl(t) != t]
-    ddl = ", ".join(f"`{n}` {transport_ddl(t)}" for n, t in out_cols)
     reader = (
         cat.spark.readStream.format("paimon_manifest")
         .option("tdir", tdir)
         .option("from_version", str(from_version or 0))
         .option("dv", "1" if dv else "0")
-        .option("schema_ddl", ddl)
+        .option("schema_ddl", transport_schema(out_cols))
     )
     if max_commits_per_trigger is not None:
         reader = reader.option("max_commits_per_trigger", str(max_commits_per_trigger))
     if split_target_bytes is not None:
         reader = reader.option("split_target_bytes", str(split_target_bytes))
-    df = reader.load()
-    for n, t in time_cols:
-        df = df.withColumn(
-            n,
-            F.expr(
-                f"make_time(cast(`{n}` div 3600000000 as int), "
-                f"cast((`{n}` % 3600000000) div 60000000 as int), "
-                f"cast((`{n}` % 60000000) as decimal(16,6)) / 1000000)"
-            ).cast(t),
-        )
-    if time_cols:
-        df = df.select(*[n for n, _ in out_cols])  # declared column order
-    return df
+    return restore_transported(reader.load(), out_cols)
 
 
 def _data_file_tail(

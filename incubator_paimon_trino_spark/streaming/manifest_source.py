@@ -124,16 +124,6 @@ def stream_output_columns(schema: TableSchema, dv: bool) -> list[tuple[str, str]
     return cols
 
 
-def transport_ddl(ddl: str) -> str:
-    """The type a column crosses the Python DataSource Arrow bridge as:
-    TIME travels as bigint MICROS (the bridge rejects arrow time64 with
-    UNSUPPORTED_ARROWTYPE); ``changelog._manifest_stream`` restores the
-    declared type with a make_time projection Spark-side. Everything else
-    is bridge-safe as-is."""
-    s = ddl.strip().lower()
-    return "bigint" if s == "time" or s.startswith("time(") else ddl
-
-
 class _ManifestStreamReader(DataSourceStreamReader):
     """Offsets = committed snapshot ids; partitions planned per micro-batch
     from the manifests. Runs in Spark's driver-side Python worker (planning,
@@ -243,9 +233,7 @@ class _ManifestStreamReader(DataSourceStreamReader):
         self._planned = max(self._planned or 0, lo, hi)
         snaps = load_snapshots(self.tdir)
         current = _latest_schema(self.tdir)
-        out_cols = [
-            (n, transport_ddl(t)) for n, t in stream_output_columns(current, self.dv)
-        ]
+        out_cols = stream_output_columns(current, self.dv)
         by_id = {s.snapshot_id: s for s in snaps}
         ids = [s.snapshot_id for s in snaps if lo < s.snapshot_id <= hi]
         prev_id = max((s.snapshot_id for s in snaps if s.snapshot_id <= lo), default=0)

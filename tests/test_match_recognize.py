@@ -7,7 +7,9 @@ value-hash-checked against DuckDB by tools/check.py separately.
 
 from __future__ import annotations
 
+import signal
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -201,13 +203,11 @@ def test_compiled_nfa_shape():
 
 
 def test_product_path_equals_nfa_exhaustively():
-    """Property pin (the linear pin's twin, r11): on every flag matrix the
-    product-construction matcher is RESULT-IDENTICAL to the backtracking
+    """Property pin (the linear pin's twin): on every flag matrix the
+    compiled-automaton matcher is RESULT-IDENTICAL to the backtracking
     NFA — same starts, classifiers, preference order, both after_match
-    modes, on BOTH dispatch arms (candidate-driven backtracking and the
-    matrix-scan feasibility table, forced via _sparse_frac) with tiny
-    blocks so block boundaries are exercised. Exhaustive over all 3-symbol
-    row strings up to length 6, plus randomized independent flags."""
+    modes. Exhaustive over all 3-symbol row strings up to length 6, plus
+    randomized independent flags."""
     import itertools
     import random
 
@@ -229,11 +229,8 @@ def test_product_path_equals_nfa_exhaustively():
                 flags = {s: [c == s for c in seq] for s in "ABC"}
                 for am in ("skip_past_last", "skip_to_next_row"):
                     slow = find_matches(ast, flags, n, am)
-                    for sf in (0.0, 1.0):
-                        fast = find_matches_product(
-                            moves, start, flags, n, am, _block=4, _sparse_frac=sf
-                        )
-                        assert fast == slow, (pat, "".join(seq), am, sf, fast, slow)
+                    fast = find_matches_product(moves, start, flags, n, am)
+                    assert fast == slow, (pat, "".join(seq), am, fast, slow)
     rng = random.Random(7)
     for pat in patterns:
         ast = parse_pattern(pat)
@@ -243,36 +240,79 @@ def test_product_path_equals_nfa_exhaustively():
             flags = {s: [rng.random() < 0.45 for _ in range(n)] for s in "ABC"}
             for am in ("skip_past_last", "skip_to_next_row"):
                 slow = find_matches(ast, flags, n, am)
-                for sf in (0.0, 1.0):
-                    fast = find_matches_product(
-                        moves, start, flags, n, am, _block=8, _sparse_frac=sf
-                    )
-                    assert fast == slow, (pat, n, am, sf)
+                fast = find_matches_product(moves, start, flags, n, am)
+                assert fast == slow, (pat, n, am)
 
 
-def test_backtrack_budget_falls_back_to_matrix_path():
-    """The candidate-driven arm abandons under its step budget and the
-    matrix path takes over — forced here with a budget-starving pattern."""
+@contextmanager
+def _deadline(seconds: float):
+    """Fail the enclosed block by SIGALRM once ``seconds`` pass, so a
+    matcher that runs for an exponential time fails instead of hanging."""
+
+    def expire(signum, frame):
+        raise TimeoutError(f"matcher ran past {seconds}s")
+
+    prev = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, prev)
+
+
+def test_backtracking_is_linear_on_ambiguous_patterns():
+    """Ambiguous alternations inside quantifiers have exponentially many
+    ways to split an all-A run; the dead-state memo visits each (state,
+    row) pair once. ``(A | A A){1,35} B`` compiles to 72 states; 40 all-A
+    rows without a B finish in well under a second."""
     from incubator_paimon_trino_spark.operators.match_recognize import (
         compile_nfa,
         find_matches_product,
     )
 
-    # (A A | A)+ B over a long all-A run backtracks exponentially; the
-    # budget must trip and the matrix path must still give the NFA answer
-    # (checked against the matrix arm, which is NFA-pinned above).
-    pat = parse_pattern("(A A | A)+ B")
-    moves, start = compile_nfa(pat)
-    n = 64
+    ast = parse_pattern("(A | A A){1,35} B")
+    moves, start = compile_nfa(ast)
+    assert len(moves) == 72
+    n = 40
     flags = {"A": [True] * n, "B": [False] * n}
-    dense = find_matches_product(moves, start, flags, n, "skip_past_last", _sparse_frac=0.0)
-    sparse = find_matches_product(moves, start, flags, n, "skip_past_last", _sparse_frac=1.0)
-    assert dense == sparse == []
+    with _deadline(1.0):
+        assert find_matches_product(moves, start, flags, n, "skip_past_last") == []
+    # a B at the end: 35 iterations cover the 39 A rows only by mixing in
+    # A A pairs, so the one match spans the whole partition
+    flags = {"A": [True] * (n - 1) + [False], "B": [False] * (n - 1) + [True]}
+    with _deadline(1.0):
+        got = find_matches_product(moves, start, flags, n, "skip_past_last")
+    assert got == find_matches(ast, flags, n, "skip_past_last")
+    assert [(j, len(cls)) for j, cls in got] == [(0, n)]
+
+
+def test_stream_scan_is_linear_on_ambiguous_patterns():
+    """The streaming scan runs the same memoized matcher per WITHIN span:
+    ``(A | A A)+ B`` over 40 all-A rows, one a second, all inside one
+    WITHIN and past the watermark, finishes in well under a second."""
+    import numpy as np
+
+    from incubator_paimon_trino_spark.operators.match_recognize import (
+        _stream_scan,
+        compile_nfa,
+    )
+
+    moves, start = compile_nfa(parse_pattern("(A | A A)+ B"))
+    n = 40
+    ts = np.arange(n, dtype=np.int64) * 1_000_000
+    within_us = 10 * 3600 * 1_000_000
+    frontier = int(ts[-1]) + 2 * within_us
+    flags = {"A": np.ones(n, dtype=bool), "B": np.zeros(n, dtype=bool)}
+    with _deadline(1.0):
+        got, keep_from = _stream_scan(
+            moves, start, flags, ts, within_us, frontier, "skip_past_last"
+        )
+    assert got == [] and keep_from == n
 
 
 def test_e2e_spark_plan_nonlinear(spark):
-    """Alternation pattern end-to-end through applyInPandas (r11: the fence
-    is lifted — no allow_python_nfa needed)."""
+    """Alternation pattern end-to-end through the automaton matcher."""
     df = spark.createDataFrame(
         [(1, 1, "a"), (1, 2, "b"), (1, 3, "c")], "u int, ts int, e string"
     )
@@ -284,26 +324,22 @@ def test_e2e_spark_plan_nonlinear(spark):
 
 
 def test_nullable_body_quantifier_vectorizes(spark):
-    """r12 (VERDICT r11 item 2): the fence is GONE — quantified nullable
-    groups normalize at parse time to their non-nullable equivalent and run
-    the vectorized matchers; allow_python_nfa is an accepted no-op."""
+    """Quantified nullable groups normalize at parse time to their
+    non-nullable equivalent and run the automaton matcher."""
     df = spark.createDataFrame(
         [(1, 1, "a"), (1, 2, "b")], "u int, ts int, e string"
     )
     define = {"A": "e = 'a'", "B": "e = 'b'"}
     out = match_recognize(df, ["u"], ["ts"], "(A?)+ B", define)
     assert out.count() == 2  # A then B in one match
-    # back-compat: the old opt-in parameter is still accepted
-    out2 = match_recognize(df, ["u"], ["ts"], "(A?)+ B", define, allow_python_nfa=True)
-    assert out2.count() == 2
 
 
 def test_nullable_rewrite_equals_nfa_exhaustively():
     """r12 pin (the product pin's twin for the parse-time rewrite): on every
     flag matrix, the REWRITTEN pattern through the vectorized matchers is
     result-identical to the original pattern through the backtracking NFA —
-    same starts, classifiers, preference order, both after_match modes,
-    both product arms. Exhaustive to length 6 plus randomized independent
+    same starts, classifiers, preference order, both after_match modes.
+    Exhaustive to length 6 plus randomized independent
     flags, over greedy/reluctant/alternation/sequence nullable bodies."""
     import itertools
     import random
@@ -335,9 +371,7 @@ def test_nullable_rewrite_equals_nfa_exhaustively():
                     if atoms is not None:
                         fast = find_matches_linear(atoms, flags, n, am)
                     else:
-                        fast = find_matches_product(
-                            moves, start, flags, n, am, _block=4, _sparse_frac=0.0
-                        )
+                        fast = find_matches_product(moves, start, flags, n, am)
                     assert fast == slow, (pat, "".join(seq), am, fast, slow)
     rng = random.Random(12)
     for pat in patterns:
@@ -349,11 +383,8 @@ def test_nullable_rewrite_equals_nfa_exhaustively():
             flags = {s: [rng.random() < 0.45 for _ in range(n)] for s in "ABC"}
             for am in ("skip_past_last", "skip_to_next_row"):
                 slow = find_matches(ast, flags, n, am)
-                for sf in (0.0, 1.0):
-                    fast = find_matches_product(
-                        moves, start, flags, n, am, _block=8, _sparse_frac=sf
-                    )
-                    assert fast == slow, (pat, n, am, sf)
+                fast = find_matches_product(moves, start, flags, n, am)
+                assert fast == slow, (pat, n, am)
 
 
 def test_anchors_equal_nfa_exhaustively():
@@ -378,12 +409,10 @@ def test_anchors_equal_nfa_exhaustively():
                     flags = {s: [c == s for c in seq] for s in "ABC"}
                     for am in ("skip_past_last", "skip_to_next_row"):
                         slow = find_matches(ast, flags, n, am, sa, se)
-                        for sf in (0.0, 1.0):
-                            fp = find_matches_product(
-                                moves, start, flags, n, am, _block=4,
-                                _sparse_frac=sf, start_anchor=sa, end_anchor=se,
-                            )
-                            assert fp == slow, (pat, "".join(seq), am, sa, se, sf)
+                        fp = find_matches_product(
+                            moves, start, flags, n, am, start_anchor=sa, end_anchor=se
+                        )
+                        assert fp == slow, (pat, "".join(seq), am, sa, se)
                         if atoms is not None:
                             fl = find_matches_linear(atoms, flags, n, am, sa, se)
                             assert fl == slow, (pat, "".join(seq), am, sa, se)
@@ -415,42 +444,30 @@ def test_anchor_parse_and_e2e(spark):
     assert [r["ts"] for r in out2] == [1]
 
 
-def test_matrix_state_cap_and_block_scaling():
-    """ADVICE r11: automatons beyond _MATRIX_STATE_CAP never build (b,Q+1,Q+1)
-    blocks — the compiled DFS handles them (result-pinned vs the NFA); under
-    the cap the block length scales to the memory budget."""
+def test_large_automaton_equals_nfa():
+    """PERMUTE(5) compiles to hundreds of states; the compiled matcher
+    still gives the backtracking NFA's answer."""
     from incubator_paimon_trino_spark.operators.match_recognize import (
-        _MATRIX_STATE_CAP,
         compile_nfa,
         find_matches_product,
     )
 
-    # PERMUTE(5) compiles to hundreds of states — over the cap
     ast = parse_pattern("PERMUTE(A, B, C, D, E)")
     moves, start = compile_nfa(ast)
-    assert len(moves) + 1 > _MATRIX_STATE_CAP
+    assert len(moves) > 100
     seq = "DABEC" + "ACBDE" + "AAAAA"
     flags = {s: [c == s for c in seq] for s in "ABCDE"}
     n = len(seq)
     slow = find_matches(ast, flags, n, "skip_past_last")
-    # dense flags (sparse dispatch off) force the over-cap arm
-    fast = find_matches_product(moves, start, flags, n, "skip_past_last", _sparse_frac=0.0)
+    fast = find_matches_product(moves, start, flags, n, "skip_past_last")
     assert fast == slow and len(fast) == 2
-    # under the cap: a huge explicit _block is clamped by the budget, the
-    # answer is unchanged (block boundaries already exercised elsewhere)
-    ast2 = parse_pattern("(A | B) C+")
-    moves2, start2 = compile_nfa(ast2)
-    flags2 = {s: [c == s for c in "ACCBCC"] for s in "ABC"}
-    got = find_matches_product(moves2, start2, flags2, 6, "skip_past_last",
-                               _block=1 << 30, _sparse_frac=0.0)
-    assert got == find_matches(ast2, flags2, 6, "skip_past_last")
 
 
 def test_bounded_quantifiers_desugar_and_match():
     """r11: {n} / {n,} / {n,m} desugar into the three core forms with greedy
     preference preserved — pinned against Python's re engine (an INDEPENDENT
-    leftmost-greedy reference) and against the backtracking NFA on both
-    product-matcher arms, exhaustively to length 6."""
+    leftmost-greedy reference) and against the backtracking NFA through the
+    automaton matcher, exhaustively to length 6."""
     import itertools
     import re as _re
 
@@ -486,11 +503,8 @@ def test_bounded_quantifiers_desugar_and_match():
                 flags = {sym: [c == sym for c in seq] for sym in "ABC"}
                 got = find_matches(ast, flags, n, "skip_past_last")
                 assert [(st, len(cls)) for st, cls in got] == re_reference(rx, s), (pat, s)
-                for sf in (0.0, 1.0):
-                    fast = find_matches_product(
-                        moves, start, flags, n, "skip_past_last", _block=4, _sparse_frac=sf
-                    )
-                    assert fast == got, (pat, s, sf)
+                fast = find_matches_product(moves, start, flags, n, "skip_past_last")
+                assert fast == got, (pat, s)
     with pytest.raises(ValueError):
         parse_pattern("A{3,2}")
     with pytest.raises(ValueError):
@@ -502,7 +516,7 @@ def test_bounded_quantifiers_desugar_and_match():
 def test_reluctant_quantifiers_match_re_reference():
     """r11: reluctant quantifiers (+? *? ?? {n,m}?) — preference order
     flips to FEWER rows first, pinned against Python's re engine and the
-    product matcher on both arms, exhaustively to length 6. Reluctant
+    automaton matcher, exhaustively to length 6. Reluctant
     patterns never take the linear path (its recurrences assume greedy)."""
     import itertools
     import re as _re
@@ -542,11 +556,8 @@ def test_reluctant_quantifiers_match_re_reference():
                 flags = {sym: [c == sym for c in seq] for sym in "ABC"}
                 got = find_matches(ast, flags, n, "skip_past_last")
                 assert [(st, len(c)) for st, c in got] == re_reference(rx, s), (pat, s)
-                for sf in (0.0, 1.0):
-                    fast = find_matches_product(
-                        moves, start, flags, n, "skip_past_last", _block=4, _sparse_frac=sf
-                    )
-                    assert fast == got, (pat, s, sf)
+                fast = find_matches_product(moves, start, flags, n, "skip_past_last")
+                assert fast == got, (pat, s)
 
 
 def test_permute_desugars_to_preference_ordered_alternation():
@@ -587,7 +598,7 @@ def test_permute_desugars_to_preference_ordered_alternation():
                 flags = {sym: [c == sym for c in seq] for sym in "ABC"}
                 got = find_matches(ast, flags, n, "skip_past_last")
                 assert [(st, len(c)) for st, c in got] == re_reference(rx, s), (pat, s)
-                fast = find_matches_product(moves, start, flags, n, "skip_past_last", _block=4)
+                fast = find_matches_product(moves, start, flags, n, "skip_past_last")
                 assert fast == got, (pat, s)
     with pytest.raises(ValueError, match="PERMUTE"):
         parse_pattern("PERMUTE(A, B, C, D, E, F, G)")
@@ -657,7 +668,7 @@ def test_after_match_skip_to_first_last():
     got = find_matches(ast, flags, 5, ("last", "B"))
     assert got == [(0, ["A", "B", "B"]), (3, ["A", "B"])]
     moves, start = compile_nfa(ast)
-    assert find_matches_product(moves, start, flags, 5, ("last", "B"), _block=4) == got
+    assert find_matches_product(moves, start, flags, 5, ("last", "B")) == got
     # chained overlap: C C over a click run with skip_to_last
     ast2 = parse_pattern("C C")
     f2 = {"C": [True, True, True, True]}

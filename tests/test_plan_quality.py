@@ -589,7 +589,7 @@ def test_dynamic_bucket_read_has_no_bucket_column_and_no_extra_exchange(spark):
 
 
 def test_alternation_funnel_single_user_shuffle_no_python_rows(spark):
-    """r11 pattern_alternation_funnel (product-construction matcher): one
+    """pattern_alternation_funnel (the automaton matcher): one
     hash exchange keyed by user (the same shuffle any per-user window
     needs) feeds the Arrow-batched matcher; the measures groupBy reuses
     that partitioning (no second full-data exchange of the events), and no

@@ -1,10 +1,13 @@
 """The one Python data-file reader (``formats/file_reader``): the modules
-below the streaming layer never import it, and batch reads through the
-reader pack a many-small-file table into one read task."""
+below the streaming layer never import it, batch reads through the reader
+pack a many-small-file table into one read task, TIME columns cross its
+Arrow bridge, and the writer publishes no empty data files."""
 
 from __future__ import annotations
 
 import ast
+import glob
+import os
 import sys
 from pathlib import Path
 
@@ -55,7 +58,9 @@ def cat(spark, tmp_path):
 def test_many_small_files_read_in_one_task(cat, spark, monkeypatch, fmt, with_pos):
     """Eight one-row commits: every file is far below the ~64 MiB packing
     target, so the Python reader plans ONE read task for them, and the
-    positional read numbers each file's rows from 0."""
+    positional read numbers each file's rows from 0. An empty write task
+    still leaves an ORC file; the commit drops it, so the snapshot lists
+    exactly the eight files that hold rows."""
     if not with_pos:
         # the fallback runs where spark-avro is absent: make the native
         # load of the avro files fail the way it does there
@@ -81,7 +86,7 @@ def test_many_small_files_read_in_one_task(cat, spark, monkeypatch, fmt, with_po
         )
     tdir = cat._table_dir("d", "t")
     snap = cat._snapshots(tdir)[-1]
-    assert len(snap.files) >= 8
+    assert [f["record_count"] for f in snap.files] == [1] * 8
     df = cat._read_files(tdir, cat._latest_schema(tdir), snap, with_pos=with_pos)
     assert df.rdd.getNumPartitions() == 1
     rows = df.collect()
@@ -90,5 +95,50 @@ def test_many_small_files_read_in_one_task(cat, spark, monkeypatch, fmt, with_po
         by_file: dict[str, list[int]] = {}
         for r in rows:
             by_file.setdefault(r["__dv_file"], []).append(r["__dv_pos"])
-        assert len(by_file) == sum(1 for f in snap.files if f["record_count"])
+        assert len(by_file) == 8
         assert all(sorted(ps) == list(range(len(ps))) for ps in by_file.values())
+
+
+@pytest.mark.parametrize("pk", [["k"], None], ids=["pk", "append"])
+def test_avro_time_column_round_trip(cat, spark, pk):
+    """TIME crosses the Python reader's Arrow bridge as bigint micros and
+    reads back as TIME, through the Avro writer and reader (the fallback
+    ones where spark-avro is absent)."""
+    import datetime as dt
+
+    cat.create_database("d")
+    cat.create_table(
+        "d", "t", [("k", "bigint"), ("t", "time(6)")],
+        primary_key=pk, options={"file_format": "avro"},
+    )
+    cat.insert_into(
+        "d", "t",
+        spark.sql(
+            "SELECT * FROM VALUES (1L, make_time(12, 34, 56.123456)), "
+            "(2L, CAST(NULL AS TIME(6))) AS v(k, t)"
+        ),
+    )
+    df = cat.read_table("d.t")
+    assert df.schema["t"].dataType.simpleString() == "time(6)"
+    assert sorted((r.k, r.t) for r in df.collect()) == [
+        (1, dt.time(12, 34, 56, 123456)), (2, None)
+    ]
+
+
+def test_zero_row_commit_publishes_without_files(cat, spark):
+    """A commit of zero rows publishes a snapshot but no data file, so
+    every live manifest entry holds rows."""
+    cat.create_database("d")
+    cat.create_table("d", "t", [("k", "bigint"), ("v", "string")], primary_key=["k"])
+    sid = cat.insert_into("d", "t", spark.createDataFrame([(1, "a")], "k bigint, v string"))
+    empty = spark.createDataFrame([], "k bigint, v string")
+    assert cat.insert_into("d", "t", empty) == sid + 1
+    tdir = cat._table_dir("d", "t")
+    snap = cat._snapshots(tdir)[-1]
+    assert snap.snapshot_id == sid + 1
+    assert [f["record_count"] for f in snap.files] == [1]
+    files = glob.glob(os.path.join(tdir, "data", "**", "*.parquet"), recursive=True)
+    assert [os.path.basename(f) for f in files] == [
+        os.path.basename(f["path"]) for f in snap.files
+    ]
+    assert [(r.k, r.v) for r in cat.read_table("d.t").collect()] == [(1, "a")]

@@ -72,6 +72,13 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # readers of a commit range, planned by the one commit-range planner
+    "lake_incremental_read",
+    "lake_incremental_by_timestamp",
+    "lake_changelog_producer_lookup",
+    "lake_consumer_resume",
+    "lake_consumer_incremental_dedup",
+    "lake_manifest_changelog_stream",
     # queries on the one automaton matcher of MATCH_RECOGNIZE, batch and
     # streaming
     "pattern_alternation_funnel",
@@ -93,9 +100,6 @@ _REPROOF: tuple[str, ...] = (
     # that drop empty data files
     "lake_avro_roundtrip",
     "lake_orc_scan",
-    # lake reads through the one Python data-file reader: positional ORC,
-    # the Avro fallback and the manifest changelog stream
-    "lake_manifest_changelog_stream",
     # lake reads whose aggregation-engine and sequence-group merges are
     # SQL text, every aggregate from one template per function
     "lake_aggregation_merge_engine",
@@ -183,10 +187,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_tag_time_travel",
     "lake_rowkind_field_cdc",
     "lake_ignore_delete",
-    "lake_incremental_read",
-    "lake_incremental_by_timestamp",
-    "lake_consumer_incremental_dedup",
-    "lake_consumer_resume",
     "lake_like_prefix_pruned_scan",
     "lake_limit_pushdown_partition_scoped",
     "lake_partition_pruned_scan",

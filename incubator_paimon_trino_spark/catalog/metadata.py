@@ -290,10 +290,10 @@ def load_snapshots(tdir: str) -> list[Snapshot]:
     """All committed snapshots of a table dir, file lists resolved from the
     delta manifests, ordered by id. Module-level (no catalog/session) so the
     manifest-driven streaming source's driver worker — a separate Python
-    process with no SparkSession — plans from the same resolution the batch
-    catalog uses. Shared manifests parse once per call: a K-commit history
-    costs K manifest reads, not K² (each commit adds ONE manifest; snapshots
-    reference the accumulated list)."""
+    process with no SparkSession — plans (``plan_commits``) from the same
+    resolution the batch catalog uses. Shared manifests parse once per
+    call: a K-commit history costs K manifest reads, not K² (each commit
+    adds ONE manifest; snapshots reference the accumulated list)."""
     import glob as _glob
 
     out = []
@@ -310,3 +310,42 @@ def load_snapshots(tdir: str) -> list[Snapshot]:
             s.files = [f for m in s.manifests for f in manifest_files(m)]
         out.append(s)
     return sorted(out, key=lambda s: s.snapshot_id)
+
+
+def plan_commits(
+    snaps: list[Snapshot], lo: int, hi: int
+) -> list[tuple[Snapshot | None, Snapshot, list[dict]]]:
+    """What each surviving commit in ``(lo, hi]`` wrote: one
+    ``(predecessor, commit, files)`` per commit, in id order.
+    ``predecessor`` is the latest surviving snapshot with a smaller id (None
+    if there is none); ``files`` are the entries the commit lists that its
+    predecessor does not. ``snaps`` is ``load_snapshots``' list. Every
+    reader of a commit range plans here: ``read_incremental``,
+    ``table_changelog`` and the manifest stream source, whose driver-side
+    worker has no SparkSession.
+
+    COMPACT commits: one whose predecessor is the commit just before it
+    (``id - 1``) contributes no files — a rewrite carries no writer input,
+    so a reader crossing it re-emits nothing. Any other COMPACT commit (no
+    surviving predecessor, or expired commits in between) contributes its
+    new files: they are the only surviving copy of the expired commits'
+    rows, so a reader may repeat a row it saw before the gap but never
+    drops one."""
+    out = []
+    prev = None
+    for s in snaps:
+        if s.snapshot_id > hi:
+            break
+        if s.snapshot_id > lo:
+            if (
+                s.commit_kind == COMMIT_COMPACT
+                and prev is not None
+                and prev.snapshot_id == s.snapshot_id - 1
+            ):
+                files = []
+            else:
+                seen = {f["path"] for f in prev.files} if prev else set()
+                files = [f for f in s.files if f["path"] not in seen]
+            out.append((prev, s, files))
+        prev = s
+    return out

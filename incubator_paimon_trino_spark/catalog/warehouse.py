@@ -43,45 +43,33 @@ import glob
 import os
 import re
 import shutil
-import time
 import warnings
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_paimon_trino_spark.catalog.metadata import (
-    COMMIT_APPEND,
-    COMMIT_COMPACT,
-    COMMIT_OVERWRITE,
     KIND_COL,
     SEQ_COL,
-    CommitConflictError,
     Field,
     Snapshot,
     TableSchema,
     _parse_type as _meta_parse_type,
-    load_snapshots,
+    plan_commits,
     read_json,
     write_json_atomic,
 )
 from incubator_paimon_trino_spark.catalog.file_index import (
-    SUFFIX as _FIDX_SUFFIX,
     _split_cols,
-    build_file_indexes,
-    index_specs as _file_index_specs,
     prune_files_by_index,
 )
 from incubator_paimon_trino_spark.catalog.scan import (
-    _HIVE_NULL,
-    collect_file_stats,
     partition_values,
     prune_files,
 )
 from incubator_paimon_trino_spark.functions.types import (
     castable_ddl,
     char_length,
-    spark_to_paimon,
-    timestamp_precision,
 )
 
 # shared helpers/constants — re-exported so existing
@@ -1615,7 +1603,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         ``from_ms`` up to and including ``to_ms`` (epoch millis). Each bound
         resolves to the newest snapshot committed at or before it (no
         snapshot at/before from_ms → the table's beginning), then delegates
-        to the id-based delta — the same metadata-only file-set difference.
+        to the id-based ``read_incremental``.
         """
         if to_ms < from_ms:
             raise ValueError(f"to_ms {to_ms} precedes from_ms {from_ms}")
@@ -1638,11 +1626,16 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         expiration, so tag-to-tag deltas stay readable after the raw ids
         between them are gone.
 
-        Data files are immutable and manifests accumulate them, so the delta
-        is a pure file-set difference: no data is read to compute it, and
-        the scan touches only the delta files (at 100 TB an incremental
-        consumer reads GBs, not the table). PK tables keep ``(_seq,
-        _row_kind)`` so consumers can apply upserts/deletes downstream.
+        The commits in the range are planned from metadata alone
+        (``plan_commits``, shared with ``table_changelog`` and the manifest
+        stream): one scan reads the union of the data files they wrote, so
+        no data is read to plan and the scan touches only those files (at
+        100 TB an incremental consumer reads GBs, not the table). A
+        compaction right after its predecessor contributes nothing; one after
+        expired commits contributes its rewritten files, the only surviving
+        copy of those commits' rows. Rows an OVERWRITE removed later in the
+        range are still returned. PK tables keep ``(_seq, _row_kind)`` so
+        consumers can apply upserts/deletes downstream.
         """
         db, _, table = name.partition(".")
         tdir = self._table_dir(db, table)
@@ -1676,12 +1669,13 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         if from_snapshot and from_snapshot not in snaps:
             raise ValueError(f"no snapshot {from_snapshot} (have {sorted(snaps)})")
         schema = self._latest_schema(tdir)
-        base = {f["path"] for f in snaps[from_snapshot].files} if from_snapshot else set()
-        delta = [f for f in snaps[to_snapshot].files if f["path"] not in base]
-        snap = snaps[to_snapshot]
+        delta = [
+            f
+            for _, _, files in plan_commits(list(snaps.values()), from_snapshot, to_snapshot)
+            for f in files
+        ]
         if not delta:
             empty = _physical_schema(schema, bool(schema.primary_key))
             return self.spark.createDataFrame([], empty)
-        pruned = dataclasses.replace(snap, files=delta)
-        return self._read_files(tdir, schema, pruned)
+        return self._read_files(tdir, schema, dataclasses.replace(snaps[to_snapshot], files=delta))
 

@@ -9,52 +9,23 @@ One mixin of ``WarehouseCatalog``; the class surface is assembled in
 from __future__ import annotations
 
 import dataclasses
-import datetime as _dt
 import uuid
 import glob
 import os
 import re
 import shutil
-import time
-import warnings
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from incubator_paimon_trino_spark.catalog.metadata import (
-    COMMIT_APPEND,
-    COMMIT_COMPACT,
-    COMMIT_OVERWRITE,
     KIND_COL,
-    SEQ_COL,
-    CommitConflictError,
-    Field,
     Snapshot,
     TableSchema,
-    _parse_type as _meta_parse_type,
-    load_snapshots,
     read_json,
     write_json_atomic,
 )
-from incubator_paimon_trino_spark.catalog.file_index import (
-    SUFFIX as _FIDX_SUFFIX,
-    _split_cols,
-    build_file_indexes,
-    index_specs as _file_index_specs,
-    prune_files_by_index,
-)
-from incubator_paimon_trino_spark.catalog.scan import (
-    _HIVE_NULL,
-    collect_file_stats,
-    partition_values,
-    prune_files,
-)
-from incubator_paimon_trino_spark.functions.types import (
-    castable_ddl,
-    char_length,
-    spark_to_paimon,
-    timestamp_precision,
-)
+from incubator_paimon_trino_spark.catalog.scan import prune_files
 
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
 

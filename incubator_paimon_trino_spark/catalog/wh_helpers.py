@@ -9,17 +9,11 @@ physical schemas, bucket recording, and the shared DV index explode.
 
 from __future__ import annotations
 
-import dataclasses
 import datetime as _dt
-import uuid
-import glob
 import os
 import re
-import shutil
-import time
-import warnings
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from incubator_paimon_trino_spark.catalog.metadata import (

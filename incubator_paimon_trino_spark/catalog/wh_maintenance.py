@@ -15,51 +15,34 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as _dt
-import uuid
 import glob
 import os
 import re
 import shutil
 import time
-import warnings
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from incubator_paimon_trino_spark.catalog.metadata import (
-    COMMIT_APPEND,
     COMMIT_COMPACT,
     COMMIT_OVERWRITE,
     KIND_COL,
     SEQ_COL,
     CommitConflictError,
-    Field,
     Snapshot,
     TableSchema,
-    _parse_type as _meta_parse_type,
-    load_snapshots,
+    plan_commits,
     read_json,
     write_json_atomic,
 )
 from incubator_paimon_trino_spark.catalog.file_index import (
     SUFFIX as _FIDX_SUFFIX,
-    _split_cols,
     build_file_indexes,
     index_specs as _file_index_specs,
-    prune_files_by_index,
 )
-from incubator_paimon_trino_spark.catalog.scan import (
-    _HIVE_NULL,
-    collect_file_stats,
-    partition_values,
-    prune_files,
-)
-from incubator_paimon_trino_spark.functions.types import (
-    castable_ddl,
-    char_length,
-    spark_to_paimon,
-    timestamp_precision,
-)
+from incubator_paimon_trino_spark.catalog.scan import partition_values
+from incubator_paimon_trino_spark.functions.types import castable_ddl
 
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
 from incubator_paimon_trino_spark.catalog.wh_write import _Attempt
@@ -632,7 +615,8 @@ class MaintenanceMixin:
         it; executable here):
 
         - ``input``           — the writer's own rows are the changelog:
-          raw (+I/-D) records per commit, no merge, no join.
+          raw (+I/-D) records of the files each commit wrote
+          (``plan_commits``), no merge, no join.
         - ``lookup`` / ``full-compaction`` — complete retraction-aware
           changelog: per-commit diff of merged states, emitting
           +I / -U / +U / -D (the UPDATE_BEFORE/AFTER stream).
@@ -674,19 +658,18 @@ class MaintenanceMixin:
                 nxt = self.consumer_progress(db, table, consumer_id)
                 if nxt is not None:
                     from_snapshot = nxt - 1
-        snaps = [s.snapshot_id for s in self._snapshots(tdir)]
-        snap_ids = set(snaps)
-        tip = snaps[-1] if snaps else 0
+        snaps = self._snapshots(tdir)
+        snap_ids = {s.snapshot_id for s in snaps}
+        tip = snaps[-1].snapshot_id if snaps else 0
         hi = to_snapshot if to_snapshot is not None else tip
-        ids = [s for s in snaps if from_snapshot < s <= hi]
         if from_snapshot > 0 and from_snapshot >= tip and from_snapshot not in snap_ids:
             # a position AT or AHEAD of the tip is not expired — the caller
             # simply has nothing new (e.g. a consumer that saved tip+1, or
             # polls after a full-history rewrite): empty range, not an error
-            ids = []
+            hi = from_snapshot
         elif from_snapshot > 0 and from_snapshot not in snap_ids:
             # an EXPIRED start position must fail loudly (Paimon errors too):
-            # the nearest-survivor collapse below is only sound for gaps
+            # diffing against the nearest survivor is only sound for gaps
             # strictly inside the range — widening the FIRST diff would
             # re-deliver changes the caller already consumed
             raise ValueError(
@@ -694,6 +677,7 @@ class MaintenanceMixin:
                 f"{sorted(snap_ids)}); resume from a surviving snapshot or "
                 "re-bootstrap with from_snapshot=0"
             )
+        plan = plan_commits(snaps, from_snapshot, hi)
 
         if producer == "input":
             if not schema.primary_key:
@@ -707,42 +691,21 @@ class MaintenanceMixin:
                     "sequence_field (rows carry business sequence, not "
                     "commit ids) — use producer='lookup' or 'none'"
                 )
-            # per-commit FILE-SET diffs, not a _seq filter over the latest
-            # live set: compaction re-stamps every live row with its own id
-            # (a _seq filter would re-emit the whole table for the compact
-            # commit and return EMPTY for pre-compaction ranges whose raw
-            # rows left the live set). Snapshot JSONs keep full per-version
-            # file lists, so the diff works at any point in history; COMPACT
-            # commits emit nothing (Paimon's input producer contract —
-            # rewrites are not writer input).
-            all_snaps = self._snapshots(tdir)
-            by_id = {s.snapshot_id: s for s in all_snaps}
-            prev_id = max((x for x in snap_ids if x <= from_snapshot), default=0)
-            prev_paths = {f["path"] for f in by_id[prev_id].files} if prev_id else set()
+            # the files each commit wrote (plan_commits), not a _seq filter
+            # over the latest live set: compaction re-stamps every live row
+            # with its own id, so a _seq filter would re-emit the whole table
+            # for the compact commit and return EMPTY for pre-compaction
+            # ranges whose raw rows left the live set
             change = F.when(F.col(KIND_COL) == "D", "-D").otherwise("+I")
-            parts = []
-            # a from_snapshot=0 re-bootstrap whose earliest SURVIVING snapshot
-            # is a COMPACT commit (expire keeps last N, so this happens) must
-            # emit that commit's file set as the +I baseline — skipping it
-            # like an in-range compaction would silently drop every row the
-            # compaction first surfaces from the changelog
-            bootstrap = prev_id == 0
-            for s_id in ids:
-                s = by_id[s_id]
-                added = [f for f in s.files if f["path"] not in prev_paths]
-                prev_paths = {f["path"] for f in s.files}
-                emit_compact_baseline = bootstrap and s.commit_kind == COMMIT_COMPACT
-                bootstrap = False
-                if (s.commit_kind == COMMIT_COMPACT and not emit_compact_baseline) or not added:
-                    continue
-                raw = self._read_files(tdir, schema, dataclasses.replace(s, files=added))
-                parts.append(
-                    raw.select(
-                        *[f.name for f in schema.fields],
-                        F.lit(s_id).cast("bigint").alias("_snapshot"),
-                        change.alias("_change"),
-                    )
+            parts = [
+                self._read_files(tdir, schema, dataclasses.replace(s, files=files)).select(
+                    *[f.name for f in schema.fields],
+                    F.lit(s.snapshot_id).cast("bigint").alias("_snapshot"),
+                    change.alias("_change"),
                 )
+                for _, s, files in plan
+                if files
+            ]
             if not parts:
                 # "long", not "bigint": StructType.add parses JSON type names
                 empty = schema.spark_schema().add("_snapshot", "long").add("_change", "string")
@@ -752,16 +715,17 @@ class MaintenanceMixin:
                 out = out.unionByName(p)
             return out
 
-        parts = []
-        for s_id in ids:
-            # diff against the NEAREST surviving predecessor: with expired
-            # history (incl. mid-history gaps where only a tagged snapshot
-            # survives) this collapses the missing commits into one correct
-            # diff — a full +I bootstrap would drop -D rows and re-emit
-            # unchanged rows; prev=0 degrades to the full initial image.
-            prev = max((x for x in snap_ids if x < s_id), default=0)
-            diff = self.read_cdc(name, prev, s_id)
-            parts.append(diff.withColumn("_snapshot", F.lit(s_id).cast("bigint")))
+        # diff against the NEAREST surviving predecessor: with expired
+        # history (incl. mid-history gaps where only a tagged snapshot
+        # survives) this collapses the missing commits into one correct
+        # diff — a full +I bootstrap would drop -D rows and re-emit
+        # unchanged rows; no predecessor degrades to the full initial image.
+        parts = [
+            self.read_cdc(name, prev.snapshot_id if prev else 0, s.snapshot_id).withColumn(
+                "_snapshot", F.lit(s.snapshot_id).cast("bigint")
+            )
+            for prev, s, _ in plan
+        ]
         if not parts:
             empty = schema.spark_schema().add("_change", "string").add("_snapshot", "long")
             return self.spark.createDataFrame([], empty)

@@ -45,10 +45,9 @@ def _raw_shingles(docs: DataFrame) -> DataFrame:
     """(doc_id, s) — one row per word-3-gram OCCURRENCE (not distinct),
     fully codegen with ZERO shuffle: the 3-gram is assembled by direct array
     indexing over ``explode(sequence(0, size-3))``, so the only wide
-    operation a consumer pays is its own aggregation/dedup. (Profiled r6:
-    replaces the posexplode + window-``lead`` producer, whose
-    partitionBy(doc_id) shuffle of every word was over half the benched
-    MinHash wall time.)
+    operation a consumer pays is its own aggregation/dedup. (A posexplode
+    + window-``lead`` producer would shuffle every word by doc_id; that
+    shuffle was over half the benched MinHash wall time.)
 
     Short docs: ``sequence(stop < start)`` counts DOWN ([0, -1] for a
     2-word doc) — the ``if(size >= 3, ...)`` guard keeps the landmine from
@@ -216,18 +215,17 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shingles come from ``_raw_shingles`` (occurrence-level): MIN is
     duplicate-insensitive, so skipping the distinct leaves signatures
     byte-identical while the whole plan's ONLY exchange is the signature
-    groupBy — no shingle string ever shuffles (r6 profile: −40% on the
-    benched signature stage).
+    groupBy — no shingle string ever shuffles (−40% on the benched
+    signature stage).
     """
-    # r13: measured a fan_out of the documents scan and REVERTED it (A/B
-    # ±0.05 s — noise), keeping the plan's "no shingle string ever shuffles"
-    # claim exactly true (a fanned scan would shuffle raw text locally).
+    # the documents scan is not fanned out: a fanned scan would shuffle raw
+    # text, and no shingle string may shuffle (a fan-out measured as noise).
     tok = _raw_shingles(table(spark, sf_dir, "documents")).withColumn("h", F.xxhash64("s"))
     # One F.expr string per aggregate instead of nested Column calls: the
     # expressions are identical (SQL integer literals are IntegerType, same
     # as F.lit(int) — xxhash64 input bytes unchanged), but the driver issues
-    # ~4x fewer py4j roundtrips building the plan (r13: the builder itself
-    # was ~0.9 s of the benched query on this box's slow py4j path).
+    # ~4x fewer py4j roundtrips building the plan (Column calls made the
+    # builder ~0.9 s of the benched query on a slow py4j path).
     aggs = [F.expr(f"min(xxhash64(h, {i})) AS m{i}") for i in range(_N_PERMS)]
     sums = tok.groupBy("doc_id").agg(*aggs)
     sig = "array(" + ",".join(f"m{i}" for i in range(_N_PERMS)) + ") AS sig"
@@ -238,9 +236,9 @@ def _exact_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a < doc_b) pairs with IDENTICAL text (md5 join) — the ground
     truth every LSH family is guaranteed to recover: identical text means
     identical shingles/tokens, hence identical signatures, hence identical
-    band keys. Used as the r11 in-query invariant for the rows-only LSH
-    queries (VERDICT r10 item 7). Quadratic only within an exact-duplicate
-    group — the same blowup the LSH output itself has for those groups."""
+    band keys. Used as the in-query invariant of the rows-only LSH queries.
+    Quadratic only within an exact-duplicate group — the same blowup the
+    LSH output itself has for those groups."""
     d = table(spark, sf_dir, "documents").select("doc_id", F.md5("text").alias("_h"))
     a = d.select(F.col("doc_id").alias("doc_a"), "_h")
     b = d.select(F.col("doc_id").alias("doc_b"), "_h")
@@ -251,7 +249,7 @@ def _exact_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, verified by signature agreement.
 
-    r11 in-query invariant: the exact-duplicate pairs (md5-identical text —
+    In-query invariant: the exact-duplicate pairs (md5-identical text —
     ``_exact_dup_pairs``) MUST all appear in the output (identical text ⇒
     identical signatures ⇒ est_jaccard = 1 ≥ 0.5); the query fails loudly
     if any is missing, tying the rows-only declaration to the md5 twin's
@@ -263,7 +261,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures back to score estimated Jaccard = fraction of agreeing
     positions ≥ 0.5.
 
-    Scale shape (restructured r6): the band exchange and the pair-dedup
+    Scale shape: the band exchange and the pair-dedup
     exchange carry ~24 bytes/row instead of riding the 32×8-byte signature
     array through both (~10× less band-join shuffle volume at any corpus
     size); signatures shuffle exactly once — their own groupBy, whose
@@ -271,20 +269,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny side of those joins. Only same-bucket pairs are ever compared.
     Cross-checked against exact Jaccard in tests (tests/test_dedup.py).
     """
-    # r14: the per-build lazy localCheckpoint moved from the OUTPUT to the
-    # SIGNATURES — the subtree consumed three times in one plan (bands,
-    # sig_a, sig_b). Catalyst otherwise re-analyzes the 32-aggregate tree
-    # per consumer (~0.65 s of build-time planning when the checkpoint sat
-    # on `out`), while everything downstream of sigs is cheap to re-derive;
-    # the LogicalRDD keeps sigs' hashpartitioning(doc_id), so the score
-    # joins still reuse the signature groupBy's partitioning. Same
-    # no-cross-run-carry property (fresh RDD per builder call; every timed
-    # run recomputes from parquet). Interleaved A/B (warm, alternating):
-    # output-ckpt 1.0–1.3 s vs sigs-ckpt 0.93–0.97 s.
+    # the per-build lazy localCheckpoint sits on the SIGNATURES — the
+    # subtree consumed three times in one plan (bands, sig_a, sig_b).
+    # Catalyst otherwise re-analyzes the 32-aggregate tree per consumer
+    # (~0.65 s of build-time planning with the checkpoint on the output),
+    # while everything downstream of sigs is cheap to re-derive; the
+    # LogicalRDD keeps sigs' hashpartitioning(doc_id), so the score joins
+    # still reuse the signature groupBy's partitioning. Nothing carries
+    # across runs (fresh RDD per builder call; every timed run recomputes
+    # from parquet). Interleaved A/B (warm, alternating): output-ckpt
+    # 1.0–1.3 s vs sigs-ckpt 0.93–0.97 s.
     sigs = minhash_signatures(spark, sf_dir).localCheckpoint(eager=False)
     # Single expr string for the band-key array (sig[i] is 0-based — same
     # element element_at(sig, i+1) addressed; named_struct int literals match
-    # F.lit(int)'s IntegerType): ~60 fewer py4j roundtrips per build (r13).
+    # F.lit(int)'s IntegerType): ~60 fewer py4j roundtrips per build.
     band_arr = "array(" + ",".join(
         "named_struct('band', {b}, 'bh', xxhash64({elems}))".format(
             b=b,
@@ -316,11 +314,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("est_jaccard") >= 0.5)
         .select("doc_a", "doc_b", "est_jaccard")
     )
-    # r14: the r11 `.cache()` that served the double consumption (output +
-    # guard) was REMOVED — Spark's CacheManager keys cached plans by
-    # CANONICALIZED plan, so a benched re-build of the identical query was
-    # served from the warm run's materialized result (cross-run result
-    # caching; r13 VERDICT "What's wrong #1"). The guard's second
+    # no `.cache()` for the double consumption (output + guard): Spark's
+    # CacheManager keys cached plans by CANONICALIZED plan, so a benched
+    # re-build of the identical query would be served from the warm run's
+    # materialized result (cross-run result caching). The guard's second
     # consumption re-derives the pair set from the checkpointed signatures
     # above — cheap, and with zero cross-run state.
     from incubator_paimon_trino_spark.operators.registry import guard_empty
@@ -350,11 +347,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .withColumn("h", F.xxhash64("token"))
     )
-    # One F.expr string per bit instead of ~7 nested Column calls (the
-    # wave-1c treatment, r13 VERDICT item 5): CASE WHEN is `when/otherwise`'s
-    # exact SQL spelling and the int literals type identically, so the
-    # aggregate expressions are unchanged — only the driver-side py4j
-    # roundtrip count drops (~450 → 64 calls for this builder).
+    # One F.expr string per bit instead of ~7 nested Column calls: CASE
+    # WHEN is `when/otherwise`'s exact SQL spelling and the int literals
+    # type identically, so the aggregate expressions are unchanged — only
+    # the driver-side py4j roundtrip count drops (~450 → 64 calls for this
+    # builder).
     bit_aggs = [
         F.expr(
             f"sum(CASE WHEN (shiftright(h, {b}) & 1) = 1 THEN cnt ELSE -cnt END) AS s{b}"
@@ -374,10 +371,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"named_struct('band', {b}, 'bh', shiftright(simhash, {16 * b}) & 65535)"
         for b in range(4)
     ) + ")"
-    # r14: per-build lazy localCheckpoint on the BANDS (the subtree both
-    # join sides and the hamming filter re-derive — it embeds the 64-agg
+    # per-build lazy localCheckpoint on the BANDS (the subtree both join
+    # sides and the hamming filter re-derive — it embeds the 64-agg
     # fingerprint tree, the expensive part for Catalyst to re-analyze per
-    # consumer); same no-cross-run-carry as minhash's sigs checkpoint.
+    # consumer); nothing carries across runs, as with minhash's sigs.
     bands = docs.select(
         "doc_id", "simhash", F.explode(F.expr(band_arr)).alias("bk")
     ).select(
@@ -395,11 +392,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= 3)
         .select("doc_a", "doc_b", "hamming")
     )
-    # r14: `.cache()` removed for the same reason as dedup_minhash_lsh —
-    # canonicalized-plan cache hits served timed bench runs from the warm
-    # run's result. The guard re-derives the pair set from the
+    # no `.cache()`, for the same reason as dedup_minhash_lsh —
+    # canonicalized-plan cache hits would serve timed bench runs from the
+    # warm run's result. The guard re-derives the pair set from the
     # checkpointed bands above — cheap, zero cross-run state.
-    # r11 in-query invariant (VERDICT r10 item 7): identical text ⇒
+    # In-query invariant: identical text ⇒
     # identical fingerprints ⇒ hamming 0 and shared bands, so every
     # md5-exact pair must be in the output — loud failure otherwise.
     from incubator_paimon_trino_spark.operators.registry import guard_empty
@@ -671,7 +668,7 @@ def _md5_signatures_of(docs: DataFrame) -> DataFrame:
     lake-integrated pipelines (changelog batches, consumer backlogs) sign
     exactly like the registered documents-table queries."""
     tok = _raw_shingles(docs)
-    # expr strings instead of nested Column calls (r13 wave-1c treatment):
+    # expr strings instead of nested Column calls:
     # the expressions are identical — `_md5_int` spelled as its SQL body,
     # string literals type the same — only the py4j roundtrip count drops
     # (~130 → 17 calls for this builder). Oracle-proven (md5 twin family).
@@ -741,7 +738,8 @@ def _md5_est(a: str, b: str) -> F.Column:
     """Estimated Jaccard = agreeing signature positions / _MD5_PERMS.
     NOTE: a bare `/ 16.0` literal parses as DECIMAL in Spark SQL, silently
     making the whole column decimal (pandas dtype object) while DuckDB
-    returns double — the r1 hash mismatch. Divide by an explicit DOUBLE."""
+    returns double, and the oracle hash mismatches. Divide by an explicit
+    DOUBLE."""
     return F.expr(
         f"size(filter(zip_with({a}, {b}, (x, y) -> x = y), v -> v))"
         f" / cast({_MD5_PERMS} as double)"
@@ -798,7 +796,7 @@ def dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sigs = _md5_signatures(spark, sf_dir)
     bands = _md5_bands(sigs)
-    # skinny band join (r6, mirrors dedup_minhash_lsh): candidate pairs are
+    # skinny band join (mirrors dedup_minhash_lsh): candidate pairs are
     # found and deduped WITHOUT the signature arrays in tow, then the
     # signatures join back on the groupBy's own doc_id partitioning
     left = bands.select(F.col("doc_id").alias("doc_a"), "band", "bkey")

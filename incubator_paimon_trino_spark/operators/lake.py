@@ -306,9 +306,10 @@ def lake_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paimon ``incremental-between`` scan: only commit 2's raw rows (with
-    their row kinds), computed as a pure manifest file-set difference — no
-    data read to plan, and the scan touches only the delta files (at 100 TB
-    an incremental consumer reads GBs, not the table)."""
+    their row kinds), planned from the manifests by the one commit-range
+    planner (``plan_commits``) — no data read to plan, and the scan touches
+    only the files the commits in the range wrote (at 100 TB an incremental
+    consumer reads GBs, not the table)."""
     cat, name = _pk_table(spark, sf_dir)
     return cat.read_incremental(name, 1, 2).select(
         "o_custkey", "last_order", "n", "_row_kind"
@@ -1041,7 +1042,7 @@ def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         primary_key=["o_orderkey"],
         options={
             "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
+            # exercise the SHARDED index format (executor-written
             # per-bucket shards, dv_index.py) under the driver's hash gate —
             # threshold 0 shards from the first mark
             "dv-index.inline-threshold": "0",
@@ -1089,8 +1090,8 @@ def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_dv_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC over a deletion-vectors table — the availableNow twin
-    of the resumable retraction stream (r6's one documented DV gap, now
-    lifted): deletes on a DV table are pure metadata, so the stream unions
+    of the resumable retraction stream: deletes on a DV table are pure
+    metadata, so the stream unions
     the data-file tail's +rows with retractions diffed from the tailed
     ``index/dv-*.json`` indexes, recovering each marked row's image by
     ``_metadata.row_index`` from ONLY the files the marks reference.
@@ -1125,7 +1126,7 @@ def lake_dv_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         primary_key=["o_orderkey"],
         options={
             "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
+            # exercise the SHARDED index format (executor-written
             # per-bucket shards, dv_index.py) under the driver's hash gate —
             # threshold 0 shards from the first mark
             "dv-index.inline-threshold": "0",
@@ -1186,11 +1187,13 @@ def lake_dv_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_manifest_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MANIFEST-DRIVEN changelog source (r8; Paimon's own source shape
-    on Spark's Python DataSource API) across a history the file tail cannot
+    """The MANIFEST-DRIVEN changelog source (Paimon's own source shape on
+    Spark's Python DataSource API) across a history the file tail cannot
     stream correctly: insert → update → DV delete → **COMPACT** → second DV
-    delete. Offsets are committed snapshot ids re-planned per trigger, so
-    the compaction contributes NOTHING (rewrites are not writer input — a
+    delete. Offsets are committed snapshot ids re-planned per trigger by the
+    one commit-range planner (``plan_commits``), so the compaction, right
+    after its predecessor, contributes NOTHING (rewrites are not writer
+    input — a
     file tail would re-emit the whole live set here, and the hash gate
     would catch the surplus rows), and the post-compaction delete's marks
     are diffed against that commit's own file list. -D images are recovered
@@ -1225,7 +1228,7 @@ def lake_manifest_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFram
         primary_key=["o_orderkey"],
         options={
             "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
+            # exercise the SHARDED index format (executor-written
             # per-bucket shards, dv_index.py) under the driver's hash gate —
             # threshold 0 shards from the first mark
             "dv-index.inline-threshold": "0",
@@ -1277,7 +1280,7 @@ def lake_manifest_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def lake_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``file_format='AVRO'`` under the hash gate (r9; the reference's
+    """``file_format='AVRO'`` under the hash gate (the reference's
     third format, ``TrinoTableOptionUtils.java:96,111-112``): a
     partitioned avro PK table takes an insert plus an upsert and the
     merged read aggregates back to the oracle's replay. In this runtime
@@ -1343,8 +1346,8 @@ def lake_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_char_padded_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHAR(n) full fidelity under the hash gate (r9 — retires the last
-    §1.3 delta, ``TrinoTypeUtils.java:77-90``; char values exercised at
+    """CHAR(n) full fidelity under the hash gate (the reference's CHAR
+    semantics, ``TrinoTypeUtils.java:77-90``; char values exercised at
     ``TestTrinoITCase.java:252, 272``): values insert WITH trailing blanks,
     store rtrimmed (so equality, footer stats, and groupBy keys are
     pad-insensitive — the char tests' long-standing property), and read
@@ -1393,8 +1396,8 @@ def lake_char_padded_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_timestamp_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TIMESTAMP(0/3/6) declared-precision ladder (r8;
-    ``TrinoTypeUtils.java:153-157``, value rows mirroring
+    """The TIMESTAMP(0/3/6) declared-precision ladder
+    (``TrinoTypeUtils.java:153-157``, value rows mirroring
     ``TestTrinoITCase.java:504-508``) under the hash gate: one lake table
     declares the same micro-precision event time at all three precisions;
     the write path canonicalizes each column to its declared precision (the
@@ -1542,7 +1545,7 @@ def lake_partitions_system_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lake_consumer_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consumer-driven incremental dedup — the two green r5 surfaces
+    """Consumer-driven incremental dedup — consumers and incremental dedup
     composed into the daily-ingest pipeline shape: documents land in a lake
     PK table commit by commit, a durable consumer records how far dedup has
     processed, and each run dedups ONLY ``table_changelog(consumer_id=...)``
@@ -1736,7 +1739,7 @@ from incubator_paimon_trino_spark.operators.clustering import (  # noqa: E402
 
 @register("streaming_incremental_minhash", oracle=_INCR_MINHASH_ORACLE)
 def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming incremental near-dup — the r6 incremental MinHash probe fed
+    """Streaming incremental near-dup — the incremental MinHash probe fed
     from a LIVE changelog stream with consumer checkpointing, closing the
     loop between the resumable stream and the incremental trio: the corpus
     (doc_id % 10 != 0) is ingested into a lake PK table and its band index
@@ -1833,7 +1836,7 @@ def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
 def probe_band_index(cat: "WarehouseCatalog", docs: DataFrame) -> DataFrame:
     """Near-dup verdicts for a batch of ``(doc_id, text)`` against the
     MAINTAINED ``lake.band_idx`` / ``lake.sig_idx`` lake tables — the probe
-    side of the r8 production swap: candidates come from one equi-join of
+    side of the production swap: candidates come from one equi-join of
     the batch's bands against ``cat.read_table`` of the index table, and
     verification signatures come from the signature table. The corpus TEXT
     is never read (plan-pinned in ``tests/test_plan_quality.py``): at
@@ -1864,7 +1867,7 @@ def probe_band_index(cat: "WarehouseCatalog", docs: DataFrame) -> DataFrame:
 
 @register("streaming_band_index_maintained", oracle=_INCR_MINHASH_ORACLE)
 def streaming_band_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The band index as a MAINTAINED LAKE TABLE (r8) — making the scale
+    """The band index as a MAINTAINED LAKE TABLE — making the scale
     story every incremental probe cites real instead of session-persisted:
     a maintenance stream tails the corpus table's changelog and UPSERTS
     each micro-batch's band rows into ``lake.band_idx`` (PK ``(doc_id,
@@ -1967,7 +1970,7 @@ def streaming_band_index_maintained(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register("streaming_vector_index_maintained", oracle=_IVF_KMEANS_ORACLE)
 def streaming_vector_index_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VECTOR index as maintained lake state (r8) — the embedding twin
+    """The VECTOR index as maintained lake state — the embedding twin
     of ``streaming_band_index_maintained``, completing the production
     story for the ANN/semantic-dedup family: the trained k-means model is
     PUBLISHED as a lake table (``vec_centroids``, k rows of integer
@@ -2099,7 +2102,7 @@ def streaming_vector_index_maintained(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def lake_dv_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end CDC over deletion vectors — the r7 retraction stream
+    """End-to-end CDC over deletion vectors — the DV retraction stream
     CLOSED INTO A SINK: a DV source takes upserts and a pure-metadata
     DELETE; ``read_changelog_stream`` turns its DV indexes into +rows/-D;
     ``fold_changelog`` collapses each micro-batch to one winner per key
@@ -2133,7 +2136,7 @@ def lake_dv_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lake", "dvt_src", cols, primary_key=["o_orderkey"],
         options={
             "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
+            # exercise the SHARDED index format (executor-written
             # per-bucket shards, dv_index.py) under the driver's hash gate —
             # threshold 0 shards from the first mark
             "dv-index.inline-threshold": "0",
@@ -3209,7 +3212,7 @@ _MERGED_12_SQL = f"""
     oracle=f"SELECT * FROM ({_MERGED_12_SQL})",
 )
 def lake_compacted_merge_free_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r10 FULLY-COMPACTED fast path under the hash gate: after
+    """The FULLY-COMPACTED fast path under the hash gate: after
     ``CALL sys.compact`` every live file is compaction output, so the main
     read serves the stored rows scan-direct — the plan is asserted
     merge-free (no Aggregate, no Join) and the values must equal the
@@ -3244,7 +3247,7 @@ def lake_compacted_merge_free_read(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def lake_delta_base_split_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r10 DELTA-vs-BASE merge split under the hash gate: compaction
+    """The DELTA-vs-BASE merge split under the hash gate: compaction
     output plus one small post-compaction commit (upserts for custkey%5,
     deletes for custkey%11) — the read broadcasts the delta's keys (plan
     asserted: BroadcastHashJoin present) so only touched keys enter the

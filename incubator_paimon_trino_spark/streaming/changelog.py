@@ -99,8 +99,9 @@ def read_changelog_stream(
       (``streaming/manifest_source.py``, Paimon's own source shape on the
       Python DataSource API): every trigger re-plans from the snapshot
       manifests, which CLOSES all three caveats — only committed snapshots
-      are planned (no race window), COMPACT commits plan no additions (no
-      re-emission), and DV marks are per-commit index diffs recovered
+      are planned (no race window), a compaction right after its
+      predecessor plans no files (no re-emission; ``plan_commits``), and
+      DV marks are per-commit index diffs recovered
       against that commit's own file list (a DELETE landing long after
       stream start, against files the start never saw, still surfaces).
       Schema renames are mapped by field id (the file tail must refuse

@@ -16,14 +16,17 @@ executes them on Spark's public Python DataSource API
   commits landing after stream start — including pure-metadata DV deletes
   against files the start never saw — surface in the next micro-batch.
 - An offset is a committed snapshot id; partitions for ``(start, end]`` are
-  planned fresh per batch: added data files packed into read tasks (+I
-  rows) and, per DV commit, the marked data files (-D rows with the old
-  image recovered executor-side by positional take). The atomic snapshot
-  publish is the visibility point, so a racing loser's files are never
-  planned; COMPACT commits plan no file additions (rewrites are not writer
-  input — Paimon's changelog contract), so compaction never re-emits; DV
-  marks are per-commit index diffs, so each mark is emitted exactly once
-  with NO streaming dedup state at all.
+  planned fresh per batch by ``catalog.metadata.plan_commits``, the one
+  commit-range planner ``read_incremental`` and ``table_changelog`` also
+  use: the data files each commit wrote, packed into read tasks (+I rows)
+  and, per DV commit, the marked data files (-D rows with the old image
+  recovered executor-side by positional take). The atomic snapshot publish
+  is the visibility point, so a racing loser's files are never planned; a
+  compaction right after its predecessor plans no files, so it never
+  re-emits, while one after expired commits plans its rewritten files, the
+  only surviving copy of those commits' rows; DV marks are per-commit index
+  diffs against the predecessor, so each mark is emitted exactly once with
+  NO streaming dedup state at all.
 - Columns map by FIELD ID per file schema, so renames never orphan
   pre-rename files (the batch reader's A18 contract, which the
   name-matching file tail must refuse).
@@ -53,13 +56,13 @@ from typing import Iterator
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 from incubator_paimon_trino_spark.catalog.metadata import (
-    COMMIT_COMPACT,
     KIND_COL,
     SEQ_COL,
     TableSchema,
     _storage_ddl,
     latest_snapshot_id,
     load_snapshots,
+    plan_commits,
     read_json,
 )
 from incubator_paimon_trino_spark.formats.file_reader import (
@@ -234,10 +237,8 @@ class _ManifestStreamReader(DataSourceStreamReader):
         snaps = load_snapshots(self.tdir)
         current = _latest_schema(self.tdir)
         out_cols = stream_output_columns(current, self.dv)
-        by_id = {s.snapshot_id: s for s in snaps}
-        ids = [s.snapshot_id for s in snaps if lo < s.snapshot_id <= hi]
-        prev_id = max((s.snapshot_id for s in snaps if s.snapshot_id <= lo), default=0)
-        if prev_id == 0 and ids and lo > max(self.from_version - 1, 0):
+        plan = plan_commits(snaps, lo, hi)
+        if plan and plan[0][0] is None and lo > max(self.from_version - 1, 0):
             # The planned-from position lo is PAST the stream's own start,
             # so it came from a checkpoint — and no snapshot <= lo survives:
             # retention expired the consumed window, and the per-commit
@@ -250,42 +251,31 @@ class _ManifestStreamReader(DataSourceStreamReader):
             # the live-set baseline IS the correct first batch.
             raise ValueError(
                 f"manifest stream: checkpointed position {lo} predates the "
-                f"earliest surviving snapshot {min(ids)} — retention expired "
-                "the consumed window; restart the stream from scratch, and "
-                "register a consumer_id so expire_snapshots pins its window"
+                f"earliest surviving snapshot {plan[0][1].snapshot_id} — "
+                "retention expired the consumed window; restart the stream "
+                "from scratch, and register a consumer_id so "
+                "expire_snapshots pins its window"
             )
-        prev_paths = {f["path"] for f in by_id[prev_id].files} if prev_id else set()
-        prev_dv = by_id[prev_id].dv if prev_id else None
-        bootstrap = prev_id == 0
         parts: list[InputPartition] = []
-        for sid in ids:
-            s = by_id[sid]
-            added = [f for f in s.files if f["path"] not in prev_paths]
-            prev_paths = {f["path"] for f in s.files}
-            # COMPACT rewrites are not writer input (Paimon's changelog
-            # contract; mirrors table_changelog's input producer) — except
-            # as the +I baseline when bootstrapping from expired history
-            # whose earliest survivor is a COMPACT commit
-            emit_baseline = bootstrap and s.commit_kind == COMMIT_COMPACT
-            bootstrap = False
-            if s.commit_kind != COMMIT_COMPACT or emit_baseline:
-                for (fsid, fmt), pack in _pack_splits(added, self.split_bytes):
-                    parts.append(InputPartition({
-                        "kind": "data",
-                        "files": [
-                            {
-                                "path": os.path.normpath(
-                                    os.path.join(self.tdir, e["path"])
-                                ),
-                                "parts": self._partition_spec(e, current),
-                            }
-                            for e in pack
-                        ],
-                        "fmt": fmt,
-                        "commit": sid,
-                        "fields": self._column_spec(fsid, current),
-                        "out_cols": out_cols,
-                    }))
+        for prev, s, files in plan:
+            for (fsid, fmt), pack in _pack_splits(files, self.split_bytes):
+                parts.append(InputPartition({
+                    "kind": "data",
+                    "files": [
+                        {
+                            "path": os.path.normpath(
+                                os.path.join(self.tdir, e["path"])
+                            ),
+                            "parts": self._partition_spec(e, current),
+                        }
+                        for e in pack
+                    ],
+                    "fmt": fmt,
+                    "commit": s.snapshot_id,
+                    "fields": self._column_spec(fsid, current),
+                    "out_cols": out_cols,
+                }))
+            prev_dv = prev.dv if prev else None
             if self.dv and s.dv != prev_dv:
                 # this commit's marks = cumulative(v) − cumulative(prev
                 # committed): exact per-commit retractions, no dedup state.
@@ -300,7 +290,6 @@ class _ManifestStreamReader(DataSourceStreamReader):
                 parts.extend(
                     self._plan_dv_partitions(s, prev_dv, current, out_cols)
                 )
-                prev_dv = s.dv
         return parts
 
     def _plan_dv_partitions(self, s, prev_dv, current, out_cols):
@@ -379,8 +368,8 @@ class _ManifestStreamReader(DataSourceStreamReader):
         if prev_meta is None:
             prev_for = lambda b: []  # noqa: E731
         elif prev_meta["kind"] == "inline":
-            prev_paths = [os.path.join(idx, prev_meta["name"])]
-            prev_for = lambda b: prev_paths  # noqa: E731
+            prev_doc = [os.path.join(idx, prev_meta["name"])]
+            prev_for = lambda b: prev_doc  # noqa: E731
         elif prev_meta["buckets"] != k:
             all_prev = [
                 os.path.join(idx, n)

@@ -42,7 +42,7 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
     prefix the driver takes then maximizes §2-family coverage. The verified
     round feeds the tail rotation: with full-registry closure every prefix
     slot re-proves a green row, so spend those slots on the STALEST verdicts
-    (code keeps evolving under r1-era greens). Reads every
+    (code keeps evolving under long-standing greens). Reads every
     CORRECTNESS_r*.json so the ordering keeps itself current round over
     round."""
     import glob
@@ -72,12 +72,27 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
-    # readers of a commit range, planned by the one commit-range planner
+    # queries whose snapshot ids, tags and timestamps resolve through the
+    # one snapshot resolver (time travel, incremental reads, changelogs and
+    # consumers, rollback and expiry, branches, versioned reads, streams)
+    "lake_time_travel_v1",
+    "lake_tag_time_travel",
     "lake_incremental_read",
     "lake_incremental_by_timestamp",
     "lake_changelog_producer_lookup",
     "lake_consumer_resume",
     "lake_consumer_incremental_dedup",
+    "lake_rollback_to_snapshot",
+    "lake_expire_snapshots",
+    "lake_branch_fast_forward",
+    "lake_fallback_branch",
+    "lake_partition_expiration",
+    "lake_partition_delete",
+    "streaming_incremental_minhash",
+    "streaming_band_index_maintained",
+    # Avro files of few large blocks decode through the generated scanner
+    "lake_avro_roundtrip",
+    # readers of a commit range, planned by the one commit-range planner
     "lake_manifest_changelog_stream",
     # queries on the one automaton matcher of MATCH_RECOGNIZE, batch and
     # streaming
@@ -98,7 +113,6 @@ _REPROOF: tuple[str, ...] = (
     "streaming_pattern_value_measures",
     # lake reads of TIME columns through the Python reader, and commits
     # that drop empty data files
-    "lake_avro_roundtrip",
     "lake_orc_scan",
     # lake reads whose aggregation-engine and sequence-group merges are
     # SQL text, every aggregate from one template per function
@@ -155,8 +169,6 @@ _REPROOF: tuple[str, ...] = (
     "streaming_vector_index_maintained",
     # lake reads that hit the deleted read_table plan cache; avro reads the
     # scanner memo, now an lru_cache
-    "lake_partition_delete",
-    "lake_partition_expiration",
     "lake_stats_broadcast_join",
     # HLL partial buffer no longer keyed per distinct value
     "agg_approx_count_distinct",
@@ -171,27 +183,24 @@ _REPROOF: tuple[str, ...] = (
     "streaming_stateful_running_counts",
     "streaming_dedup_keys",
     "streaming_enrich_static_join",
-    # r13: chunk-wise matcher + empty-match emission rewrite
+    # chunk-wise matcher + empty-match emission rewrite
     "pattern_funnel_view_click_purchase",
     "pattern_error_within_5min_of_purchase",
     "pattern_longest_click_streak",
-    # r13: partition-batched rewrite (item 5)
+    # partition-batched rewrite
     "udf_grouped_map_normalize",
-    # r13: one-valued partition spec on the metadata-scale windows (item 8)
+    # one-valued partition spec on the metadata-scale windows
     "window_ntile_percent",
     "window_global_rank_scalable",
     "limit_fetch_with_ties",
     # read_table plan cache removed — every other read_table consumer,
     # riskiest first
-    "lake_time_travel_v1",
-    "lake_tag_time_travel",
     "lake_rowkind_field_cdc",
     "lake_ignore_delete",
     "lake_like_prefix_pruned_scan",
     "lake_limit_pushdown_partition_scoped",
     "lake_partition_pruned_scan",
-    "lake_fallback_branch",
-    # r11 invariant carriers (unchanged r12, still ahead of stale greens)
+    # invariant carriers, still ahead of stale greens
     "ann_lsh_bucketed",
     "multimodal_feature_extract",
 )

@@ -271,12 +271,9 @@ def read_json(path: str) -> dict:
 
 
 def latest_snapshot_id(tdir: str) -> int:
-    """Tip snapshot id from the snapshot directory listing alone — no
-    manifest resolution. The streaming source's ``latestOffset`` runs every
-    trigger even when the table is idle; it needs only the max committed id,
-    so resolving every snapshot's file list there would make the idle-tick
-    cost O(history length) for nothing (``load_snapshots`` stays the full
-    resolution used by ``partitions()``). 0 = no commits."""
+    """Tip snapshot id (0 = no commits) from the snapshot directory listing
+    alone: callers that need only the tip (a stream's every-trigger
+    ``latestOffset``, a consumer's checkpoint) read no manifest."""
     import glob as _glob
 
     ids = [
@@ -312,6 +309,41 @@ def load_snapshots(tdir: str) -> list[Snapshot]:
     return sorted(out, key=lambda s: s.snapshot_id)
 
 
+def resolve_snapshot(
+    snaps: list[Snapshot],
+    tags: dict[str, int] | None = None,
+    *,
+    version: int | None = None,
+    tag: str | None = None,
+    timestamp_ms: int | None = None,
+) -> Snapshot | None:
+    """The snapshot at most one reference names, from ``load_snapshots``'
+    list and the table's tags — where every read, procedure and branch
+    resolves a version, tag or timestamp (the reference's one dynamic
+    option, ``TrinoMetadata.java:82-108``). None: the latest snapshot (None
+    if empty); a version must exist, a tag must be known; a timestamp takes
+    the newest snapshot committed at or before it."""
+    if sum(r is not None for r in (version, tag, timestamp_ms)) > 1:
+        raise ValueError("version, tag and timestamp pins are mutually exclusive")
+    if tag is not None:
+        tags = tags or {}
+        if tag not in tags:
+            raise ValueError(f"no tag {tag!r} (have {sorted(tags)})")
+        version = int(tags[tag])
+    if version is not None:
+        found = next((s for s in snaps if s.snapshot_id == version), None)
+        if found is None:
+            raise ValueError(f"no snapshot {version} (have {[s.snapshot_id for s in snaps]})")
+        return found
+    if timestamp_ms is not None:
+        older = [s for s in snaps if s.timestamp_ms <= timestamp_ms]
+        if not older:
+            earliest = min((s.timestamp_ms for s in snaps), default=None)
+            raise ValueError(f"no snapshot at or before {timestamp_ms} (earliest is {earliest})")
+        return older[-1]
+    return snaps[-1] if snaps else None
+
+
 def plan_commits(
     snaps: list[Snapshot], lo: int, hi: int
 ) -> list[tuple[Snapshot | None, Snapshot, list[dict]]]:
@@ -330,7 +362,10 @@ def plan_commits(
     surviving predecessor, or expired commits in between) contributes its
     new files: they are the only surviving copy of the expired commits'
     rows, so a reader may repeat a row it saw before the gap but never
-    drops one."""
+    drops a live one. A delete inside the gap is lost with its expired
+    commit (1 +I k=1, 2 -D k=1, 3 COMPACT, 4 +I k=2, snapshot 2 expired:
+    ``(1, 4]`` plans only k=2); a diff of merged states
+    (``table_changelog(producer="lookup")``) returns it."""
     out = []
     prev = None
     for s in snaps:

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as _dt
+import functools
 import uuid
 import glob
 import os
@@ -55,8 +56,10 @@ from incubator_paimon_trino_spark.catalog.metadata import (
     Snapshot,
     TableSchema,
     _parse_type as _meta_parse_type,
+    load_snapshots,
     plan_commits,
     read_json,
+    resolve_snapshot,
     write_json_atomic,
 )
 from incubator_paimon_trino_spark.catalog.file_index import (
@@ -404,40 +407,25 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         tag: str | None,
     ) -> Snapshot | None:
         """Resolve the snapshot a read is pinned to (A11/A12 semantics)."""
-        if tag is not None:
-            if version_as_of is not None or timestamp_as_of is not None:
-                raise ValueError("tag is mutually exclusive with version/timestamp pins")
-            version_as_of = self._tags(tdir).get(tag)
-            if version_as_of is None:
-                raise ValueError(f"no tag {tag!r} on {tdir}")
-
         # A12 session-property time travel: Trino's `scan_snapshot_id` /
         # `scan_timestamp_millis` session props are copied into dynamic table
         # options on every read (TrinoSessionProperties.java:36-77,
         # TrinoTableHandle.java:128-142). Spark's session-scoped equivalent
         # is spark.conf; explicit per-read arguments win over session props.
-        if version_as_of is None and timestamp_as_of is None:
+        if version_as_of is None and timestamp_as_of is None and tag is None:
             conf_ver = self.spark.conf.get("spark.paimon.scan.snapshot-id", None)
             conf_ts = self.spark.conf.get("spark.paimon.scan.timestamp-millis", None)
             if conf_ver is not None:
                 version_as_of = int(conf_ver)
             elif conf_ts is not None:
                 timestamp_as_of = int(conf_ts)
-
-        snaps = self._snapshots(tdir)
-        if version_as_of is not None:
-            match = [s for s in snaps if s.snapshot_id == version_as_of]
-            if not match:
-                raise ValueError(f"no snapshot {version_as_of} (have {[s.snapshot_id for s in snaps]})")
-            snap = match[0]
-        elif timestamp_as_of is not None:
-            older = [s for s in snaps if s.timestamp_ms <= timestamp_as_of]
-            if not older:
-                raise ValueError(f"no snapshot at or before {timestamp_as_of}")
-            snap = older[-1]
-        else:
-            snap = snaps[-1] if snaps else None
-        return snap
+        return resolve_snapshot(
+            load_snapshots(tdir),
+            self._tags(tdir) if tag is not None else None,
+            version=version_as_of,
+            tag=tag,
+            timestamp_ms=timestamp_as_of,
+        )
 
     def _dynamic_bucket_assign(
         self, tdir: str, schema: TableSchema, out: DataFrame, version: int
@@ -774,6 +762,22 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 db, table, fb, schema, predicate, limit, pad_char
             )
         snap = self._pin_snapshot(tdir, version_as_of, timestamp_as_of, tag)
+        return self._read_snapshot(
+            tdir, schema, snap, with_system_columns, predicate, limit, pad_char
+        )
+
+    def _read_snapshot(
+        self,
+        tdir: str,
+        schema: TableSchema,
+        snap: Snapshot | None,
+        with_system_columns: bool = False,
+        predicate: list | None = None,
+        limit: int | None = None,
+        pad_char: bool = True,
+    ) -> DataFrame:
+        """``read_table`` of a resolved snapshot (None: the empty table), for
+        readers that already hold it (``read_cdc``, ``table_changelog``)."""
         # the re-applied filter below takes the normalized predicate too
         predicate = self._char_normalized(schema, predicate)
         if snap is not None and predicate:
@@ -823,9 +827,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                     tdir, schema, dataclasses.replace(snap, files=hot), with_pos=True
                 )
                 parts.append(self._dv_apply_distributed(d, tdir, snap, schema))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
+            df = functools.reduce(DataFrame.unionByName, parts)
             df = df.drop(SEQ_COL, KIND_COL)
         elif dv_mode:
             # deletion-vector read: scan − DV IS the merged state (every
@@ -1131,9 +1133,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             if synth_pos:
                 cols += [(_DV_FILE, _DV_FILE), (_DV_POS, _DV_POS)]
             parts.append(project(df, cols + pos))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = functools.reduce(DataFrame.unionByName, parts)
         if with_pos:
             out = out.withColumn(_DV_FILE, F.expr(f"element_at(split({_DV_FILE}, '/'), -1)"))
         return out
@@ -1206,7 +1206,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         self, name: str, columns: list[str], predicate: list | None = None
     ) -> dict[str, dict] | None:
         """MIN(col)/MAX(col)/COUNT(col) answered from MANIFESTS alone, or
-        None when only a scan is exact — the completion of the r6 metadata
+        None when only a scan is exact — the completion of the metadata
         aggregation (``metadata_row_count`` above): the per-file min/max/
         null-count stats that already drive scan pruning are summable into
         the exact global extremes under the soundness conditions
@@ -1429,7 +1429,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                     s.timestamp_ms,
                     s.record_count,
                 )
-                for s in self._snapshots(tdir)
+                for s in load_snapshots(tdir)
             ]
             return self.spark.createDataFrame(
                 rows,
@@ -1540,9 +1540,10 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             # files (record_count, file_count, bytes, last snapshot that
             # touched the partition — recovered from the commit-dir prefix
             # `c{N}-` file-name prefix, so no extra manifest state is needed).
-            snap = self._latest_snapshot(tdir)
+            snaps = load_snapshots(tdir)
+            snap = resolve_snapshot(snaps)
             schema = self._latest_schema(tdir)
-            snap_ts = {s.snapshot_id: s.timestamp_ms for s in self._snapshots(tdir)}
+            snap_ts = {s.snapshot_id: s.timestamp_ms for s in snaps}
             agg: dict[str, list] = {}
             for f in snap.files if snap else []:
                 pv = partition_values(f["path"])
@@ -1608,13 +1609,13 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         if to_ms < from_ms:
             raise ValueError(f"to_ms {to_ms} precedes from_ms {from_ms}")
         db, _, table = name.partition(".")
-        snaps = self._snapshots(self._table_dir(db, table))
-
-        def at_or_before(ms: int) -> int:
-            ids = [s.snapshot_id for s in snaps if s.timestamp_ms <= ms]
-            return max(ids) if ids else 0
-
-        return self.read_incremental(name, at_or_before(from_ms), at_or_before(to_ms))
+        snaps = load_snapshots(self._table_dir(db, table))
+        hi = resolve_snapshot(snaps, timestamp_ms=to_ms).snapshot_id
+        try:
+            lo = resolve_snapshot(snaps, timestamp_ms=from_ms).snapshot_id
+        except ValueError:  # nothing committed by from_ms: read from the start
+            lo = 0
+        return self.read_incremental(name, lo, hi)
 
     def read_incremental(
         self, name: str, from_snapshot: int | str, to_snapshot: int | str
@@ -1624,7 +1625,7 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         changelog stream. Either bound may be a TAG NAME (Paimon's
         ``incremental-between-tags``): tags pin their snapshot through
         expiration, so tag-to-tag deltas stay readable after the raw ids
-        between them are gone.
+        between them are gone. ``from_snapshot=0`` is the table's start.
 
         The commits in the range are planned from metadata alone
         (``plan_commits``, shared with ``table_changelog`` and the manifest
@@ -1633,24 +1634,15 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         100 TB an incremental consumer reads GBs, not the table). A
         compaction right after its predecessor contributes nothing; one after
         expired commits contributes its rewritten files, the only surviving
-        copy of those commits' rows. Rows an OVERWRITE removed later in the
-        range are still returned. PK tables keep ``(_seq, _row_kind)`` so
-        consumers can apply upserts/deletes downstream.
+        copy of those commits' rows, so a delete inside such a gap is not
+        returned (see ``plan_commits``). Rows an OVERWRITE removed later in
+        the range are still returned. PK tables keep ``(_seq, _row_kind)``
+        so consumers can apply upserts/deletes downstream.
         """
         db, _, table = name.partition(".")
         tdir = self._table_dir(db, table)
-        if isinstance(from_snapshot, str) or isinstance(to_snapshot, str):
-            tags = self._tags(tdir)
-
-            def resolve(v):
-                if isinstance(v, int):
-                    return v
-                if v not in tags:
-                    raise ValueError(f"no tag {v!r} (have {sorted(tags)})")
-                return int(tags[v])
-
-            from_snapshot, to_snapshot = resolve(from_snapshot), resolve(to_snapshot)
-        if self._dv_enabled(self._latest_schema(tdir)):
+        schema = self._latest_schema(tdir)
+        if self._dv_enabled(schema):
             # same hazard as the 'input' changelog: a DV delete commits no
             # data rows, so the raw file delta would silently omit deletes a
             # consumer's docstring-promised _row_kind application needs —
@@ -1661,21 +1653,19 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 "vectors table (deletes write no data rows); use read_cdc or "
                 "table_changelog(producer='lookup') for the retraction stream"
             )
-        if from_snapshot > to_snapshot:
-            raise ValueError(f"from_snapshot {from_snapshot} > to_snapshot {to_snapshot}")
-        snaps = {s.snapshot_id: s for s in self._snapshots(tdir)}
-        if to_snapshot not in snaps:
-            raise ValueError(f"no snapshot {to_snapshot} (have {sorted(snaps)})")
-        if from_snapshot and from_snapshot not in snaps:
-            raise ValueError(f"no snapshot {from_snapshot} (have {sorted(snaps)})")
-        schema = self._latest_schema(tdir)
-        delta = [
-            f
-            for _, _, files in plan_commits(list(snaps.values()), from_snapshot, to_snapshot)
-            for f in files
-        ]
+        snaps, tags = load_snapshots(tdir), self._tags(tdir)
+
+        def resolve(ref: int | str) -> Snapshot:
+            if isinstance(ref, str):
+                return resolve_snapshot(snaps, tags, tag=ref)
+            return resolve_snapshot(snaps, version=ref)
+
+        hi = resolve(to_snapshot)
+        lo = resolve(from_snapshot).snapshot_id if from_snapshot != 0 else 0
+        if lo > hi.snapshot_id:
+            raise ValueError(f"from_snapshot {lo} > to_snapshot {hi.snapshot_id}")
+        delta = [f for _, _, files in plan_commits(snaps, lo, hi.snapshot_id) for f in files]
         if not delta:
             empty = _physical_schema(schema, bool(schema.primary_key))
             return self.spark.createDataFrame([], empty)
-        return self._read_files(tdir, schema, dataclasses.replace(snaps[to_snapshot], files=delta))
-
+        return self._read_files(tdir, schema, dataclasses.replace(hi, files=delta))

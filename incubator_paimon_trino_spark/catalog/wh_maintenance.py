@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as _dt
+import functools
 import glob
 import os
 import re
@@ -32,8 +33,11 @@ from incubator_paimon_trino_spark.catalog.metadata import (
     CommitConflictError,
     Snapshot,
     TableSchema,
+    latest_snapshot_id,
+    load_snapshots,
     plan_commits,
     read_json,
+    resolve_snapshot,
     write_json_atomic,
 )
 from incubator_paimon_trino_spark.catalog.file_index import (
@@ -58,15 +62,13 @@ class MaintenanceMixin:
         snapshot expiration of *other* versions and reads back via
         ``read_table(tag=...)`` or the ``$tags`` system table."""
         tdir = self._table_dir(db, table)
-        snaps = {s.snapshot_id for s in self._snapshots(tdir)}
-        if snapshot_id is None:
-            snapshot_id = max(snaps) if snaps else None
-        if snapshot_id not in snaps:
-            raise ValueError(f"no snapshot {snapshot_id} (have {sorted(snaps)})")
+        snap = resolve_snapshot(load_snapshots(tdir), version=snapshot_id)
+        if snap is None:
+            raise ValueError(f"no snapshot to tag: {db}.{table} is empty")
         tags = self._tags(tdir)
         if tag in tags:
             raise ValueError(f"tag {tag!r} already exists (-> snapshot {tags[tag]})")
-        tags[tag] = snapshot_id
+        tags[tag] = snap.snapshot_id
         write_json_atomic(os.path.join(tdir, "snapshot", "TAGS"), tags)
 
     def delete_tag(self, db: str, table: str, tag: str) -> None:
@@ -92,10 +94,8 @@ class MaintenanceMixin:
         dropped and their files (unreferenced by any survivor) deleted.
         The next commit continues from the restored version."""
         tdir = self._table_dir(db, table)
-        snaps = self._snapshots(tdir)
-        ids = [s.snapshot_id for s in snaps]
-        if snapshot_id not in ids:
-            raise ValueError(f"no snapshot {snapshot_id} (have {ids})")
+        snaps = load_snapshots(tdir)
+        resolve_snapshot(snaps, version=snapshot_id)  # must exist
         kept = [s for s in snaps if s.snapshot_id <= snapshot_id]
         doomed = [s for s in snaps if s.snapshot_id > snapshot_id]
         tags = self._tags(tdir)
@@ -341,7 +341,7 @@ class MaintenanceMixin:
         prefix = f"branch/{os.path.basename(norm)}/"
         main_dir = os.path.dirname(parent)
         pinned: set[str] = set()
-        for s in self._snapshots(main_dir):
+        for s in load_snapshots(main_dir):
             for f in s.files:
                 p = f["path"].replace(os.sep, "/")
                 if p.startswith(prefix):
@@ -383,19 +383,14 @@ class MaintenanceMixin:
         bdir = os.path.join(tdir, "branch", branch)
         if os.path.exists(bdir):
             raise ValueError(f"branch {branch!r} already exists")
-        seed_id = 0
+        snap = None
         if from_tag is not None:
-            tags = self._tags(tdir)
-            if from_tag not in tags:
-                raise ValueError(f"no tag {from_tag!r} (have {sorted(tags)})")
-            seed_id = tags[from_tag]
+            snap = resolve_snapshot(load_snapshots(tdir), self._tags(tdir), tag=from_tag)
+        seed_id = snap.snapshot_id if snap else 0
         os.makedirs(os.path.join(bdir, "schema"))
         for sp in glob.glob(os.path.join(tdir, "schema", "schema-*.json")):
             shutil.copy2(sp, os.path.join(bdir, "schema", os.path.basename(sp)))
-        if seed_id:
-            snap = next(
-                s for s in self._snapshots(tdir) if s.snapshot_id == seed_id
-            )
+        if snap is not None:
             if snap.dv:
                 # the seeded snapshot's deletion vectors travel with it —
                 # basename matching makes the ../../ path rewrite moot;
@@ -442,7 +437,7 @@ class MaintenanceMixin:
         if not os.path.isdir(bdir):
             raise ValueError(f"no branch {branch!r}")
         prefix = os.path.join("branch", branch) + os.sep
-        for s in self._snapshots(tdir):
+        for s in load_snapshots(tdir):
             if any(f["path"].startswith(prefix) for f in s.files):
                 raise ValueError(
                     f"branch {branch!r} was fast-forwarded into main "
@@ -468,25 +463,15 @@ class MaintenanceMixin:
         if meta is None:
             raise ValueError(f"no branch {branch!r}")
         base = int(meta.get("from_snapshot", 0))
-        branch_new = [s for s in self._snapshots(bdir) if s.snapshot_id > base]
-        main_snaps = self._snapshots(tdir)
-        main_tip = main_snaps[-1].snapshot_id if main_snaps else 0
+        branch_new = [s for s in load_snapshots(bdir) if s.snapshot_id > base]
+        main_tip = latest_snapshot_id(tdir)
         if main_tip > base:
             if base == 0:
                 raise ValueError(
                     f"cannot fast_forward empty-seeded branch {branch!r} over "
                     f"a main history (main tip {main_tip}); branch from a tag"
                 )
-            # tags above the branch point are about to be discarded with the
-            # diverged main history — refuse if another branch depends on one
-            tags = self._tags(tdir)
-            for other, ometa in self._branches(tdir).items():
-                otag = ometa.get("from_tag")
-                if other != branch and otag in tags and tags[otag] > base:
-                    raise ValueError(
-                        f"fast_forward would discard tag {otag!r} that "
-                        f"branch {other!r} was created from"
-                    )
+            # refuses if another branch was seeded from a tag above base
             self.rollback_to(db, table, base)
         import uuid as _uuid
 
@@ -550,17 +535,26 @@ class MaintenanceMixin:
         completion for consumers that must see before/after images.
         """
         db, _, table = name.partition(".")
-        schema = self.schema_of(db, table)
+        tdir = self._table_dir(db, table)
+        schema = self._latest_schema(tdir)
         if not schema.primary_key:
             raise ValueError("read_cdc requires a primary-key table")
         if from_snapshot > to_snapshot:
             raise ValueError(f"from_snapshot {from_snapshot} > to_snapshot {to_snapshot}")
+        snaps = load_snapshots(tdir)
+        old = resolve_snapshot(snaps, version=from_snapshot) if from_snapshot else None
+        return self._cdc_diff(tdir, schema, old, resolve_snapshot(snaps, version=to_snapshot))
+
+    def _cdc_diff(
+        self, tdir: str, schema: TableSchema, before: Snapshot | None, after: Snapshot
+    ) -> DataFrame:
+        """``read_cdc`` of two resolved snapshots (``before`` None: all +I)."""
         pk = schema.primary_key
         value_cols = [f.name for f in schema.fields if f.name not in pk]
-        old = self.read_table(name, version_as_of=from_snapshot) if from_snapshot else None
-        new = self.read_table(name, version_as_of=to_snapshot)
-        if old is None:
+        new = self._read_snapshot(tdir, schema, after)
+        if before is None:
             return new.withColumn("_change", F.lit("+I"))
+        old = self._read_snapshot(tdir, schema, before)
         from pyspark.sql import types as _T
 
         # comparison twin of each value column: Spark's eqNullSafe rejects
@@ -625,10 +619,16 @@ class MaintenanceMixin:
           ``none`` table cannot provide complete changelogs downstream.
 
         Every row carries ``_snapshot`` (the commit that produced it) and
-        ``_change``. One ``read_cdc`` (two merged reads + a co-partitioned
-        full-outer join) per commit in the range — bound history with
-        ``expire_snapshots``; for a raw-speed tail without pairing use
-        ``read_incremental``/``read_changelog_stream``.
+        ``_change``. One ``read_cdc`` diff (two merged reads + a
+        co-partitioned full-outer join) per commit in the range, of the
+        snapshots ``plan_commits`` returned: the snapshot list loads once
+        per call. Bound history with ``expire_snapshots``; for a raw-speed
+        tail without pairing use ``read_incremental``/
+        ``read_changelog_stream``.
+
+        Across an expiry gap a compaction closed, ``input`` (like
+        ``read_incremental``) loses a delete made inside the gap; the diff
+        producers return it (see ``plan_commits``).
         """
         db, _, table = name.partition(".")
         tdir = self._table_dir(db, table)
@@ -658,7 +658,7 @@ class MaintenanceMixin:
                 nxt = self.consumer_progress(db, table, consumer_id)
                 if nxt is not None:
                     from_snapshot = nxt - 1
-        snaps = self._snapshots(tdir)
+        snaps = load_snapshots(tdir)
         snap_ids = {s.snapshot_id for s in snaps}
         tip = snaps[-1].snapshot_id if snaps else 0
         hi = to_snapshot if to_snapshot is not None else tip
@@ -710,10 +710,7 @@ class MaintenanceMixin:
                 # "long", not "bigint": StructType.add parses JSON type names
                 empty = schema.spark_schema().add("_snapshot", "long").add("_change", "string")
                 return self.spark.createDataFrame([], empty)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+            return functools.reduce(DataFrame.unionByName, parts)
 
         # diff against the NEAREST surviving predecessor: with expired
         # history (incl. mid-history gaps where only a tagged snapshot
@@ -721,7 +718,7 @@ class MaintenanceMixin:
         # diff — a full +I bootstrap would drop -D rows and re-emit
         # unchanged rows; no predecessor degrades to the full initial image.
         parts = [
-            self.read_cdc(name, prev.snapshot_id if prev else 0, s.snapshot_id).withColumn(
+            self._cdc_diff(tdir, schema, prev, s).withColumn(
                 "_snapshot", F.lit(s.snapshot_id).cast("bigint")
             )
             for prev, s, _ in plan
@@ -729,9 +726,7 @@ class MaintenanceMixin:
         if not parts:
             empty = schema.spark_schema().add("_change", "string").add("_snapshot", "long")
             return self.spark.createDataFrame([], empty)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = functools.reduce(DataFrame.unionByName, parts)
         if producer == "none":
             out = out.filter(F.col("_change") != "-U")
         return out
@@ -951,7 +946,7 @@ class MaintenanceMixin:
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         tdir = self._table_dir(db, table)
-        snaps = self._snapshots(tdir)
+        snaps = load_snapshots(tdir)
         tagged = set(self._tags(tdir).values())
         # registered consumers pin retention (Paimon's consumer mechanism):
         # every snapshot at or above the smallest recorded next-position
@@ -1084,7 +1079,7 @@ class MaintenanceMixin:
         cutoff = (
             older_than_ms if older_than_ms is not None else (time.time() - 24 * 3600) * 1000
         )
-        snaps = self._snapshots(tdir)
+        snaps = load_snapshots(tdir)
         horizon = snaps[-1].snapshot_id if snaps else 0
         # manifests store relpath-native separators; normalize to "/" so the
         # membership test below matches on Windows too (else every referenced

@@ -2,9 +2,8 @@
 SHOW CREATE TABLE, information_schema, and the table-reference
 rewriter behind ``WarehouseCatalog.sql``.
 
-Split out of ``warehouse.py`` in r10 — one mixin of
-``WarehouseCatalog``; no behavior change, the class surface is
-assembled in ``warehouse.py``.
+One mixin of ``WarehouseCatalog``; the class surface is assembled in
+``warehouse.py``.
 """
 
 from __future__ import annotations
@@ -15,7 +14,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from incubator_paimon_trino_spark.catalog.metadata import KIND_COL
+from incubator_paimon_trino_spark.catalog.metadata import KIND_COL, load_snapshots, resolve_snapshot
 from incubator_paimon_trino_spark.functions.types import spark_to_paimon
 
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
@@ -154,7 +153,7 @@ class SqlMixin:
                 # fresh table and succeeded; dropping then would destroy its
                 # committed snapshot, not our debris)
                 try:
-                    if not self._snapshots(self._table_dir(m.group("db"), m.group("tbl"))):
+                    if not load_snapshots(self._table_dir(m.group("db"), m.group("tbl"))):
                         self.drop_table(m.group("db"), m.group("tbl"))
                 except Exception:
                     pass
@@ -413,14 +412,8 @@ class SqlMixin:
             ts = named.get("timestamp") or take("timestamp")
             if ts is None:
                 raise ValueError(f"sys.{proc}: missing timestamp argument")
-            snaps = self._snapshots(self._table_dir(db, tbl))
-            ids = [s.snapshot_id for s in snaps if s.timestamp_ms <= int(ts)]
-            if not ids:
-                raise ValueError(
-                    f"sys.{proc}: no snapshot at or before timestamp {ts} "
-                    f"(earliest is {min((s.timestamp_ms for s in snaps), default=None)})"
-                )
-            target = max(ids)
+            tdir = self._table_dir(db, tbl)
+            target = resolve_snapshot(load_snapshots(tdir), timestamp_ms=int(ts)).snapshot_id
             if proc == "rollback_to_timestamp":
                 no_leftovers()
                 self.rollback_to(db, tbl, target)
@@ -712,7 +705,7 @@ class SqlMixin:
         r"\binformation_schema\.(schemata|tables|columns)\b", re.IGNORECASE
     )
 
-    # ------------------------------------------------ TABLESAMPLE (r13)
+    # ------------------------------------------------------ TABLESAMPLE
     _TABLESAMPLE_RE = re.compile(
         r"\bTABLESAMPLE\s+(?P<kind>BERNOULLI|SYSTEM)\s*\(\s*(?P<pct>\d+(?:\.\d+)?)\s*\)",
         re.IGNORECASE,
@@ -720,8 +713,7 @@ class SqlMixin:
 
     def _rewrite_tablesample(self, query: str) -> str:
         """Trino's ``TABLESAMPLE BERNOULLI(p)`` / ``SYSTEM(p)`` → Spark's
-        ``TABLESAMPLE (p PERCENT)`` (r13 — VERDICT r12 missing #3, the last
-        unspelled Trino surface). BERNOULLI is a direct semantic match
+        ``TABLESAMPLE (p PERCENT)``. BERNOULLI is a direct semantic match
         (independent per-row inclusion at p%). SYSTEM in Trino samples
         SPLITS — an approximation whose only contract is "about p% of the
         data, cheaper than per-row"; Spark SQL has no block sampling, so
@@ -744,7 +736,7 @@ class SqlMixin:
             last = m.end()
         return "".join(out) + query[last:]
 
-    # ------------------------------------------- MATCH_RECOGNIZE SQL (r13)
+    # ------------------------------------------------- MATCH_RECOGNIZE SQL
     _MR_KW = re.compile(r"\bMATCH_RECOGNIZE\s*\(", re.IGNORECASE)
     _MR_FROM = re.compile(
         r"\b(?P<kw>FROM|JOIN)\s+(?P<ref>[A-Za-z_][\w.]*)\s+MATCH_RECOGNIZE\s*\($",
@@ -810,7 +802,7 @@ class SqlMixin:
     def _parse_mr_body(self, body: str) -> dict:
         """Trino's MATCH_RECOGNIZE body → kwargs for the
         ``operators.match_recognize.match_recognize`` operator (every
-        semantic there predates this SQL spelling — r13 is grammar only)."""
+        semantic lives there; this is grammar only)."""
         spans = self._mr_clause_spans(body)
         if not spans:
             raise ValueError("MATCH_RECOGNIZE: empty body — PATTERN and DEFINE are required")
@@ -913,8 +905,7 @@ class SqlMixin:
 
     def _rewrite_match_recognize_sql(self, query: str) -> str:
         """Lower each ``FROM <ref> MATCH_RECOGNIZE (...)`` clause to a temp
-        view over the existing keyword-API operator (r13 — VERDICT r12 item
-        1, the last spelled-surface delta vs Trino's inherited engine suite,
+        view over the existing keyword-API operator (the Trino spelling of
         common-test/TestTrinoDistributedQuery.java:91,486). Runs AFTER the
         table-reference rewriting pass, so ``<ref>`` is already a resolvable
         view name; the surrounding query text (outer SELECT, WHERE, a
@@ -992,7 +983,7 @@ class SqlMixin:
 
         ``FROM <table> MATCH_RECOGNIZE (PARTITION BY ... ORDER BY ...
         [MEASURES ...] [ONE ROW|ALL ROWS PER MATCH [variant]] [AFTER MATCH
-        SKIP ...] PATTERN (...) [SUBSET ...] DEFINE ...)`` (r13) lowers to
+        SKIP ...] PATTERN (...) [SUBSET ...] DEFINE ...)`` lowers to
         the keyword-API operator in ``operators/match_recognize.py`` — the
         full Trino clause grammar over semantics that all predate the SQL
         spelling. The source may be a lake table (resolved first, above) or
@@ -1007,25 +998,20 @@ class SqlMixin:
 
         # information_schema.<rel> references resolve to metadata views
         quoted0 = _quoted_spans(query)
-        if any(
-            not any(a <= m.start() < b for a, b in quoted0)
+        refs = [
+            m
             for m in self._INFO_SCHEMA_REF.finditer(query)
-        ):
-            referenced = {
-                m.group(1).lower()
-                for m in self._INFO_SCHEMA_REF.finditer(query)
-                if not any(a <= m.start() < b for a, b in quoted0)
-            }
-            for rel in referenced:
+            if not any(a <= m.start() < b for a, b in quoted0)
+        ]
+        if refs:
+            for rel in {m.group(1).lower() for m in refs}:
                 # build only what the query names — the columns view reads
                 # every table's schema JSON, too costly to create eagerly
                 self.information_schema(rel).createOrReplaceTempView(
                     f"information_schema__{rel}"
                 )
             pieces, last0 = [], 0
-            for m in self._INFO_SCHEMA_REF.finditer(query):
-                if any(a <= m.start() < b for a, b in quoted0):
-                    continue
+            for m in refs:
                 pieces.append(query[last0 : m.start()])
                 pieces.append(f"information_schema__{m.group(1).lower()}")
                 last0 = m.end()
@@ -1071,10 +1057,10 @@ class SqlMixin:
             # comparator, so a padded view would make WHERE c = 'ab' on a
             # CHAR(5) column silently match nothing — the worst failure
             # mode. Storage-form views keep every comparison/group/join
-            # over char columns pad-insensitive with unpadded literals
-            # (the pre-r9 facade semantics); the reference-faithful PADDED
-            # surface is the API read (read_table), hash-gated by
-            # lake_char_padded_read. Documented in functions/types.py.
+            # over char columns pad-insensitive with unpadded literals;
+            # the reference-faithful PADDED surface is the API read
+            # (read_table), hash-gated by lake_char_padded_read.
+            # Documented in functions/types.py.
             df = self.read_table(
                 name, version_as_of=ver, timestamp_as_of=ts, tag=tag, pad_char=False
             )
@@ -1090,7 +1076,7 @@ class SqlMixin:
         if self._TABLESAMPLE_RE.search(final):
             final = self._rewrite_tablesample(final)
         if self._MR_KW.search(final):
-            # MATCH_RECOGNIZE clause (r13): lower to the keyword-API
+            # MATCH_RECOGNIZE clause: lower to the keyword-API
             # operator through a temp view, then let Spark plan the rest
             final = self._rewrite_match_recognize_sql(final)
         return self.spark.sql(final)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import dataclasses
 import datetime as _dt
+import functools
 import uuid
 import glob
 import os
@@ -36,7 +37,9 @@ from incubator_paimon_trino_spark.catalog.metadata import (
     Snapshot,
     TableSchema,
     _storage_ddl,
+    latest_snapshot_id,
     load_snapshots,
+    resolve_snapshot,
     write_json_atomic,
 )
 from incubator_paimon_trino_spark.catalog.file_index import (
@@ -84,12 +87,6 @@ def _bucket_layout(schema: TableSchema) -> tuple[int, str | None]:
 
 class WriteMixin:
     # -------------------------------------------------------------- commits
-    def _snapshots(self, tdir: str) -> list[Snapshot]:
-        # module-level in metadata.py since r8: the manifest-driven streaming
-        # source's driver worker (a separate Python process, no session)
-        # plans from the same resolution
-        return load_snapshots(tdir)
-
     def _publish_snapshot(
         self, tdir: str, snap: Snapshot, new_files: list[dict], base_manifests: list[str]
     ) -> None:
@@ -128,7 +125,7 @@ class WriteMixin:
         eligible: a concurrent committer writes its manifest (at latest+1)
         BEFORE publishing its snapshot, and GC'ing that window would corrupt
         the winning commit."""
-        snaps = self._snapshots(tdir)
+        snaps = load_snapshots(tdir)
         live = {m for s in snaps for m in s.manifests}
         horizon = snaps[-1].snapshot_id if snaps else 0
         for p in glob.glob(os.path.join(tdir, "manifest", "manifest-*.json")):
@@ -139,15 +136,13 @@ class WriteMixin:
                 os.remove(p)
 
     def _latest_snapshot(self, tdir: str) -> Snapshot | None:
-        snaps = self._snapshots(tdir)
-        return snaps[-1] if snaps else None
+        return resolve_snapshot(load_snapshots(tdir))
 
     def latest_snapshot_id(self, db: str, table: str) -> int:
         """The current tip snapshot id (0 for an empty table) — the position
         a consumer checkpoints after fully processing the table's backlog
         (metadata-only: one snapshot-dir listing, no data read)."""
-        snap = self._latest_snapshot(self._table_dir(db, table))
-        return snap.snapshot_id if snap else 0
+        return latest_snapshot_id(self._table_dir(db, table))
 
     @staticmethod
     def _staging_dir(tdir: str, version: int, stale_after_s: int = 24 * 3600) -> str:
@@ -1154,9 +1149,7 @@ class WriteMixin:
             )
         if not pieces:
             raise ValueError("merge_into with no clauses is a no-op")
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
+        out = functools.reduce(DataFrame.unionByName, pieces)
         return self.insert_into(db, table, out)
 
     @staticmethod

@@ -30,7 +30,6 @@ ordinals over the ordered OCF block decode, the fallback twin of parquet's
 from __future__ import annotations
 
 import functools
-import io
 import json
 import os
 import struct
@@ -40,12 +39,15 @@ from typing import Iterator
 from incubator_paimon_trino_spark.functions.types import split_top_commas
 
 MAGIC = b"Obj\x01"
-# Flush encoded blocks at ~2 KiB. Small blocks cost ~1.8% size overhead
-# (two varints + the 16-byte sync per block) and buy the reader MANY
-# independent entry points: the vectorized lane-phase decoder below walks
-# one record per step across ALL blocks simultaneously, so its Python-level
-# step count is records-per-block, not records-per-file.
+# A block flushes once it holds ~2 KiB: per-row ``write`` makes ~2 KiB
+# blocks, ``write_encoded`` one block per (large) encoded batch.
 _BLOCK_TARGET = 1 << 11
+# Flat files of at least this many blocks decode by the lane-phase walk,
+# others by the generated scanner. The block count decides, not the rows
+# per block: on a 7-column schema the walk took 5.6x the scanner's time at
+# 8 blocks, ~1.5x at 32, ~1x at 48-64 and 0.5-0.7x from 80 up, alike for
+# 100- and 1,000-row blocks.
+_LANE_MIN_BLOCKS = 64
 
 
 # ------------------------------------------------------- vectorized (numpy)
@@ -1434,10 +1436,9 @@ def read_ocf_arrow(path: str, out_fields: list[tuple[str, str]]):
                 raise ValueError(f"sync marker mismatch in {path}")
         whole = b"".join(payloads)
         blocks = [(o, c) for o, c in blocks if c]
-        if len(blocks) >= 8:
+        if len(blocks) >= _LANE_MIN_BLOCKS:
             # many lanes: the block-parallel walk needs records-per-block
-            # Python steps, not records-per-file (our writer flushes at
-            # ~2 KiB precisely to keep this path hot). Projection pushdown:
+            # Python steps, not records-per-file. Projection pushdown:
             # unrequested fields are walked over but never recorded/built.
             acc, _n = _lane_phase_decode(
                 whole, blocks, plan, wanted={nm for nm, _ in out_fields}

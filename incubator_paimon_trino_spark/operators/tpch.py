@@ -30,7 +30,7 @@ from incubator_paimon_trino_spark.operators.registry import (
     sql_davg,
     sql_dsum,
 )
-from incubator_paimon_trino_spark.sources import fan_out, table
+from incubator_paimon_trino_spark.sources import table
 
 def _one():
     # F.lit needs an active SparkContext, so this can't be a module constant.
@@ -60,7 +60,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Flagship query — the exact shape named in SURVEY §7 step 1.
 
-    r13: the BigDecimal aggregation chain was ~1.0 s of the 1.6 s sf0.1
+    The BigDecimal aggregation chain was ~1.0 s of the 1.6 s sf0.1
     query, serialized on the single-split scan task. Rewritten on integer
     CENTS (guide §2.3 "narrower types"): each 2-decimal double becomes an
     exact LONG cents column at the scan, the four simple sums accumulate as
@@ -149,7 +149,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
     )
-    # r13: measured fan_out here and REVERTED it — the probe chain over the
+    # Measured fan_out here and REVERTED it — the probe chain over the
     # pushed-filter scan costs less serially (~0.46 s at sf0.1) than the
     # added exchange (~0.69 s); see OPTIMIZATION_r13.md interleaved A/B.
     li = table(spark, sf_dir, "lineitem").filter(
@@ -193,7 +193,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
-    # r13: measured fan_out here and REVERTED it (A/B: 0.39 s plain vs
+    # Measured fan_out here and REVERTED it (A/B: 0.39 s plain vs
     # 0.52 s fanned — the 5-probe chain is cheaper serially than an extra
     # exchange at this scale; see OPTIMIZATION_r13.md).
     li = table(spark, sf_dir, "lineitem")
@@ -390,17 +390,17 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: IN over a grouped-HAVING subquery → semi join on the
     aggregated key set.
 
-    r13: measured fan_out here and REVERTED it (A/B: 0.85 s plain vs 1.06 s
+    Measured fan_out here and REVERTED it (A/B: 0.85 s plain vs 1.06 s
     fanned — the high-cardinality partial agg doesn't reduce enough for the
     extra exchange to pay; see OPTIMIZATION_r13.md).
 
-    r13: the HAVING aggregate sums LONG cents instead of DECIMAL(9,2)
+    The HAVING aggregate sums LONG cents instead of DECIMAL(9,2)
     (guide §2.3 "narrower types": LONG adds, not BigDecimal) — driver-table
     doubles are 2-decimal by the registry contract, so round(qty*100) is
     the same integer as the decimal cents and the >250 set is identical
     (HAVING leg 0.88→0.43 s noop).
 
-    r13 one-scan restructure (guide §1.2 step 1 "don't compute things you
+    One-scan restructure (guide §1.2 step 1 "don't compute things you
     throw away"): the original shape scanned lineitem TWICE — once for the
     HAVING aggregate and again to re-sum l_quantity per surviving order for
     the output — but o_orderkey is the orders PK, so the outer
@@ -483,7 +483,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1996-10-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
     )
-    # r13: measured fan_out here and REVERTED it (A/B: 0.29 s plain vs
+    # Measured fan_out here and REVERTED it (A/B: 0.29 s plain vs
     # 0.56 s fanned — the returnflag filter pushes into the scan and leaves
     # too little work above it to amortize an exchange).
     li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")

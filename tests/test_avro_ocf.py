@@ -191,10 +191,10 @@ def test_vectorized_encode_decode_match_per_row_paths():
             w.write_encoded(payload, cnt)
             w.close()
         write_ocf(p_row, schema, rows)
-        t_vec = read_ocf_arrow(p_vec, FLAT_FIELDS)  # many 4 KiB blocks → lanes
-        t_row = read_ocf_arrow(p_row, FLAT_FIELDS)
+        t_vec = read_ocf_arrow(p_vec, FLAT_FIELDS)  # one block → scanner
+        t_row = read_ocf_arrow(p_row, FLAT_FIELDS)  # hundreds of ~2 KiB blocks → lanes
         assert t_vec.equals(t_row)
-        # scanner route: single-block file (below the 8-block lane threshold)
+        # scanner route: single-block file (below the lane threshold)
         p_one = tempfile.mktemp(suffix=".avro")
         try:
             with open(p_one, "wb") as fh:
@@ -222,6 +222,41 @@ def test_vectorized_encode_decode_match_per_row_paths():
     finally:
         os.unlink(p_vec)
         os.unlink(p_row)
+
+
+def test_few_large_blocks_decode_through_the_scanner(monkeypatch):
+    """A file of a few large blocks (one per ``write_encoded`` batch) takes
+    the generated scanner, not the lane-phase walk, and still equals the
+    per-row closure decode."""
+    import pyarrow as pa
+
+    from incubator_paimon_trino_spark.formats import avro_ocf
+    from incubator_paimon_trino_spark.formats.avro_ocf import OcfWriter, encode_batch, read_ocf
+    from incubator_paimon_trino_spark.formats.file_reader import _arrow_type
+
+    def no_lanes(*a, **k):
+        raise AssertionError("lane-phase walk taken for a few-block file")
+
+    monkeypatch.setattr(avro_ocf, "_lane_phase_decode", no_lanes)
+    rng = random.Random(41)
+    schema = record_schema(FLAT_FIELDS)
+    p = tempfile.mktemp(suffix=".avro")
+    try:
+        with open(p, "wb") as fh:
+            w = OcfWriter(fh, schema)
+            for _ in range(8):
+                w.write_encoded(*encode_batch(_flat_batch([_flat_row(rng) for _ in range(10_000)]), schema))
+            w.close()
+        _, it = read_ocf(p)
+        data = list(it)
+        assert len(data) == 80_000
+        ref = pa.table({
+            nm: pa.array([r.get(nm) for r in data], type=_arrow_type(dd))
+            for nm, dd in FLAT_FIELDS
+        })
+        assert read_ocf_arrow(p, FLAT_FIELDS).equals(ref)
+    finally:
+        os.unlink(p)
 
 
 def test_vectorized_codec_timing_pins():

@@ -13,6 +13,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from incubator_paimon_trino_spark.catalog import WarehouseCatalog
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots
 
 
 @pytest.fixture()
@@ -1169,7 +1170,7 @@ def test_read_incremental_by_timestamp(spark, tmp_path):
     cat.create_table("d", "t", [("k", "int")])
     for i in range(3):
         cat.insert_into("d", "t", spark.createDataFrame([(i,)], "k int"))
-    snaps = cat._snapshots(cat._table_dir("d", "t"))
+    snaps = load_snapshots(cat._table_dir("d", "t"))
     ts = {s.snapshot_id: s.timestamp_ms for s in snaps}
     # (ts1, ts2]: exactly commit 2's row
     got = cat.read_incremental_by_timestamp("d.t", ts[1], ts[2]).collect()

@@ -10,6 +10,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from incubator_paimon_trino_spark.catalog import WarehouseCatalog
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots
 
 
 @pytest.fixture()
@@ -985,7 +986,7 @@ def test_timestamp_procedures(spark, tmp_path):
     for i in range(3):
         cat.insert_into("d", "t", spark.createDataFrame([(i,)], "k int"))
     tdir = cat._table_dir("d", "t")
-    ts2 = {s.snapshot_id: s.timestamp_ms for s in cat._snapshots(tdir)}[2]
+    ts2 = {s.snapshot_id: s.timestamp_ms for s in load_snapshots(tdir)}[2]
     res = cat.sql(
         f"CALL sys.create_tag_from_timestamp(table => 'd.t', tag => 'at2', timestamp => '{ts2}')"
     ).collect()

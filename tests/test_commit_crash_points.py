@@ -25,7 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from incubator_paimon_trino_spark.catalog import wh_maintenance, wh_write
-from incubator_paimon_trino_spark.catalog.metadata import CommitConflictError
+from incubator_paimon_trino_spark.catalog.metadata import CommitConflictError, load_snapshots
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
 
 DDL = "k bigint, v string, c string"
@@ -66,7 +66,7 @@ def test_failed_commit_leaves_table_as_before(spark, tmp_path, monkeypatch, kind
         rows = [(k, f"a{k}", "abc") for k in range(lo, lo + 8)]
         cat.insert_into("d", "t", spark.createDataFrame(rows, DDL).coalesce(1))
     tdir = cat._table_dir("d", "t")
-    history = {s.snapshot_id: _rows(cat, version_as_of=s.snapshot_id) for s in cat._snapshots(tdir)}
+    history = {s.snapshot_id: _rows(cat, version_as_of=s.snapshot_id) for s in load_snapshots(tdir)}
     before = _rows(cat)
     files_before = _files(tdir)
     if kind == "dynamic_bucket":

@@ -103,7 +103,8 @@ def test_pk_read_incremental_equals_input_changelog(cat, spark):
 
 def test_compaction_after_expiry_gap_keeps_rows(cat, spark):
     """Tag 1, expire 2: snapshots 1, 3 (COMPACT) and 4 survive. Key 2 lives
-    only in the compaction's file; every reader returns it."""
+    only in the compaction's file; every reader returns it. When commit 2
+    deleted key 1 instead, only ``producer="lookup"`` returns the delete."""
     _history(cat, spark, "g", pk=True)
     cat.create_tag("d", "g", "t1", 1)
     cat.expire_snapshots("d", "g", keep_last=2)
@@ -117,6 +118,18 @@ def test_compaction_after_expiry_gap_keeps_rows(cat, spark):
     inc = _kv(cat.read_incremental("d.g", "t1", 4))
     for got in (log, stream, inc):
         assert (2, "B") in got and (3, "C") in got
+    # a delete inside the gap: the compaction dropped the key and the -D
+    # commit expired, so only the diff of merged states returns it
+    cat.create_table("d", "x", [("k", "bigint"), ("v", "string")], primary_key=["k"])
+    cat.insert_into("d", "x", spark.createDataFrame([(1, "A")], "k bigint, v string"))
+    cat.sql("DELETE FROM d.x WHERE k = 1")
+    cat.compact("d", "x")
+    cat.insert_into("d", "x", spark.createDataFrame([(2, "B")], "k bigint, v string"))
+    cat.create_tag("d", "x", "t1", 1)
+    cat.expire_snapshots("d", "x", keep_last=2)
+    assert [r.snapshot_id for r in cat.snapshots("d", "x").collect()] == [1, 3, 4]
+    lookup = cat.table_changelog("d.x", 1, 4, producer="lookup").collect()
+    assert sorted((r.k, r._change) for r in lookup) == [(1, "-D"), (2, "+I")]
 
 
 def _stream_rows(tdir: str, lo: int, hi: int) -> Counter:

@@ -17,6 +17,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from incubator_paimon_trino_spark.catalog import WarehouseCatalog
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots
 
 
 @pytest.fixture()
@@ -55,7 +56,7 @@ def test_snapshot_json_stores_manifest_refs_not_files(cat, spark):
 
 def test_resolved_views_equal_accumulated_files(cat, spark):
     _mk(cat, spark)
-    snaps = cat._snapshots(_tdir(cat, "d", "t"))
+    snaps = load_snapshots(_tdir(cat, "d", "t"))
     counts = [len(s.files) for s in snaps]
     assert counts[0] > 0 and all(b > a for a, b in zip(counts, counts[1:]))
     assert cat.read_table("d.t").count() == 12
@@ -101,7 +102,7 @@ def test_rollback_gcs_dropped_manifests(cat, spark):
     # horizon is now 5 → the two stale rollback leftovers are gone; what
     # remains is exactly snapshot 5's manifest chain
     names = {os.path.basename(p) for p in left}
-    assert names == set(cat._snapshots(_tdir(cat, "d", "t"))[-1].manifests)
+    assert names == set(load_snapshots(_tdir(cat, "d", "t"))[-1].manifests)
     assert cat.read_table("d.t").count() == 9
 
 
@@ -113,7 +114,7 @@ def test_legacy_inline_files_snapshot_still_reads(cat, spark, tmp_path):
     tdir = _tdir(cat, "d", "t")
     # rewrite snapshot 1 in the legacy shape
     d = _snap_json(cat, "d", "t", 1)
-    files = cat._snapshots(tdir)[0].files
+    files = load_snapshots(tdir)[0].files
     legacy = {k: v for k, v in d.items() if k != "manifests"}
     legacy["files"] = files
     with open(os.path.join(tdir, "snapshot", "snapshot-1.json"), "w") as f:

@@ -23,7 +23,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from incubator_paimon_trino_spark.catalog.metadata import CommitConflictError
+from incubator_paimon_trino_spark.catalog.metadata import CommitConflictError, load_snapshots
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
 from incubator_paimon_trino_spark.catalog.wh_helpers import _DV_FILE, _DV_POS
 
@@ -262,7 +262,7 @@ def test_dv_commit_crash_points(cat, spark, monkeypatch, index, kind, point):
     cat.delete_where("d", "t", F.col("k").isin(0, 1))  # snapshot 2 carries marks
     tdir = cat._table_dir("d", "t")
     assert cat._latest_snapshot(tdir).dv.startswith("dvm-" if index == "sharded" else "dv-")
-    history = {s.snapshot_id: _rows(cat, version_as_of=s.snapshot_id) for s in cat._snapshots(tdir)}
+    history = {s.snapshot_id: _rows(cat, version_as_of=s.snapshot_id) for s in load_snapshots(tdir)}
     before = _rows(cat)
     files_before = _files(tdir)
 

@@ -37,7 +37,7 @@ from incubator_paimon_trino_spark.catalog.dv_index import (
     load_index_meta,
     mark_file_names,
 )
-from incubator_paimon_trino_spark.catalog.metadata import read_json
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots, read_json
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
 from incubator_paimon_trino_spark.streaming.changelog import (
     read_changelog_stream,
@@ -80,7 +80,7 @@ def test_sharded_read_timetravel_and_counts(cat, spark):
     cat.sql("UPDATE d.t SET v = 'upd' WHERE k % 3 = 0")
     cat.sql("DELETE FROM d.t WHERE k % 2 = 0")
     tdir = cat._table_dir("d", "t")
-    snaps = cat._snapshots(tdir)
+    snaps = load_snapshots(tdir)
     assert is_sharded(snaps[1].dv) and is_sharded(snaps[2].dv)
     assert snaps[1].dv_marks == 7 and snaps[2].dv_marks == 17
     live = sorted((r.k, r.v) for r in cat.read_table("d.t").collect())
@@ -108,14 +108,14 @@ def test_threshold_crossing_inline_to_sharded(cat, spark):
     cat.sql("DELETE FROM d.t WHERE k IN (0, 1)")  # 2 marks: inline
     cat.sql("DELETE FROM d.t WHERE k IN (2, 3, 4)")  # 5 marks: sharded
     tdir = cat._table_dir("d", "t")
-    snaps = cat._snapshots(tdir)
+    snaps = load_snapshots(tdir)
     assert not is_sharded(snaps[1].dv) and snaps[1].dv_marks == 2
     assert is_sharded(snaps[2].dv) and snaps[2].dv_marks == 5
     assert sorted(r.k for r in cat.read_table("d.t").collect()) == list(range(5, 12))
     assert sorted(r.k for r in cat.read_table("d.t", version_as_of=2).collect()) == list(range(2, 12))
     # once sharded, stays sharded even while small
     cat.sql("DELETE FROM d.t WHERE k = 5")
-    assert is_sharded(cat._snapshots(tdir)[-1].dv)
+    assert is_sharded(load_snapshots(tdir)[-1].dv)
     # both streaming modes cross the format change in one history
     exp = sorted(
         [("I", i, f"v{i}") for i in range(12)]
@@ -132,13 +132,13 @@ def test_carry_forward_rewrites_only_touched_buckets(cat, spark):
     _mk(cat, spark, n=40)
     cat.sql("DELETE FROM d.t WHERE k % 2 = 0")  # broad: marks many buckets
     tdir = cat._table_dir("d", "t")
-    m1 = load_index_meta(tdir, cat._snapshots(tdir)[-1].dv)
+    m1 = load_index_meta(tdir, load_snapshots(tdir)[-1].dv)
     assert len(m1["shards"]) >= 2, "need marks in several buckets to carry"
     # find one live key whose file hashes to exactly one bucket
     live = cat.read_table("d.t").collect()
     key = sorted(r.k for r in live)[0]
     cat.sql(f"DELETE FROM d.t WHERE k = {key}")
-    m2 = load_index_meta(tdir, cat._snapshots(tdir)[-1].dv)
+    m2 = load_index_meta(tdir, load_snapshots(tdir)[-1].dv)
     changed = [b for b in m2["shards"] if m2["shards"][b] != m1["shards"].get(b)]
     assert len(changed) == 1, (m1["shards"], m2["shards"])
     carried = [b for b in m1["shards"] if b not in changed]
@@ -188,7 +188,7 @@ def test_gc_vacuum_and_branch_copy_resolve_shards(cat, spark):
     cat.create_tag("d", "t", "seed", 3)
     cat.create_branch("d", "t", "b1", from_tag="seed")
     bdir = os.path.join(tdir, "branch", "b1")
-    tip = cat._snapshots(tdir)[-1]
+    tip = load_snapshots(tdir)[-1]
     for n in mark_file_names(tdir, tip.dv) + [tip.dv]:
         assert os.path.exists(os.path.join(bdir, "index", n)), n
     # branch read applies the copied sharded vectors
@@ -242,7 +242,7 @@ def test_no_driver_mark_materialization_above_threshold(cat, spark, monkeypatch)
         lambda *a, **k: (_ for _ in ()).throw(AssertionError("sharded writer under threshold")),
     )
     cat.sql("DELETE FROM d.inl WHERE k = 2")
-    snaps = cat._snapshots(cat._table_dir("d", "inl"))
+    snaps = load_snapshots(cat._table_dir("d", "inl"))
     assert not is_sharded(snaps[-1].dv) and snaps[-1].dv_marks == 1
 
 
@@ -251,7 +251,7 @@ def test_compaction_resets_sharded_index(cat, spark):
     cat.sql("DELETE FROM d.t WHERE k % 2 = 0")
     cat.compact("d", "t")
     tdir = cat._table_dir("d", "t")
-    tip = cat._snapshots(tdir)[-1]
+    tip = load_snapshots(tdir)[-1]
     assert tip.dv is None
     assert sorted(r.k for r in cat.read_table("d.t").collect()) == [1, 3, 5, 7, 9]
     # the stream diffs the reset to nothing: no phantom retractions
@@ -267,7 +267,7 @@ def test_mark_free_snapshot_skips_dv_antijoin(cat, spark, monkeypatch):
     the position columns and anti-join entirely."""
     _mk(cat, spark, n=6)  # snapshot 1: empty index, dv_marks == 0
     tdir = cat._table_dir("d", "t")
-    assert cat._snapshots(tdir)[-1].dv_marks == 0
+    assert load_snapshots(tdir)[-1].dv_marks == 0
 
     def boom(self, *a, **k):
         raise AssertionError("_dv_marks_df on a mark-free snapshot read")
@@ -302,7 +302,7 @@ def test_oversized_bucket_splits_into_sub_shards(cat, spark):
     )
     cat.sql("DELETE FROM d.big WHERE k % 2 = 0")  # 30 marks, 1 bucket
     tdir = cat._table_dir("d", "big")
-    m = load_index_meta(tdir, cat._snapshots(tdir)[-1].dv)
+    m = load_index_meta(tdir, load_snapshots(tdir)[-1].dv)
     assert m["marks"] == 30 and list(m["shards"]) == [0]
     docs = [
         read_json(os.path.join(tdir, "index", n))["vectors"] for n in m["shards"][0]
@@ -367,7 +367,7 @@ def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):
             ).coalesce(1),
         )
     tdir = cat._table_dir("d", "pr")
-    assert len(cat._snapshots(tdir)[-1].files) == 3
+    assert len(load_snapshots(tdir)[-1].files) == 3
     seen: list[int] = []
     orig = WarehouseCatalog._read_files
 
@@ -382,7 +382,7 @@ def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):
     )
     assert seen == [1], seen  # the upsert's mark scan: middle file only
     seen.clear()
-    live = len(cat._snapshots(tdir)[-1].files)
+    live = len(load_snapshots(tdir)[-1].files)
     cat.sql("DELETE FROM d.pr WHERE k = 1006")
     # one positional read of every live file, no second scan
     assert seen == [live], seen
@@ -457,7 +457,7 @@ def test_sharded_dv_randomized_model(cat, spark):
         check()
     # time travel replays arbitrary earlier states from their own indexes
     tdir = cat._table_dir("d", "mdl")
-    snaps = cat._snapshots(tdir)
+    snaps = load_snapshots(tdir)
     assert len(snaps) == len(history)
     for idx in (0, len(history) // 2, len(history) - 1):
         sid = snaps[idx].snapshot_id

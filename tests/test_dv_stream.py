@@ -22,6 +22,7 @@ import os
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
 from incubator_paimon_trino_spark.streaming.changelog import (
     _dv_referenced_entries,
@@ -101,7 +102,7 @@ def test_dv_retraction_static_side_reads_only_marked_files(cat, spark):
     )
     cat.sql("DELETE FROM d.t WHERE k = 3")  # marks exactly one position
     tdir = cat._table_dir("d", "t")
-    snaps = cat._snapshots(tdir)
+    snaps = load_snapshots(tdir)
     entries = _dv_referenced_entries(cat, tdir, snaps)
     live = {os.path.basename(f["path"]) for f in snaps[-1].files}
     assert entries, "delete must reference at least one file"
@@ -274,7 +275,7 @@ def test_dv_stream_ignores_orphan_index(cat, spark):
     _mk(cat, spark, n=6)
     cat.sql("DELETE FROM d.t WHERE k = 1")  # committed delete (snapshot 2)
     tdir = cat._table_dir("d", "t")
-    snaps = cat._snapshots(tdir)
+    snaps = load_snapshots(tdir)
     victim = next(f["path"] for f in snaps[-1].files)
     # orphan at version 2 with a different nonce, marking a LIVE row
     write_json_atomic(

@@ -23,6 +23,7 @@ import time
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
 from incubator_paimon_trino_spark.streaming.changelog import (
     read_changelog_stream,
@@ -373,7 +374,7 @@ def test_orphan_index_never_planned(cat, spark):
     _mk_dv(cat, spark, n=4)
     cat.sql("DELETE FROM d.t WHERE k = 1")
     tdir = cat._table_dir("d", "t")
-    victim = next(f["path"] for f in cat._snapshots(tdir)[-1].files)
+    victim = next(f["path"] for f in load_snapshots(tdir)[-1].files)
     write_json_atomic(
         os.path.join(tdir, "index", "dv-2-deadbeef.json"), {"vectors": {victim: [0]}}
     )

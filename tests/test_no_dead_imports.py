@@ -1,19 +1,25 @@
-"""Every name a module under ``catalog/`` imports is used there or listed
-in its ``__all__``: an AST scan of imported versus referenced names."""
+"""Every name a package module imports is used there, listed in its
+``__all__``, or marked ``# noqa: F401`` (an import kept for its side
+effect, like the query registrations in ``operators/__init__.py``): an AST
+scan of imported versus referenced names."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
 
-CATALOG = Path(__file__).resolve().parent.parent / "incubator_paimon_trino_spark" / "catalog"
+PACKAGE = Path(__file__).resolve().parent.parent / "incubator_paimon_trino_spark"
 
 
-def _unused_imports(tree: ast.Module) -> list[str]:
+def _unused_imports(tree: ast.Module, lines: list[str] = ()) -> list[str]:
     imported: dict[str, int] = {}
     used: set[str] = set()
     exported: set[str] = set()
     for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)) and (
+            node.lineno <= len(lines) and "# noqa: F401" in lines[node.lineno - 1]
+        ):
+            continue
         if isinstance(node, ast.Import):
             for a in node.names:
                 imported[a.asname or a.name.split(".")[0]] = node.lineno
@@ -41,11 +47,11 @@ def _unused_imports(tree: ast.Module) -> list[str]:
     )
 
 
-def test_catalog_modules_import_only_what_they_use():
+def test_package_modules_import_only_what_they_use():
     dead = {
-        p.name: names
-        for p in sorted(CATALOG.glob("*.py"))
-        if (names := _unused_imports(ast.parse(p.read_text())))
+        str(p.relative_to(PACKAGE)): names
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (names := _unused_imports(ast.parse(src := p.read_text()), src.splitlines()))
     }
     assert not dead, f"unused imports: {dead}"
 
@@ -56,3 +62,8 @@ def test_scan_flags_an_unused_import():
         "__all__ = ['d']\n\ndef f(p: 'a') -> None:\n    return None\n"
     )
     assert _unused_imports(tree) == ["c (line 2)", "os (line 1)"]
+
+
+def test_scan_exempts_noqa_marked_imports():
+    src = "import os  # noqa: F401\nfrom x import (  # noqa: F401\n    a,\n)\nimport sys\n"
+    assert _unused_imports(ast.parse(src), src.splitlines()) == ["sys (line 5)"]

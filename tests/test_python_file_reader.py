@@ -16,6 +16,7 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
 
 PKG = REPO / "incubator_paimon_trino_spark"
@@ -85,7 +86,7 @@ def test_many_small_files_read_in_one_task(cat, spark, monkeypatch, fmt, with_po
             "d", "t", spark.createDataFrame([(i, f"v{i}")], "k bigint, v string")
         )
     tdir = cat._table_dir("d", "t")
-    snap = cat._snapshots(tdir)[-1]
+    snap = load_snapshots(tdir)[-1]
     assert [f["record_count"] for f in snap.files] == [1] * 8
     df = cat._read_files(tdir, cat._latest_schema(tdir), snap, with_pos=with_pos)
     assert df.rdd.getNumPartitions() == 1
@@ -134,7 +135,7 @@ def test_zero_row_commit_publishes_without_files(cat, spark):
     empty = spark.createDataFrame([], "k bigint, v string")
     assert cat.insert_into("d", "t", empty) == sid + 1
     tdir = cat._table_dir("d", "t")
-    snap = cat._snapshots(tdir)[-1]
+    snap = load_snapshots(tdir)[-1]
     assert snap.snapshot_id == sid + 1
     assert [f["record_count"] for f in snap.files] == [1]
     files = glob.glob(os.path.join(tdir, "data", "**", "*.parquet"), recursive=True)

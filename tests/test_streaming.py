@@ -11,6 +11,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from incubator_paimon_trino_spark.catalog import WarehouseCatalog
+from incubator_paimon_trino_spark.catalog.metadata import load_snapshots
 from incubator_paimon_trino_spark.streaming.changelog import (
     read_changelog_stream,
     run_to_completion,
@@ -184,7 +185,7 @@ def test_startup_mode_from_snapshot(spark, event_table):
 def test_startup_mode_from_timestamp(spark, event_table):
     cat, name = event_table
     tdir = cat._table_dir("s", "ev")
-    snaps = cat._snapshots(tdir)
+    snaps = load_snapshots(tdir)
     cut = snaps[1].timestamp_ms  # at commit 2's timestamp → commit 2 onward
     out = run_to_completion(
         read_changelog_stream(cat, name, startup_mode="from-timestamp", scan_timestamp_ms=cut),

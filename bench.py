@@ -1,12 +1,15 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "compiles": {name: classes}, "sf": ...}.
 
 Each query is warmed once (JVM JIT + whole-stage-codegen compilation + parquet
 footer cache) and then timed on a second execution — steady-state throughput,
-which is what matters on a long-running cluster; one-time codegen compilation
-is not a per-query cost at scale.
+which is what matters on a long-running cluster. Warming each query right
+before timing it hides eviction from Spark's generated-class cache: codegen
+compilation is one-time in an interleaved mix of queries only because
+``get_spark`` sizes that cache to hold the mix. ``compiles`` counts the classes
+compiled during each query's timed runs, 0 when every class was reused.
 """
 
 from __future__ import annotations
@@ -48,6 +51,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from incubator_paimon_trino_spark import get_spark
+    from incubator_paimon_trino_spark.plans import codegen_compile_count
 
     spark = get_spark("bench")
     qs = entrymod.queries()
@@ -62,16 +66,19 @@ def main() -> None:
         return len(df.collect())
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         run(name)  # warm: codegen + JIT, not counted
         best, n = None, 0
+        c0 = codegen_compile_count(spark)
         for _ in range(2):  # best-of-2 to damp JIT/GC noise
             t0 = time.time()
             n = run(name)
             el = time.time() - t0
             best = el if best is None or el < best else best
         timings[name] = round(best, 3)
-        print(f"# {name}: {timings[name]:.3f}s rows={n}", file=sys.stderr)
+        compiles[name] = codegen_compile_count(spark) - c0
+        print(f"# {name}: {timings[name]:.3f}s rows={n} compiles={compiles[name]}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -82,6 +89,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "compiles": compiles,
                 "sf": sf,
                 # the local[N] core count get_spark ran with
                 "cpus": int(cpus) if cpus.isdigit() else cpus,

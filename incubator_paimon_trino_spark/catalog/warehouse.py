@@ -1603,19 +1603,20 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         """Paimon's ``incremental-between-timestamp`` — rows committed AFTER
         ``from_ms`` up to and including ``to_ms`` (epoch millis). Each bound
         resolves to the newest snapshot committed at or before it (no
-        snapshot at/before from_ms → the table's beginning), then delegates
-        to the id-based ``read_incremental``.
+        snapshot at/before from_ms → the table's beginning), then the range
+        reads as ``read_incremental``'s does, from the same snapshot list.
         """
         if to_ms < from_ms:
             raise ValueError(f"to_ms {to_ms} precedes from_ms {from_ms}")
         db, _, table = name.partition(".")
-        snaps = load_snapshots(self._table_dir(db, table))
-        hi = resolve_snapshot(snaps, timestamp_ms=to_ms).snapshot_id
+        tdir = self._table_dir(db, table)
+        snaps = load_snapshots(tdir)
+        hi = resolve_snapshot(snaps, timestamp_ms=to_ms)
         try:
             lo = resolve_snapshot(snaps, timestamp_ms=from_ms).snapshot_id
         except ValueError:  # nothing committed by from_ms: read from the start
             lo = 0
-        return self.read_incremental(name, lo, hi)
+        return self._read_commits(tdir, snaps, lo, hi)
 
     def read_incremental(
         self, name: str, from_snapshot: int | str, to_snapshot: int | str
@@ -1641,6 +1642,20 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         """
         db, _, table = name.partition(".")
         tdir = self._table_dir(db, table)
+        snaps, tags = load_snapshots(tdir), self._tags(tdir)
+
+        def resolve(ref: int | str) -> Snapshot:
+            if isinstance(ref, str):
+                return resolve_snapshot(snaps, tags, tag=ref)
+            return resolve_snapshot(snaps, version=ref)
+
+        hi = resolve(to_snapshot)
+        lo = resolve(from_snapshot).snapshot_id if from_snapshot != 0 else 0
+        return self._read_commits(tdir, snaps, lo, hi)
+
+    def _read_commits(self, tdir: str, snaps: list[Snapshot], lo: int, hi: Snapshot) -> DataFrame:
+        """The incremental read of ``(lo, hi]`` once both bounds are
+        resolved against ``snaps``, the table's one snapshot-list load."""
         schema = self._latest_schema(tdir)
         if self._dv_enabled(schema):
             # same hazard as the 'input' changelog: a DV delete commits no
@@ -1653,15 +1668,6 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
                 "vectors table (deletes write no data rows); use read_cdc or "
                 "table_changelog(producer='lookup') for the retraction stream"
             )
-        snaps, tags = load_snapshots(tdir), self._tags(tdir)
-
-        def resolve(ref: int | str) -> Snapshot:
-            if isinstance(ref, str):
-                return resolve_snapshot(snaps, tags, tag=ref)
-            return resolve_snapshot(snaps, version=ref)
-
-        hi = resolve(to_snapshot)
-        lo = resolve(from_snapshot).snapshot_id if from_snapshot != 0 else 0
         if lo > hi.snapshot_id:
             raise ValueError(f"from_snapshot {lo} > to_snapshot {hi.snapshot_id}")
         delta = [f for _, _, files in plan_commits(snaps, lo, hi.snapshot_id) for f in files]

@@ -1,4 +1,5 @@
 from incubator_paimon_trino_spark.plans.explain import (
+    codegen_compile_count,
     codegen_stage_count,
     count_shuffles,
     partition_filters,
@@ -9,6 +10,7 @@ from incubator_paimon_trino_spark.plans.explain import (
 )
 
 __all__ = [
+    "codegen_compile_count",
     "codegen_stage_count",
     "count_shuffles",
     "partition_filters",

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def physical_plan(df: DataFrame) -> str:
@@ -122,3 +122,11 @@ def uses_broadcast_join(df: DataFrame) -> bool:
 def codegen_stage_count(df: DataFrame) -> int:
     """Whole-stage-codegen spans — wider is better (expressions stay JVM-side)."""
     return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", physical_plan(df))))
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far. A
+    generated class found in the codegen cache is not compiled again, so
+    the count grows only on cache misses."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -14,6 +14,10 @@ a 1000-executor cluster reading ~100 TB:
   from a deliberately-high initial number, so we leave
   ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` unset locally
   and document it as the scale knob.
+- the generated-class cache holds the engine's working set, so a query run
+  again reuses its compiled classes instead of compiling and JIT-warming
+  them anew — what Trino's cache of compiled page processors gives the
+  reference. It is static conf: only session creation sets it.
 """
 
 from __future__ import annotations
@@ -22,6 +26,8 @@ import os
 import warnings
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -60,18 +66,23 @@ def get_spark(
         # statistics; micros do — required for manifest-level file skipping
         # on event-time predicates (catalog/scan.py)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # r13 optimization: 32g, not 90g. In local mode this one JVM is
-        # driver + all executors; at 90g, G1 accumulated multi-second GC
-        # pauses that landed on whichever query ran late in a session
-        # (measured: 0.6s queries spiking to 2.6s, once 14s, on the idle
-        # box; at 16–32g the spikes vanish and bench totals tighten by
-        # 1–3s). 32g is ~6x the largest soak's working set (sf1). On a real
-        # cluster driver/executor memory are deployment-sized; this is the
-        # local default, still overridable via SPARK_GRAFT_DRIVER_MEM.
+        # In local mode this one JVM is driver + all executors. Keep the
+        # heap at 32g, ~6x the largest soak's working set (sf1): a heap far
+        # larger (90g measured) lets G1 accumulate multi-second pauses that
+        # land on whichever query runs late in a session. On a real cluster
+        # driver/executor memory are deployment-sized; this is the local
+        # default, overridable via SPARK_GRAFT_DRIVER_MEM.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # Generated classes kept for reuse (Spark's default: 100). One pass
+        # of the 13 headline queries compiles ~240 classes (4–44 a query,
+        # perfbench sf0.01) and a whole perfbench lake_ingest run under 200,
+        # so at 100 every headline pass recompiled ~240 of them. 2000 holds
+        # either working set 8x over; metaspace use did not grow with it
+        # (162 MB against 166 MB at 100, 4 vCPUs, 3 traced runs each).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

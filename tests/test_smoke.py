@@ -70,6 +70,18 @@ def test_get_spark_warns_when_extra_conf_is_ignored(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle
 
 
+def test_get_spark_warns_when_codegen_cache_size_is_ignored(spark):
+    """The generated-class cache size is static conf: only session creation
+    sets it, so asking a live session for another size warns."""
+    from incubator_paimon_trino_spark import get_spark
+    from incubator_paimon_trino_spark.session import CODEGEN_CACHE_ENTRIES
+
+    key, other = "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES + 1)
+    with pytest.warns(UserWarning, match=f"{key}={other} did not take effect"):
+        same = get_spark(extra_conf={key: other})
+    assert same is spark and spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
+
+
 def test_get_spark_keeps_live_session_conf(spark):
     """A second get_spark() returns the live session without resetting the
     runtime conf its owner changed; settings passed explicitly still apply."""

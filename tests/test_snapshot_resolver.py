@@ -163,3 +163,15 @@ def test_read_resolves_its_snapshot_with_one_load(cat, load_calls):
         load_calls.clear()
         cat.read_table("d.t", **kwargs)
         assert len(load_calls) == 1, kwargs
+
+
+def test_incremental_by_timestamp_loads_snapshots_once(cat, load_calls):
+    """Both timestamps resolve against the list the range read uses: one
+    load per call, and the rows of the id-based read of the same range."""
+    ts = [s.timestamp_ms for s in load_snapshots(cat._table_dir("d", "t"))]
+    for (from_ms, to_ms), ids in {(ts[0], ts[1]): (1, 2), (0, ts[1]): (0, 2)}.items():
+        load_calls.clear()
+        rows = cat.read_incremental_by_timestamp("d.t", from_ms, to_ms).collect()
+        assert len(load_calls) == 1, (from_ms, to_ms)
+        assert sorted(rows) == sorted(cat.read_incremental("d.t", *ids).collect())
+        assert sorted((r.k, r.v) for r in rows) == [(0, "v0"), (1, "v1")][ids[0] :]

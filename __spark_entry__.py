@@ -72,6 +72,39 @@ def _driver_verified() -> tuple[dict[str, int], set[str]]:
 # verdict: changed-code greens outrank stale-but-unchanged greens in the
 # prefix. ORDERED, most-changed first; no name may appear twice.
 _REPROOF: tuple[str, ...] = (
+    # events streams run on a scoped session clone that holds their clamped
+    # state partitions, reading the events schema in one footer read
+    "streaming_tumbling_counts",
+    "streaming_session_windows",
+    "streaming_stateful_running_counts",
+    "streaming_pattern_within_funnel",
+    "streaming_dedup_keys",
+    "streaming_enrich_static_join",
+    "streaming_pattern_skip_next",
+    "streaming_pattern_value_measures",
+    # events batch and pattern queries: the events ts encoding is read from
+    # the file's schema under the engine conf set at the query boundary
+    "events_tumbling_window",
+    "events_sliding_window",
+    "events_cohort_retention",
+    "events_funnel_conversion",
+    "pattern_match_recognize_funnel",
+    "pattern_measures_one_row",
+    "pattern_skip_to_last_overlap",
+    "pattern_prev_navigation_runs",
+    "pattern_bounded_quantifier_funnel",
+    "pattern_alternation_funnel",
+    "pattern_running_measures_all_rows",
+    "pattern_exclusion_funnel_edges",
+    "pattern_unmatched_rows_coverage",
+    "pattern_end_anchor_trailing_run",
+    "pattern_show_empty_matches",
+    "pattern_sql_match_recognize",
+    "pattern_funnel_view_click_purchase",
+    "pattern_error_within_5min_of_purchase",
+    "pattern_longest_click_streak",
+    # TIME/TIMESTAMP lake reads under the engine conf, not a catalog's
+    "lake_timestamp_precision",
     # queries whose snapshot ids, tags and timestamps resolve through the
     # one snapshot resolver (time travel, incremental reads, changelogs and
     # consumers, rollback and expiry, branches, versioned reads, streams)
@@ -94,23 +127,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_avro_roundtrip",
     # readers of a commit range, planned by the one commit-range planner
     "lake_manifest_changelog_stream",
-    # queries on the one automaton matcher of MATCH_RECOGNIZE, batch and
-    # streaming
-    "pattern_alternation_funnel",
-    "pattern_bounded_quantifier_funnel",
-    "pattern_match_recognize_funnel",
-    "pattern_measures_one_row",
-    "pattern_skip_to_last_overlap",
-    "pattern_prev_navigation_runs",
-    "pattern_running_measures_all_rows",
-    "pattern_exclusion_funnel_edges",
-    "pattern_unmatched_rows_coverage",
-    "pattern_end_anchor_trailing_run",
-    "pattern_show_empty_matches",
-    "pattern_sql_match_recognize",
-    "streaming_pattern_within_funnel",
-    "streaming_pattern_skip_next",
-    "streaming_pattern_value_measures",
     # lake reads of TIME columns through the Python reader, and commits
     # that drop empty data files
     "lake_orc_scan",
@@ -142,7 +158,6 @@ _REPROOF: tuple[str, ...] = (
     "lake_sequence_field_merge",
     "lake_schema_evolution",
     "lake_char_padded_read",
-    "lake_timestamp_precision",
     # queries whose commits write through the one data-file writer shared
     # by insert and compaction (bucket/clustering layout, staging write,
     # sidecars, rollback of a failed attempt)
@@ -177,16 +192,6 @@ _REPROOF: tuple[str, ...] = (
     "dedup_minhash_lsh",
     "dedup_simhash",
     "dedup_chunk_repetition",
-    # availableNow state partitions clamped to the input's split count
-    "streaming_tumbling_counts",
-    "streaming_session_windows",
-    "streaming_stateful_running_counts",
-    "streaming_dedup_keys",
-    "streaming_enrich_static_join",
-    # chunk-wise matcher + empty-match emission rewrite
-    "pattern_funnel_view_click_purchase",
-    "pattern_error_within_5min_of_purchase",
-    "pattern_longest_click_streak",
     # partition-batched rewrite
     "udf_grouped_map_normalize",
     # one-valued partition spec on the metadata-scale windows

@@ -44,7 +44,6 @@ import glob
 import os
 import re
 import shutil
-import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,34 +88,6 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         self.warehouse = os.path.abspath(warehouse)
         self.spark = spark
         self.commit_user = commit_user
-        try:
-            # TIME columns need Spark 4.1's flag; runtime-settable, so turn
-            # it on for catalogs attached to externally-built sessions too.
-            spark.conf.set("spark.sql.timeType.enabled", "true")
-        except Exception as e:
-            # The one silently tolerable shape is a session that forbids
-            # modifying the conf (static/immutable config — the known Spark
-            # error codes below). Anything else would make TIME support
-            # silently depend on which session built the catalog, so warn.
-            # (An unknown key doesn't raise: runtime conf accepts arbitrary
-            # keys, and TIME DDL then fails loudly later in types.py.)
-            msg = str(e)
-            if not (
-                "CANNOT_MODIFY_CONFIG" in msg
-                or "Cannot modify the value" in msg
-                or "is a static config" in msg
-            ):
-                warnings.warn(
-                    f"could not enable spark.sql.timeType.enabled "
-                    f"({type(e).__name__}: {msg}); "
-                    "TIME columns will be unavailable in this session"
-                )
-        else:
-            if spark.conf.get("spark.sql.timeType.enabled", "false") != "true":
-                warnings.warn(
-                    "spark.sql.timeType.enabled did not take effect; "
-                    "TIME columns will be unavailable in this session"
-                )
         os.makedirs(self.warehouse, exist_ok=True)
 
     # ------------------------------------------------------------------ paths

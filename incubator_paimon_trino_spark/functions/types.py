@@ -12,9 +12,9 @@ Documented semantic gaps (SURVEY §1.3 / §7 hard spots):
 - TIME(p) maps to Spark 4's native ``TimeType(p)`` (precision clamped to
   Spark's 0-6; the reference maps to Trino TIME(3) —
   ``TrinoTypeUtils.java:148-151``). Requires
-  ``spark.sql.timeType.enabled=true`` (set by ``get_spark`` and by
-  ``WarehouseCatalog``); sessions without the flag fail loudly at DDL time
-  rather than silently degrading.
+  ``spark.sql.timeType.enabled=true`` (in ``session.ENGINE_CONF``: set by
+  ``get_spark`` and at the query boundary); sessions without the flag fail
+  loudly at DDL time rather than silently degrading.
 - TIMESTAMP(p) precision ladder {0,3,6} (``TrinoTypeUtils.java:153-157``)
   is DECLARED metadata over ``TimestampNTZType`` storage (micros), with
   values canonicalized to the declared precision at write time

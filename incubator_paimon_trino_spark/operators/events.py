@@ -14,7 +14,7 @@ genuine ``readStream`` execution:
 - custom stateful operator: ``applyInPandasWithState`` running per-key event
   counts (the escape hatch for operators built-in streaming aggs can't
   express)
-- streaming MATCH_RECOGNIZE (r11): ``match_recognize_stream`` — CEP with a
+- streaming MATCH_RECOGNIZE: ``match_recognize_stream`` — CEP with a
   WITHIN bound, watermark-finalized so the match set is deterministic under
   any micro-batch chopping (which is what makes it SQL-oracle-checkable)
 
@@ -103,38 +103,21 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming DataFrame over the events parquet (schema from a batch peek).
-
-    The ts-encoding contract (NANOS-as-INT64 vs MICROS) lives in ONE place —
-    ``sources.registry.events_ts_is_nanos`` / ``normalize_events_ts`` —
-    shared with the batch loader, so a new driver encoding is handled once.
-    The file-stream source wants a directory, so stream sf_dir with a glob.
-    """
+    """Streaming DataFrame over the events parquet, its schema read from the
+    file's footer by one batch read. The ts-encoding contract lives in
+    ``sources.registry.normalize_events_ts``, shared with the batch loader.
+    The file-stream source wants a directory, so stream sf_dir with a glob."""
     import os
 
-    from pyspark.sql.types import LongType, StructField, StructType, TimestampNTZType
+    from incubator_paimon_trino_spark.sources.registry import normalize_events_ts
 
-    from incubator_paimon_trino_spark.sources.registry import (
-        events_ts_is_nanos,
-        normalize_events_ts,
-    )
-
-    nanos = events_ts_is_nanos(spark, sf_dir)  # also pins nanosAsLong + UTC
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    phys = StructType(
-        [
-            StructField("ts", LongType() if nanos else TimestampNTZType(), f.nullable)
-            if f.name == "ts"
-            else f
-            for f in raw.fields
-        ]
-    )
     stream = (
-        spark.readStream.schema(phys)
+        spark.readStream.schema(raw)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    return normalize_events_ts(stream, nanos)
+    return normalize_events_ts(stream)
 
 
 def _run_stream(df: DataFrame, name: str, mode: str, sf_dir: str | None = None) -> DataFrame:
@@ -312,7 +295,7 @@ def streaming_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataF
     """,
 )
 def streaming_pattern_within_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MATCH_RECOGNIZE (r11): the V C+ P funnel as CEP over a
+    """Streaming MATCH_RECOGNIZE: the V C+ P funnel as CEP over a
     Structured Stream — ``match_recognize_stream`` buffers per-user events
     in ``applyInPandasWithState`` state, matches leftmost-greedy under a
     WITHIN 24 HOUR bound, and emits matches once the watermark proves them
@@ -557,18 +540,18 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CEP with a NON-DEFAULT SKIP mode and in-state MEASURES
-    (r12 — VERDICT r11 item 5): PATTERN (C C) with AFTER MATCH SKIP TO
-    NEXT ROW over the event stream — a run of k adjacent clicks emits k−1
-    OVERLAPPING pairs (skip_past_last would give ⌊k/2⌋) — and the measures
-    dict aggregates each match to one emitted row (last id, row count)
+    """Streaming CEP with a NON-DEFAULT SKIP mode and in-state MEASURES:
+    PATTERN (C C) with AFTER MATCH SKIP TO NEXT ROW over the event stream —
+    a run of k adjacent clicks emits k−1 OVERLAPPING pairs (skip_past_last
+    would give ⌊k/2⌋) — and the measures dict aggregates each match to one
+    emitted row (last id, row count)
     before it leaves the stateful operator.
 
     Closed-form oracle: every click whose next event (per user, event-time
     order) is also a click within the 24h WITHIN bound heads one match;
-    finalization uses the same strict watermark bound as the r11 funnel
-    (a start emits only once max-event-time, ms-truncated, strictly passes
-    its WITHIN window)."""
+    finalization uses the same strict watermark bound as
+    ``streaming_pattern_within_funnel`` (a start emits only once
+    max-event-time, ms-truncated, strictly passes its WITHIN window)."""
     from incubator_paimon_trino_spark.operators.match_recognize import (
         match_recognize_stream,
     )
@@ -616,20 +599,20 @@ def streaming_pattern_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_pattern_value_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CEP with VALUE-COLUMN measures (r13 — VERDICT r12 item 3):
-    the click-pair pattern of ``streaming_pattern_skip_next``, now
-    aggregating the source's ``value`` column per match — SUM(value),
-    MAX(value), FIRST(C.value) — with no user boilerplate: the operator
-    projects exactly the referenced column into state as double (state
-    stays O(within-span); the join-back alternative is refused by Spark's
-    multi-stateful correctness check — see match_recognize_stream's
-    docstring). The match set is the r12 query's, so this oracle isolates
-    the VALUE plumbing: per-match sums/extrema of exactly two doubles are
-    IEEE-exact in any order, making the hash compare strict.
+    """Streaming CEP with VALUE-COLUMN measures: the click-pair pattern of
+    ``streaming_pattern_skip_next``, now aggregating the source's ``value``
+    column per match — SUM(value), MAX(value), FIRST(C.value) — with no
+    user boilerplate: the operator projects exactly the referenced column
+    into state as double (state stays O(within-span); the join-back
+    alternative is refused by Spark's multi-stateful correctness check —
+    see match_recognize_stream's docstring). The match set is
+    ``streaming_pattern_skip_next``'s, so this oracle isolates the VALUE
+    plumbing: per-match sums/extrema of exactly two doubles are IEEE-exact
+    in any order, making the hash compare strict.
 
-    Finalization bound mirrors the r11/r12 queries: a match emits only
-    once max-event-time (ms-truncated, the watermark) strictly passes its
-    24h WITHIN window."""
+    Finalization bound mirrors the other streaming pattern queries: a match
+    emits only once max-event-time (ms-truncated, the watermark) strictly
+    passes its 24h WITHIN window."""
     from incubator_paimon_trino_spark.operators.match_recognize import (
         match_recognize_stream,
     )

@@ -17,10 +17,13 @@ comparison exact:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from incubator_paimon_trino_spark.session import engine_conf
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -34,15 +37,25 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     Queries without an oracle get the driver's weaker rows-only check — reserve
     that for genuinely non-SQL-expressible operators (MinHash banding, stateful
     streaming, ...).
+
+    The registered query is the query boundary: it puts the caller's session
+    under ``session.ENGINE_CONF`` before building, so a query's results never
+    depend on the host session's defaults or on what ran before it.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            engine_conf(spark)
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = query
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return query
 
     return deco
 
@@ -52,11 +65,11 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 # ---------------------------------------------------------------------------
 
 def self_check(df: DataFrame, cond: Column, message: str) -> DataFrame:
-    """Row-level in-query invariant (r11, VERDICT r10 item 7): rows pass
-    through unchanged, but any row violating ``cond`` fails the whole query
-    loudly at execution time (``F.assert_true``). ``assert_true`` is
-    non-foldable, so the filter survives optimization; its value is always
-    NULL on passing rows, so ``isNull()`` keeps every row."""
+    """Row-level in-query invariant: rows pass through unchanged, but any
+    row violating ``cond`` fails the whole query loudly at execution time
+    (``F.assert_true``). ``assert_true`` is non-foldable, so the filter
+    survives optimization; its value is always NULL on passing rows, so
+    ``isNull()`` keeps every row."""
     return df.filter(F.assert_true(cond, F.lit(message)).isNull())
 
 

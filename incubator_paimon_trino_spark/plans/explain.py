@@ -14,27 +14,20 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from incubator_paimon_trino_spark.session import rebind, scoped
+
 
 def physical_plan(df: DataFrame) -> str:
     """Executed-plan text with metadata truncation lifted.
 
     ``spark.sql.maxMetadataStringLength`` defaults to 100, which silently cuts
     scan metadata mid-line — ``PushedFilters: [...]`` can vanish from the
-    string even though pushdown happened. Bump it around the render and
-    restore the PREVIOUS state exactly (unset stays unset — leaving the
-    override behind would silently change every later plan render).
+    string even though pushdown happened. The plan renders from ``df``'s plan
+    on a ``session.scoped`` clone with the limit raised; ``df``'s session
+    keeps its own value.
     """
-    spark = df.sparkSession
-    key = "spark.sql.maxMetadataStringLength"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "10000")
-    try:
-        return df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        if old is not None:
-            spark.conf.set(key, old)
-        else:
-            spark.conf.unset(key)
+    wide = scoped(df.sparkSession, {"spark.sql.maxMetadataStringLength": "10000"})
+    return rebind(df, wide)._jdf.queryExecution().executedPlan().toString()
 
 
 def _bracket_payload(text: str, label: str) -> list[str]:

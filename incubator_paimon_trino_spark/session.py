@@ -6,8 +6,13 @@ a 1000-executor cluster reading ~100 TB:
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting, join
   strategy switch) — replaces the reference's hand-rolled split weighting
   (``TrinoSplitManagerBase.java:50-63``) with runtime re-planning.
-- ``spark.sql.session.timeZone=UTC`` — the reference forces UTC packing for
-  timestamptz values (``TrinoPageSourceBase.java:216-219``); we match.
+- ``ENGINE_CONF`` — the runtime SQL conf that query results depend on: UTC
+  session time (the reference packs timestamptz values as UTC,
+  ``TrinoPageSourceBase.java:216-219``), the TIME type, and NANOS parquet
+  timestamps read as INT64. ``get_spark`` builds every new session with it,
+  and ``engine_conf`` puts any other session under it at the query boundary
+  (``operators.registry.register``). Temporary overrides never write the
+  caller's conf: they run on a ``scoped`` clone.
 - Arrow enabled — all Python-side operators use vectorized Pandas UDFs, never
   row-at-a-time UDFs.
 - shuffle partitions default to cores locally; on a real cluster AQE coalesces
@@ -25,9 +30,18 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 CODEGEN_CACHE_ENTRIES = 2000
+
+ENGINE_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # Spark 4.1 native TIME type (functions/types.py maps Paimon TIME(p))
+    "spark.sql.timeType.enabled": "true",
+    # events.ts may ship as parquet TIMESTAMP(NANOS), which the vectorized
+    # reader rejects; read as INT64, sources.registry truncates it to micros
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 
 def get_spark(
@@ -58,10 +72,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Spark 4.1 native TIME type (functions/types.py maps Paimon TIME(p))
-        .config("spark.sql.timeType.enabled", "true")
         # INT96 (legacy default) parquet timestamps carry no min/max column
         # statistics; micros do — required for manifest-level file skipping
         # on event-time predicates (catalog/scan.py)
@@ -106,3 +118,31 @@ def _warn_ignored(spark: SparkSession, extra_conf: dict[str, str] | None) -> Spa
                 stacklevel=3,
             )
     return spark
+
+
+def engine_conf(spark: SparkSession) -> None:
+    """Put ``spark`` under ``ENGINE_CONF``, writing only the keys that
+    differ: on a ``get_spark`` session this writes nothing."""
+    for k, v in ENGINE_CONF.items():
+        if spark.conf.get(k, None) != v:
+            spark.conf.set(k, v)
+
+
+def scoped(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` with ``conf`` on top. It shares the SparkContext
+    and cached data and starts from a copy of ``spark``'s SQL conf; ``spark``
+    itself is never written, so a temporary override cannot leak into a
+    query planned meanwhile on another thread or around a nested call."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    for k, v in conf.items():
+        clone.conf.set(k, v)
+    return clone
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a DataFrame of ``spark``: planned and run
+    under that session's conf."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)

@@ -87,18 +87,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     def build() -> DataFrame:
         df = spark.read.parquet(path)
         if name == "events":
-            df = normalize_events_ts(df, events_ts_is_nanos(spark, sf_dir))
+            df = normalize_events_ts(df)
         return df
 
     return session_plan(spark, "table", path, build)
 
 
-# r13 optimization: SCALE-ADAPTIVE SCAN FAN-OUT (guide §2.5 "input skew:
-# one huge unsplittable file"). Every driver table is ONE parquet file with
-# ONE row group (verified via pyarrow), and Spark cannot split a row group,
-# so every scan stage is exactly 1 task — all compute fused above the scan
-# (broadcast-join probes, partial aggregates, explode+hash chains, Python
-# workers) ran on 1 of 32 cores. `fan_out` repartitions the scan output
+# Scale-adaptive scan fan-out (input skew: one huge unsplittable file).
+# Every driver table is ONE parquet file with ONE row group (verified via
+# pyarrow), and Spark cannot split a row group, so every scan stage is
+# exactly 1 task — all compute fused above the scan (broadcast-join probes,
+# partial aggregates, explode+hash chains, Python workers) ran on 1 of 32
+# cores. `fan_out` repartitions the scan output
 # across `defaultParallelism` ONLY when the scan cannot reach that
 # parallelism by itself (split count derived from file size /
 # maxPartitionBytes, capped by the row-group count from the parquet
@@ -107,7 +107,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # derived from input shape, not tuned to local mode.
 #
 # Partitioning is hashpartitioning on xxhash64(*key_cols) — deterministic
-# under task retry (guide §2.5 warns against rand()-derived keys) and free
+# under task retry (rand()-derived keys are not) and free
 # of the sort-before-repartition toll that round-robin repartition(n) pays
 # (measured on q1: 1.26s round-robin vs 0.99s hash). Callers pass key
 # columns their query already reads so the exchange carries no extra bytes;
@@ -150,7 +150,7 @@ def fan_out(
     xxhash64(cols) — for callers whose downstream operator (window, groupBy,
     join) clusters by exactly these columns: hashpartitioning(cols) then
     satisfies the operator's ClusteredDistribution and Spark plans NO second
-    exchange (guide §2.4 "share one exchange" — pinned in
+    exchange (one shared exchange — pinned in
     tests/test_plan_quality.py::test_topn_uses_window_group_limit).
     Only for keys the operator itself would hash on anyway (same skew
     exposure either way); when the gate says the scan splits on its own,
@@ -168,30 +168,17 @@ def fan_out(
     return df.repartition(par, F.xxhash64(*key_cols))
 
 
-def events_ts_is_nanos(spark: SparkSession, sf_dir: str) -> bool:
-    """True when ``events.ts`` ships as parquet TIMESTAMP(NANOS).
-
-    Also pins the confs the events encodings require: ``nanosAsLong`` (the
-    vectorized reader rejects NANOS otherwise) and a UTC session timezone so
-    values are identical under ANY host session — the reference likewise
-    forces UTC packing (TrinoPageSourceBase.java:216-219). Single source of
-    the encoding contract for BOTH the batch loader and the streaming source
-    (operators/events.py) — a third driver encoding gets added here once.
-    """
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """``ts`` as session-TZ TimestampType from either encoding of the events
+    file. Under ``ENGINE_CONF``'s ``nanosAsLong``, parquet TIMESTAMP(NANOS)
+    reads as INT64 nanos: truncate to micros. TIMESTAMP(MICROS) reads as
+    TIMESTAMP_NTZ: an identity cast, as the wall clock is UTC under the
+    engine's UTC session timezone (the reference likewise packs UTC,
+    TrinoPageSourceBase.java:216-219). The one place of this contract, for
+    the batch loader and the streaming source (operators/events.py)."""
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    return isinstance(raw["ts"].dataType, T.LongType)
-
-
-def normalize_events_ts(df: DataFrame, nanos: bool) -> DataFrame:
-    """Normalize ``ts`` to session-TZ TimestampType from either encoding:
-    raw INT64 nanos → truncate to micros; TIMESTAMP_NTZ/LTZ → identity cast
-    (wall-clock is UTC under the pinned session timezone)."""
-    from pyspark.sql import functions as F
-
-    if nanos:
+    if isinstance(df.schema["ts"].dataType, T.LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))

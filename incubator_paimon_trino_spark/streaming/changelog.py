@@ -34,6 +34,7 @@ from incubator_paimon_trino_spark.catalog.warehouse import (
     explode_dv_index_text,
     partition_column_expr,
 )
+from incubator_paimon_trino_spark.session import rebind, scoped
 
 
 def read_changelog_stream(
@@ -634,30 +635,27 @@ def run_to_completion(
     scale-adaptive exactly like ``sources.registry.fan_out``'s gate: at
     cluster scale input_splits ≥ the session setting and this is a no-op —
     nothing is tuned to local mode. State semantics are partition-count
-    independent (hash partitioning on the same keys either way); the conf
-    is restored after the run, so batch queries in the session never see it.
+    independent (hash partitioning on the same keys either way). The stream
+    runs on a ``session.scoped`` clone that holds the clamp, so the caller's
+    conf is never written: batch queries, a nested run or one on another
+    thread keep their own partition count. The result is the memory sink's
+    rows as a DataFrame of the caller's session.
     """
     spark = stream_df.sparkSession
-    prev: str | None = None
+    conf = {}
     if input_splits is not None:
         cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = max(8, min(cur, 8 * input_splits))
-        if n < cur:
-            prev = str(cur)
-            spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}")
+        conf["spark.sql.shuffle.partitions"] = str(max(8, min(cur, 8 * input_splits)))
+    run = scoped(spark, conf)
+    q = (
+        rebind(stream_df, run).writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return rebind(run.table(query_name), spark)
 
 
 def write_stream_to_table(
